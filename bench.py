@@ -350,11 +350,13 @@ def _collection_routes(spark, sf, qv):
     }
 
     def finalize_routes():
-        # called AFTER the warm-up sweep: the first touch has run the
-        # local-vs-JVM A/B, so the winner each routed query will use for
-        # every timed run is now known — record it in the marker
+        # the route each query takes is static: the local tier's footer
+        # gate for the query's shape class — record it and the class cap
         from linkml_store_spark.operators.arrowagg import ab_winner
-        from linkml_store_spark.operators.localexec import local_tier_column
+        from linkml_store_spark.operators.localexec import (
+            LOCAL_TIER_CAPS,
+            local_tier_column,
+        )
 
         kinds = {
             "b1": "page", "b2": "count", "b3": "count", "b4": "count",
@@ -366,17 +368,16 @@ def _collection_routes(spark, sf, qv):
             ("b5", li), ("b6", li), ("b7", li), ("b8", od), ("b9", od),
             ("b10", ev), ("b11", ev), ("b12", eb),
         ]:
+            kind = kinds[name]
             metas = coll._store_metas() or []
             files = [fp for fp, _md in metas]
             total = sum(md.num_rows for _fp, md in metas)
-            w = ab_winner(
-                spark, files, local_tier_column(kinds[name]), total_rows=total
+            w = ab_winner(spark, files, local_tier_column(kind), total_rows=total)
+            gate = f"{total} rows, {kind} cap {LOCAL_TIER_CAPS[kind]}"
+            tier = (
+                f"LOCAL TIER (driver Arrow, {gate})" if w == "arrow"
+                else f"jvm ({gate})"
             )
-            tier = {
-                "arrow": f"LOCAL TIER (driver Arrow, A/B winner, {total} rows)",
-                "jvm": "jvm (A/B winner)",
-                None: "jvm (no A/B ran)",
-            }[w]
             routes[name] = f"{tier} | {routes[name]}"
 
     result_keys = {"count", "vcount", "total_rows"}
@@ -442,9 +443,8 @@ def main():
 
     # global warm-up pass: JVM JIT compilation of the scan/agg/codegen paths
     # is shared across queries — one full sweep first, then per-query timing
-    # (mirrors BASELINE.md's "best of 5 after warm-up" methodology). The
-    # warm-up is also where each store's first-touch local-vs-JVM A/B runs;
-    # finalize_routes records the winner every timed run will use.
+    # (mirrors BASELINE.md's "best of 5 after warm-up" methodology).
+    # finalize_routes records the static route every timed run takes.
     for fn in queries.values():
         fn()
     finalize_routes()
@@ -552,13 +552,10 @@ def main():
             ]
 
     # FLOOR DECOMPOSITION: the same twelve plans executed over 0-ROW tables
-    # with identical schemas. NOTE (round 9): for LOCAL-TIER-routed shapes
-    # this is no longer a lower bound of the real query — the empty-mirror
-    # stores run their own A/B and may route to the JVM (whose empty-table
-    # job costs a full scheduling floor the real local-routed query never
-    # pays), so floor can EXCEED wall; job_floor_per_query is the honest
-    # per-shape scheduling context now. Kept for the unrouted comparisons
-    # and cross-round continuity.
+    # with identical schemas. NOTE: the 0-row mirror stores pass the same
+    # static local-tier gate, so for LOCAL-TIER-routed shapes the floor is
+    # the local tier's fixed cost, not Spark's; job_floor_per_query is the
+    # per-shape Spark scheduling context. Kept for cross-round continuity.
     # What remains for JVM-routed shapes is Spark's fixed per-query cost —
     # job/stage scheduling, task launch, empty-file scan machinery, Arrow
     # collection setup — i.e. the latency floor a 3-55 ms DuckDB query is

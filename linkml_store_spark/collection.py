@@ -118,9 +118,9 @@ class Collection:
         #: files the in-flight plan names — round-8 advisor finding)
         self._pending_compact_cols: list = []
         #: crossover gate for the Arrow dictionary-code count path
-        #: (operators/arrowagg.py) — "auto" = per-session calibrated;
+        #: (operators/arrowagg.py) — None = the static ARROW_AGG_MIN_ROWS;
         #: instance-level so tests can pin a number
-        self._arrow_count_min_rows = "auto"
+        self._arrow_count_min_rows = None
 
     # ------------------------------------------------------------------ #
     # plumbing
@@ -220,21 +220,6 @@ class Collection:
         # footer statistics no longer describe the store after any change
         self._footer_stats_cache.clear()
         self._plan_cache.clear()  # cached page plans point at the old store
-        # persisted A/B winners measured the OLD layout; the fingerprint
-        # (file count + rows) catches most mutations but a compact can
-        # preserve both — delete the sidecar outright, like the plan cache
-        try:
-            import os as _os
-
-            from linkml_store_spark.operators.arrowagg import AB_SIDECAR
-
-            p = _os.path.join(
-                self.database._collection_path(self.alias), AB_SIDECAR
-            )
-            if _os.path.exists(p):
-                _os.remove(p)
-        except Exception:  # noqa: BLE001 — cache hygiene must not block writes
-            pass
         # Vector indexes: a pure APPEND into a DURABLE IVF index is
         # maintained incrementally (ivf_append — new vectors join their
         # nearest existing centroid's partition; one pass over the batch).
@@ -633,8 +618,8 @@ class Collection:
         )
         d = self._plan_cache.get(key)
         if d is not None:
-            # prepared JVM count (the memoized winner on every store the
-            # A/B has routed to JVM): no re-build, no footer re-read
+            # prepared JVM count (every store under the Arrow gate): no
+            # re-build, no footer re-read
             return meta + d.collect()[0][0]
         rest = (
             self.df if undecided is None
@@ -646,16 +631,11 @@ class Collection:
                 parquet_predicate_count,
             )
 
-            if self._arrow_count_min_rows in (None, "auto"):
-                # first touch of a big store+column: measure both engines
-                # once (A/B memo routes all later counts on this column)
-                n = self._ab_predicate_count(rest, col, values, metas=metas)
-            if n is None:
-                n = parquet_predicate_count(
-                    self.spark, rest, col, values,
-                    min_rows=self._arrow_count_min_rows,
-                    footer_metas=metas,
-                )
+            n = parquet_predicate_count(
+                self.spark, rest, col, values,
+                min_rows=self._arrow_count_min_rows,
+                footer_metas=metas,
+            )
         except Exception:  # noqa: BLE001
             n = None
         if n is None:
@@ -670,7 +650,7 @@ class Collection:
         """``[(file, pyarrow FileMetaData)]`` of the persisted store, read
         ONCE and memoized until the next mutation. Footer metadata is
         planning-time state (like row-group stats): the zone decisions,
-        the Arrow gate, the A/B probe, and the unfiltered total all
+        the Arrow and local-tier gates, and the unfiltered total all
         consult the same footers — without this memo one routed count was
         paying THREE redundant driver sweeps per execution (bench round
         7). None when the store is missing or beyond the sweep cap."""
@@ -697,23 +677,6 @@ class Collection:
         except Exception:  # noqa: BLE001 — stats are an optimization only
             return None
 
-    def _bust_result_memos(self) -> None:
-        """Drop memoized RESULT entries (filtered counts) while keeping
-        planning-time state (footer metas, schemas, zone decisions, plan
-        caches, and the ('total_rows',) store total — that one is pure
-        footer metadata recomputed from the kept metas, so busting it
-        only added driver metadata work into the timed A/B window;
-        round-10 advice). The first-touch A/B uses this so both timed
-        sides recompute their answer — a side served from a memo left by
-        an earlier query would record a near-zero time and pin the wrong
-        winner for the whole (store, shape-class)."""
-        for k in [
-            k for k in self._footer_stats_cache
-            if isinstance(k, tuple) and k
-            and k[0] in ("count", "vcount")
-        ]:
-            del self._footer_stats_cache[k]
-
     def _store_total_rows(self) -> Optional[int]:
         """Exact whole-store row count from parquet footers (num_rows is
         exact metadata, not an estimate) — the pre-pagination total of an
@@ -730,72 +693,17 @@ class Collection:
         self._footer_stats_cache[ck] = n
         return n
 
-    def _ab_predicate_count(
-        self, rest: DataFrame, col: str, values: list, metas=None
-    ):
-        """First eligible equality/$in count on a (store, column): run the
-        pushed-In JVM count and the Arrow dictionary-code count ONCE each,
-        record the measured winner (arrowagg A/B memo — shared with the
-        facet routes), return the winner's count. None when not
-        A/B-eligible (small store, arrow refuses, winner already known)
-        — the caller's normal gate applies."""
-        import time
-
-        from linkml_store_spark.operators.arrowagg import (
-            ARROW_AB_MAX_ROWS,
-            ARROW_AGG_FLOOR_ROWS,
-            ab_winner,
-            parquet_predicate_count,
-            parquet_row_groups,
-            record_ab_winner,
-        )
-
-        try:
-            files = rest.inputFiles()
-            if not files:
-                return None
-            _rgs, total_rows = parquet_row_groups(files, metas=metas)
-            if not (ARROW_AGG_FLOOR_ROWS <= total_rows <= ARROW_AB_MAX_ROWS):
-                return None
-            if ab_winner(self.spark, files, col, total_rows=total_rows) is not None:
-                return None
-            jvm_d = rest.filter(F.col(col).isin(list(values))).agg(
-                F.count(F.lit(1)).alias("n")
-            )
-            t0 = time.perf_counter()
-            n_jvm = jvm_d.collect()[0][0]
-            t_jvm = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            n_arrow = parquet_predicate_count(
-                self.spark, rest, col, values, min_rows=0, footer_metas=metas
-            )
-            t_arrow = time.perf_counter() - t0
-            if n_arrow is None:
-                return int(n_jvm)
-            if t_arrow < t_jvm:
-                # don't pin 'arrow' against a COLD jvm plan — re-time warm
-                t0 = time.perf_counter()
-                jvm_d.collect()
-                t_jvm = min(t_jvm, time.perf_counter() - t0)
-            record_ab_winner(
-                self.spark, files, col, t_jvm, t_arrow, total_rows=total_rows
-            )
-            return int(n_arrow if t_arrow < t_jvm else n_jvm)
-        except Exception:  # noqa: BLE001 — A/B is an optimization only
-            return None
-
     def query(self, query: Query) -> QueryResult:
         """Execute the declarative Query IR (reference collection.py:375-398).
 
-        Routing: footer-small stores whose query compiles into the
-        faithfully-mirrored subset execute DRIVER-LOCALLY with Arrow
+        Routing: a query whose store passes the local tier's static
+        footer gate for its shape class (``count``, ``page`` or ``agg``;
+        ``localexec.local_tier_admits``) and whose clauses compile into
+        the faithfully-mirrored subset executes DRIVER-LOCALLY with Arrow
         kernels (``operators/localexec.py``) — zero Spark jobs, none of
-        the per-job scheduling floor. The first eligible query on a store
-        runs BOTH tiers, value-checks them against each other, and records
-        the measured winner (shared A/B memo + ``_ab_winners.json``
-        sidecar); any result divergence pins the store to the JVM path and
-        warns. Everything else — big stores, unsupported operators/types,
-        facet-bearing queries — takes the distributed plan unchanged.
+        the per-job scheduling floor. Everything else — stores over the
+        class cap, unsupported operators/types, facet-bearing queries, or
+        a local run that raises — takes the distributed plan unchanged.
         """
         if not self.exists():
             return QueryResult(num_rows=0, rows=[], query=query)
@@ -817,113 +725,29 @@ class Collection:
             )
         plan = self._local_tier_plan(query)
         if plan is not None:
-            local_fn, files, total_rows = plan
-            from linkml_store_spark.operators.arrowagg import (
-                ab_winner,
-                record_ab_winner,
-            )
-            from linkml_store_spark.operators.localexec import (
-                local_tier_column,
-            )
-
-            # shape-class winners: counts, pages, and aggregates cross
-            # over at different store sizes (localtier_scale.py round 9)
-            kind = (
-                "agg" if query.group_by
-                else ("count" if query.limit == 0 else "page")
-            )
-            ab_col = local_tier_column(kind)
-            w = ab_winner(
-                self.spark, files, ab_col, total_rows=total_rows
-            )
-            if w == "arrow":
-                try:
-                    return local_fn()
-                except Exception:  # noqa: BLE001 — never fail a query here
-                    return self._query_spark(query)
-            if w is None:
-                # first touch: run both tiers once (both produce the
-                # answer — nothing is wasted), value-check, record winner.
-                # Each timed side starts from FRESH result memos: an
-                # earlier query sharing this where-clause may have left a
-                # memoized count behind, and a side answered from a memo
-                # records a near-zero time that pins the wrong winner
-                # for every later query in the shape class.
-                import time as _time
-
-                lres = None
-                try:
-                    self._bust_result_memos()
-                    t0 = _time.perf_counter()
-                    lres = local_fn()
-                    t_local = _time.perf_counter() - t0
-                except Exception:  # noqa: BLE001
-                    t_local = float("inf")
-                self._bust_result_memos()
-                t0 = _time.perf_counter()
-                sres = self._query_spark(query)
-                t_spark = _time.perf_counter() - t0
-                if lres is not None and not _results_equivalent(
-                    lres, sres, query
-                ):
-                    import warnings
-
-                    warnings.warn(
-                        f"local tier result diverged from Spark on "
-                        f"{self.alias!r} — routing this store to the JVM "
-                        "path (please report: this is an engine bug)",
-                        stacklevel=2,
-                    )
-                    t_local = float("inf")
-                # best-of-2 for BOTH sides unconditionally: each cold
-                # sample carries one-time noise (Spark: plan analysis +
-                # JVM warm-up; local: file opens + where-compile) and the
-                # recorded winner PERSISTS until the store mutates, so a
-                # wrong pin from one cold spike costs every later query
-                # in the shape class (round-10 advice: the old flow only
-                # re-timed the side that lost a flip, leaving 'jvm' pins
-                # from single cold measurements). Plan caches and footer
-                # metas stay warm across the re-runs — "warm plan, fresh
-                # result" is what a harness times; only result memos bust.
-                if t_local != float("inf"):
-                    try:
-                        self._bust_result_memos()
-                        t0 = _time.perf_counter()
-                        local_fn()
-                        t_local = min(t_local, _time.perf_counter() - t0)
-                    except Exception:  # noqa: BLE001
-                        pass
-                if t_local != float("inf"):
-                    # skip the Spark re-run only when local is disqualified
-                    # (diverged/failed): the pin is then forced to jvm and
-                    # a second Spark sample would change nothing
-                    self._bust_result_memos()
-                    t0 = _time.perf_counter()
-                    self._query_spark(query)
-                    t_spark = min(t_spark, _time.perf_counter() - t0)
-                record_ab_winner(
-                    self.spark, files, ab_col,
-                    t_jvm=t_spark, t_arrow=t_local, total_rows=total_rows,
-                )
-                return sres
+            try:
+                return plan()
+            except Exception:  # noqa: BLE001 — never fail a query here
+                pass
         return self._query_spark(query)
 
     def _local_tier_plan(self, query: Query):
-        """(closure returning QueryResult, files, total_rows) when this
-        query is local-tier eligible on this store, else None. Eligibility
-        is decided entirely from driver-side state: footer row/byte gates,
-        store-scan purity, and a full compile of where/sort/select into
-        the mirrored Arrow subset (``operators/localexec.py``)."""
+        """A closure returning the QueryResult when this query is
+        local-tier eligible on this store, else None. Eligibility
+        is decided entirely from driver-side state: the footer gate for
+        the query's shape class, store-scan purity, and a full compile of
+        where/sort/select into the mirrored Arrow subset
+        (``operators/localexec.py``)."""
         from linkml_store_spark.operators import localexec as lx
 
         if query.include_facet_counts:
             return None
-        gate = self._local_tier_gate()
+        gate = self._local_tier_gate(_query_class(query))
         if gate is None:
             return None
         files, schema, total_rows = gate
         if query.group_by:
-            return self._local_tier_agg_plan(query, files, schema, total_rows)
+            return self._local_tier_agg_plan(query, files, schema)
         try:
             cond = lx.compile_where_local(query.where_clause, schema)
             limit = DEFAULT_LIMIT if query.limit is None else query.limit
@@ -973,9 +797,9 @@ class Collection:
                 self._footer_stats_cache[ck] = num_rows
             return QueryResult(num_rows=num_rows, rows=rows, query=query)
 
-        return run, files, total_rows
+        return run
 
-    def _local_tier_agg_plan(self, query: Query, files, schema, total_rows):
+    def _local_tier_agg_plan(self, query: Query, files, schema):
         """The grouped-aggregation branch of :meth:`_local_tier_plan`:
         compile the where + group keys + aggregate specs into the Arrow
         subset, or None. The page tail (sort on keys/aliases, offset,
@@ -990,7 +814,7 @@ class Collection:
                     query.join["collection"]
                 )
                 other.df  # resolve the scan (sets _df_is_store_scan)
-                ogate = other._local_tier_gate()
+                ogate = other._local_tier_gate("agg")
                 if ogate is None:
                     return None
                 ofiles, oschema, _orows = ogate
@@ -1082,7 +906,7 @@ class Collection:
                 )
             return QueryResult(num_rows=total, rows=rows, query=query)
 
-        return run, files, total_rows
+        return run
 
     def _query_spark(self, query: Query) -> QueryResult:
         """The distributed path of :meth:`query` (all stores beyond the
@@ -1487,39 +1311,50 @@ class Collection:
         """The physical plan for a find() — shows predicate pushdown
         (`PushedFilters`), column pruning (`ReadSchema`), and codegen spans.
         The engine's analog of EXPLAIN; plan shapes are regression-tested in
-        tests/test_plans.py. When the query would route through the
-        driver-local Arrow tier, the report leads with that (the physical
-        plan below it is what the distributed path WOULD run — exactly
-        what executes on stores past the gate or after a JVM A/B verdict)."""
-        header = ""
-        try:
-            q = Query(where_clause=where, select_cols=select_cols)
-            if self._local_tier_plan(q) is not None:
-                from linkml_store_spark.operators.arrowagg import ab_winner
-                from linkml_store_spark.operators.localexec import (
-                    local_tier_column,
-                )
-
-                metas = self._store_metas() or []
-                files = [fp for fp, _md in metas]
-                total = sum(md.num_rows for _fp, md in metas)
-                w = ab_winner(
-                    self.spark, files, local_tier_column("page"),
-                    total_rows=total,
-                )
-                verdict = w or "not yet measured (first query runs both tiers)"
-                header = (
-                    f"== Local Tier ==\nEligible: driver-local Arrow "
-                    f"execution ({total} footer rows inside the gate); "
-                    f"A/B winner: {verdict}\n\n"
-                )
-        except Exception:  # noqa: BLE001 — explain must never fail
-            pass
+        tests/test_plans.py. The report leads with the route the find()
+        takes: the driver-local Arrow tier when the static footer gate
+        admits it (the physical plan below is then what the distributed
+        path would run), else the distributed plan, with the gate's
+        numbers either way."""
+        header = self._route_report(
+            Query(where_clause=where, select_cols=select_cols)
+        )
         df = apply_where(self.df, where)
         if select_cols:
             df = df.select(*select_cols)
         return header + df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), mode
+        )
+
+    def _route_report(self, query: Query) -> str:
+        """The explain header: the tier :meth:`query` takes for ``query``
+        and the gate numbers that decided it."""
+        from linkml_store_spark.operators import localexec as lx
+
+        def spark_route(why: str) -> str:
+            return f"== Route ==\nDistributed plan: {why}\n\n"
+
+        if not lx.local_tier_enabled():
+            return spark_route("SPARK_GRAFT_LOCAL_TIER=0")
+        metas = (
+            self._store_metas()
+            if self._df_is_store_scan and self.database.location else None
+        )
+        if not metas:
+            return spark_route("no persisted parquet footers")
+        kind = _query_class(query)
+        rows, nbytes = lx.footer_totals(metas)
+        gate = (
+            f"{rows} footer rows, {kind} cap {lx.LOCAL_TIER_CAPS[kind]}; "
+            f"{nbytes} uncompressed bytes, cap {lx.LOCAL_TIER_MAX_BYTES}"
+        )
+        if not lx.local_tier_admits(kind, rows, nbytes):
+            return spark_route(f"store over the gate ({gate})")
+        if self._local_tier_plan(query) is None:
+            return spark_route("clauses outside the local tier's Arrow subset")
+        return (
+            "== Local Tier ==\nDriver-local Arrow execution: footer rows "
+            f"inside the gate ({gate})\n\n"
         )
 
     def find_iter(
@@ -1609,29 +1444,19 @@ class Collection:
             self.database._session_tz_memo = tz
         return tz
 
-    def _local_tier_gate(self):
-        """(files, schema, total_rows) when this store is inside the
-        local-tier size gates with usable footers, else None — the shared
-        eligibility check for every local-tier entry point."""
+    def _local_tier_gate(self, kind: str):
+        """(files, schema, total_rows) when this store's footers admit a
+        ``kind`` call to the local tier (``localexec.local_tier_admits``),
+        else None — the shared gate of every local-tier entry point."""
         from linkml_store_spark.operators import localexec as lx
 
-        if not lx.local_tier_enabled():
-            return None
         if not (self._df_is_store_scan and self.database.location):
             return None
         metas = self._store_metas()
         if not metas:
             return None
-        total_rows = sum(md.num_rows for _fp, md in metas)
-        total_bytes = sum(
-            md.row_group(i).total_byte_size
-            for _fp, md in metas
-            for i in range(md.num_row_groups)
-        )
-        if (
-            total_rows > lx.local_tier_max_rows()
-            or total_bytes > lx.LOCAL_TIER_MAX_BYTES
-        ):
+        total_rows, total_bytes = lx.footer_totals(metas)
+        if not lx.local_tier_admits(kind, total_rows, total_bytes):
             return None
         files = [fp for fp, _md in metas]
         try:
@@ -1652,18 +1477,17 @@ class Collection:
         """Facet counts via the driver-local Arrow tier (see
         :meth:`query` routing notes), or None when anything refuses —
         including any facet column outside the mirrored subset (arrays,
-        nested, timestamps) or a where-clause the compiler rejects. The
-        store-level A/B winner is SHARED with the query tier: both are
-        the same local-vs-JVM floor question."""
+        nested, timestamps), a where-clause the compiler rejects, a store
+        over the ``facet`` class cap, or a local run that raises."""
         import pyarrow.types as pt
 
         from linkml_store_spark.operators import localexec as lx
         from linkml_store_spark.where import exclude_column
 
-        gate = self._local_tier_gate()
+        gate = self._local_tier_gate("facet")
         if gate is None:
             return None
-        files, schema, total_rows = gate
+        files, schema, _total_rows = gate
         cols = (
             list(facet_columns) if facet_columns is not None
             else [f.name for f in schema]
@@ -1687,77 +1511,13 @@ class Collection:
         except Exception:  # noqa: BLE001
             return None
 
-        def run():
+        try:
             return lx.local_facets(
                 files, schema, lambda col: conds[id(col)], cols,
                 facet_limit, facet_min_count,
             )
-
-        from linkml_store_spark.operators.arrowagg import (
-            ab_winner,
-            record_ab_winner,
-        )
-
-        ab_col = lx.local_tier_column("facet")
-        w = ab_winner(
-            self.spark, files, ab_col, total_rows=total_rows
-        )
-        if w == "jvm":
+        except Exception:  # noqa: BLE001 — never fail a facet here
             return None
-        if w == "arrow":
-            try:
-                return run()
-            except Exception:  # noqa: BLE001 — never fail a facet here
-                return None
-        # first touch: run both tiers, value-check, record the winner
-        import time as _time
-
-        lres, t_local = None, float("inf")
-        try:
-            t0 = _time.perf_counter()
-            lres = run()
-            t_local = _time.perf_counter() - t0
-        except Exception:  # noqa: BLE001
-            pass
-        t0 = _time.perf_counter()
-        info: Dict[str, Any] = {}
-        sres = query_facets(
-            self.df, where, facet_columns, facet_limit, facet_min_count,
-            route_info=info,
-        )
-        t_spark = _time.perf_counter() - t0
-        if lres is not None and lres != sres:
-            import warnings
-
-            warnings.warn(
-                f"local tier facet counts diverged from Spark on "
-                f"{self.alias!r} — routing this store to the JVM path "
-                "(please report: this is an engine bug)",
-                stacklevel=2,
-            )
-            t_local = float("inf")
-        if t_local < t_spark and t_local != float("inf"):
-            # don't pin 'arrow' against a COLD spark plan (one-time
-            # analysis + JVM warm-up): re-time the warm run
-            t0 = _time.perf_counter()
-            query_facets(
-                self.df, where, facet_columns, facet_limit,
-                facet_min_count,
-            )
-            t_spark = min(t_spark, _time.perf_counter() - t0)
-            if t_spark < t_local:
-                # contested pin: give the local side best-of-2 too
-                try:
-                    t0 = _time.perf_counter()
-                    run()
-                    t_local = min(t_local, _time.perf_counter() - t0)
-                except Exception:  # noqa: BLE001
-                    pass
-        record_ab_winner(
-            self.spark, files, ab_col,
-            t_jvm=t_spark, t_arrow=t_local, total_rows=total_rows,
-        )
-        return sres
 
     def group_by(
         self,
@@ -1978,11 +1738,11 @@ class Collection:
         (vector column dropped) plus ``score_col``; ``ranked_rows`` pairs
         (score, row).
 
-        Routing mirrors :meth:`query`: footer-small unindexed stores run
-        the exact metric IN-PROCESS (one fused numpy pass — the same
-        float64 math as the distributed kernels, zero Spark jobs),
-        A/B-checked once per store against the distributed plan; indexed
-        or big stores run :meth:`knn`'s auto-routed IVF/brute plan."""
+        Routing mirrors :meth:`query`: unindexed stores the static footer
+        gate admits for the ``knn`` class run the exact metric IN-PROCESS
+        (one fused numpy pass — the same float64 math as the distributed
+        kernels, zero Spark jobs); indexed or bigger stores, and any local
+        run that raises, run :meth:`knn`'s auto-routed IVF/brute plan."""
         from linkml_store_spark.operators import localexec as lx
 
         def _spark() -> QueryResult:
@@ -2000,83 +1760,22 @@ class Collection:
 
         gate = None
         if not exact and self._vector_indexes.get(vector_col) is None:
-            gate = self._local_tier_gate()
+            gate = self._local_tier_gate("knn")
         if gate is None:
             return _spark()
-        files, schema, total_rows = gate
-
-        def _local() -> QueryResult:
+        files, schema, _total_rows = gate
+        try:
             rows = lx.local_knn(
                 files, schema, vector_col, query_vector, k,
                 score_col=score_col, select_cols=select_cols,
                 session_tz=self._session_tz(), metric=metric,
             )
-            return QueryResult(
-                num_rows=len(rows), rows=rows,
-                ranked_rows=[(r.get(score_col), r) for r in rows],
-            )
-
-        from linkml_store_spark.operators.arrowagg import (
-            ab_winner,
-            record_ab_winner,
-        )
-
-        ab_col = lx.local_tier_column("knn")
-        w = ab_winner(
-            self.spark, files, ab_col, total_rows=total_rows
-        )
-        if w == "arrow":
-            try:
-                return _local()
-            except Exception:  # noqa: BLE001 — incl. Unsupported: fall back
-                return _spark()
-        if w == "jvm":
+        except Exception:  # noqa: BLE001 — incl. Unsupported: fall back
             return _spark()
-        import time as _time
-
-        lres, t_local = None, float("inf")
-        try:
-            t0 = _time.perf_counter()
-            lres = _local()
-            t_local = _time.perf_counter() - t0
-        except Exception:  # noqa: BLE001
-            pass
-        t0 = _time.perf_counter()
-        sres = _spark()
-        t_spark = _time.perf_counter() - t0
-        if lres is not None:
-            # ties at the k-boundary may legitimately swap payload rows;
-            # the score SEQUENCE is the deterministic part of the contract
-            lscores = [_canon_value(s) for s, _r in lres.ranked_rows or []]
-            sscores = [_canon_value(s) for s, _r in sres.ranked_rows or []]
-            if lscores != sscores:
-                import warnings
-
-                warnings.warn(
-                    f"local tier knn scores diverged from Spark on "
-                    f"{self.alias!r} — routing this store to the JVM path "
-                    "(please report: this is an engine bug)",
-                    stacklevel=2,
-                )
-                t_local = float("inf")
-        if t_local < t_spark and t_local != float("inf"):
-            # don't pin 'arrow' against a COLD spark plan — re-time warm
-            t0 = _time.perf_counter()
-            _spark()
-            t_spark = min(t_spark, _time.perf_counter() - t0)
-            if t_spark < t_local:
-                # contested pin: give the local side best-of-2 too
-                try:
-                    t0 = _time.perf_counter()
-                    _local()
-                    t_local = min(t_local, _time.perf_counter() - t0)
-                except Exception:  # noqa: BLE001
-                    pass
-        record_ab_winner(
-            self.spark, files, ab_col,
-            t_jvm=t_spark, t_arrow=t_local, total_rows=total_rows,
+        return QueryResult(
+            num_rows=len(rows), rows=rows,
+            ranked_rows=[(r.get(score_col), r) for r in rows],
         )
-        return sres
 
     def search(
         self,
@@ -2551,52 +2250,12 @@ def _sort_norm(spec) -> str:
     return spec
 
 
-def _canon_value(v):
-    """Float-tolerant canonical form for the A/B parity compare: two
-    engines summing doubles in different orders agree to ~1 ulp, never
-    bit-exactly — 12 significant digits is the shared-truth precision."""
-    if isinstance(v, float):
-        return format(v, ".12g")
-    if isinstance(v, dict):
-        return tuple(sorted((k, _canon_value(x)) for k, x in v.items()))
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon_value(x) for x in v)
-    return v
-
-
-def _canon_rows(rows):
-    return sorted(
-        repr(tuple(sorted((k, _canon_value(v)) for k, v in r.items())))
-        for r in rows
-    )
-
-
-def _results_equivalent(lres: QueryResult, sres: QueryResult, query: Query) -> bool:
-    """Value-equivalence of the two tiers' results for the A/B parity
-    check, honoring the query's actual determinism contract: pre-pagination
-    totals must always match; full (untruncated) pages must match as
-    multisets (floats to 12 significant digits — aggregation order differs
-    between engines); sorted truncated pages must agree on the sort-key
-    sequence (rows beyond the keys may differ only by tie order — both
-    engines break ties arbitrarily); unsorted truncated pages promise only
-    the row count (an arbitrary-k selection on any engine)."""
-    if lres.num_rows != sres.num_rows:
-        return False
-    lrows, srows = lres.rows, sres.rows
-    if len(lrows) != len(srows):
-        return False
-    if not lrows:
-        return True
-    if len(lrows) == lres.num_rows:
-        return _canon_rows(lrows) == _canon_rows(srows)
-    if query.sort_by:
-        keys = [_sort_base(s) for s in query.sort_by]
-        return all(
-            [_canon_value(r.get(k)) for k in keys]
-            == [_canon_value(s.get(k)) for k in keys]
-            for r, s in zip(lrows, srows)
-        )
-    return True
+def _query_class(query: Query) -> str:
+    """The local tier's shape class of a Query: ``agg`` (group_by),
+    ``count`` (limit 0) or ``page``."""
+    if query.group_by:
+        return "agg"
+    return "count" if query.limit == 0 else "page"
 
 
 def _sort_parse(spec):

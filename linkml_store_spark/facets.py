@@ -42,13 +42,9 @@ FacetKey = Union[str, Tuple[str, ...]]
 DEFAULT_FACET_LIMIT = 100
 
 #: Routing between the JVM hash aggregate and the Arrow dictionary-code
-#: facet path: below ~30M rows the fixed Python-stage bridge constant
-#: always exceeds the JVM aggregate's whole runtime. Round 7: above it
-#: the route is ADAPTIVE — query_facets runs both engines ONCE per
-#: (store, column) and the measured winner routes every later query,
-#: including lazy facet_df plans (operators/arrowagg A/B winner memo;
-#: unknown stores keep the conservative 600M static gate).
-#: ``arrow_min_rows=`` still overrides per call.
+#: facet path is static: an unfiltered single-column facet over a bare
+#: parquet scan of at least ``arrowagg.ARROW_AGG_MIN_ROWS`` footer rows
+#: takes the Arrow path; ``arrow_min_rows=`` overrides per call.
 
 
 def _footer_metas(df: DataFrame):
@@ -226,9 +222,8 @@ def facet_df(
     count desc then value(s) asc for determinism.
 
     On an unfiltered single-column facet over a bare parquet scan past
-    the ``arrow_min_rows`` gate (default ``"auto"``: the per-store A/B
-    winner memo, conservative static crossover until a winner is
-    measured), the counts come from the Arrow dictionary-code
+    the ``arrow_min_rows`` gate (default ``arrowagg.ARROW_AGG_MIN_ROWS``,
+    the static crossover), the counts come from the Arrow dictionary-code
     aggregation (``operators/arrowagg.py``) — same result, ~7x the
     per-core count rate of the JVM hash aggregate at the 100-TB end.
     """
@@ -244,7 +239,10 @@ def facet_df(
         and not _is_array_col(fdf, column)
         and _bare_parquet_scan(fdf)
     ):
-        from linkml_store_spark.operators.arrowagg import parquet_value_counts
+        from linkml_store_spark.operators.arrowagg import (
+            ARROW_AGG_MIN_ROWS,
+            parquet_value_counts,
+        )
 
         def _finish_single(adf: DataFrame) -> DataFrame:
             return _finish_facet_single(adf, column, facet_limit, facet_min_count)
@@ -259,7 +257,7 @@ def facet_df(
             if adf is not None:
                 return _finish_single(adf)
 
-        gate = "auto" if arrow_min_rows is None else arrow_min_rows
+        gate = ARROW_AGG_MIN_ROWS if arrow_min_rows is None else arrow_min_rows
         adf = parquet_value_counts(
             fdf.sparkSession, fdf, column, min_rows=gate,
             footer_metas=footer_metas,
@@ -377,63 +375,6 @@ def query_facets_one_pass(
     return results
 
 
-def _facet_ab(df, column, facet_limit, facet_min_count, metas):
-    """First eligible facet on a (store, column): run the JVM and Arrow
-    plans ONCE each — both produce the answer, so nothing is wasted — and
-    record the measured winner in the arrowagg A/B memo, which then
-    routes every later facet/count on this store+column (including lazy
-    ``facet_df`` calls via the ``auto`` gate). Returns the winner's rows,
-    or None when the shape isn't A/B-eligible (store below the floor /
-    above the cap, arrow path refuses, winner already known — the normal
-    routes apply). Round 7: replaces model-based gate calibration, whose
-    probe constants measured 20-25x off real stores in both directions
-    (SCALING.md 'Arrow gate calibration dead end')."""
-    import time
-
-    from linkml_store_spark.operators.arrowagg import (
-        ARROW_AB_MAX_ROWS,
-        ARROW_AGG_FLOOR_ROWS,
-        ab_winner,
-        parquet_value_counts,
-        record_ab_winner,
-    )
-
-    try:
-        spark = df.sparkSession
-        total_rows = sum(md.num_rows for _f, md in metas)
-        if not (ARROW_AGG_FLOOR_ROWS <= total_rows <= ARROW_AB_MAX_ROWS):
-            return None
-        files = [f for f, _md in metas]
-        if ab_winner(spark, files, column, total_rows=total_rows) is not None:
-            return None
-        arrow_adf = parquet_value_counts(
-            spark, df, column, min_rows=0, footer_metas=metas
-        )
-        if arrow_adf is None:
-            return None
-        arrow_gdf = _finish_facet_single(
-            arrow_adf.withColumnRenamed("value", column),
-            column, facet_limit, facet_min_count,
-        )
-        jvm_gdf = facet_df(
-            df, None, column, facet_limit, facet_min_count,
-            arrow_min_rows=2**62, footer_metas=metas,
-        )
-        t0 = time.perf_counter()
-        jvm_rows = jvm_gdf.collect()
-        t_jvm = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        arrow_rows = arrow_gdf.collect()
-        t_arrow = time.perf_counter() - t0
-        record_ab_winner(
-            spark, files, column, t_jvm, t_arrow, total_rows=total_rows
-        )
-        rows = arrow_rows if t_arrow < t_jvm else jvm_rows
-        return [(r[0], r[-1]) for r in rows]
-    except Exception:  # noqa: BLE001 — A/B is an optimization only
-        return None
-
-
 def query_facets(
     df: DataFrame,
     where: WhereClause = None,
@@ -537,18 +478,6 @@ def query_facets(
         )
         return results
     for column in remaining:
-        if (
-            metas is not None
-            and isinstance(column, str)
-            and "." not in column
-            and where in (None, {}, [])
-        ):
-            # first touch of a big store+column: measure both engines once
-            # (the A/B memo then routes everything, incl. lazy facet_df)
-            got = _facet_ab(df, column, facet_limit, facet_min_count, metas)
-            if got is not None:
-                results[column] = got
-                continue
         gdf = facet_df(
             df, where, column, facet_limit, facet_min_count,
             footer_metas=metas,

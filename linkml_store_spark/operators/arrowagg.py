@@ -31,7 +31,6 @@ path.
 
 from __future__ import annotations
 
-import os
 from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +57,20 @@ def _atomic_spark_type(df: DataFrame, column: str) -> Optional[str]:
 #: files than this answers through the JVM aggregate instead of paying an
 #: unbounded driver-side metadata scan
 MAX_FOOTER_FILES = 4096
+
+
+#: the measured JVM/Arrow crossover for single-column aggregation over a
+#: parquet scan. The crossover is BOX-DEPENDENT (SCALING.md "Facet round
+#: 6"): the Python-stage bridge cost and the JVM's string decode rate
+#: both vary with the host — measured crossovers span ~260M rows (fast
+#: Python workers: arrow 0.89 s vs JVM 1.32 s at 600M) to ~600M rows
+#: (slow workers, round-6b re-measurement: arrow 1.6-3.4 s vs JVM 1.8 s
+#: at 600M — a wash). The gate is the slowest measured crossover, so the
+#: path only engages where every measured box wins; model-based
+#: per-session calibration measured 20-25x off real stores (SCALING.md
+#: "Round 7: Arrow gate calibration"). At 100 TB scale any gate is
+#: satisfied.
+ARROW_AGG_MIN_ROWS = 600_000_000
 
 
 def parquet_row_groups(
@@ -103,10 +116,8 @@ def parquet_value_counts(
     ``min_rows`` is the crossover gate: every Python-UDF-bearing stage
     pays a fixed scheduler/bridge constant (~0.15-0.4 s depending on box
     load — bench.py floor notes), so below a few hundred million rows
-    the JVM hash aggregate wins on latency and this path must not
-    engage. A number is used as-is; ``None``/``"auto"`` consults the
-    per-store A/B winner memo (:func:`_resolve_min_rows`), falling back
-    to the conservative static crossover for unmeasured stores.
+    the JVM hash aggregate wins on latency and routed callers pass
+    :data:`ARROW_AGG_MIN_ROWS`.
     """
     ddl = _atomic_spark_type(df, column)
     if ddl is None:
@@ -122,8 +133,7 @@ def parquet_value_counts(
     ):
         return None
     rgs, total_rows = parquet_row_groups(files, metas=footer_metas)
-    gate = _resolve_min_rows(spark, min_rows, total_rows, files, column)
-    if not rgs or total_rows < gate:
+    if not rgs or total_rows < min_rows:
         return None
     if n_tasks is None:
         n_tasks = int(spark.sparkContext.defaultParallelism)
@@ -158,252 +168,13 @@ def parquet_value_counts(
     return partials.groupBy("value").agg(F.sum("cnt").alias("count"))
 
 
-#: the measured JVM/Arrow crossover for single-column aggregation over a
-#: parquet scan. The crossover is BOX-DEPENDENT (SCALING.md "Facet round
-#: 6"): the Python-stage bridge cost and the JVM's string decode rate
-#: both vary with the host — measured crossovers span ~260M rows (fast
-#: Python workers: arrow 0.89 s vs JVM 1.32 s at 600M) to ~600M rows
-#: (slow workers, round-6b re-measurement: arrow 1.6-3.4 s vs JVM 1.8 s
-#: at 600M — a wash). This constant is the FALLBACK when per-session
-#: calibration (below) is unavailable: the slowest measured crossover, so
-#: the path only engages where every measured box wins. At 100 TB scale
-#: any gate is satisfied.
-ARROW_AGG_MIN_ROWS = 600_000_000
-
-#: no measured box has ever won below this — stores under it skip even
-#: the (cheap, cached) calibration probe
-ARROW_AGG_FLOOR_ROWS = 30_000_000
-
-# --------------------------------------------------------------------- #
-# adaptive routing: per-store A/B winner memo
-#
-# MODEL-BASED CALIBRATION IS A MEASURED DEAD END (round 7, SCALING.md):
-# a bare mapInPandas micro-probe measures the python bridge at ~0.02 s
-# while the real arrow leaf stage pays ~0.5 s (pyarrow import + parquet
-# open + serde per worker) — 25x off; a synthetic 64M-row probe store
-# then measured the JVM agg at 3285M rows/s where the same shape on the
-# real 120M store runs 110-190M rows/s (page cache + 1-column schema vs
-# real IO + 11-column footers) — 20x off the other way. No transferable
-# constant survives both errors. What IS reliable: running both paths
-# once on the USER'S OWN store — both produce the answer (no wasted
-# work), the measured winner routes every later query on that
-# (store, column). Eager callers (query_facets, Collection counts)
-# perform the A/B via record_ab_winner; lazy callers (facet_df's
-# returned DataFrame) consult the memo via 'auto' and keep the
-# conservative static gate until a winner is known.
-# --------------------------------------------------------------------- #
-
-#: (applicationId, store_key, column) -> ("arrow" | "jvm", t_jvm, t_arrow)
-_AB_WINNERS: dict = {}
-
-#: above this, never run the losing path just to measure it — at true
-#: cluster scale the arrow path's per-row-group fan-out is the designed
-#: plan and the static gate has long since engaged it
-ARROW_AB_MAX_ROWS = 4_000_000_000
-
-
-def _store_key(files) -> tuple:
-    # normalize the 'file:' scheme away (as facets._footer_metas does):
-    # recorders pass scheme-stripped footer paths while the count/facet
-    # 'auto' consumers pass raw df.inputFiles() URIs — without this the
-    # memo never matches across routes and 'auto' silently falls back to
-    # the static gate (round-8 advisor finding)
-    fs = sorted(
-        f[len("file:"):] if f.startswith("file:") else f for f in files
-    )
-    return (len(fs), fs[0], fs[-1])
-
-
-def _ab_key(spark: SparkSession, files, column: str):
-    try:
-        return (spark.sparkContext.applicationId, _store_key(files), column)
-    except Exception:  # noqa: BLE001 — non-JVM test doubles
-        return None
-
-
-#: sidecar file holding persisted winners, INSIDE the store directory —
-#: the leading underscore makes it invisible to Spark/parquet directory
-#: scans (same convention as _SUCCESS). Survives sessions: the first
-#: touch of a 600M store pays the double-run once per STORE, not once
-#: per session (round-8 verdict letter).
-AB_SIDECAR = "_ab_winners.json"
-
-
-def _store_dir(files) -> Optional[str]:
-    """The single parent directory of a store's files, or None when the
-    scan spans directories (no canonical home for the sidecar)."""
-    import os
-
-    ds = {
-        os.path.dirname(f[len("file:"):] if f.startswith("file:") else f)
-        for f in files
-    }
-    return ds.pop() if len(ds) == 1 else None
-
-
-def _sidecar_load(files) -> dict:
-    import json
-
-    d = _store_dir(files)
-    if not d:
-        return {}
-    p = os.path.join(d, AB_SIDECAR)
-    try:
-        with open(p) as fh:
-            return json.load(fh)
-    except Exception:  # noqa: BLE001 — absent/corrupt sidecar = no memo
-        return {}
-
-
-def ab_winner(
-    spark: SparkSession, files, column: str, total_rows: Optional[int] = None
-) -> Optional[str]:
-    """The remembered winner ("arrow"/"jvm") for this store+column — the
-    session memo first, then the persisted sidecar next to the store
-    (validated against the layout fingerprint: file count + total rows,
-    so any mutation/compaction re-measures). None when no A/B has run."""
-    k = _ab_key(spark, files, column)
-    entry = _AB_WINNERS.get(k) if k is not None else None
-    if entry:
-        if entry[0] == "__miss__":
-            # negative sidecar lookup, memoized below: without this every
-            # query against a store that never ran an A/B re-read and
-            # re-parsed the sidecar file on the hot path (round-9
-            # advisor finding). The miss is layout-fingerprinted like the
-            # sidecar itself; a recorded winner overwrites it.
-            return None if entry[1] == total_rows else _sidecar_check(
-                files, column, total_rows, k
-            )
-        return entry[0]
-    if total_rows is None:
-        return None
-    return _sidecar_check(files, column, total_rows, k)
-
-
-def _sidecar_check(files, column, total_rows, k) -> Optional[str]:
-    e = _sidecar_load(files).get(column)
-    if (
-        isinstance(e, dict)
-        and e.get("n_files") == len(files)
-        and e.get("total_rows") == int(total_rows)
-        and e.get("winner") in ("arrow", "jvm")
-    ):
-        if k is not None:  # warm the session memo for cheap re-lookups
-            if len(_AB_WINNERS) >= 1024:
-                _AB_WINNERS.pop(next(iter(_AB_WINNERS)))
-            _AB_WINNERS[k] = (e["winner"], e.get("t_jvm"), e.get("t_arrow"))
-        return e["winner"]
-    if k is not None:
-        if len(_AB_WINNERS) >= 1024:
-            _AB_WINNERS.pop(next(iter(_AB_WINNERS)))
-        _AB_WINNERS[k] = ("__miss__", total_rows)
-    return None
-
-
-def record_ab_winner(
-    spark: SparkSession,
-    files,
-    column: str,
-    t_jvm: float,
-    t_arrow: float,
-    total_rows: Optional[int] = None,
-) -> None:
-    if os.environ.get("SPARK_GRAFT_AB_DEBUG"):
-        import sys
-
-        print(
-            f"[ab] col={column} t_jvm={t_jvm * 1000:.1f}ms "
-            f"t_arrow={t_arrow * 1000:.1f}ms -> "
-            f"{'arrow' if t_arrow < t_jvm else 'jvm'}",
-            file=sys.stderr,
-        )
-    k = _ab_key(spark, files, column)
-    if k is not None:
-        if len(_AB_WINNERS) >= 1024:  # bounded driver memory, oldest out
-            _AB_WINNERS.pop(next(iter(_AB_WINNERS)))
-        _AB_WINNERS[k] = ("arrow" if t_arrow < t_jvm else "jvm",
-                          t_jvm, t_arrow)
-    if total_rows is None:
-        return
-    # persist next to the store (atomic tmp+rename; best-effort — a
-    # read-only store simply keeps per-session measurement). ONLY for a
-    # directory the scan fully owns (every parquet file in the dir is in
-    # the scan — the Collection store layout): in a file-per-table dir
-    # (several tables as single .parquet files side by side) a shared
-    # sidecar keyed by column name would collide across tables, and a
-    # data directory we merely READ from is not ours to write into.
-    import json
-
-    d = _store_dir(files)
-    if not d:
-        return
-    try:
-        scan_set = {
-            f[len("file:"):] if f.startswith("file:") else f for f in files
-        }
-        dir_set = {
-            os.path.join(d, n)
-            for n in os.listdir(d)
-            if not n.startswith((".", "_")) and ".parquet" in n
-        }
-        if dir_set != scan_set:
-            return
-    except Exception:  # noqa: BLE001
-        return
-    try:
-        data = _sidecar_load(files)
-        data[column] = {
-            "winner": "arrow" if t_arrow < t_jvm else "jvm",
-            "t_jvm": round(float(t_jvm), 6),
-            "t_arrow": round(float(t_arrow), 6),
-            "n_files": len(files),
-            "total_rows": int(total_rows),
-        }
-        try:
-            # sidecar schema 2: record the writing box's gate + measured
-            # crossover ladder so a foreign deployment reading this store
-            # starts its routing from a profile, not from nothing
-            from linkml_store_spark.operators.localexec import sidecar_meta
-
-            data["__meta__"] = sidecar_meta()
-        except Exception:  # noqa: BLE001 — meta is advisory
-            pass
-        tmp = os.path.join(d, AB_SIDECAR + ".tmp")
-        with open(tmp, "w") as fh:
-            json.dump(data, fh)
-        os.replace(tmp, os.path.join(d, AB_SIDECAR))
-    except Exception:  # noqa: BLE001 — persistence is an optimization
-        pass
-
-
-def _resolve_min_rows(
-    spark: SparkSession, min_rows, total_rows: int,
-    files=(), column: Optional[str] = None,
-):
-    """Resolve a caller's gate: a number passes through; None/'auto'
-    consults the per-store A/B winner memo, falling back to the
-    conservative static crossover for stores nobody has measured yet.
-    Stores under the floor always refuse — no box has ever won there."""
-    if isinstance(min_rows, (int, float)):
-        return min_rows
-    if total_rows < ARROW_AGG_FLOOR_ROWS:
-        return ARROW_AGG_FLOOR_ROWS  # refuses
-    if files and column is not None:
-        w = ab_winner(spark, files, column, total_rows=total_rows)
-        if w == "arrow":
-            return ARROW_AGG_FLOOR_ROWS  # engages
-        if w == "jvm":
-            return 2**62  # refuses
-    return ARROW_AGG_MIN_ROWS
-
-
 def parquet_predicate_count(
     spark: SparkSession,
     df: DataFrame,
     column: str,
     values: list,
     n_tasks: Optional[int] = None,
-    min_rows="auto",
+    min_rows: Optional[int] = None,
     footer_metas=None,
 ) -> Optional[int]:
     """COUNT of rows where ``column`` equals any of ``values``, computed by
@@ -418,7 +189,8 @@ def parquet_predicate_count(
     mask over the distinct values), so the merge moves one long per task
     regardless of column cardinality. Returns None whenever the path does
     not apply and the caller must run the JVM plan: non-parquet scan,
-    store under ``min_rows`` / over the footer cap, unsupported or
+    store under ``min_rows`` (default :data:`ARROW_AGG_MIN_ROWS`) / over
+    the footer cap, unsupported or
     float column (float equality also risks NaN, which Spark orders but
     IEEE comparisons drop), or literal types that do not match the column
     (Spark would cast — mirroring cast domains is the zone path's job).
@@ -441,6 +213,8 @@ def parquet_predicate_count(
         return None
     if not values or not all(ok(v) for v in values):
         return None
+    if min_rows is None:
+        min_rows = ARROW_AGG_MIN_ROWS
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001
@@ -452,8 +226,7 @@ def parquet_predicate_count(
     ):
         return None
     rgs, total_rows = parquet_row_groups(files, metas=footer_metas)
-    gate = _resolve_min_rows(spark, min_rows, total_rows, files, column)
-    if not rgs or total_rows < gate:
+    if not rgs or total_rows < min_rows:
         return None
     if n_tasks is None:
         n_tasks = int(spark.sparkContext.defaultParallelism)
@@ -490,3 +263,34 @@ def parquet_predicate_count(
     partials = tasks.mapInPandas(_count, "cnt long")
     total = partials.agg(F.sum("cnt").alias("n")).collect()[0]["n"]
     return int(total or 0)
+
+
+def ab_winner(
+    spark: SparkSession, files, column: str, total_rows: Optional[int] = None
+) -> str:
+    """The route a call over the parquet store ``files`` takes, read from
+    the same static gates the routers apply: ``"arrow"`` when the
+    driver-local tier (``column`` a ``localexec.local_tier_column``
+    pseudo-column naming the shape class) or the Arrow dictionary-code
+    aggregate (a real column, :data:`ARROW_AGG_MIN_ROWS` gate) serves it,
+    else ``"jvm"``. The local-tier report honours
+    ``SPARK_GRAFT_LOCAL_TIER=0`` and reads the footers for the byte
+    total; ``total_rows`` spares the aggregate report its footer read.
+    ``spark`` is unused; the signature is kept for callers that report
+    routes."""
+    import pyarrow.parquet as pq
+
+    from linkml_store_spark.operators import localexec as lx
+
+    if not files or len(files) > MAX_FOOTER_FILES:
+        return "jvm"
+    if column.startswith(lx.LOCAL_TIER_COLUMN):
+        paths = (f[len("file:"):] if f.startswith("file:") else f for f in files)
+        rows, nbytes = lx.footer_totals(
+            [(p, pq.ParquetFile(p).metadata) for p in paths]
+        )
+        kind = column[len(lx.LOCAL_TIER_COLUMN):]
+        return "arrow" if lx.local_tier_admits(kind, rows, nbytes) else "jvm"
+    if total_rows is None:
+        total_rows = parquet_row_groups(files)[1]
+    return "arrow" if total_rows >= ARROW_AGG_MIN_ROWS else "jvm"

@@ -10,10 +10,10 @@ never schedules: the scan runs in the caller's thread.
 
 THE FIX, Photon-in-reverse: when the persisted store is provably tiny —
 parquet footer metadata (exact, truncation-free ``num_rows``) says the
-whole table is under :data:`LOCAL_TIER_MAX_ROWS` — ``Collection.query``
-routes the compiled predicate/sort/page through THIS module: pyarrow reads
-the same parquet files in the driver process and evaluates the same
-semantics with Arrow C++ kernels. Zero Spark jobs, zero scheduling floor —
+whole table is under its class's :data:`LOCAL_TIER_CAPS` entry —
+``Collection.query`` routes the compiled predicate/sort/page through
+THIS module: pyarrow reads the same parquet files in the driver process
+and evaluates the same semantics with Arrow C++ kernels. Zero Spark jobs, zero scheduling floor —
 exactly the in-process execution a single-node engine gets for free.
 
 SCALE SAFETY (the 100 TB story): this tier is a *latency* optimization
@@ -26,13 +26,17 @@ when footers are unavailable. A 100 TB store never comes within six
 orders of magnitude of the gate; every plan it refuses runs the normal
 distributed path unchanged. Correctness never depends on this module.
 
-ROUTING is A/B-memoized like the Arrow aggregation gate
-(``operators/arrowagg.py``): the first eligible query on a store runs BOTH
-tiers, compares results (a free value-parity check on the user's own
-data), records the measured winner in the shared winner memo under the
-pseudo-column ``__local_tier__`` (sidecar-persisted next to stores the
-scan owns), and routes every later query. Any parity divergence routes
-the store to the JVM permanently and warns.
+ROUTING is static: :func:`local_tier_admits` decides from the footer
+row count, the uncompressed byte total and the call's shape class
+(``count``, ``page``, ``agg``, ``facet``, ``knn``). A call runs here when
+its rows are within that class's :data:`LOCAL_TIER_CAPS` entry and its
+bytes within :data:`LOCAL_TIER_MAX_BYTES`; each cap is the largest
+measured rung at which this tier won the class on every measured box
+(``tools/localtier_scale.py``, SCALING.md "Local-vs-JVM crossover").
+Value parity with the Spark path is pinned by the test suite
+(``tests/test_localexec.py`` and the property tests), not re-checked at
+runtime. An ``Unsupported`` refusal or any exception here runs the Spark
+path instead. ``SPARK_GRAFT_LOCAL_TIER=0`` turns the tier off.
 
 SEMANTIC MIRROR: the where-compiler here accepts only the subset of the
 Mongo-style where-language (``where.py``) it can reproduce EXACTLY with
@@ -61,11 +65,12 @@ from datetime import date, datetime
 from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
 __all__ = [
-    "LOCAL_TIER_MAX_ROWS",
+    "LOCAL_TIER_CAPS",
     "LOCAL_TIER_MAX_BYTES",
     "LOCAL_TIER_COLUMN",
     "local_tier_enabled",
-    "local_tier_max_rows",
+    "local_tier_admits",
+    "footer_totals",
     "Unsupported",
     "compile_where_local",
     "local_count",
@@ -73,92 +78,65 @@ __all__ = [
     "local_facets",
 ]
 
-#: pseudo-column prefix under which per-store winners are memoized in the
-#: arrowagg A/B memo + sidecar (a real column can never collide). Winners
-#: are PER SHAPE CLASS — the round-9 crossover measurement
-#: (tools/localtier_scale.py) shows the classes cross at different sizes
-#: (at 5M rows the 32-way JVM scan already wins counts while the local
-#: select-k still wins top-k pages 2.4x), so one store-level winner would
-#: misroute one of them.
+#: shape class -> the largest exact footer row count this tier serves.
+#: The classes cross over at different sizes (SCALING.md "Local-vs-JVM
+#: crossover": on the 32-core box the JVM scan already wins counts and
+#: aggregates at 5M rows while the local select-k still wins top-k
+#: pages), so each class has its own cap: the largest ladder rung at
+#: which the local tier won that class on every measured box. Facet and
+#: kNN, unmeasured on the 32-core box, are also held to their nearest
+#: measured class there (group-agg) or to a clear win (kNN at 5M won by
+#: 4% on 4 cores, inside the noise).
+LOCAL_TIER_CAPS = {
+    "count": 1_000_000,
+    "page": 5_000_000,
+    "agg": 1_000_000,
+    "facet": 1_000_000,
+    "knn": 1_000_000,
+}
+
+#: byte cap over the footers' UNCOMPRESSED row-group total_byte_size (the
+#: parquet spec's total_byte_size is the uncompressed size, the measure
+#: that bounds driver memory): a store of wide documents must not drag
+#: gigabytes through the driver whatever its row count
+LOCAL_TIER_MAX_BYTES = 1 << 30
+
+#: prefix of the pseudo-column names that ``arrowagg.ab_winner`` reads as
+#: a local-tier shape class (a real column can never collide)
 LOCAL_TIER_COLUMN = "__local_tier__"
 
 
 def local_tier_column(kind: str) -> str:
-    """The A/B memo pseudo-column for one shape class: count, page,
-    agg, facet, or knn."""
+    """The pseudo-column naming one shape class (count, page, agg, facet
+    or knn) for ``arrowagg.ab_winner``."""
     return LOCAL_TIER_COLUMN + kind
-
-#: hard row gate: stores whose exact footer row count exceeds this never
-#: route locally, regardless of any memoized winner. This bounds A/B
-#: ELIGIBILITY, not routing — within the gate the first touch still runs
-#: both tiers and the measured winner routes (tools/localtier_scale.py,
-#: SCALING.md round 9: on a 32-core box the local tier wins every shape
-#: at 1M rows by 1.3-4.4x, still wins top-k at 5M, and loses counts/aggs
-#: to the 32-way JVM scan from ~3-5M — exactly what the per-store memo
-#: encodes). The gate's real job is bounding the one-time A/B's local
-#: run and keeping the tier out of genuinely big stores entirely.
-LOCAL_TIER_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_LOCAL_TIER_MAX_ROWS", 10_000_000)
-)
-
-#: companion byte gate (UNCOMPRESSED row-group total_byte_size, from the
-#: same footers — the parquet spec's total_byte_size is the uncompressed
-#: size, which is the measure that bounds driver memory): a 10M-row
-#: store of wide documents must not drag gigabytes through the driver
-LOCAL_TIER_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LOCAL_TIER_MAX_BYTES", 1 << 30)
-)
 
 
 def local_tier_enabled() -> bool:
     return os.environ.get("SPARK_GRAFT_LOCAL_TIER", "1") != "0"
 
 
-#: the measured local-vs-JVM crossover ladder (tools/localtier_scale.py,
-#: synthetic single-table stores, best-of-3 per tier, 32-core box —
-#: SCALING.md "Local-vs-JVM crossover"). Exported into every A/B sidecar
-#: (schema 2, :func:`sidecar_meta`) so a DIFFERENT deployment reading the
-#: store starts its routing from this box's measurements instead of from
-#: nothing: its own first-touch A/B still runs and overrides, but the
-#: ladder tells it where the contested region is.
-MEASURED_CROSSOVER_LADDER = {
-    "box_cpus": 32,
-    "winner_by_rows": {
-        "1000000": {"count_eq": "local", "count_range": "local",
-                    "topk10": "local", "group_agg": "local"},
-        "5000000": {"count_eq": "jvm", "count_range": "jvm",
-                    "topk10": "local", "group_agg": "jvm"},
-        "10000000": {"count_eq": "jvm", "count_range": "jvm",
-                     "topk10": "jvm", "group_agg": "jvm"},
-    },
-}
-
-#: sidecar schema revision: 1 = per-column winner entries only (round 8);
-#: 2 = adds the reserved "__meta__" entry carrying the writing box's
-#: local-tier gate constants, cpu count, and the measured ladder above.
-#: Readers look entries up BY COLUMN NAME, so "__meta__" (which is never
-#: a tier column) is invisible to schema-1 readers — forward compatible.
-SIDECAR_SCHEMA = 2
+def footer_totals(metas) -> Tuple[int, int]:
+    """(rows, uncompressed bytes) of a store from its ``[(file,
+    FileMetaData)]`` footers — the two numbers the routing gate reads."""
+    rows = sum(md.num_rows for _fp, md in metas)
+    nbytes = sum(
+        md.row_group(i).total_byte_size
+        for _fp, md in metas
+        for i in range(md.num_row_groups)
+    )
+    return rows, nbytes
 
 
-def sidecar_meta() -> dict:
-    """The "__meta__" entry written into every A/B sidecar: the gate this
-    box routed under plus its measured crossover ladder (round-9 letter
-    #6 — a new deployment's first A/B can tighten its own routing from
-    the recorded profile instead of starting blind)."""
-    return {
-        "schema": SIDECAR_SCHEMA,
-        "box_cpus": os.cpu_count(),
-        "local_tier_gate": {
-            "max_rows": local_tier_max_rows(),
-            "max_bytes": LOCAL_TIER_MAX_BYTES,
-        },
-        "measured_ladder": MEASURED_CROSSOVER_LADDER,
-    }
-
-
-def local_tier_max_rows() -> int:
-    return LOCAL_TIER_MAX_ROWS
+def local_tier_admits(kind: str, total_rows: int, total_bytes: int) -> bool:
+    """The routing predicate: True when a ``kind`` call over a store of
+    ``total_rows`` footer rows and ``total_bytes`` uncompressed bytes runs
+    on this tier. Every local-tier entry point and ``ab_winner`` ask it."""
+    return (
+        local_tier_enabled()
+        and total_rows <= LOCAL_TIER_CAPS[kind]
+        and total_bytes <= LOCAL_TIER_MAX_BYTES
+    )
 
 
 class Unsupported(Exception):
@@ -1383,8 +1361,8 @@ def local_knn(
         # the STABLE sum-of-squared-differences form, matching the native
         # JVM kernel (dims <= 128, the usual local-tier case) — the
         # |x|^2 - 2 x.q + |q|^2 matmul form leaves ~1e-8 cancellation
-        # residue at near-zero distances, which the 12-sig-fig A/B parity
-        # compare would flag as a mismatch against the native plan
+        # residue at near-zero distances, which would break score parity
+        # with the native plan (tests/test_knn_metrics.py)
         d = X - q[None, :]
         scores = np.sqrt(np.einsum("ij,ij->i", d, d))
     elif metric == "manhattan":

@@ -154,14 +154,24 @@ def train_quality_classifier(
     # keeps the per-task closure to coefficients instead of the summary
     # object graph. setSummary is private[ml] in Scala — public at
     # bytecode level, which is what py4j dispatches on; guarded so API
-    # drift degrades to the old behavior instead of breaking the fit.
+    # drift degrades to the old behavior (with a warning) instead of
+    # breaking the fit.
+    from py4j.protocol import Py4JError
+
     try:
         lrm = model.stages[-1]
         lrm._java_obj.setSummary(
             getattr(df.sparkSession._jvm, "scala.Option").empty()
         )
-    except Exception:  # noqa: BLE001 — py4j/Spark surface drift
-        pass
+    except (AttributeError, IndexError, Py4JError) as e:
+        import warnings
+
+        warnings.warn(
+            "could not strip the quality classifier's training summary "
+            f"({type(e).__name__}: {e}); scoring in a session that has "
+            "used Dataset.observe may fail with 'Task not serializable'",
+            stacklevel=2,
+        )
     return model
 
 

@@ -23,9 +23,12 @@ from pyspark.sql import functions as F
 
 
 #: memo for fan_out's physical-partition probe: (session id, semantic
-#: hash of the analyzed plan) -> partition count. Physical planning is
-#: deterministic for a fixed session configuration, so semantically
-#: equal frames plan to the same partition count; the memo makes
+#: hash of the analyzed plan, input-file listing) -> partition count.
+#: Physical planning is deterministic for a fixed session configuration
+#: and file set, so semantically equal frames over the same files plan to
+#: the same partition count. The file listing is part of the key because
+#: the semantic hash survives an append to the same parquet path (new
+#: files, same plan), which changes the partition count. The memo makes
 #: repeated probes over the same (sub)frame — e.g. the two
 #: shingle_hash_sets projections of one gated corpus inside a pipeline
 #: invocation, or re-built copies of one declared query — plan ONCE per
@@ -39,7 +42,7 @@ def _plan_partitions(df: DataFrame) -> int:
     """Physical partition count of ``df``'s plan, without the Python-RDD
     wrapping ``df.rdd`` adds (``javaToPython`` builds a pickling
     MapPartitions RDD just to ask for the count), memoized per
-    (session, semantic plan). A memo miss still pays one physical
+    (session, semantic plan, input files). A memo miss still pays one physical
     planning of the subtree — that is what the count IS — but repeats
     within a session are free, and the planned RDD is cached on the
     frame's own QueryExecution so a frame that goes on to execute does
@@ -49,6 +52,7 @@ def _plan_partitions(df: DataFrame) -> int:
         key = (
             df.sparkSession._jsparkSession.hashCode(),
             jqe.analyzed().semanticHash(),
+            tuple(df.inputFiles()),
         )
     except Exception:  # noqa: BLE001 — py4j surface drift: fall through
         return jqe.toRdd().getNumPartitions()

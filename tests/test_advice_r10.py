@@ -8,9 +8,8 @@
 3. (low)    the local-tier byte gate and the broadcast-side detection use
             parquet total_byte_size, which is the UNCOMPRESSED size — the
             comments now say so (behavioral pin: gate arithmetic).
-4. (low)    the first-touch A/B never records a side that was answered
-            from a result memo, and never pins 'arrow' against a cold
-            Spark plan (warm rerun + contested best-of-2 on both sides).
+4. (low)    first-touch A/B memo hygiene — retired with the A/B router
+            (the local tier now routes on static footer gates).
 5. (perf)   local_count_page fuses COUNT + page into one mask pass per
             file, value-identical to local_count + local_page.
 """
@@ -127,43 +126,6 @@ def test_local_count_page_no_cond_uses_footer_total(store):
     assert n == 5 and len(rows) == 3
 
 
-def test_ab_first_touch_busts_result_memos(spark, tmp_path):
-    """ADVICE r10 #4 + the jvm-pin regression: a count memo left by an
-    EARLIER query must not serve either timed side of the first-touch
-    A/B (a 0.1 ms memo hit had pinned 'jvm' for the whole shape class)."""
-    from linkml_store_spark.client import Client
-    from linkml_store_spark.operators.arrowagg import _AB_WINNERS
-    from linkml_store_spark.query import Query
-
-    client = Client(spark)
-    db = client.attach_database(f"spark://{tmp_path}/ab")
-    coll = db.create_collection("t", identifier_attribute="id")
-    coll.insert(
-        spark.createDataFrame(
-            [(i, "R" if i % 3 == 0 else "N") for i in range(5000)],
-            ["id", "flag"],
-        )
-    )
-    _AB_WINNERS.clear()
-    # page-shape query fills the ("vcount"/"count") memos for this clause
-    r1 = coll.query(Query(where_clause={"flag": "R"}, limit=10))
-    assert r1.num_rows == 1667
-    # count-shape first touch on the SAME clause: its spark side must
-    # recompute (the memo is busted inside the A/B), so the recorded
-    # jvm time reflects real work, not a dict lookup
-    r2 = coll.query(Query(where_clause={"flag": "R"}, limit=0))
-    assert r2.num_rows == 1667
-    recorded = [
-        (k, v) for k, v in _AB_WINNERS.items() if "__local_tier__count" in k[1]
-    ]
-    if recorded:  # gate may refuse on tiny stores; when it ran, check it
-        _k, (winner, t_jvm, t_arrow) = recorded[0]
-        assert t_jvm > 0.001, (
-            f"jvm side timed at {t_jvm * 1000:.2f} ms — answered from a "
-            "memo, not recomputed"
-        )
-
-
 # ---- round-10 IR extension: min_by + exact count_distinct ---------------
 
 def _agg_store(tmp_path):
@@ -223,8 +185,7 @@ def test_count_distinct_float_refuses(tmp_path):
 
 def test_min_by_spark_local_parity(spark, tmp_path):
     """The full Collection.query route: Spark F.min_by/F.countDistinct vs
-    the local Arrow mirror must agree on real data (first-touch A/B
-    value-checks them against each other; any divergence warns + pins)."""
+    the local Arrow mirror must agree on real data."""
     import warnings
 
     from linkml_store_spark.client import Client
@@ -259,6 +220,7 @@ def test_min_by_spark_local_parity(spark, tmp_path):
             (i % 13, i) for i in range(3000) if i % 7 == g
         )[1]
         assert row["first_name"] == f"e{want}"
+    assert coll._query_spark(q).rows == r.rows
 
 
 # ---- round-10 IR extension: HAVING ---------------------------------------

@@ -1,6 +1,6 @@
 """Pins for the round-9 ADVICE fixes (advisor zone classification,
 adaptive-quality NULL groups, dedup_incremental verified-mode guards,
-DSIR rounded ranking, ab_winner negative-lookup memoization)."""
+DSIR rounded ranking)."""
 
 import pytest
 
@@ -116,30 +116,3 @@ def test_dedup_incremental_sets_written_before_buckets(spark, tmp_path, monkeypa
         dedup.dedup_incremental(docs, idx, "text", verify_threshold=0.9)
     assert os.path.exists(sets), "sets sidecar must be written first"
     assert not os.path.exists(idx), "bucket append must not have happened"
-
-
-def test_ab_winner_memoizes_negative_sidecar_lookup(spark, tmp_path, monkeypatch):
-    """A store with NO recorded winner must not re-read the sidecar file
-    on every query (round-9 ADVICE #5)."""
-    from linkml_store_spark.operators import arrowagg
-
-    f = tmp_path / "t.parquet"
-    spark.range(10).coalesce(1).write.parquet(str(f))
-    import glob
-
-    files = sorted(glob.glob(f"{f}/*.parquet"))
-    calls = {"n": 0}
-    real = arrowagg._sidecar_load
-
-    def counting(fs):
-        calls["n"] += 1
-        return real(fs)
-
-    monkeypatch.setattr(arrowagg, "_sidecar_load", counting)
-    # fresh keys for this store
-    for k in [k for k in arrowagg._AB_WINNERS if k[1][1:] and str(tmp_path) in str(k[1])]:
-        del arrowagg._AB_WINNERS[k]
-    assert arrowagg.ab_winner(spark, files, "c", total_rows=10) is None
-    first = calls["n"]
-    assert arrowagg.ab_winner(spark, files, "c", total_rows=10) is None
-    assert calls["n"] == first, "negative lookup must be memoized"

@@ -215,217 +215,3 @@ def test_collection_count_routes_equality_through_arrow(spark, tmp_path, monkeyp
     assert res2.num_rows == want
     assert coll._footer_stats_cache.get(ck) == want
 
-
-# --------------------------------------------------------------------- #
-# round 7: adaptive routing — per-store A/B winner memo
-# --------------------------------------------------------------------- #
-
-def test_auto_gate_floor_and_memo_routing(spark):
-    """'auto' gates: under the floor always refuses; a recorded winner
-    routes (arrow -> engage, jvm -> refuse); unknown stores keep the
-    conservative static crossover. Numbers pass through untouched."""
-    from linkml_store_spark.operators import arrowagg as A
-
-    A._AB_WINNERS.clear()
-    try:
-        files = ["/tmp/fake_a.parquet", "/tmp/fake_b.parquet"]
-        assert A._resolve_min_rows(spark, 5, 10**12) == 5
-        assert A._resolve_min_rows(spark, "auto", 1000) == A.ARROW_AGG_FLOOR_ROWS
-        assert (
-            A._resolve_min_rows(spark, "auto", 10**9, files, "c")
-            == A.ARROW_AGG_MIN_ROWS
-        )  # unknown store: conservative static gate
-        A.record_ab_winner(spark, files, "c", t_jvm=1.0, t_arrow=0.5)
-        assert A.ab_winner(spark, files, "c") == "arrow"
-        assert (
-            A._resolve_min_rows(spark, "auto", 10**9, files, "c")
-            == A.ARROW_AGG_FLOOR_ROWS
-        )  # engages
-        A.record_ab_winner(spark, files, "d", t_jvm=0.4, t_arrow=0.9)
-        assert A._resolve_min_rows(spark, "auto", 10**9, files, "d") == 2**62
-        # same store listed in a different order resolves to the same key
-        assert A.ab_winner(spark, list(reversed(files)), "c") == "arrow"
-    finally:
-        A._AB_WINNERS.clear()
-    # end-to-end default on sf0.01 (60k rows): under the floor, JVM plan
-    df = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
-    assert A.parquet_value_counts(spark, df, "l_returnflag", min_rows="auto") is None
-
-
-def test_facet_ab_runs_once_then_memo_routes(spark, tmp_path, monkeypatch):
-    """query_facets on a first-touch store+column runs BOTH engines once
-    (correct answer either way), records the winner, and the memo then
-    routes lazy facet_df 'auto' calls on the same store."""
-    from linkml_store_spark import facets as facets_mod
-    from linkml_store_spark.operators import arrowagg as A
-
-    A._AB_WINNERS.clear()
-    monkeypatch.setattr(A, "ARROW_AGG_FLOOR_ROWS", 100)
-    try:
-        path = str(tmp_path / "ab_store")
-        rows = [(i, ["x", "y", "z"][i % 3]) for i in range(3000)]
-        spark.createDataFrame(rows, "id long, v string").coalesce(2).write.parquet(path)
-        scan = spark.read.parquet(path)
-        got = facets_mod.query_facets(scan, None, ["v"])
-        assert got["v"] == [("x", 1000), ("y", 1000), ("z", 1000)]
-        assert len(A._AB_WINNERS) == 1
-        (key, (winner, t_jvm, t_arrow)), = A._AB_WINNERS.items()
-        assert winner in ("arrow", "jvm") and t_jvm > 0 and t_arrow > 0
-        # memo now routes: facet_df with the default auto gate stays correct
-        out = facets_mod.facet_df(scan, None, "v").collect()
-        assert [tuple(r) for r in out] == got["v"]
-        # second query_facets does NOT rerun the A/B (memo size stable)
-        got2 = facets_mod.query_facets(scan, None, ["v"])
-        assert got2 == got and len(A._AB_WINNERS) == 1
-    finally:
-        A._AB_WINNERS.clear()
-
-
-def test_ab_memo_key_normalizes_file_scheme(spark, tmp_path, monkeypatch):
-    """Winners are recorded under scheme-stripped footer paths
-    (facets._footer_metas) but consumed by routes passing raw
-    df.inputFiles() URIs (file:/...). The memo key must normalize both to
-    the same store key — the round-8 advisor finding: without it the
-    'auto' gate never saw facet-recorded winners, silently kept the
-    static gate, and post-A/B facet/count routing no-opped."""
-    from linkml_store_spark.operators import arrowagg as A
-
-    A._AB_WINNERS.clear()
-    monkeypatch.setattr(A, "ARROW_AGG_FLOOR_ROWS", 100)
-    try:
-        path = str(tmp_path / "scheme_store")
-        spark.createDataFrame(
-            [(i, ["x", "y"][i % 2]) for i in range(2000)], "id long, v string"
-        ).coalesce(2).write.parquet(path)
-        scan = spark.read.parquet(path)
-        raw = scan.inputFiles()
-        assert any(f.startswith("file:") for f in raw)  # the URI shape
-        stripped = [
-            f[len("file:"):] if f.startswith("file:") else f for f in raw
-        ]
-        # recorded under stripped paths (as _facet_ab does)...
-        A.record_ab_winner(spark, stripped, "v", t_jvm=1.0, t_arrow=0.5)
-        # ...must be visible to a consumer holding raw URIs
-        assert A.ab_winner(spark, raw, "v") == "arrow"
-        # and the 'auto' gate must actually ENGAGE the arrow leaf
-        adf = A.parquet_value_counts(spark, scan, "v", min_rows="auto")
-        assert adf is not None, "auto gate fell back to the static gate"
-        got = sorted((r[0], r[-1]) for r in adf.collect())
-        assert got == [("x", 1000), ("y", 1000)]
-    finally:
-        A._AB_WINNERS.clear()
-
-
-def test_ab_winner_persists_across_sessions(spark, tmp_path, monkeypatch):
-    """The winner memo is persisted NEXT TO THE STORE (_ab_winners.json,
-    underscore-hidden from parquet scans): a second session routes from
-    the sidecar without re-paying the double-run first touch; a changed
-    layout fingerprint (file count / total rows) re-measures; any
-    mutation deletes the sidecar outright (round-8 verdict letter)."""
-    import json
-    import os
-
-    from linkml_store_spark import facets as facets_mod
-    from linkml_store_spark.operators import arrowagg as A
-
-    A._AB_WINNERS.clear()
-    monkeypatch.setattr(A, "ARROW_AGG_FLOOR_ROWS", 100)
-    try:
-        path = str(tmp_path / "persist_store")
-        rows = [(i, ["x", "y", "z"][i % 3]) for i in range(3000)]
-        spark.createDataFrame(rows, "id long, v string").coalesce(
-            2
-        ).write.parquet(path)
-        scan = spark.read.parquet(path)
-        facets_mod.query_facets(scan, None, ["v"])  # runs the A/B once
-        sidecar = os.path.join(path, A.AB_SIDECAR)
-        assert os.path.exists(sidecar)
-        data = json.load(open(sidecar))
-        assert data["v"]["winner"] in ("arrow", "jvm")
-        recorded = data["v"]
-
-        # "second session": empty in-memory memo — the sidecar answers,
-        # with the ORIGINAL measurements (no re-run)
-        A._AB_WINNERS.clear()
-        files = scan.inputFiles()
-        total = data["v"]["total_rows"]
-        assert A.ab_winner(spark, files, "v", total_rows=total) == recorded[
-            "winner"
-        ]
-        # and query_facets does NOT start a fresh A/B (the sidecar entry
-        # was warmed into the memo unchanged)
-        got = facets_mod.query_facets(scan, None, ["v"])
-        assert got["v"] == [("x", 1000), ("y", 1000), ("z", 1000)]
-        data2 = json.load(open(sidecar))
-        assert data2["v"] == recorded  # no overwrite = no re-measure
-
-        # stale fingerprint: a different row total refuses the sidecar
-        A._AB_WINNERS.clear()
-        assert A.ab_winner(spark, files, "v", total_rows=total + 1) is None
-
-        # a hidden underscore file must not break the plain scan
-        assert spark.read.parquet(path).count() == 3000
-    finally:
-        A._AB_WINNERS.clear()
-
-
-def test_ab_sidecar_deleted_on_mutation(spark, tmp_path, monkeypatch):
-    """Collection mutations remove the persisted winner sidecar (a compact
-    can preserve both file count and rows, so the fingerprint alone
-    cannot be trusted across rewrites)."""
-    import os
-
-    from linkml_store_spark.client import Client
-    from linkml_store_spark.operators import arrowagg as A
-    from linkml_store_spark.query import Query
-
-    A._AB_WINNERS.clear()
-    monkeypatch.setattr(A, "ARROW_AGG_FLOOR_ROWS", 100)
-    try:
-        client = Client(spark)
-        dbp = client.attach_database(f"spark://{tmp_path}/abpersist")
-        coll = dbp.create_collection("t", identifier_attribute="id")
-        coll.insert(spark.createDataFrame(
-            [(i, ["A", "B"][i % 2]) for i in range(2000)], ["id", "v"]
-        ))
-        assert coll.query(Query(where_clause={"v": "A"}, limit=0)).num_rows == 1000
-        sidecar = os.path.join(
-            dbp._collection_path("t"), A.AB_SIDECAR
-        )
-        assert os.path.exists(sidecar)
-        coll.insert(spark.createDataFrame([(9999, "A")], ["id", "v"]))
-        assert not os.path.exists(sidecar)  # mutation invalidates
-        # and the store still answers correctly post-mutation
-        assert coll.query(Query(where_clause={"v": "A"}, limit=0)).num_rows == 1001
-    finally:
-        A._AB_WINNERS.clear()
-
-
-def test_count_ab_memo_through_collection(spark, tmp_path, monkeypatch):
-    """Equality counts through Collection.query A/B-test once per
-    store+column and stay value-correct on both routes."""
-    # pins the ARROW-COUNT routes: the local tier would intercept
-    # footer-small stores before them (round 9)
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
-    from linkml_store_spark.client import Client
-    from linkml_store_spark.operators import arrowagg as A
-    from linkml_store_spark.query import Query
-
-    A._AB_WINNERS.clear()
-    monkeypatch.setattr(A, "ARROW_AGG_FLOOR_ROWS", 100)
-    try:
-        client = Client(spark)
-        dbp = client.attach_database(f"spark://{tmp_path}/abcnt")
-        coll = dbp.create_collection("t", identifier_attribute="id")
-        coll.insert(spark.createDataFrame(
-            [(i, ["A", "B"][i % 2]) for i in range(2000)], ["id", "v"]
-        ))
-        r1 = coll.query(Query(where_clause={"v": "A"}, limit=0))
-        assert r1.num_rows == 1000
-        assert len(A._AB_WINNERS) == 1
-        # memoized result cache busted -> recount routes through the memo
-        coll._footer_stats_cache.pop(("vcount", "v", ("A",)), None)
-        assert coll.query(Query(where_clause={"v": "A"}, limit=0)).num_rows == 1000
-        assert len(A._AB_WINNERS) == 1
-    finally:
-        A._AB_WINNERS.clear()

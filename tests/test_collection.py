@@ -408,10 +408,13 @@ def test_tuple_sort_gets_pruned_plan(spark, tmp_path):
     assert _sort_parse("v") == ("v", False)
 
 
-def test_unfiltered_query_total_from_footers(spark, tmp_path):
+def test_unfiltered_query_total_from_footers(spark, tmp_path, monkeypatch):
     """An unfiltered Query's pre-pagination total over a persisted store
     comes from parquet footer num_rows (exact metadata) — memoized, zero
     jobs — and size() takes the same route. Mutations invalidate it."""
+    # pins the SPARK-path footer memo: the local tier answers footer-small
+    # stores without it
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
     client = Client(spark)
     dbp = client.attach_database(f"spark://{tmp_path}/totdb")
     coll = dbp.create_collection("t", identifier_attribute="id")
@@ -427,10 +430,13 @@ def test_unfiltered_query_total_from_footers(spark, tmp_path):
     assert coll.query(Query(limit=5)).num_rows == 501
 
 
-def test_query_plan_cache_reuse_and_invalidation(spark, tmp_path):
+def test_query_plan_cache_reuse_and_invalidation(spark, tmp_path, monkeypatch):
     """Repeated identical Queries re-execute the SAME cached JVM Dataset
     (prepared-statement analog); a mutation clears the cache and the next
     query rebuilds against the new store."""
+    # pins the SPARK-path plan cache: the local tier answers footer-small
+    # stores without building a JVM Dataset
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
     client = Client(spark)
     dbp = client.attach_database(f"spark://{tmp_path}/plandb")
     coll = dbp.create_collection("t", identifier_attribute="id")
@@ -493,7 +499,7 @@ def test_cluster_advisor_warns_once(spark, tmp_path, monkeypatch):
     assert not [x for x in w2 if "compact" in str(x.message)]
 
 
-def test_cluster_advisor_auto_then_footer_answers(spark, tmp_path):
+def test_cluster_advisor_auto_then_footer_answers(spark, tmp_path, monkeypatch):
     """Opt-in auto path closes the 100 TB maintenance loop hands-free:
     hot-column facets trigger the compact(sort_cols=...) rewrite, after
     which the SAME facet (and the equality count) answer from footers."""
@@ -501,6 +507,7 @@ def test_cluster_advisor_auto_then_footer_answers(spark, tmp_path):
 
     from linkml_store_spark.query import Query
 
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")  # Spark-path advisor test
     client = Client(spark)
     dbp = client.attach_database(f"spark://{tmp_path}/advauto")
     coll = dbp.create_collection("t", identifier_attribute="id")

@@ -250,7 +250,7 @@ def test_query_facets_zone_route_mixed_columns(spark, tmp_path):
     assert got2 == want2
 
 
-def test_cluster_once_then_footer_answers_everything(spark, tmp_path):
+def test_cluster_once_then_footer_answers_everything(spark, tmp_path, monkeypatch):
     """The 100 TB maintenance loop end-to-end: one compact(sort_cols=[c])
     pass re-clusters the collection store, after which the categorical
     count (value zone map), the facet (zone facet), and paging totals all
@@ -259,6 +259,9 @@ def test_cluster_once_then_footer_answers_everything(spark, tmp_path):
     from linkml_store_spark.operators.topk import _file_value_zone_decision
     from linkml_store_spark.query import Query
 
+    # pins the SPARK-path zone routes: the local tier answers footer-small
+    # stores without them
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
     client = Client(spark)
     db = client.attach_database(f"spark://{tmp_path}/loopdb")
     coll = db.create_collection("tickets", identifier_attribute="id")

@@ -171,7 +171,7 @@ def test_collection_knn_metric_routes_and_matches(spark, tmp_path, emb_rows):
 
 def test_local_tier_knn_metrics_match_oracle(spark, tmp_path, emb_rows):
     """The in-process local tier serves every metric with the same values
-    as the numpy oracle (and therefore the Spark plan it A/B-mirrors)."""
+    as the numpy oracle (and therefore the Spark plan it mirrors)."""
     from linkml_store_spark.client import Client
     from linkml_store_spark.operators import localexec as lx
 
@@ -181,7 +181,7 @@ def test_local_tier_knn_metrics_match_oracle(spark, tmp_path, emb_rows):
     coll.insert(spark.read.parquet(EMB))
     qv = [float(x) for x in emb_rows[4]["embedding"]]
 
-    gate = coll._local_tier_gate()
+    gate = coll._local_tier_gate("knn")
     assert gate is not None, "sf0.001 embeddings must be inside the gate"
     files, schema, _total = gate
     for metric in ("cosine", "dot", "euclidean", "manhattan"):

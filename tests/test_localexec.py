@@ -3,8 +3,9 @@
 The tier (operators/localexec.py) must be VALUE-IDENTICAL to the Spark
 path on every shape it accepts, refuse everything else, and never engage
 past the footer size gate. Parity here is pinned directly against
-``Collection._query_spark`` on the same store — the same check the
-runtime A/B performs once per store.
+``Collection._query_spark`` on the same store; routing is the static
+footer gate (``localexec.local_tier_admits``), so these pins are the
+tier's only parity check.
 """
 
 import os
@@ -45,7 +46,7 @@ def store(spark, tmp_path):
 def _local_result(coll, q):
     plan = coll._local_tier_plan(q)
     assert plan is not None, f"local tier refused eligible query {q}"
-    return plan[0]()
+    return plan()
 
 
 def _assert_parity(coll, q, ordered=None):
@@ -179,58 +180,13 @@ def test_unsupported_shapes_refuse(store, q):
 
 
 def test_size_gate_refuses(store, monkeypatch):
-    monkeypatch.setattr(lx, "LOCAL_TIER_MAX_ROWS", 10)
+    monkeypatch.setattr(lx, "LOCAL_TIER_CAPS", dict.fromkeys(lx.LOCAL_TIER_CAPS, 10))
     assert store._local_tier_plan(Query(limit=0)) is None
 
 
 def test_env_kill_switch(store, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
     assert store._local_tier_plan(Query(limit=0)) is None
-
-
-def test_ab_records_winner_and_routes(store):
-    """First query on the store runs BOTH tiers and records the measured
-    winner under the pseudo-column; later queries route on the memo."""
-    from linkml_store_spark.operators.arrowagg import _AB_WINNERS, ab_winner
-
-    files = [fp for fp, _md in store._store_metas()]
-    # the fixture's inserts may have left a stale winner — clear
-    for k in [k for k in _AB_WINNERS if str(k[2]).startswith(lx.LOCAL_TIER_COLUMN)]:
-        del _AB_WINNERS[k]
-    q = Query(where_clause={"cat": "c1"}, limit=0)
-    r1 = store.query(q)
-    w = ab_winner(
-        store.spark, files, lx.local_tier_column("count"), total_rows=300
-    )
-    assert w in ("arrow", "jvm")
-    r2 = store.query(q)
-    assert r1.num_rows == r2.num_rows == store._query_spark(q).num_rows
-
-
-def test_ab_divergence_pins_jvm_and_warns(spark, tmp_path, monkeypatch):
-    """A (simulated) local-tier wrong answer must warn and permanently
-    route the store to the JVM path — correctness never depends on the
-    tier."""
-    from linkml_store_spark.operators.arrowagg import _AB_WINNERS, ab_winner
-
-    client = Client(spark)
-    db = client.attach_database(f"spark://{tmp_path}/divdb")
-    coll = db.create_collection("d", identifier_attribute="id")
-    coll.insert(spark.createDataFrame([(i, i % 3) for i in range(50)], ["id", "v"]))
-    for k in [k for k in _AB_WINNERS if k[2] == lx.LOCAL_TIER_COLUMN]:
-        del _AB_WINNERS[k]
-    real = lx.local_count
-    monkeypatch.setattr(lx, "local_count", lambda *a, **k: real(*a, **k) + 1)
-    q = Query(where_clause={"v": 1}, limit=0)
-    with pytest.warns(UserWarning, match="local tier result diverged"):
-        res = coll.query(q)
-    assert res.num_rows == coll._query_spark(q).num_rows  # spark answer wins
-    files = [fp for fp, _md in coll._store_metas()]
-    assert ab_winner(
-        coll.spark, files, lx.local_tier_column("count"), total_rows=50
-    ) == "jvm"
-    monkeypatch.setattr(lx, "local_count", real)
-    assert coll.query(q).num_rows == res.num_rows  # still routed via jvm
 
 
 def test_mutation_invalidates_local_count_memo(store):
@@ -240,26 +196,7 @@ def test_mutation_invalidates_local_count_memo(store):
                    "ts": None, "tags": []}])
     plan = store._local_tier_plan(q)
     assert plan is not None
-    assert plan[0]().num_rows == n1 + 1
-
-
-def test_sidecar_persists_local_winner(spark, tmp_path):
-    """The measured winner survives sessions via the _ab_winners.json
-    sidecar (layout-fingerprinted) when the scan owns the directory."""
-    import json
-
-    client = Client(spark)
-    db = client.attach_database(f"spark://{tmp_path}/scdb")
-    coll = db.create_collection("s", identifier_attribute="id")
-    coll.insert(spark.createDataFrame([(i,) for i in range(40)], ["id"]))
-    coll.query(Query(where_clause={"id": {"$lt": 10}}, limit=0))  # runs the A/B
-    store_dir = db._collection_path("s")
-    sidecar = os.path.join(store_dir, "_ab_winners.json")
-    assert os.path.exists(sidecar)
-    data = json.load(open(sidecar))
-    key = lx.local_tier_column("count")
-    assert key in data
-    assert data[key]["winner"] in ("arrow", "jvm")
+    assert plan().num_rows == n1 + 1
 
 
 # --------------------------------------------------------------------- #
@@ -284,10 +221,6 @@ def _spark_facets(coll, where, cols, limit=100, min_count=1):
     ids=["single", "two-single", "compound", "bool"],
 )
 def test_facet_parity_unfiltered(store, cols):
-    from linkml_store_spark.operators.arrowagg import _AB_WINNERS
-
-    for k in [k for k in _AB_WINNERS if str(k[2]).startswith(lx.LOCAL_TIER_COLUMN)]:
-        del _AB_WINNERS[k]
     assert _local_facets(store, None, cols) == _spark_facets(store, None, cols)
 
 
@@ -312,8 +245,8 @@ def test_facet_refuses_arrays_timestamps_and_unsupported_where(store):
 
 
 def test_facets_via_collection_api_routes_and_matches(store):
-    """Collection.query_facets end-to-end: first call A/Bs, later calls
-    route on the recorded winner; both answers equal the Spark path."""
+    """Collection.query_facets end-to-end: repeated calls route locally
+    and both answers equal the Spark path."""
     r1 = store.query_facets(where=None, facet_columns=["cat", "n"])
     r2 = store.query_facets(where=None, facet_columns=["cat", "n"])
     assert r1 == r2 == _spark_facets(store, None, ["cat", "n"])
@@ -390,7 +323,7 @@ def test_property_local_count_matches_spark(orders_store, where):
     orders_store._footer_stats_cache.pop(
         ("count", "local", repr(where)), None
     )
-    local_n = plan[0]().num_rows
+    local_n = plan().num_rows
     spark_n = apply_where(orders_store.df, where).count()
     assert local_n == spark_n, where
 
@@ -432,7 +365,7 @@ def _agg_parity(coll, q, keys):
 
     plan = coll._local_tier_plan(q)
     assert plan is not None, "agg IR refused locally"
-    l, s = plan[0](), coll._query_spark(q)
+    l, s = plan(), coll._query_spark(q)
     assert l.num_rows == s.num_rows
     key = lambda r: tuple(str(r[k]) for k in keys)  # noqa: E731
     for a, b in zip(sorted(l.rows, key=key), sorted(s.rows, key=key)):
@@ -472,7 +405,7 @@ def test_agg_ir_join(agg_db):
     _agg_parity(facts, q, ["seg"])
     # inner-join semantics: unmatched custs (5, 6) contribute nothing
     plan = facts._local_tier_plan(q)
-    total_n = sum(r["n"] for r in plan[0]().rows)
+    total_n = sum(r["n"] for r in plan().rows)
     assert total_n == sum(1 for i in range(400) if i % 7 < 5)
 
 
@@ -503,7 +436,7 @@ def test_agg_ir_sorted_paged(agg_db):
     )
     facts = agg_db.get_collection("facts")
     plan = facts._local_tier_plan(q)
-    l, s = plan[0](), facts._query_spark(q)
+    l, s = plan(), facts._query_spark(q)
     assert l.num_rows == s.num_rows == 3  # pre-pagination group count
     assert [r["cat"] for r in l.rows] == [r["cat"] for r in s.rows]
     assert len(l.rows) == 2
@@ -523,7 +456,7 @@ def test_agg_ir_left_join(agg_db):
     facts = agg_db.get_collection("facts")
     _agg_parity(facts, q, ["seg"])
     plan = facts._local_tier_plan(q)
-    rows = plan[0]().rows
+    rows = plan().rows
     assert sum(r["n"] for r in rows) == 400  # every fact row survives
     null_grp = [r for r in rows if r["seg"] is None]
     assert len(null_grp) == 1 and null_grp[0]["n_seg"] == 0
@@ -540,7 +473,7 @@ def test_agg_ir_semi_join(agg_db):
     facts = agg_db.get_collection("facts")
     _agg_parity(facts, q, ["cat"])
     plan = facts._local_tier_plan(q)
-    assert sum(r["n"] for r in plan[0]().rows) == sum(
+    assert sum(r["n"] for r in plan().rows) == sum(
         1 for i in range(400) if i % 7 < 5
     )
 
@@ -556,7 +489,7 @@ def test_agg_ir_anti_join(agg_db):
     facts = agg_db.get_collection("facts")
     _agg_parity(facts, q, ["cat"])
     plan = facts._local_tier_plan(q)
-    assert sum(r["n"] for r in plan[0]().rows) == sum(
+    assert sum(r["n"] for r in plan().rows) == sum(
         1 for i in range(400) if i % 7 >= 5
     )
 
@@ -594,7 +527,7 @@ def test_agg_ir_anti_semi_null_keys(spark, tmp_path):
         )
         _agg_parity(facts, q, ["g"])
         plan = facts._local_tier_plan(q)
-        assert sum(r["n"] for r in plan[0]().rows) == expect_total, how
+        assert sum(r["n"] for r in plan().rows) == expect_total, how
 
 
 def test_agg_ir_refusals(agg_db):
@@ -633,8 +566,8 @@ def test_agg_ir_join_requires_group_by(agg_db):
 
 
 def test_agg_ir_via_query_routes_and_matches(agg_db):
-    """End-to-end through Collection.query: A/B on first touch, memoized
-    local route after, equal answers throughout."""
+    """End-to-end through Collection.query: repeated calls take the local
+    route and equal the Spark path's answer."""
     facts = agg_db.get_collection("facts")
     q = Query(group_by=["cat"], aggs={"rev": ("sum", "price")}, limit=-1)
     r1 = facts.query(q)
@@ -701,3 +634,132 @@ def test_agg_ir_bad_how_raises(agg_db):
                         "right_on": "ck", "how": "right"},
                   group_by=["cat"], aggs={"n": ("count", None)})
         )
+
+
+# --------------------------------------------------------------------- #
+# static routing: the per-class footer gate decides, ab_winner and
+# explain report it, and reads never write into the store
+# --------------------------------------------------------------------- #
+
+@pytest.fixture(scope="module")
+def route_store(spark, tmp_path_factory):
+    client = Client(spark)
+    base = tmp_path_factory.mktemp("routedb")
+    db = client.attach_database(f"spark://{base}/rdb")
+    coll = db.create_collection("r", identifier_attribute="id")
+    coll.insert(spark.createDataFrame(
+        [(i, f"c{i % 5}", float(i % 50), [float(i % 7), float(i % 3) + 1.0])
+         for i in range(300)],
+        "id long, cat string, v double, emb array<double>",
+    ))
+    return coll
+
+
+#: one public call per shape class
+ROUTE_CALLS = {
+    "count": lambda c: c.query(Query(where_clause={"cat": "c1"}, limit=0)),
+    "page": lambda c: c.query(Query(sort_by=["-v"], limit=5)),
+    "agg": lambda c: c.query(
+        Query(group_by=["cat"], aggs={"n": ("count", None)}, limit=-1)
+    ),
+    "facet": lambda c: c.query_facets(facet_columns=["cat"]),
+    "knn": lambda c: c.knn_search([1.0, 2.0], vector_col="emb", k=3),
+}
+
+ROUTE_SETTINGS = ["under_cap", "over_cap", "kill_switch"]
+
+
+def _spark_jobs(coll, fn) -> int:
+    """Spark jobs ``fn`` ran (statusTracker job group), from cold result
+    memos and page plans so a Spark-routed call cannot hide behind one."""
+    coll._footer_stats_cache.clear()
+    coll._plan_cache.clear()
+    sc = coll.spark.sparkContext
+    group = f"route-{id(fn)}-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "static routing test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _apply_setting(monkeypatch, setting, kind):
+    if setting == "over_cap":  # the 300-row store is over a 299-row cap
+        monkeypatch.setitem(lx.LOCAL_TIER_CAPS, kind, 299)
+    elif setting == "kill_switch":
+        monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
+
+
+@pytest.mark.parametrize("setting", ROUTE_SETTINGS)
+@pytest.mark.parametrize("kind", list(ROUTE_CALLS))
+def test_class_cap_routes_and_ab_winner_reports_it(
+    route_store, monkeypatch, kind, setting
+):
+    """Under its class cap a call runs zero Spark jobs; over the cap or
+    under the kill switch it takes the Spark path; ``ab_winner`` reports
+    exactly the route taken."""
+    from linkml_store_spark.operators.arrowagg import ab_winner
+
+    _apply_setting(monkeypatch, setting, kind)
+    jobs = _spark_jobs(route_store, lambda: ROUTE_CALLS[kind](route_store))
+    if setting == "under_cap":
+        assert jobs == 0, f"{kind} under its cap ran {jobs} Spark jobs"
+    else:
+        assert jobs > 0, f"{kind} ({setting}) never reached Spark"
+    files = [fp for fp, _md in route_store._store_metas()]
+    reported = ab_winner(
+        route_store.spark, files, lx.local_tier_column(kind), total_rows=300
+    )
+    assert reported == ("arrow" if jobs == 0 else "jvm")
+
+
+@pytest.mark.parametrize("setting", ROUTE_SETTINGS)
+def test_explain_reports_route_taken(route_store, monkeypatch, setting):
+    _apply_setting(monkeypatch, setting, "page")
+    where = {"cat": "c2"}
+    out = route_store.explain(where)
+    jobs = _spark_jobs(route_store, lambda: route_store.find(where))
+    if jobs == 0:
+        assert "== Local Tier ==" in out and "page cap" in out
+    else:
+        assert "== Route ==\nDistributed plan:" in out
+        assert "Local Tier" not in out
+    if setting == "kill_switch":
+        assert "SPARK_GRAFT_LOCAL_TIER=0" in out
+    if setting == "over_cap":
+        assert "over the gate (300 footer rows, page cap 299" in out
+
+
+def test_ab_winner_reports_arrow_aggregate_gate(spark, sf_dir):
+    """For a real column ``ab_winner`` reports the Arrow dictionary-code
+    aggregate's static ARROW_AGG_MIN_ROWS gate."""
+    from linkml_store_spark.operators import arrowagg as A
+
+    files = spark.read.parquet(f"{sf_dir}/lineitem.parquet").inputFiles()
+    assert A.ab_winner(spark, files, "l_returnflag") == "jvm"
+    assert A.ab_winner(
+        spark, files, "l_returnflag", total_rows=A.ARROW_AGG_MIN_ROWS
+    ) == "arrow"
+
+
+@pytest.mark.parametrize("setting", ["under_cap", "kill_switch"])
+def test_reads_write_nothing_into_store_dir(route_store, monkeypatch, setting):
+    """Reads on either route leave the store directory byte-for-byte
+    listed as before (no routing sidecar or any other file)."""
+    if setting == "kill_switch":
+        monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
+    store_dir = route_store.database._collection_path(route_store.alias)
+
+    def listing():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), store_dir)
+            for d, _dirs, fs in os.walk(store_dir) for f in fs
+        )
+
+    before = listing()
+    for call in ROUTE_CALLS.values():
+        route_store._footer_stats_cache.clear()
+        call(route_store)
+    route_store.explain({"cat": "c1"})
+    assert listing() == before

@@ -71,7 +71,7 @@ def jdb(spark, tmp_path_factory):
 
     con = duckdb.connect()
     for name, coll in [("l", facts), ("rdim", rdim), ("rnull", rnull)]:
-        files = coll._local_tier_gate()[0]
+        files = coll._local_tier_gate("agg")[0]
         flist = ", ".join(f"'{f}'" for f in files)
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet([{flist}])"
@@ -172,7 +172,7 @@ def test_ir_join_matches_duckdb_both_tiers(jdb, spec):
     results = {"spark": coll._query_spark(q)}
     plan = coll._local_tier_plan(q)
     if plan is not None:
-        results["local"] = plan[0]()
+        results["local"] = plan()
     for tier, res in results.items():
         assert res.num_rows == len(want_rows), (tier, spec)
         got = Counter(
@@ -189,7 +189,7 @@ def test_ir_join_zero_row_right_store(jdb, spark):
     rempty_coll.insert(
         spark.createDataFrame([], "rk long, rv long, rs string")
     )
-    files = rempty_coll._local_tier_gate()[0]
+    files = rempty_coll._local_tier_gate("agg")[0]
     flist = ", ".join(f"'{f}'" for f in files)
     con.execute(
         f"CREATE VIEW rempty AS SELECT * FROM read_parquet([{flist}])"
@@ -216,5 +216,5 @@ def test_ir_join_zero_row_right_store(jdb, spark):
         assert got == want, how
         plan = coll._local_tier_plan(q)
         if plan is not None:
-            lres = plan[0]()
+            lres = plan()
             assert Counter((r["s"], r["n"]) for r in lres.rows) == want, how

@@ -292,3 +292,23 @@ def test_stage_checkpoint_reliable_mode(spark, tmp_path, monkeypatch):
     assert sorted(r["x"] for r in reliable.collect()) == [
         i * 2 for i in range(100)]
     assert glob.glob(ckdir + "/*/rdd-*"), "no reliable checkpoint written"
+
+
+def test_fan_out_probe_reprobes_after_append(spark, tmp_path):
+    """fan_out's partition-count memo must not serve the count planned
+    before an append to the same parquet path: the analyzed plan's
+    semantic hash is unchanged, the file set is not."""
+    from linkml_store_spark.operators import scale
+
+    path = str(tmp_path / "grows")
+    spark.range(100).coalesce(1).write.parquet(path)
+    before = spark.read.parquet(path)
+    n1 = scale._plan_partitions(before)
+    assert n1 == before.rdd.getNumPartitions() == 1
+
+    spark.range(100, 900).repartition(8).write.mode("append").parquet(path)
+    after = spark.read.parquet(path)
+    assert len(after.inputFiles()) == 9
+    n2 = scale._plan_partitions(after)
+    assert n2 == after.rdd.getNumPartitions()
+    assert n2 > n1, "served the pre-append partition count from the memo"

@@ -535,12 +535,15 @@ def test_value_zone_refusals(spark, tmp_path):
     assert _file_value_zone_decision(path, "s", ["a", 1]) is None
 
 
-def test_collection_value_count_routes_through_zone(spark, tmp_path):
+def test_collection_value_count_routes_through_zone(spark, tmp_path, monkeypatch):
     """A status-clustered Collection store answers equality/$in totals
     from footers alone; the cached total is reused for paging."""
     from linkml_store_spark.client import Client
     from linkml_store_spark.query import Query
 
+    # pins the SPARK-path zone count: the local tier answers footer-small
+    # stores without it
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
     client = Client(spark)
     db = client.attach_database(f"spark://{tmp_path}/zvdb")
     coll = db.create_collection("tickets", identifier_attribute="id")
@@ -614,11 +617,14 @@ def test_topk_stats_pruned_string_column(spark, tmp_path):
     assert [r["uid"] for r in asc] == [r["uid"] for r in want_a]
 
 
-def test_collection_string_sort_prunes_and_matches(spark, tmp_path):
+def test_collection_string_sort_prunes_and_matches(spark, tmp_path, monkeypatch):
     """The Collection default sort+limit plan now prunes on STRING primary
     sort keys too — page parity with the plain plan, threshold pushed."""
     from linkml_store_spark.client import Client
 
+    # pins the SPARK-path pruned top-k: the local tier answers
+    # footer-small stores without it
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
     client = Client(spark)
     db = client.attach_database(f"spark://{tmp_path}/strsort")
     coll = db.create_collection("users", identifier_attribute="id")
