@@ -228,38 +228,44 @@ class Collection:
         # drops the registration and knn falls back to the exact brute
         # plan until rebuilt.
         if appended is not None and self._vector_indexes:
+            from py4j.protocol import Py4JJavaError
+            from pyspark.errors import PySparkException
+
+            from linkml_store_spark.operators.similarity import (
+                ivf_append,
+                read_ivf_index,
+            )
+
             kept: Dict[str, tuple] = {}
             for key, entry in list(self._vector_indexes.items()):
                 path = entry[3] if len(entry) > 3 else None
                 if path is None or key not in appended.columns:
                     continue  # in-memory or shadow index: stale, drop
                 try:
-                    from linkml_store_spark.operators.similarity import (
-                        ivf_append,
-                        read_ivf_index,
-                    )
-
                     ivf_append(self.spark, path, appended, key)
                     assigned, cents = read_ivf_index(self.spark, path)
-                    kept[key] = (assigned, cents, entry[2], path)
-                except Exception:  # noqa: BLE001 — never block the insert
-                    pass
+                except (OSError, ValueError, PySparkException, Py4JJavaError) as e:
+                    # never block the insert: the index is dropped and knn
+                    # runs the exact brute plan until it is rebuilt
+                    import warnings
+
+                    warnings.warn(
+                        f"collection {self.alias!r}: dropped the IVF index "
+                        f"on {key!r}, its append failed "
+                        f"({type(e).__name__}: {e}); knn runs the exact "
+                        f"scan until build_vector_index({key!r}) rebuilds it",
+                        stacklevel=4,
+                    )
+                    continue
+                kept[key] = (assigned, cents, entry[2], path)
             self._vector_indexes = kept
         else:
             self._vector_indexes.clear()
         # The reference fully reindexes shadow collections on ANY
-        # modification (collection.py:289-295) — a documented hot spot. Here
-        # pure appends refresh incrementally: only the new rows are embedded
-        # and unioned onto the existing index plan. Updates/deletes/replaces
-        # still invalidate (correct, conservative).
-        if appended is not None and self._index_dfs:
-            for name, idx_df in list(self._index_dfs.items()):
-                indexer = self._indexers.get(name)
-                if indexer is not None:
-                    self._index_dfs[name] = idx_df.unionByName(
-                        indexer.index_dataframe(appended)
-                    )
-            return
+        # modification (collection.py:289-295). Here any mutation drops the
+        # shadow index plans, and the in-process text indexes go with the
+        # footer cache above: the next search rebuilds from the current
+        # store, once per store version.
         self._index_dfs.clear()
 
     # ------------------------------------------------------------------ #
@@ -1788,41 +1794,68 @@ class Collection:
     ) -> QueryResult:
         """Vector search: embed query, cosine against the shadow index,
         top-k desc; optional MMR diversification
-        (reference collection.py:531-623, indexer.py:158-211). When
-        ``build_vector_index(index_name=...)`` has registered an IVF index
-        for this text index and the query has no prefilter, the probed
-        IVF plan serves the candidates instead of the full scan."""
+        (reference collection.py:531-623, indexer.py:158-211).
+
+        Routing: when the local tier's static footer gate admits the
+        store for the ``knn`` class, the embedding matrix fits the tier's
+        byte cap and no IVF index is registered for this text index, the
+        shadow index is collected ONCE per store version into an
+        in-process matrix (``localexec.VectorIndex``); every later search
+        embeds only its query and ranks in process — zero Spark jobs. A
+        write drops it and the next search rebuilds it. Otherwise — and
+        on any refusal or error of the local route — the Spark plan
+        runs: when ``build_vector_index(index_name=...)`` has registered
+        an IVF index and the query has no prefilter, the probed IVF plan
+        serves the candidates, else the brute scan of the index plan."""
+        from linkml_store_spark.index.search import (
+            rank_pool,
+            search_pool_size,
+            vector_search,
+        )
+
         if not self._indexers:
             self.attach_indexer()  # auto-create default (collection.py:576-592)
         if index_name is None:
             index_name = next(iter(self._indexers))
-        if index_name not in self._index_dfs:
-            self.index_objects(index_name)
         indexer = self._indexers[index_name]
-        idx_df = self._index_dfs[index_name]
-        from linkml_store_spark.index.search import vector_search
-
-        ivf = None if where else self._vector_indexes.get(f"__index__@{index_name}")
         qv = indexer.text_to_vector(query)
-        scored_pool_fn = None
-        if ivf is not None:
-            from linkml_store_spark.index.indexer import INDEX_COLUMN
-            from linkml_store_spark.operators.similarity import ivf_knn
+        ranked = None
+        local = self._local_text_index(index_name)
+        if local is not None:
+            try:
+                pool = local.top_k(
+                    qv,
+                    search_pool_size(limit, mmr_relevance_factor),
+                    where=where,
+                    keep_vector=mmr_relevance_factor is not None,
+                    session_tz=self._session_tz(),
+                )
+                ranked = rank_pool(pool, qv, limit, mmr_relevance_factor)
+            except Exception:  # noqa: BLE001 — incl. Unsupported: Spark path
+                ranked = None
+        if ranked is None:
+            if index_name not in self._index_dfs:
+                self.index_objects(index_name)
+            ivf = None if where else self._vector_indexes.get(f"__index__@{index_name}")
+            scored_pool_fn = None
+            if ivf is not None:
+                from linkml_store_spark.index.indexer import INDEX_COLUMN
+                from linkml_store_spark.operators.similarity import ivf_knn
 
-            assigned, centroids, nprobe = ivf[:3]
-            # substitute the probed partition-pruned plan for the brute
-            # scan; vector_search keeps owning pool sizing/ranking/MMR
-            scored_pool_fn = lambda pool: ivf_knn(  # noqa: E731
-                assigned, centroids, qv, INDEX_COLUMN, k=pool, nprobe=nprobe
+                assigned, centroids, nprobe = ivf[:3]
+                # substitute the probed partition-pruned plan for the brute
+                # scan; vector_search keeps owning pool sizing/ranking/MMR
+                scored_pool_fn = lambda pool: ivf_knn(  # noqa: E731
+                    assigned, centroids, qv, INDEX_COLUMN, k=pool, nprobe=nprobe
+                )
+            ranked = vector_search(
+                self._index_dfs[index_name],
+                qv,
+                where=where,
+                limit=limit,
+                mmr_relevance_factor=mmr_relevance_factor,
+                scored_pool_fn=scored_pool_fn,
             )
-        ranked = vector_search(
-            idx_df,
-            qv,
-            where=where,
-            limit=limit,
-            mmr_relevance_factor=mmr_relevance_factor,
-            scored_pool_fn=scored_pool_fn,
-        )
         rows = []
         for score, obj in ranked:
             obj = {k: v for k, v in obj.items() if k != "__index__"}
@@ -1832,6 +1865,44 @@ class Collection:
         return QueryResult(
             num_rows=len(rows), rows=[o for _, o in rows], ranked_rows=rows
         )
+
+    def _local_text_index(self, index_name: str):
+        """The in-process ``localexec.VectorIndex`` of text index
+        ``index_name`` when the local route may serve it, else None.
+
+        Built on first use per store version — one collect of the index
+        plan, so every indexer (simple, LLM, templated) embeds exactly as
+        the Spark path does — and kept in the footer cache, which every
+        mutation clears, keyed on the indexer and the store's file
+        listing. A refusal is kept too, so a store the route cannot serve
+        never re-pays the collect."""
+        from linkml_store_spark.index.indexer import INDEX_COLUMN
+        from linkml_store_spark.operators import localexec as lx
+
+        if self._vector_indexes.get(f"__index__@{index_name}") is not None:
+            return None
+        gate = self._local_tier_gate("knn")
+        if gate is None:
+            return None
+        files, _schema, total_rows = gate
+        indexer = self._indexers[index_name]
+        key = ("text_index", indexer, tuple(files))
+        if key in self._footer_stats_cache:
+            return self._footer_stats_cache[key]
+        _rows, nbytes = lx.footer_totals(self._store_metas())
+        matrix_bytes = total_rows * indexer.vector_default_length * 8
+        built = None
+        if nbytes + matrix_bytes <= lx.LOCAL_TIER_MAX_BYTES:
+            if index_name not in self._index_dfs:
+                self.index_objects(index_name)
+            try:
+                built = lx.VectorIndex(
+                    self._index_dfs[index_name].toArrow(), INDEX_COLUMN
+                )
+            except Exception:  # noqa: BLE001 — incl. Unsupported: Spark path
+                built = None
+        self._footer_stats_cache[key] = built
+        return built
 
     # ------------------------------------------------------------------ #
     # set operations (§2.7 extension surface — free in Spark)

@@ -367,33 +367,39 @@ PAIR_NATIVE_METRICS = {
 }
 
 
-def native_pair_dim(df, vector_col: str, max_dim: int = PAIR_NATIVE_MAX_DIM):
-    """Gate for the unrolled pair kernels: the vector length, verified
-    UNIFORM across the whole column. Returns None (→ caller keeps the
-    HOF path, whose null-padding semantics ragged data needs) when the
-    column is empty, ragged, or wider than ``max_dim``.
-
-    One aggregate job — min/max of ``size()`` over the non-null rows —
-    so the input's lineage executes exactly ONCE per probe (round-13
-    advisory: the previous first()-plus-uniformity-scan shape executed
-    expensive upstream lineage twice per side before any pair work
-    started). Same decisions: null vectors are ignored by the probe
-    (as the first()/ANSI-size scan ignored them), uniform non-null
-    lengths in (0, max_dim] return that length, anything else None."""
+def vector_probe(df, vector_col: str):
+    """``(rows, min size, max size)`` of a vector column in ONE aggregate
+    job: the row count (every row, null vectors too) and the min/max
+    ``size()`` over the non-null vectors (None, None when there are
+    none). The exact-pair plans read all three from one probe per side —
+    the count and width for the broadcast byte gate
+    (``operators.dedup.pair_broadcast_fits``), the min/max for the
+    native-kernel gate (:func:`pair_dim`)."""
+    size = F.when(F.col(vector_col).isNotNull(), F.size(F.col(vector_col)))
     row = df.agg(
-        F.min(
-            F.when(F.col(vector_col).isNotNull(), F.size(F.col(vector_col)))
-        ).alias("mn"),
-        F.max(
-            F.when(F.col(vector_col).isNotNull(), F.size(F.col(vector_col)))
-        ).alias("mx"),
+        F.count(F.lit(1)).alias("n"),
+        F.min(size).alias("mn"),
+        F.max(size).alias("mx"),
     ).first()
-    if row is None or row["mn"] is None:
+    return row["n"], row["mn"], row["mx"]
+
+
+def pair_dim(min_size, max_size, max_dim: int = PAIR_NATIVE_MAX_DIM):
+    """Gate for the unrolled pair kernels, from a :func:`vector_probe`:
+    the vector length when every non-null vector has it and it lies in
+    (0, ``max_dim``], else None (→ caller keeps the HOF path, whose
+    null-padding semantics ragged data needs)."""
+    if min_size is None or min_size != max_size or not 0 < min_size <= max_dim:
         return None
-    dim = row["mn"]
-    if dim != row["mx"] or not 0 < dim <= max_dim:
-        return None
-    return dim
+    return min_size
+
+
+def native_pair_dim(df, vector_col: str, max_dim: int = PAIR_NATIVE_MAX_DIM):
+    """:func:`pair_dim` of a column, probed with one aggregate job
+    (:func:`vector_probe`): None when the column is empty, all-null,
+    ragged, or wider than ``max_dim``."""
+    _n, mn, mx = vector_probe(df, vector_col)
+    return pair_dim(mn, mx, max_dim)
 
 
 #: metrics ranked ASCENDING (smaller is closer); the rest rank descending

@@ -7,10 +7,17 @@ client-side (its main scalability cliff, collection.py:600); here scoring is
 a native Column expression over the index DataFrame, so the scan, score, and
 top-k all run distributed and only k rows come back to the driver.
 
+That distributed plan is the route for stores past the local tier's gate.
+``Collection.search`` serves gate-admitted stores in process instead: the
+index plan is collected once per store version into
+``operators.localexec.VectorIndex`` and each later search ranks it with
+``localexec.knn_top`` (the kernel ``knn_search`` uses too) — the reference's
+embed-once shadow index, without its per-search re-embedding of every row.
+
 MMR (``utils/vector_utils.py:94-158``) is inherently sequential: we fetch a
-bounded candidate pool (4*limit by default) via the distributed top-k, then
-run the iterative argmax on the driver — the candidate pool, not the
-collection, bounds driver memory.
+bounded candidate pool (4*limit by default) via the top-k of either route,
+then :func:`rank_pool` runs the iterative argmax on the driver — the
+candidate pool, not the collection, bounds driver memory.
 """
 
 from __future__ import annotations
@@ -110,6 +117,16 @@ def knn(
     return scored.orderBy(order).limit(k)
 
 
+def search_pool_size(
+    limit: int, mmr_relevance_factor: Optional[float], candidate_multiplier: int = 4
+) -> int:
+    """Candidates to rank: ``limit``, or ``candidate_multiplier * limit``
+    when MMR re-ranks them."""
+    if mmr_relevance_factor is None:
+        return limit
+    return max(limit, candidate_multiplier * limit)
+
+
 def vector_search(
     index_df: DataFrame,
     query_vector: Sequence[float],
@@ -128,7 +145,7 @@ def vector_search(
     the auto-routed IVF probe here) while this single implementation keeps
     owning pool sizing, ranking, MMR, and the final trim.
     """
-    pool = limit if mmr_relevance_factor is None else max(limit, candidate_multiplier * limit)
+    pool = search_pool_size(limit, mmr_relevance_factor, candidate_multiplier)
     if scored_pool_fn is not None:
         top = scored_pool_fn(pool).collect()
     else:
@@ -140,6 +157,19 @@ def vector_search(
         (float(r["score"]), {k: v for k, v in r.asDict(recursive=True).items() if k != "score"})
         for r in top
     ]
+    return rank_pool(results, query_vector, limit, mmr_relevance_factor)
+
+
+def rank_pool(
+    results: List[Tuple[float, dict]],
+    query_vector: Sequence[float],
+    limit: int,
+    mmr_relevance_factor: Optional[float] = None,
+) -> List[Tuple[float, dict]]:
+    """The MMR and trim step over a best-first candidate pool of
+    ``(score, obj)``; with MMR each obj carries its vector under
+    ``INDEX_COLUMN``. Shared by the Spark plan above and the in-process
+    route of ``Collection.search``."""
     if mmr_relevance_factor is not None:
         qv = np.asarray(query_vector, dtype=float)
         vecs = [np.asarray(obj[INDEX_COLUMN], dtype=float) for _, obj in results]
@@ -239,14 +269,26 @@ def find_matches(
     from pyspark.sql.window import Window
     from linkml_store_spark.functions.vector import DISTANCE_METRICS
 
+    from linkml_store_spark.functions.vector import vector_probe
+
     lhs = left.select(F.col(left_id).alias("left_id"), F.col(vector_col).alias("__lv"))
     rhs = right.select(F.col(right_id).alias("right_id"), F.col(vector_col).alias("__rv"))
+    # (rows, min size, max size) per side, one aggregate job each at most:
+    # the auto route's counts and the exact plan's kernel and broadcast
+    # gates all read the same probe
+    probes = {}
+
+    def probe(side: str):
+        if side not in probes:
+            probes[side] = (
+                vector_probe(lhs, "__lv") if side == "l" else vector_probe(rhs, "__rv")
+            )
+        return probes[side]
+
     route_ivf = method == "ivf"
     if method == "auto":
-        from linkml_store_spark.where import fast_count
-
-        nl = left_rows if left_rows is not None else fast_count(lhs)
-        nr = right_rows if right_rows is not None else fast_count(rhs)
+        nl = left_rows if left_rows is not None else probe("l")[0]
+        nr = right_rows if right_rows is not None else probe("r")[0]
         left_rows, right_rows = nl, nr  # reuse downstream (sizing, salting)
         if nl * nr > max_exact_pairs:
             if metric in ("cosine", "euclidean", "dot"):
@@ -327,14 +369,17 @@ def find_matches(
     # norms precomputed per ROW). Ragged or >128-dim columns keep the
     # HOF plan with its null-padding semantics.
     from linkml_store_spark.functions.vector import (
-        native_pair_dim,
         norm_native,
         pair_cosine_native,
+        pair_dim,
         PAIR_NATIVE_METRICS,
     )
+    from linkml_store_spark.operators.dedup import pair_broadcast_fits
 
-    dim_l = native_pair_dim(lhs, "__lv")
-    dim_r = native_pair_dim(rhs, "__rv") if dim_l is not None else None
+    _nl, min_l, max_l = probe("l")
+    n_r, min_r, max_r = probe("r")
+    dim_l = pair_dim(min_l, max_l)
+    dim_r = pair_dim(min_r, max_r)
     if dim_l is not None and dim_l == dim_r:
         if metric == "cosine":
             lhs = lhs.withColumn("__nl", norm_native(F.col("__lv"), dim_l))
@@ -354,21 +399,14 @@ def find_matches(
     # streamed side to the session's core count (scale-adaptive) and pin
     # the build side broadcast so the nested loop fans out (guide
     # §2.5-2.6). Same pairs, same scores; only the task layout changes.
-    # The broadcast hint is GATED on the right side's row count
-    # (round-13 advisory: with method='exact' pinned, or a non-routable
-    # metric above the pair gate, the right side is unbounded — an
-    # unconditional hint would push past the 8 GB / 512M-row broadcast
-    # hard cap and fail where the planner-chosen crossJoin completes);
-    # above the gate the planner keeps its own join choice.
-    from linkml_store_spark.operators.dedup import PAIR_BROADCAST_MAX_ROWS
-
-    nr_gate = right_rows
-    if nr_gate is None:
-        from linkml_store_spark.where import fast_count
-
-        nr_gate = fast_count(rhs)
+    # The broadcast hint is GATED on the right side's bytes, rows ×
+    # widest vector (round-13 advisory: with method='exact' pinned, or a
+    # non-routable metric above the pair gate, the right side is
+    # unbounded — an unconditional hint would push past the 8 GB
+    # broadcast hard cap and fail where the planner-chosen crossJoin
+    # completes); above the gate the planner keeps its own join choice.
     p = left.sparkSession.sparkContext.defaultParallelism
-    build = F.broadcast(rhs) if nr_gate <= PAIR_BROADCAST_MAX_ROWS else rhs
+    build = F.broadcast(rhs) if pair_broadcast_fits(n_r, max_r) else rhs
     pairs = lhs.repartition(p, F.col("left_id")).crossJoin(build)
     if exclude_self:
         pairs = pairs.filter(F.col("left_id") != F.col("right_id"))

@@ -712,18 +712,26 @@ def _jaccard_prefix_candidates(
 # --------------------------------------------------------------------- #
 # embedding cosine near-dup
 # --------------------------------------------------------------------- #
-#: row gate for pinning F.broadcast on the build side of the exact
-#: all-pairs plans (round-13 advisory: the hint was unconditional — a
-#: big right side would hit the 8 GB / 512M-row broadcast hard cap and
-#: FAIL where the planner-chosen nested loop merely ran slowly). 1M
-#: 64-dim double vectors frame to ~0.6 GB — comfortably under the cap,
-#: far past the point the quadratic pair count is advisable anyway.
-#: Override with $SPARK_GRAFT_PAIR_BROADCAST_MAX_ROWS.
-PAIR_BROADCAST_MAX_ROWS = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_PAIR_BROADCAST_MAX_ROWS", 1_000_000
-    )
-)
+#: byte gate for pinning F.broadcast on the build side of the exact
+#: all-pairs plans (round-13 advisory: the hint was unconditional — a big
+#: right side would hit Spark's 8 GB broadcast hard cap and FAIL where the
+#: planner-chosen nested loop merely ran slowly). Bytes, not rows: 1M
+#: 64-dim double vectors frame to ~0.6 GB and broadcast, 1M 1024-dim ones
+#: are ~8.3 GB and keep the planner's own join choice.
+PAIR_BROADCAST_MAX_BYTES = 1 << 30
+
+#: per-row framing of a broadcast (id, vector) row beyond its doubles:
+#: the row header, the id, and the array's offset, length and null words
+PAIR_BROADCAST_ROW_OVERHEAD = 64
+
+
+def pair_broadcast_fits(rows: int, max_size) -> bool:
+    """True when a build side of ``rows`` rows whose widest vector holds
+    ``max_size`` doubles (a ``functions.vector.vector_probe``) is small
+    enough to pin as a broadcast: rows × (max_size × 8 + the row
+    overhead) within :data:`PAIR_BROADCAST_MAX_BYTES`."""
+    width = (max_size or 0) * 8 + PAIR_BROADCAST_ROW_OVERHEAD
+    return rows * width <= PAIR_BROADCAST_MAX_BYTES
 
 
 def embedding_near_dup_pairs_exact(
@@ -744,12 +752,16 @@ def embedding_near_dup_pairs_exact(
     HOF plan."""
     from linkml_store_spark.functions.vector import (
         cosine_similarity,
-        native_pair_dim,
         norm_native,
         pair_cosine_native,
+        pair_dim,
+        vector_probe,
     )
 
-    dim = native_pair_dim(df, vector_col)
+    # one probe job: the row count and width gate the broadcast, the
+    # min/max width gates the native kernel
+    n_rows, min_size, max_size = vector_probe(df, vector_col)
+    dim = pair_dim(min_size, max_size)
     l = df.select(F.col(id_col).alias("left_id"), F.col(vector_col).alias("__vl"))
     r = df.select(F.col(id_col).alias("right_id"), F.col(vector_col).alias("__vr"))
     if dim is not None:
@@ -767,13 +779,11 @@ def embedding_near_dup_pairs_exact(
     # constant) and pin the build side broadcast so the nested loop
     # fans out (guide §2.5-2.6: the whole quadratic stage was one task).
     # Same pairs, same scores — only the task layout changes. The hint
-    # is gated on row count (PAIR_BROADCAST_MAX_ROWS): past the
-    # broadcast hard cap the planner keeps its own join choice instead
-    # of hard-failing the exact baseline.
-    from linkml_store_spark.where import fast_count
-
+    # is gated on bytes (pair_broadcast_fits): past the gate the planner
+    # keeps its own join choice instead of hard-failing the exact
+    # baseline at the broadcast cap.
     p = df.sparkSession.sparkContext.defaultParallelism
-    build = r if fast_count(df) > PAIR_BROADCAST_MAX_ROWS else F.broadcast(r)
+    build = F.broadcast(r) if pair_broadcast_fits(n_rows, max_size) else r
     return (
         l.repartition(p, F.col("left_id"))
         .crossJoin(build)

@@ -76,6 +76,9 @@ __all__ = [
     "local_count",
     "local_page",
     "local_facets",
+    "local_knn",
+    "knn_top",
+    "VectorIndex",
 ]
 
 #: shape class -> the largest exact footer row count this tier serves.
@@ -1304,25 +1307,38 @@ def local_knn(
     session_tz: Optional[str] = None,
     metric: str = "cosine",
 ) -> List[dict]:
-    """Exact top-k in-process: one fused numpy matmul over the store's
-    (gate-bounded) vectors — the same float64 math as the engine's Arrow
-    kernels (``functions/vector.cosine_to_query`` / ``distance_to_query``).
-    ``metric``: cosine (default) / dot rank descending, euclidean /
-    manhattan ascending — mirroring ``index.search.knn``. Raises
-    Unsupported on anything whose Spark-path semantics this cannot
-    mirror: NULL or ragged vectors, zero norms (cosine) / non-finite
-    scores (Spark orders NaN above all doubles; numpy sorts it last)."""
-    import numpy as np
-    import pyarrow as pa
-
-    pa_, pc = _pa()
+    """Exact top-k in-process over the store's (gate-bounded) files: the
+    file-reading half of the eager ``Collection.knn_search`` route; the
+    scoring is :func:`knn_top`. Raises Unsupported on anything whose
+    Spark-path semantics this cannot mirror (see :func:`vector_matrix`
+    and :func:`knn_top`)."""
+    pa, _pc = _pa()
     out_cols = [f.name for f in schema if f.name != vector_col]
     if select_cols:
         out_cols = [c for c in select_cols if c != score_col]
     need = list(dict.fromkeys(out_cols + [vector_col]))
     tables = [_read_columns(p, need, ()) for p in files]
     tbl = pa.concat_tables(tables).combine_chunks()
-    col = tbl.column(vector_col).combine_chunks()
+    X = vector_matrix(tbl.column(vector_col))
+    top, scores = knn_top(X, query_vector, k, metric=metric)
+    page = tbl.select(out_cols).take(pa.array(top))
+    rows = _table_to_dicts(page, session_tz)
+    for r, s in zip(rows, scores):
+        r[score_col] = s
+    if select_cols:
+        rows = [{c: r.get(c) for c in select_cols} for r in rows]
+    return rows
+
+
+def vector_matrix(col):
+    """An Arrow list column of uniform-length vectors as an ``(n, dim)``
+    float64 matrix. Raises Unsupported on NULL vectors or elements, ragged
+    lengths, or a non-list type."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
     if col.null_count:
         raise Unsupported("NULL vectors")
     typ = col.type
@@ -1344,17 +1360,52 @@ def local_knn(
         raise Unsupported(f"vector column type {typ}")
     if flat.null_count:
         raise Unsupported("NULL vector elements")
+    return flat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False).reshape(n, dim)
+
+
+def row_norms(X):
+    """Euclidean norm of each matrix row (the cosine denominator)."""
+    import numpy as np
+
+    return np.sqrt(np.einsum("ij,ij->i", X, X))
+
+
+def knn_top(
+    X,
+    query_vector: Sequence[float],
+    k: int,
+    metric: str = "cosine",
+    norms=None,
+    zero_norm: str = "refuse",
+):
+    """The score-and-top-k kernel shared by ``knn_search`` and ``search``:
+    ``(indices, scores)`` of the best ``k`` rows of ``X`` for
+    ``query_vector``, best first — one fused numpy pass, the same float64
+    math as the engine's Arrow kernels (``functions/vector.cosine_to_query``
+    / ``distance_to_query``). ``metric``: cosine (default) / dot rank
+    descending, euclidean / manhattan ascending — mirroring
+    ``index.search.knn``. ``norms`` are precomputed :func:`row_norms`.
+
+    ``zero_norm`` says what a zero cosine denominator does: ``"refuse"``
+    raises Unsupported (the native JVM kernel yields no number there),
+    ``"zero"`` scores it 0.0 (the Arrow kernel the 1000-dim text indexes
+    run). Non-finite scores always refuse (Spark orders NaN above all
+    doubles; numpy sorts it last)."""
+    import numpy as np
+
     q = np.asarray(list(query_vector), dtype=np.float64)
-    if len(q) != dim:
+    if X.shape[1] != len(q):
         raise Unsupported("query/vector dimensionality mismatch")
-    X = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, dim)
     if metric == "cosine":
         qn = float(np.linalg.norm(q))
-        norms = np.sqrt(np.einsum("ij,ij->i", X, X))
-        denom = norms * qn
-        if qn == 0.0 or (denom == 0.0).any():
-            raise Unsupported("zero-norm vector")
-        scores = (X @ q) / denom
+        denom = (row_norms(X) if norms is None else norms) * qn
+        if (denom == 0.0).any():
+            if zero_norm != "zero":
+                raise Unsupported("zero-norm vector")
+            with np.errstate(divide="ignore", invalid="ignore"):
+                scores = np.where(denom == 0.0, 0.0, (X @ q) / denom)
+        else:
+            scores = (X @ q) / denom
     elif metric == "dot":
         scores = X @ q
     elif metric == "euclidean":
@@ -1371,19 +1422,58 @@ def local_knn(
         raise Unsupported(f"metric {metric}")
     if not np.isfinite(scores).all():
         raise Unsupported("non-finite scores")
-    kk = min(k, n)
+    kk = min(k, len(scores))
     if kk <= 0:
-        return []
+        return np.zeros(0, dtype=np.int64), []
     sgn = scores if metric in ("euclidean", "manhattan") else -scores
     part = np.argpartition(sgn, kk - 1)[:kk]
     top = part[np.argsort(sgn[part], kind="stable")]
-    page = tbl.select(out_cols).take(pa.array(top))
-    rows = _table_to_dicts(page, session_tz)
-    for r, i in zip(rows, top):
-        r[score_col] = float(scores[i])
-    if select_cols:
-        rows = [{c: r.get(c) for c in select_cols} for r in rows]
-    return rows
+    return top, [float(scores[i]) for i in top]
+
+
+class VectorIndex:
+    """A shadow text index held in process: the Arrow payload table (every
+    source column), its float64 vector matrix and the row norms — built
+    once per store version from the collected index plan, so each later
+    ``Collection.search`` embeds only its query and ranks with
+    :func:`knn_top`. Raises Unsupported when the vectors cannot form a
+    matrix or an output column's Python form differs from Spark's."""
+
+    __slots__ = ("table", "matrix", "norms", "vector_col")
+
+    def __init__(self, table, vector_col: str):
+        self.matrix = vector_matrix(table.column(vector_col))
+        self.norms = row_norms(self.matrix)
+        self.table = table.drop_columns([vector_col])
+        self.vector_col = vector_col
+        _check_output_types(self.table.schema, self.table.column_names)
+
+    def top_k(self, query_vector, k: int, where=None, keep_vector: bool = False,
+              session_tz: Optional[str] = None) -> List[Tuple[float, dict]]:
+        """``[(cosine, row)]`` of the ``k`` best rows passing ``where``,
+        best first, scored like the Spark path's Arrow cosine kernel (a
+        zero norm scores 0.0). ``keep_vector`` adds each row's vector
+        under the index column, as the Spark path keeps it for MMR.
+        Raises Unsupported for a clause outside the mirrored subset."""
+        pa, _pc = _pa()
+        import numpy as np
+
+        X, norms = self.matrix, self.norms
+        cond = compile_where_local(where, self.table.schema)
+        if cond is not None:
+            mask = cond.fn({c: self.table.column(c).combine_chunks()
+                            for c in cond.cols})
+            rows = np.flatnonzero(
+                mask.fill_null(False).to_numpy(zero_copy_only=False))
+            X, norms = X[rows], norms[rows]
+        top, scores = knn_top(X, query_vector, k, norms=norms, zero_norm="zero")
+        if cond is not None:
+            top = rows[top]
+        objs = _table_to_dicts(self.table.take(pa.array(top)), session_tz)
+        if keep_vector:
+            for obj, i in zip(objs, top):
+                obj[self.vector_col] = self.matrix[i].tolist()
+        return list(zip(scores, objs))
 
 
 # --------------------------------------------------------------------- #

@@ -146,3 +146,50 @@ def test_find_matches_exact_native_rows(spark):
         ).collect()
         assert len(out) == 20  # 10 left rows x top 2
         assert all(r.rank in (1, 2) for r in out)
+
+
+def _broadcast_hinted(df) -> bool:
+    """True when the analyzed plan carries a broadcast join hint."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return "strategy=broadcast" in plan
+
+
+def test_vector_probe_counts_and_sizes(spark):
+    from linkml_store_spark.functions.vector import vector_probe
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, None), (3, [3.0, 4.0, 5.0])],
+        "id long, v array<double>",
+    )
+    assert vector_probe(df, "v") == (3, 2, 3)
+    assert vector_probe(df.filter("id < 0"), "v") == (0, None, None)
+
+
+def test_pair_broadcast_gate_counts_vector_bytes(spark, monkeypatch):
+    """Wide vectors over a (patched) byte cap plan the exact pairs with no
+    broadcast hint and give the same pairs; the same rows at the old
+    row-only gate would have broadcast."""
+    from linkml_store_spark.index.search import find_matches
+    from linkml_store_spark.operators import dedup
+
+    dim = 256
+    rows = [(i, [float((i * 7 + j) % 11) + 0.5 for j in range(dim)])
+            for i in range(30)]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+
+    def run():
+        near = dedup.embedding_near_dup_pairs_exact(df, "v", threshold=0.9)
+        fm = find_matches(df, df, vector_col="v", left_id="vec_id",
+                          right_id="vec_id", method="exact", top_n=2)
+        return near, fm
+
+    near_b, fm_b = run()
+    assert _broadcast_hinted(near_b) and _broadcast_hinted(fm_b)
+    # 30 rows x (256 doubles + overhead) is ~63 kB: a 10 kB cap refuses it
+    monkeypatch.setattr(dedup, "PAIR_BROADCAST_MAX_BYTES", 10_000)
+    assert not dedup.pair_broadcast_fits(30, dim)
+    near_s, fm_s = run()
+    assert not _broadcast_hinted(near_s) and not _broadcast_hinted(fm_s)
+    key = lambda d: sorted(tuple(r) for r in d.collect())  # noqa: E731
+    assert key(near_s) == key(near_b) and key(near_b)
+    assert key(fm_s) == key(fm_b)

@@ -298,6 +298,29 @@ def test_collection_append_maintains_durable_index(spark, tmp_path):
     assert coll._vector_indexes == {}
 
 
+def test_failed_ivf_append_warns_and_drops_index(spark, tmp_path, monkeypatch):
+    """An append the durable index cannot absorb never blocks the insert:
+    it warns naming the dropped index, and knn runs the exact plan."""
+    from linkml_store_spark.client import Client
+    from linkml_store_spark.operators import similarity
+
+    client = Client(spark=spark)
+    db = client.attach_database(f"file:{tmp_path}/wh", alias="whfail")
+    coll = db.create_collection("emb", identifier_attribute="vec_id")
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    coll.insert(emb.filter(F.col("vec_id") < 250))
+    coll.build_vector_index("embedding", n_centroids=8, nprobe=3)
+
+    def failing_append(*_args, **_kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(similarity, "ivf_append", failing_append)
+    with pytest.warns(UserWarning, match="dropped the IVF index on 'embedding'"):
+        coll.insert(emb.filter(F.col("vec_id") >= 250))
+    assert coll._vector_indexes == {}
+    assert coll.df.count() == emb.count()
+
+
 def test_ivf_native_zero_norm_scores_zero(spark, tmp_path):
     # a zero-norm vector must score 0.0 through the auto-routed native
     # plan, not raise DIVIDE_BY_ZERO under the session's ANSI default
