@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from typing import TYPE_CHECKING, Any, Dict, Iterable, Iterator, List, Optional, Sequence, Union
+from typing import TYPE_CHECKING, Any, Dict, Iterable, Iterator, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
@@ -220,53 +220,53 @@ class Collection:
         # footer statistics no longer describe the store after any change
         self._footer_stats_cache.clear()
         self._plan_cache.clear()  # cached page plans point at the old store
-        # Vector indexes: a pure APPEND into a DURABLE IVF index is
-        # maintained incrementally (ivf_append — new vectors join their
-        # nearest existing centroid's partition; one pass over the batch).
-        # Anything else — updates/deletes/replaces, in-memory indexes,
-        # shadow-text indexes whose embedding column isn't in the batch —
-        # drops the registration and knn falls back to the exact brute
-        # plan until rebuilt.
-        if appended is not None and self._vector_indexes:
-            from py4j.protocol import Py4JJavaError
-            from pyspark.errors import PySparkException
-
-            from linkml_store_spark.operators.similarity import (
-                ivf_append,
-                read_ivf_index,
-            )
-
-            kept: Dict[str, tuple] = {}
-            for key, entry in list(self._vector_indexes.items()):
-                path = entry[3] if len(entry) > 3 else None
-                if path is None or key not in appended.columns:
-                    continue  # in-memory or shadow index: stale, drop
-                try:
-                    ivf_append(self.spark, path, appended, key)
-                    assigned, cents = read_ivf_index(self.spark, path)
-                except (OSError, ValueError, PySparkException, Py4JJavaError) as e:
-                    # never block the insert: the index is dropped and knn
-                    # runs the exact brute plan until it is rebuilt
-                    import warnings
-
-                    warnings.warn(
-                        f"collection {self.alias!r}: dropped the IVF index "
-                        f"on {key!r}, its append failed "
-                        f"({type(e).__name__}: {e}); knn runs the exact "
-                        f"scan until build_vector_index({key!r}) rebuilds it",
-                        stacklevel=4,
-                    )
-                    continue
-                kept[key] = (assigned, cents, entry[2], path)
-            self._vector_indexes = kept
-        else:
-            self._vector_indexes.clear()
         # The reference fully reindexes shadow collections on ANY
         # modification (collection.py:289-295). Here any mutation drops the
         # shadow index plans, and the in-process text indexes go with the
         # footer cache above: the next search rebuilds from the current
         # store, once per store version.
         self._index_dfs.clear()
+        # Vector indexes: a pure APPEND into a DURABLE IVF index is
+        # maintained incrementally (ivf_append — new vectors join their
+        # nearest existing centroid's partition; one pass over the batch).
+        # Anything else — updates/deletes/replaces, in-memory indexes,
+        # shadow-text indexes whose embedding column isn't in the batch —
+        # drops the registration and knn falls back to the exact brute
+        # plan until rebuilt. Registrations are dropped BEFORE the appends
+        # run and re-added one by one, so an error that escapes leaves no
+        # index over the replaced store.
+        registered, self._vector_indexes = self._vector_indexes, {}
+        if appended is None or not registered:
+            return
+        from py4j.protocol import Py4JJavaError
+        from pyspark.errors import PySparkException
+
+        from linkml_store_spark.operators.similarity import (
+            ivf_append,
+            read_ivf_index,
+        )
+
+        for key, entry in registered.items():
+            path = entry[3] if len(entry) > 3 else None
+            if path is None or key not in appended.columns:
+                continue  # in-memory or shadow index: stale, drop
+            try:
+                ivf_append(self.spark, path, appended, key)
+                assigned, cents = read_ivf_index(self.spark, path)
+            except (OSError, ValueError, PySparkException, Py4JJavaError) as e:
+                # never block the insert: the index is dropped and knn
+                # runs the exact brute plan until it is rebuilt
+                import warnings
+
+                warnings.warn(
+                    f"collection {self.alias!r}: dropped the IVF index "
+                    f"on {key!r}, its append failed "
+                    f"({type(e).__name__}: {e}); knn runs the exact "
+                    f"scan until build_vector_index({key!r}) rebuilds it",
+                    stacklevel=4,
+                )
+                continue
+            self._vector_indexes[key] = (assigned, cents, entry[2], path)
 
     # ------------------------------------------------------------------ #
     # identity
@@ -682,6 +682,19 @@ class Collection:
             return metas
         except Exception:  # noqa: BLE001 — stats are an optimization only
             return None
+
+    def _footer_totals(self) -> Tuple[int, int]:
+        """``localexec.footer_totals`` of the store's footers — (rows,
+        uncompressed bytes) — memoized in the footer cache. Call only
+        when :meth:`_store_metas` is not None."""
+        from linkml_store_spark.operators import localexec as lx
+
+        ck = ("footer_totals",)
+        hit = self._footer_stats_cache.get(ck)
+        if hit is None:
+            hit = lx.footer_totals(self._store_metas())
+            self._footer_stats_cache[ck] = hit
+        return hit
 
     def _store_total_rows(self) -> Optional[int]:
         """Exact whole-store row count from parquet footers (num_rows is
@@ -1461,7 +1474,7 @@ class Collection:
         metas = self._store_metas()
         if not metas:
             return None
-        total_rows, total_bytes = lx.footer_totals(metas)
+        total_rows, total_bytes = self._footer_totals()
         if not lx.local_tier_admits(kind, total_rows, total_bytes):
             return None
         files = [fp for fp, _md in metas]
@@ -1799,10 +1812,13 @@ class Collection:
         Routing: when the local tier's static footer gate admits the
         store for the ``knn`` class, the embedding matrix fits the tier's
         byte cap and no IVF index is registered for this text index, the
-        shadow index is collected ONCE per store version into an
-        in-process matrix (``localexec.VectorIndex``); every later search
-        embeds only its query and ranks in process — zero Spark jobs. A
-        write drops it and the next search rebuilds it. Otherwise — and
+        shadow index is built ONCE per store version into an in-process
+        matrix (``localexec.VectorIndex``): one Spark job collects the
+        rows and their texts, and the driver embeds them
+        (``Indexer.collect_index``). Every later search embeds only its
+        query and ranks in process — zero Spark jobs. A write drops the
+        matrix and the next search rebuilds it, so the saving needs more
+        than one search per store version. Otherwise — and
         on any refusal or error of the local route — the Spark plan
         runs: when ``build_vector_index(index_name=...)`` has registered
         an IVF index and the query has no prefilter, the probed IVF plan
@@ -1870,12 +1886,11 @@ class Collection:
         """The in-process ``localexec.VectorIndex`` of text index
         ``index_name`` when the local route may serve it, else None.
 
-        Built on first use per store version — one collect of the index
-        plan, so every indexer (simple, LLM, templated) embeds exactly as
-        the Spark path does — and kept in the footer cache, which every
-        mutation clears, keyed on the indexer and the store's file
-        listing. A refusal is kept too, so a store the route cannot serve
-        never re-pays the collect."""
+        Built on first use per store version by
+        ``Indexer.collect_index`` — the same texts and vectors as the
+        index plan, for every indexer — and kept in the footer cache,
+        which every mutation clears. A refusal is kept too, so a store
+        the route cannot serve never re-pays the build."""
         from linkml_store_spark.index.indexer import INDEX_COLUMN
         from linkml_store_spark.operators import localexec as lx
 
@@ -1884,21 +1899,17 @@ class Collection:
         gate = self._local_tier_gate("knn")
         if gate is None:
             return None
-        files, _schema, total_rows = gate
         indexer = self._indexers[index_name]
-        key = ("text_index", indexer, tuple(files))
+        key = ("text_index", indexer)
         if key in self._footer_stats_cache:
             return self._footer_stats_cache[key]
-        _rows, nbytes = lx.footer_totals(self._store_metas())
+        total_rows, nbytes = self._footer_totals()
         matrix_bytes = total_rows * indexer.vector_default_length * 8
         built = None
         if nbytes + matrix_bytes <= lx.LOCAL_TIER_MAX_BYTES:
-            if index_name not in self._index_dfs:
-                self.index_objects(index_name)
             try:
-                built = lx.VectorIndex(
-                    self._index_dfs[index_name].toArrow(), INDEX_COLUMN
-                )
+                table, matrix = indexer.collect_index(self.df)
+                built = lx.VectorIndex(table, matrix, INDEX_COLUMN)
             except Exception:  # noqa: BLE001 — incl. Unsupported: Spark path
                 built = None
         self._footer_stats_cache[key] = built

@@ -14,13 +14,15 @@ Reference parity:
     is real.
 
 Vectorization runs as a pandas UDF (Arrow-batched) because sha1-per-trigram
-is Python-bound math; the rest of the search pipeline is native Spark.
+is Python-bound math; the rest of the search pipeline is native Spark. The
+in-process search index (``Indexer.collect_index``) instead collects the
+texts and embeds them in the driver with the same function.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Callable, Dict, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -29,6 +31,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 INDEX_COLUMN = "__index__"  # reference indexer.py:86-87
+_TEXT_COLUMN = "__text"  # an object's text, while collect_index embeds it
+#: texts per embed_fn call when LLMIndexer embeds in the driver — the
+#: Arrow batch size the index UDF hands it
+_EMBED_BATCH = 10_000
 
 
 def object_to_text_expr(
@@ -138,6 +144,49 @@ class Indexer:
 
         return df.withColumn(INDEX_COLUMN, embed(self._text_col(df)))
 
+    def embed_texts(self, texts: List[Optional[str]]) -> np.ndarray:
+        """``(len(texts), dim)`` float64 vectors of ``texts`` (None embeds
+        as ""): per text, the function :meth:`index_dataframe`'s UDF maps,
+        so both give the same floats."""
+        n = self.vector_default_length
+        out = np.zeros((len(texts), n), dtype=np.float64)
+        for i, t in enumerate(texts):
+            out[i] = trigram_vector(t or "", n)
+        return out
+
+    def _embeds_in_process(self) -> bool:
+        """True when :meth:`index_dataframe` and :meth:`embed_texts` are
+        this class's own, so the latter reproduces the former's vectors."""
+        cls = type(self)
+        return (
+            cls.index_dataframe is Indexer.index_dataframe
+            and cls.embed_texts is Indexer.embed_texts
+        )
+
+    def collect_index(self, df: DataFrame) -> Tuple[Any, np.ndarray]:
+        """The shadow index of ``df`` in the driver: ``(table, matrix)``,
+        its rows as an Arrow table and their vectors as a float64
+        ``(rows, dim)`` matrix, row for row what
+        ``index_dataframe(df)`` holds.
+
+        One Spark job collects the rows with their text (the same text
+        expression the index plan runs), and :meth:`embed_texts` embeds
+        them here: no Python worker runs the embedding, and no vector
+        crosses from the JVM. An indexer whose ``index_dataframe`` is
+        overridden (an embedding cache, a subclass) collects that plan
+        instead."""
+        if not self._embeds_in_process():
+            from linkml_store_spark.operators.localexec import vector_matrix
+
+            tbl = self.index_dataframe(df).toArrow()
+            return (
+                tbl.drop_columns([INDEX_COLUMN]),
+                vector_matrix(tbl.column(INDEX_COLUMN)),
+            )
+        tbl = df.withColumn(_TEXT_COLUMN, self._text_col(df)).toArrow()
+        texts = tbl.column(_TEXT_COLUMN).to_pylist()
+        return tbl.drop_columns([_TEXT_COLUMN]), self.embed_texts(texts)
+
 
 class SimpleIndexer(Indexer):
     """Trigram-hash indexer, exact parity with the reference test indexer."""
@@ -176,6 +225,24 @@ class LLMIndexer(Indexer):
 
     def text_to_vector(self, text: str) -> List[float]:
         return self._embed_fn([text])[0]
+
+    def embed_texts(self, texts: List[Optional[str]]) -> np.ndarray:
+        if not texts:
+            return np.zeros((0, self.vector_default_length), dtype=np.float64)
+        out: List[List[float]] = []
+        for i in range(0, len(texts), _EMBED_BATCH):
+            out.extend(self._embed_fn([t or "" for t in texts[i : i + _EMBED_BATCH]]))
+        # ragged vectors raise ValueError: the caller keeps the Spark plan
+        return np.array(out, dtype=np.float64).reshape(len(texts), -1)
+
+    def _embeds_in_process(self) -> bool:
+        # a cache lookup must run: its hits skip the embedding call
+        cls = type(self)
+        return (
+            not self.cache_path
+            and cls.index_dataframe is LLMIndexer.index_dataframe
+            and cls.embed_texts is LLMIndexer.embed_texts
+        )
 
     def index_dataframe(self, df: DataFrame) -> DataFrame:
         embed_fn = self._embed_fn

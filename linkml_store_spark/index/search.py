@@ -9,8 +9,10 @@ top-k all run distributed and only k rows come back to the driver.
 
 That distributed plan is the route for stores past the local tier's gate.
 ``Collection.search`` serves gate-admitted stores in process instead: the
-index plan is collected once per store version into
-``operators.localexec.VectorIndex`` and each later search ranks it with
+shadow index is built once per store version into
+``operators.localexec.VectorIndex`` (``Indexer.collect_index``: one job
+collects the rows and texts, the driver embeds them) and each later
+search ranks it with
 ``localexec.knn_top`` (the kernel ``knn_search`` uses too) — the reference's
 embed-once shadow index, without its per-search re-embedding of every row.
 
@@ -245,8 +247,8 @@ def find_matches(
     window top-n.
 
     Auto-routed like :meth:`Collection.knn`: ``method="auto"`` (default)
-    counts both sides (one metadata-cheap aggregate each; pass
-    ``left_rows``/``right_rows`` to skip the jobs) and, when
+    counts both sides (one ``count(1)`` aggregate each, which reads no
+    vector; pass ``left_rows``/``right_rows`` to skip the jobs) and, when
     ``|L| x |R| > max_exact_pairs`` and the metric is cosine, euclidean,
     or dot, swaps the crossJoin for
     ``operators.similarity.ivf_knn_join`` — a centroid-bucketed
@@ -269,26 +271,17 @@ def find_matches(
     from pyspark.sql.window import Window
     from linkml_store_spark.functions.vector import DISTANCE_METRICS
 
-    from linkml_store_spark.functions.vector import vector_probe
-
     lhs = left.select(F.col(left_id).alias("left_id"), F.col(vector_col).alias("__lv"))
     rhs = right.select(F.col(right_id).alias("right_id"), F.col(vector_col).alias("__rv"))
-    # (rows, min size, max size) per side, one aggregate job each at most:
-    # the auto route's counts and the exact plan's kernel and broadcast
-    # gates all read the same probe
-    probes = {}
-
-    def probe(side: str):
-        if side not in probes:
-            probes[side] = (
-                vector_probe(lhs, "__lv") if side == "l" else vector_probe(rhs, "__rv")
-            )
-        return probes[side]
 
     route_ivf = method == "ivf"
     if method == "auto":
-        nl = left_rows if left_rows is not None else probe("l")[0]
-        nr = right_rows if right_rows is not None else probe("r")[0]
+        # plain counts: column pruning answers count(1) without decoding a
+        # vector, and the IVF route they may pick never reads the sizes
+        from linkml_store_spark.where import fast_count
+
+        nl = left_rows if left_rows is not None else fast_count(lhs)
+        nr = right_rows if right_rows is not None else fast_count(rhs)
         left_rows, right_rows = nl, nr  # reuse downstream (sizing, salting)
         if nl * nr > max_exact_pairs:
             if metric in ("cosine", "euclidean", "dot"):
@@ -373,11 +366,14 @@ def find_matches(
         pair_cosine_native,
         pair_dim,
         PAIR_NATIVE_METRICS,
+        vector_probe,
     )
     from linkml_store_spark.operators.dedup import pair_broadcast_fits
 
-    _nl, min_l, max_l = probe("l")
-    n_r, min_r, max_r = probe("r")
+    # one (rows, min size, max size) aggregate per side feeds the native
+    # kernel gate and the broadcast byte gate
+    _nl, min_l, max_l = vector_probe(lhs, "__lv")
+    n_r, min_r, max_r = vector_probe(rhs, "__rv")
     dim_l = pair_dim(min_l, max_l)
     dim_r = pair_dim(min_r, max_r)
     if dim_l is not None and dim_l == dim_r:

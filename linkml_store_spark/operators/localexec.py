@@ -1434,19 +1434,21 @@ def knn_top(
 class VectorIndex:
     """A shadow text index held in process: the Arrow payload table (every
     source column), its float64 vector matrix and the row norms — built
-    once per store version from the collected index plan, so each later
+    once per store version (``Indexer.collect_index``), so each later
     ``Collection.search`` embeds only its query and ranks with
-    :func:`knn_top`. Raises Unsupported when the vectors cannot form a
-    matrix or an output column's Python form differs from Spark's."""
+    :func:`knn_top`. Raises Unsupported when an output column's Python
+    form differs from Spark's."""
 
     __slots__ = ("table", "matrix", "norms", "vector_col")
 
-    def __init__(self, table, vector_col: str):
-        self.matrix = vector_matrix(table.column(vector_col))
-        self.norms = row_norms(self.matrix)
-        self.table = table.drop_columns([vector_col])
+    def __init__(self, table, matrix, vector_col: str):
+        if matrix.ndim != 2 or matrix.shape[0] != table.num_rows:
+            raise Unsupported("vector matrix does not match the rows")
+        _check_output_types(table.schema, table.column_names)
+        self.table = table
+        self.matrix = matrix
+        self.norms = row_norms(matrix)
         self.vector_col = vector_col
-        _check_output_types(self.table.schema, self.table.column_names)
 
     def top_k(self, query_vector, k: int, where=None, keep_vector: bool = False,
               session_tz: Optional[str] = None) -> List[Tuple[float, dict]]:

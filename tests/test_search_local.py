@@ -100,21 +100,65 @@ def test_later_searches_run_no_spark_job(spark, tmp_path):
 
 def test_one_index_build_per_store_version(spark, tmp_path, monkeypatch):
     builds = []
-    original = SimpleIndexer.index_dataframe
+    original = SimpleIndexer.collect_index
 
     def counting(self, df):
         builds.append(self.name)
         return original(self, df)
 
-    monkeypatch.setattr(SimpleIndexer, "index_dataframe", counting)
+    monkeypatch.setattr(SimpleIndexer, "collect_index", counting)
     coll = _store(spark, tmp_path)
     for q in ["harbor", "stone river", "quartz"]:
         coll.search(q)
     assert len(builds) == 1
-    coll.insert(_docs(5, seed=3, start=1000))
-    for q in ["harbor", "ember"]:
-        coll.search(q)
+    new = _docs(5, seed=3, start=1000)
+    coll.insert(new)
+    coll.search("harbor")
     assert len(builds) == 2
+    # the rebuilt index serves the new version in process
+    assert isinstance(coll._local_text_index("simple"), lx.VectorIndex)
+    res, jobs = _spark_jobs(coll, lambda: coll.search(new[3]["text"]))
+    assert jobs == 0
+    assert res.rows[0]["doc_id"] == 1003
+    assert len(builds) == 2
+
+
+def test_build_embeds_in_driver_like_the_index_plan(spark, tmp_path):
+    """collect_index gives the rows and vectors of index_dataframe, row
+    for row, for the plain, single-attribute and template text, and for
+    the LLM indexer, without running the embedding UDF."""
+    from linkml_store_spark.index.indexer import LLMIndexer
+
+    coll = _store(spark, tmp_path)
+    df = coll.df
+    for ix in [SimpleIndexer(), SimpleIndexer(index_attributes=["text"]),
+               SimpleIndexer(text_template="{{ cat }}: {{ text }}"),
+               LLMIndexer(vector_default_length=32)]:
+        assert ix._embeds_in_process()
+        table, matrix = ix.collect_index(df)
+        ref = ix.index_dataframe(df).toArrow()
+        assert table.column_names == [c for c in ref.column_names
+                                      if c != "__index__"]
+        assert table.column("doc_id").to_pylist() == \
+            ref.column("doc_id").to_pylist()
+        want = lx.vector_matrix(ref.column("__index__"))
+        assert matrix.shape == want.shape
+        assert np.array_equal(matrix, want)
+
+
+def test_cached_llm_indexer_collects_its_plan(spark, tmp_path, monkeypatch):
+    """An embedding cache must be consulted, so the build collects the
+    index plan (hits skip the embedding call) instead of embedding every
+    text in the driver."""
+    from linkml_store_spark.index.indexer import LLMIndexer
+
+    ix = LLMIndexer(vector_default_length=16,
+                    cache_path=str(tmp_path / "cache.parquet"))
+    assert not ix._embeds_in_process()
+    coll = _store(spark, tmp_path)
+    monkeypatch.setattr(LLMIndexer, "embed_texts", lambda self, t: 1 / 0)
+    table, matrix = ix.collect_index(coll.df)
+    assert matrix.shape == (table.num_rows, 16) == (120, 16)
 
 
 def test_store_over_byte_check_takes_spark_path(spark, tmp_path, monkeypatch):

@@ -321,6 +321,34 @@ def test_failed_ivf_append_warns_and_drops_index(spark, tmp_path, monkeypatch):
     assert coll.df.count() == emb.count()
 
 
+def test_unexpected_ivf_append_error_leaves_no_stale_index(spark, tmp_path, monkeypatch):
+    """An error outside the caught set escapes the insert, but only after
+    the IVF registration and the shadow index plans are dropped: nothing
+    is left planned over the files the rewrite replaced."""
+    from linkml_store_spark.client import Client
+    from linkml_store_spark.operators import similarity
+
+    client = Client(spark=spark)
+    db = client.attach_database(f"file:{tmp_path}/wh", alias="whboom")
+    coll = db.create_collection("emb", identifier_attribute="vec_id")
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    coll.insert(emb.filter(F.col("vec_id") < 250))
+    coll.build_vector_index("embedding", n_centroids=8, nprobe=3)
+    coll.attach_indexer("simple")
+    assert coll._vector_indexes and coll._index_dfs
+
+    def failing_append(*_args, **_kwargs):
+        raise RuntimeError("unexpected")
+
+    monkeypatch.setattr(similarity, "ivf_append", failing_append)
+    with pytest.raises(RuntimeError, match="unexpected"):
+        coll.insert(emb.filter(F.col("vec_id") >= 250))
+    assert coll._vector_indexes == {} and coll._index_dfs == {}
+    # the insert's data was written, and search reads the new store
+    assert coll.df.count() == emb.count()
+    assert coll.search("1", limit=3).num_rows == 3
+
+
 def test_ivf_native_zero_norm_scores_zero(spark, tmp_path):
     # a zero-norm vector must score 0.0 through the auto-routed native
     # plan, not raise DIVIDE_BY_ZERO under the session's ANSI default
@@ -430,6 +458,37 @@ def test_find_matches_auto_routes_above_gate(spark):
     )
     key = lambda rows: sorted((r["left_id"], r["right_id"], r["rank"]) for r in rows)
     assert key(routed.collect()) == key(exact.collect())
+
+
+def test_find_matches_auto_ivf_route_reads_no_vector_sizes(spark, monkeypatch):
+    """The auto route's counts are plain count(1) aggregates, which read no
+    vector; the size probe (min/max of size(vector)) runs only once the
+    exact cross-join is chosen, where the kernel and broadcast gates use it."""
+    from linkml_store_spark.functions import vector
+
+    probed = []
+    real_probe = vector.vector_probe
+
+    def probe(df, col):
+        probed.append(col)
+        return real_probe(df, col)
+
+    monkeypatch.setattr(vector, "vector_probe", probe)
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    left = emb.limit(20)
+    routed = find_matches(
+        left, emb, vector_col="embedding", left_id="vec_id",
+        right_id="vec_id", top_n=1, max_exact_pairs=10,
+        n_centroids=8, nprobe=8,
+    )
+    assert "__centroid" in _plan(routed)
+    assert probed == []
+    exact = find_matches(
+        left, emb, vector_col="embedding", left_id="vec_id",
+        right_id="vec_id", top_n=1,
+    )
+    assert "__centroid" not in _plan(exact)
+    assert probed == ["__lv", "__rv"]
 
 
 def test_find_matches_auto_stays_exact_below_gate(spark):
