@@ -151,10 +151,8 @@ class Database:
             path = self._collection_path(name)
             if os.path.exists(path):
                 shutil.rmtree(path)
-        try:
-            self.spark.catalog.dropTempView(name)
-        except Exception:
-            pass
+        # returns False, and raises nothing, when no such view exists
+        self.spark.catalog.dropTempView(name)
 
     # ------------------------------------------------------------------ #
     # persistence plumbing (used by Collection)

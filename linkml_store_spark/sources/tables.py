@@ -101,6 +101,10 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     _ensure_workers_can_import(spark)
 
 
+#: file-name prefix of the package zip shipped to Python workers
+_DIST_PREFIX = "linkml_store_spark_dist-"
+
+
 def _ensure_workers_can_import(spark: SparkSession) -> None:
     """Ship this package to executor Python workers (idempotent).
 
@@ -112,40 +116,71 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
     the standard Spark mechanism — it reaches every current and future
     executor, unlike env vars which are fixed at JVM start. (Closures
     pickle by value and never hit this; the guard costs one zip per
-    process.)
+    source tree.) The worker puts the zip ahead of its PYTHONPATH, so the zip
+    must hold the driver's sources: ``_package_zip`` names it by their
+    digest.
     """
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    if any(p.startswith(_DIST_PREFIX) for p in sc._python_includes):
+        return
+    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    zip_path = _package_zip(pkg_dir)
+    try:
+        sc.addPyFile(zip_path)
+    except Py4JJavaError as ex:
+        import warnings
+
+        warnings.warn(
+            f"could not ship {zip_path} to the Python workers; pandas UDFs "
+            f"that import linkml_store_spark may fail there: {ex}",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+
+
+
+def _package_zip(pkg_dir: str) -> str:
+    """Zip of the ``.py`` sources under ``pkg_dir`` (the package directory)
+    in the temp directory, named by a digest of their paths and contents.
+
+    A changed tree gets a new name and so a fresh zip; a zip of the same
+    tree is reused. Written under a per-process temporary name and renamed
+    into place, so concurrent writers never expose a partial file.
+    """
+    import hashlib
     import os
     import tempfile
     import zipfile
 
-    sc = spark.sparkContext
-    zip_name = "linkml_store_spark_dist.zip"
-    try:
-        if any(zip_name in p for p in sc._python_includes):
-            return
-    except Exception:
-        pass
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zip_path = os.path.join(tempfile.gettempdir(), zip_name)
+    sources = []
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        for f in sorted(files):
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                rel = os.path.join(
+                    "linkml_store_spark", os.path.relpath(full, pkg_dir)
+                )
+                with open(full, "rb") as fh:
+                    sources.append((rel, fh.read()))
+    digest = hashlib.sha256()
+    for rel, data in sources:
+        digest.update(f"{rel}\0{len(data)}\0".encode())
+        digest.update(data)
+    zip_path = os.path.join(
+        tempfile.gettempdir(), f"{_DIST_PREFIX}{digest.hexdigest()[:16]}.zip"
+    )
     if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    if not f.endswith(".py"):
-                        continue
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "linkml_store_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
+            for rel, data in sources:
+                zf.writestr(rel, data)
         os.replace(tmp, zip_path)
-    try:
-        sc.addPyFile(zip_path)
-    except Exception:
-        pass  # already added, or a connect-only session
+    return zip_path
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

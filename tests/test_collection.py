@@ -132,6 +132,15 @@ def test_execute_sql(db, countries):
     assert res.rows[0]["continent"] in ("Europe", "North America")
 
 
+def test_drop_collection_drops_view_and_tolerates_a_missing_one(db, countries):
+    coll = db.create_collection("Dropped")
+    coll.insert(countries)
+    assert db.execute_sql("SELECT COUNT(*) AS n FROM Dropped").rows[0]["n"] == len(countries)
+    db.drop_collection("Dropped")
+    assert not db.spark.catalog.tableExists("Dropped")
+    db.drop_collection("Dropped")  # no view left: nothing raises
+
+
 def test_parquet_persistence(spark, countries, tmp_path):
     client = Client(spark)
     db = client.attach_database(f"spark://{tmp_path}/wh")
