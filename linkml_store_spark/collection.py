@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 from typing import TYPE_CHECKING, Any, Dict, Iterable, Iterator, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame, Row
@@ -46,6 +47,10 @@ if TYPE_CHECKING:
     from linkml_store_spark.index.indexer import Indexer
 
 DEFAULT_LIMIT = 100  # reference sql_utils.py:96-97; limit=-1 => unlimited
+
+#: the local tier's logger (``operators/localexec.py`` logs image loads
+#: and evictions on it): Spark-path fallbacks and store-version changes
+_tier_log = logging.getLogger("linkml_store_spark.localtier")
 
 OBJECT = Dict[str, Any]
 
@@ -92,11 +97,18 @@ class Collection:
         #: store (so parquet footer statistics describe the live data —
         #: the gate for the stats-pruned default top-k plan in ``query``)
         self._df_is_store_scan: bool = False
+        #: ``topk.store_stamp`` of the store's files when ``_df`` was last
+        #: pointed at them: a write through another handle changes it,
+        #: and the next read drops every per-version state
+        #: (:meth:`_sync_store_version`)
+        self._store_stamp = None
         #: column -> row-group stats of the persisted store: the footer
         #: sweep is driver-side metadata IO proportional to file count, so
         #: repeated sorted queries (paging) must not re-read it; cleared on
-        #: every modification alongside the scan flag
-        self._footer_stats_cache: Dict[str, Any] = {}
+        #: every modification alongside the scan flag. It also holds the
+        #: local tier's store image (``localexec.StoreImage``) and the
+        #: in-process text indexes: per-version state
+        self._footer_stats_cache: Dict[Any, Any] = {}
         #: Query-IR -> constructed page Dataset: repeated identical queries
         #: (paging UIs, dashboards, benchmark loops) re-execute the SAME
         #: JVM Dataset, skipping Python plan-build + Catalyst analysis
@@ -136,6 +148,7 @@ class Collection:
             loaded = self.database._load_collection_df(self.alias)
             if loaded is not None:
                 self._df_is_store_scan = True
+                self._store_stamp = self._current_stamp()
             if loaded is None and self.derived_from:
                 loaded = self._materialize_derived()
             if loaded is None:
@@ -222,9 +235,10 @@ class Collection:
         self._plan_cache.clear()  # cached page plans point at the old store
         # The reference fully reindexes shadow collections on ANY
         # modification (collection.py:289-295). Here any mutation drops the
-        # shadow index plans, and the in-process text indexes go with the
-        # footer cache above: the next search rebuilds from the current
-        # store, once per store version.
+        # shadow index plans, and the in-process text indexes and the
+        # local tier's store image go with the footer cache above: the
+        # next read rebuilds them from the current store, once per store
+        # version.
         self._index_dfs.clear()
         # Vector indexes: a pure APPEND into a DURABLE IVF index is
         # maintained incrementally (ivf_append — new vectors join their
@@ -652,6 +666,63 @@ class Collection:
             n = d.collect()[0][0]
         return meta + n
 
+    def _current_stamp(self):
+        """``topk.store_stamp`` of this collection's store directory."""
+        from linkml_store_spark.operators.topk import store_stamp
+
+        return store_stamp(self.database._collection_path(self.alias))
+
+    def _rescan(self) -> None:
+        """Point ``_df`` at a fresh scan of the persisted store and stamp
+        the file listing that scan saw."""
+        self._df = self.spark.read.parquet(
+            self.database._collection_path(self.alias)
+        )
+        self._df_is_store_scan = True
+        self._store_stamp = self._current_stamp()
+
+    def _sync_store_version(self) -> None:
+        """Drop every per-version state when the store's files changed
+        since ``_df`` last scanned them — a write through another handle
+        on the same location. Without this the footer cache, the local
+        count memo and the store image serve the old rows, and the Spark
+        scan names deleted files. Taken at each local-tier entry and in
+        :meth:`size`: one directory walk with a stat per file."""
+        if not (self._df_is_store_scan and self.database.location):
+            return
+        stamp = self._current_stamp()
+        if stamp == self._store_stamp:
+            return
+        _tier_log.debug(
+            "collection %s: store files changed outside this handle; "
+            "dropping its caches, image and index registrations", self.alias,
+        )
+        self._footer_stats_cache.clear()
+        self._plan_cache.clear()
+        self._index_dfs.clear()
+        self._vector_indexes = {}
+        if stamp is None:
+            self._store_stamp = None  # the store is gone: Spark says so
+            return
+        self._rescan()
+        self.database._register_view(self.alias)
+
+    def _store_image(self):
+        """This store version's ``localexec.StoreImage`` (created empty;
+        columns load on use). Lives in the footer cache, so every
+        mutation and store-version change drops it. Call only after
+        :meth:`_local_tier_gate` admitted the call."""
+        from linkml_store_spark.operators import localexec as lx
+
+        img = self._footer_stats_cache.get(("image",))
+        if img is None:
+            img = lx.StoreImage(
+                self._store_metas(), self._footer_stats_cache[("local_schema",)],
+                name=self.alias,
+            )
+            self._footer_stats_cache[("image",)] = img
+        return img
+
     def _store_metas(self):
         """``[(file, pyarrow FileMetaData)]`` of the persisted store, read
         ONCE and memoized until the next mutation. Footer metadata is
@@ -746,8 +817,11 @@ class Collection:
         if plan is not None:
             try:
                 return plan()
-            except Exception:  # noqa: BLE001 — never fail a query here
-                pass
+            except Exception as e:  # noqa: BLE001 — never fail a query here
+                _tier_log.debug(
+                    "collection %s: local-tier query failed, running the "
+                    "Spark path (%s: %s)", self.alias, type(e).__name__, e,
+                )
         return self._query_spark(query)
 
     def _local_tier_plan(self, query: Query):
@@ -764,9 +838,9 @@ class Collection:
         gate = self._local_tier_gate(_query_class(query))
         if gate is None:
             return None
-        files, schema, total_rows = gate
+        _files, schema, total_rows = gate
         if query.group_by:
-            return self._local_tier_agg_plan(query, files, schema)
+            return self._local_tier_agg_plan(query, schema)
         try:
             cond = lx.compile_where_local(query.where_clause, schema)
             limit = DEFAULT_LIMIT if query.limit is None else query.limit
@@ -794,31 +868,24 @@ class Collection:
 
         def run() -> QueryResult:
             ck = ("count", "local", repr(query.where_clause))
-            num_rows = self._footer_stats_cache.get(ck)
+            img = self._store_image()
             if eff_limit == 0:
+                num_rows = self._footer_stats_cache.get(ck)
                 if num_rows is None:
-                    num_rows = lx.local_count(files, schema, cond, total_rows)
+                    num_rows = lx.local_count(img, schema, cond, total_rows)
                     self._footer_stats_cache[ck] = num_rows
                 return QueryResult(num_rows=num_rows, rows=[], query=query)
-            if num_rows is not None:
-                rows = lx.local_page(
-                    files, schema, cond, sel, sort_specs, offset,
-                    eff_limit, session_tz=session_tz,
-                )
-            else:
-                # count + page in ONE mask pass per file: the fused form
-                # reads the predicate columns once, sums the mask for the
-                # count, and slices it per batch for the page take
-                num_rows, rows = lx.local_count_page(
-                    files, schema, cond, sel, sort_specs, offset,
-                    eff_limit, total_rows, session_tz=session_tz,
-                )
-                self._footer_stats_cache[ck] = num_rows
+            # the page's mask pass yields the count with it
+            num_rows, rows = lx.local_count_page(
+                img, schema, cond, sel, sort_specs, offset,
+                eff_limit, total_rows, session_tz=session_tz,
+            )
+            self._footer_stats_cache[ck] = num_rows
             return QueryResult(num_rows=num_rows, rows=rows, query=query)
 
         return run
 
-    def _local_tier_agg_plan(self, query: Query, files, schema):
+    def _local_tier_agg_plan(self, query: Query, schema):
         """The grouped-aggregation branch of :meth:`_local_tier_plan`:
         compile the where + group keys + aggregate specs into the Arrow
         subset, or None. The page tail (sort on keys/aliases, offset,
@@ -836,7 +903,7 @@ class Collection:
                 ogate = other._local_tier_gate("agg")
                 if ogate is None:
                     return None
-                ofiles, oschema, _orows = ogate
+                _ofiles, oschema, _orows = ogate
                 left_on = query.join["left_on"]
                 right_on = query.join["right_on"]
                 how = query.join.get("how", "inner")
@@ -866,7 +933,7 @@ class Collection:
                     oschema, right_on
                 ):
                     return None
-                join = (ofiles, oschema, left_on, right_on, how)
+                join = (other._store_image(), oschema, left_on, right_on, how)
             # compile/validate against the post-join column space; the
             # executor reads each side with its OWN schema
             compile_schema = merged if join is not None else schema
@@ -906,7 +973,7 @@ class Collection:
 
         def run() -> QueryResult:
             total, table = lx.local_group_agg(
-                files, schema, cond, query.group_by, aggs,
+                self._store_image(), schema, cond, query.group_by, aggs,
                 session_tz=session_tz, join=join,
             )
             if having_cond is not None:
@@ -1355,6 +1422,7 @@ class Collection:
 
         if not lx.local_tier_enabled():
             return spark_route("SPARK_GRAFT_LOCAL_TIER=0")
+        self._sync_store_version()
         metas = (
             self._store_metas()
             if self._df_is_store_scan and self.database.location else None
@@ -1371,9 +1439,17 @@ class Collection:
             return spark_route(f"store over the gate ({gate})")
         if self._local_tier_plan(query) is None:
             return spark_route("clauses outside the local tier's Arrow subset")
+        img = self._footer_stats_cache.get(("image",))
+        if img is not None and img.columns_loaded:
+            image = (
+                f"resident, {img.nbytes} bytes, columns "
+                f"{', '.join(img.columns_loaded)}"
+            )
+        else:
+            image = "not resident (columns load on the first read)"
         return (
             "== Local Tier ==\nDriver-local Arrow execution: footer rows "
-            f"inside the gate ({gate})\n\n"
+            f"inside the gate ({gate})\nStore image: {image}\n\n"
         )
 
     def find_iter(
@@ -1411,6 +1487,7 @@ class Collection:
         if not self.exists():
             return 0
         if self._df_is_store_scan and self.database.location:
+            self._sync_store_version()
             n = self._store_total_rows()
             if n is not None:
                 return n
@@ -1471,6 +1548,7 @@ class Collection:
 
         if not (self._df_is_store_scan and self.database.location):
             return None
+        self._sync_store_version()
         metas = self._store_metas()
         if not metas:
             return None
@@ -1506,7 +1584,7 @@ class Collection:
         gate = self._local_tier_gate("facet")
         if gate is None:
             return None
-        files, schema, _total_rows = gate
+        _files, schema, _total_rows = gate
         cols = (
             list(facet_columns) if facet_columns is not None
             else [f.name for f in schema]
@@ -1532,10 +1610,14 @@ class Collection:
 
         try:
             return lx.local_facets(
-                files, schema, lambda col: conds[id(col)], cols,
-                facet_limit, facet_min_count,
+                self._store_image(), schema, lambda col: conds[id(col)],
+                cols, facet_limit, facet_min_count,
             )
-        except Exception:  # noqa: BLE001 — never fail a facet here
+        except Exception as e:  # noqa: BLE001 — never fail a facet here
+            _tier_log.debug(
+                "collection %s: local-tier facets failed, running the "
+                "Spark path (%s: %s)", self.alias, type(e).__name__, e,
+            )
             return None
 
     def group_by(
@@ -1782,10 +1864,10 @@ class Collection:
             gate = self._local_tier_gate("knn")
         if gate is None:
             return _spark()
-        files, schema, _total_rows = gate
+        _files, schema, _total_rows = gate
         try:
             rows = lx.local_knn(
-                files, schema, vector_col, query_vector, k,
+                self._store_image(), schema, vector_col, query_vector, k,
                 score_col=score_col, select_cols=select_cols,
                 session_tz=self._session_tz(), metric=metric,
             )
@@ -1950,8 +2032,7 @@ class Collection:
         report = _compact(
             self.spark, path, target_file_bytes=target_file_bytes, sort_cols=sort_cols
         )
-        self._df = self.spark.read.parquet(path)
-        self._df_is_store_scan = True
+        self._rescan()
         self._footer_stats_cache.clear()  # the rewrite changed every footer
         self._plan_cache.clear()  # cached plans reference the DELETED files
         self.database._register_view(self.alias)

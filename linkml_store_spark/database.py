@@ -182,10 +182,9 @@ class Database:
             os.replace(tmp, path)
             coll = self._collections.get(alias)
             if coll is not None:
-                coll._df = self.spark.read.parquet(path)
                 # footer statistics now describe the live data again —
                 # re-arm the stats-pruned default top-k plan
-                coll._df_is_store_scan = True
+                coll._rescan()
         self._register_view(alias)
 
     def _register_view(self, alias: str) -> None:

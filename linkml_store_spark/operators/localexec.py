@@ -12,9 +12,20 @@ THE FIX, Photon-in-reverse: when the persisted store is provably tiny —
 parquet footer metadata (exact, truncation-free ``num_rows``) says the
 whole table is under its class's :data:`LOCAL_TIER_CAPS` entry —
 ``Collection.query`` routes the compiled predicate/sort/page through
-THIS module: pyarrow reads the same parquet files in the driver process
-and evaluates the same semantics with Arrow C++ kernels. Zero Spark jobs, zero scheduling floor —
-exactly the in-process execution a single-node engine gets for free.
+THIS module and evaluates the same semantics with Arrow C++ kernels in
+the driver process. Zero Spark jobs, zero scheduling floor — exactly the
+in-process execution a single-node engine gets for free.
+
+THE STORE IMAGE: the kernels evaluate over a :class:`StoreImage`, one
+in-memory Arrow table per collection and store version. Its columns load
+from the parquet files on first use (only the columns a call needs and
+the image lacks), string columns stay dictionary-encoded where the file
+has them, and the decoded form of a dictionary column and the matrix of
+a vector column are kept once computed. So repeated reads of a store
+version decode its parquet once, not once per call. A write drops the
+image; resident images share one least-recently-used budget of
+:data:`LOCAL_TIER_MAX_BYTES`. The kernels also take a plain file list,
+read into a transient image for that call.
 
 SCALE SAFETY (the 100 TB story): this tier is a *latency* optimization
 with a hard size guard, not an execution strategy. The gate reads exact
@@ -60,7 +71,11 @@ are this engine's reason to exist.
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
+import weakref
+from collections import OrderedDict
 from datetime import date, datetime
 from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
@@ -78,8 +93,13 @@ __all__ = [
     "local_facets",
     "local_knn",
     "knn_top",
+    "StoreImage",
     "VectorIndex",
 ]
+
+#: DEBUG log of store-image loads and evictions, and (from ``Collection``)
+#: of local-tier calls that fell back to the Spark path
+log = logging.getLogger("linkml_store_spark.localtier")
 
 #: shape class -> the largest exact footer row count this tier serves.
 #: The classes cross over at different sizes (SCALING.md "Local-vs-JVM
@@ -291,8 +311,9 @@ def _c_in(name, lits):
         # three-valued IN: is_in maps NULL inputs to FALSE, but Spark's
         # col.isin(...) yields NULL there — FALSE vs NULL both drop at the
         # filter, but invert differently under $not, so restore the NULLs
+        # (over codes: a NULL code yields a NULL condition, NULL either way)
         return pc.if_else(
-            pc.is_valid(_decode_dict(arr)), m, pa.scalar(None, pa.bool_())
+            _dict_pred(arr, pc.is_valid), m, pa.scalar(None, pa.bool_())
         )
 
     return _Cond(fn, {name})
@@ -509,34 +530,232 @@ def _string_cols(schema, names) -> List[str]:
     return out
 
 
-def _read_columns(path: str, columns: Sequence[str], dict_cols: Sequence[str]):
-    """One file's columns as a Table. ``dict_cols`` keep parquet dictionary
-    encoding intact (predicates then evaluate over codes — the arrowagg
-    trick, ~7x the decoded-string compare rate)."""
-    import pyarrow.parquet as pq
+def _has_dict_pages(metas, name: str) -> bool:
+    """True when every column chunk of ``name`` in the footers starts with
+    a dictionary page: the writer's own encoding choice, which the image
+    keeps (Spark falls back to plain pages for high-cardinality strings,
+    whose dictionary would cost more than the values)."""
+    for _fp, md in metas:
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            chunk = next(
+                (rg.column(j) for j in range(rg.num_columns)
+                 if rg.column(j).path_in_schema == name),
+                None,
+            )
+            if chunk is None or not chunk.has_dictionary_page:
+                return False
+    return True
 
-    f = pq.ParquetFile(path, read_dictionary=list(dict_cols))
-    return f.read(columns=list(columns), use_threads=True)
+
+#: images admitted to the process-wide budget, least recently used first:
+#: id -> weak reference (a collection that drops its image drops it here)
+_RESIDENT: "OrderedDict[int, weakref.ref]" = OrderedDict()
+_RESIDENT_LOCK = threading.Lock()
 
 
-def local_count(files: Sequence[str], schema, cond: Optional[_Cond],
+def resident_bytes() -> int:
+    """Bytes held by every resident store image together."""
+    return sum(img.nbytes for img in _resident_images())
+
+
+def _resident_images() -> List["StoreImage"]:
+    images = (ref() for ref in list(_RESIDENT.values()))
+    return [img for img in images if img is not None]
+
+
+def _touch(img: "StoreImage") -> None:
+    """Mark ``img`` most recently used, then evict least recently used
+    images until the resident bytes fit :data:`LOCAL_TIER_MAX_BYTES` — an
+    image that alone exceeds it is evicted too, after the call holding
+    its columns finishes with them."""
+    if not img.resident:
+        return
+    with _RESIDENT_LOCK:
+        key = id(img)
+        if key not in _RESIDENT:
+            _RESIDENT[key] = weakref.ref(
+                img, lambda _r, k=key: _RESIDENT.pop(k, None)
+            )
+        _RESIDENT.move_to_end(key)
+        images = _resident_images()
+        total = sum(i.nbytes for i in images)
+        for victim in images:
+            if total <= LOCAL_TIER_MAX_BYTES:
+                break
+            total -= victim.nbytes
+            log.debug(
+                "store image %s: evicted %d bytes (columns %s), "
+                "%d resident", victim.name, victim.nbytes,
+                victim.columns_loaded, total,
+            )
+            victim.release()
+
+
+def _single(col):
+    """A one-chunk ChunkedArray's chunk (the image combines at load)."""
+    return col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+
+
+class StoreImage:
+    """One store version held in process as Arrow columns — the *image*
+    every local-tier kernel evaluates over, so repeated reads of a
+    collection decode its parquet once per store version instead of
+    once per call.
+
+    Columns load on first use: a call reads from the files only the
+    columns the image lacks, each file's chunks combined once, and keeps
+    string columns dictionary-encoded where the file has them (predicates
+    then run over codes, :func:`_dict_pred`). Rows stay in file order.
+    Derived forms — the decoded values of a dictionary column and the
+    ``(matrix, norms)`` of a vector column — are computed once and kept
+    with the columns. A resident image counts against a process-wide
+    least-recently-used budget of :data:`LOCAL_TIER_MAX_BYTES`; an
+    evicted image reloads on its next use. ``metas`` are the store's
+    ``[(file, FileMetaData)]`` footers."""
+
+    __slots__ = ("metas", "schema", "name", "resident", "table", "_derived",
+                 "nbytes", "__weakref__")
+
+    def __init__(self, metas, schema, name: str = "", resident: bool = True):
+        self.metas = list(metas)
+        self.schema = schema
+        self.name = name
+        self.resident = resident
+        self.table = None  # the loaded columns, in schema order
+        self._derived: Dict[Tuple[str, str], Any] = {}
+        #: ``Table.nbytes`` of the loaded columns plus the derived forms,
+        #: measured whenever either grows
+        self.nbytes = 0
+
+    @classmethod
+    def of(cls, source, schema) -> "StoreImage":
+        """``source`` when it is an image; else a transient image (outside
+        the resident budget) of the parquet file list ``source``."""
+        if isinstance(source, cls):
+            return source
+        import pyarrow.parquet as pq
+
+        return cls([(p, pq.read_metadata(p)) for p in source], schema,
+                   resident=False)
+
+    @property
+    def num_rows(self) -> int:
+        return sum(md.num_rows for _fp, md in self.metas)
+
+    @property
+    def columns_loaded(self) -> List[str]:
+        table = self.table  # one read: another thread may evict
+        return [] if table is None else list(table.column_names)
+
+    def _measure(self) -> None:
+        table = self.table  # one read: another thread may evict
+        n = 0 if table is None else table.nbytes
+        for v in list(self._derived.values()):
+            n += sum(x.nbytes for x in v) if isinstance(v, tuple) else v.nbytes
+        self.nbytes = n
+
+    def release(self) -> None:
+        """Drop every loaded column and derived form."""
+        self.table = None
+        self._derived = {}
+        self.nbytes = 0
+        _RESIDENT.pop(id(self), None)
+
+    def _load(self, names):
+        """The loaded columns as a Table, after reading the ``names`` it
+        lacks (a reference that outlives an eviction of this image)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        base = self.table  # one read: another thread may evict
+        have = set() if base is None else set(base.column_names)
+        want = set(names)
+        missing = [f.name for f in self.schema
+                   if f.name in want and f.name not in have]
+        if want - have - set(missing):
+            raise Unsupported(f"columns {sorted(want - have)} not in the store")
+        if not missing:
+            _touch(self)
+            return base
+        if not self.metas:
+            raise Unsupported("store without parquet files")
+        dict_cols = [c for c in _string_cols(self.schema, missing)
+                     if _has_dict_pages(self.metas, c)]
+        parts = [
+            pq.ParquetFile(fp, metadata=md, read_dictionary=dict_cols)
+            .read(columns=missing, use_threads=True)
+            for fp, md in self.metas
+        ]
+        new = pa.concat_tables(parts).combine_chunks()
+        cols = {n: base.column(n) for n in have}
+        cols.update((n, new.column(n)) for n in missing)
+        order = [f.name for f in self.schema if f.name in cols]
+        table = self.table = pa.Table.from_arrays(
+            [cols[n] for n in order], names=order
+        )
+        self._measure()
+        if self.resident:
+            log.debug("store image %s: loaded %s, %d bytes",
+                      self.name, missing, self.nbytes)
+        _touch(self)
+        return table
+
+    def columns(self, names) -> Dict[str, Any]:
+        """``{name: Array}`` of ``names``, each a single Arrow array."""
+        table = self._load(names)
+        return {n: _single(table.column(n)) for n in names}
+
+    def column(self, name: str):
+        return self.columns([name])[name]
+
+    def select(self, names: Sequence[str]):
+        """A Table of ``names`` (repeats allowed), in that order."""
+        import pyarrow as pa
+
+        cols = self.columns(names)
+        return pa.Table.from_arrays([cols[n] for n in names], names=list(names))
+
+    def _memo(self, key, build):
+        hit = self._derived.get(key)
+        if hit is None:
+            hit = self._derived[key] = build()
+            self._measure()
+            _touch(self)
+        return hit
+
+    def decoded(self, name: str):
+        """Plain values of a column (a dictionary column decoded once) —
+        for sort keys, group keys and facet values."""
+        import pyarrow as pa
+
+        col = self.column(name)
+        if not isinstance(col.type, pa.DictionaryType):
+            return col
+        return self._memo(("decoded", name), lambda: col.dictionary_decode())
+
+    def vectors(self, name: str):
+        """``(matrix, norms)`` of a vector column (:func:`vector_matrix`,
+        :func:`row_norms`)."""
+        def build():
+            X = vector_matrix(self.column(name))
+            return X, row_norms(X)
+
+        return self._memo(("vectors", name), build)
+
+
+def local_count(files, schema, cond: Optional[_Cond],
                 total_rows: int) -> int:
-    """COUNT(*) under the compiled condition — per-file column reads, no
-    table materialization beyond the referenced columns."""
+    """COUNT(*) under the compiled condition. ``files`` is a
+    :class:`StoreImage` or a parquet file list (read into a transient
+    image); only the predicate's columns load."""
     _pa_, pc = _pa()
 
     if cond is None:
         return int(total_rows)
-    need = sorted(cond.cols)
-    dict_cols = _string_cols(schema, need)
-    n = 0
-    for path in files:
-        tbl = _read_columns(path, need, dict_cols)
-        cols = {c: tbl.column(c).combine_chunks() for c in need}
-        mask = cond.fn(cols)
-        s = pc.sum(mask)  # NULL mask rows are skipped = dropped rows
-        n += int(s.as_py() or 0)
-    return n
+    img = StoreImage.of(files, schema)
+    mask = cond.fn(img.columns(cond.cols))
+    return int(pc.sum(mask).as_py() or 0)  # NULL mask rows are dropped
 
 
 def _localize_value(v, tzinfo):
@@ -592,7 +811,9 @@ def _resolve_tz(session_tz: Optional[str]):
             from zoneinfo import ZoneInfo
 
             return ZoneInfo(session_tz)
-        except Exception:  # noqa: BLE001 — fall through to system tz
+        except (KeyError, ValueError):
+            # ZoneInfoNotFoundError is a KeyError; a malformed key is a
+            # ValueError: fall through to the system timezone
             pass
     return datetime.now().astimezone().tzinfo
 
@@ -609,7 +830,7 @@ def _check_output_types(schema, columns: Sequence[str]) -> None:
 
 
 def local_page(
-    files: Sequence[str],
+    files,
     schema,
     cond: Optional[_Cond],
     select_cols: Optional[Sequence[str]],
@@ -619,34 +840,16 @@ def local_page(
     session_tz: Optional[str] = None,
 ) -> List[dict]:
     """The page (sorted/offset/limited row dicts) under the compiled
-    condition. ``sort_specs`` — [(column, descending)], NULLS LAST both
-    directions (the engine's pinned ordering, collection._sort_col).
-    ``limit`` None = unlimited. Unsorted limited pages stream file batches
-    and stop early — the CollectLimit analog."""
-    pa, pc = _pa()
-
-    out_cols = list(select_cols) if select_cols else [f.name for f in schema]
-    _check_output_types(schema, out_cols)
-    sort_cols = [c for c, _d in sort_specs]
-    for c in sort_cols:
-        _col_type(schema, c)  # plain, non-nested, known
-    where_cols = sorted(cond.cols) if cond is not None else []
-    need = list(dict.fromkeys(out_cols + sort_cols + where_cols))
-
-    if not sort_specs:
-        return _stream_page(
-            files, schema, cond, need, out_cols, offset, limit, session_tz
-        )
-
-    _n, page = _sorted_count_page(
-        files, schema, cond, need, where_cols, out_cols, sort_specs,
-        offset, limit, session_tz,
-    )
-    return page
+    condition: :func:`local_count_page` without the count."""
+    img = StoreImage.of(files, schema)
+    return local_count_page(
+        img, schema, cond, select_cols, sort_specs, offset, limit,
+        img.num_rows, session_tz=session_tz,
+    )[1]
 
 
 def local_count_page(
-    files: Sequence[str],
+    files,
     schema,
     cond: Optional[_Cond],
     select_cols: Optional[Sequence[str]],
@@ -656,156 +859,52 @@ def local_count_page(
     total_rows: int,
     session_tz: Optional[str] = None,
 ) -> Tuple[int, List[dict]]:
-    """(pre-pagination COUNT, page rows) in ONE mask pass per file — the
-    fused form of ``local_count`` + ``local_page`` for queries that need
-    both (the reference ``Query`` contract: ``num_rows`` is the total
-    match count, ``rows`` the page). Unfused, the predicate columns are
-    read and the mask evaluated twice per file; here the full-file mask
-    feeds ``sum`` (the count) and is sliced per record batch to take the
-    page, and the page batches read only the OUTPUT columns. Sorted pages
-    materialize every matching row anyway, so there the count is free."""
-    pa, pc = _pa()
-    import pyarrow.parquet as pq
+    """(pre-pagination COUNT, page rows) — the reference ``Query``
+    contract: ``num_rows`` is the total match count, ``rows`` the page.
+    ``files`` is a :class:`StoreImage` or a parquet file list.
 
+    One mask pass gives the matching row indices; their number is the
+    count (``total_rows`` when there is no condition). ``sort_specs`` —
+    [(column, descending)], NULLS LAST both directions (the engine's
+    pinned ordering, collection._sort_col) — rank only the sort keys of
+    the matching rows; an unsorted page keeps file order. ``limit`` None
+    = unlimited. Only the page's rows of the output columns are taken."""
+    pa, pc = _pa()
+
+    img = StoreImage.of(files, schema)
     out_cols = list(select_cols) if select_cols else [f.name for f in schema]
     _check_output_types(schema, out_cols)
-    sort_cols = [c for c, _d in sort_specs]
+    sort_cols = list(dict.fromkeys(c for c, _d in sort_specs))
     for c in sort_cols:
-        _col_type(schema, c)
-    where_cols = sorted(cond.cols) if cond is not None else []
-    need = list(dict.fromkeys(out_cols + sort_cols + where_cols))
-
-    if cond is None:
-        # count is footer metadata; nothing to fuse
-        rows = local_page(
-            files, schema, None, select_cols, sort_specs, offset, limit,
-            session_tz=session_tz,
-        )
-        return int(total_rows), rows
-
-    if sort_specs:
-        return _sorted_count_page(
-            files, schema, cond, need, where_cols, out_cols, sort_specs,
-            offset, limit, session_tz,
-        )
-
-    # unsorted: full-file mask per file -> count; early-out batch stream
-    # over the output columns reuses mask slices (no second predicate pass)
-    dict_cols = _string_cols(schema, where_cols)
-    take = None if limit is None else offset + limit
-    n = 0
-    got: List[Any] = []
-    have = 0
-    for path in files:
-        f = pq.ParquetFile(path, read_dictionary=dict_cols)
-        wt = f.read(columns=where_cols)
-        cols = {c: wt.column(c).combine_chunks() for c in where_cols}
-        mask = cond.fn(cols)
-        if isinstance(mask, pa.ChunkedArray):
-            mask = mask.combine_chunks()
-        n += int(pc.sum(mask).as_py() or 0)  # NULL mask rows skipped
-        if take is not None and have >= take:
-            continue  # page already full: this file contributed count only
-        pos = 0
-        for b in f.iter_batches(batch_size=8192, columns=out_cols):
-            bm = mask.slice(pos, b.num_rows)
-            pos += b.num_rows
-            fb = b.filter(bm)  # NULL -> dropped, same as the filter path
-            if fb.num_rows:
-                got.append(fb)
-                have += fb.num_rows
-            if take is not None and have >= take:
-                break
-    if not got:
+        _col_type(schema, c)  # plain, non-nested, known
+    hits = None  # matching row indices in file order; None = every row
+    n = int(total_rows)
+    if cond is not None:
+        hits = pc.indices_nonzero(cond.fn(img.columns(cond.cols)))  # NULL drops
+        n = len(hits)
+    if offset >= n:
         return n, []
-    tbl = pa.Table.from_batches(got, schema=got[0].schema)
-    if take is not None:
-        tbl = tbl.slice(offset, limit)
-    elif offset:
-        tbl = tbl.slice(offset)
-    return n, _table_to_dicts(tbl.select(out_cols), session_tz)
-
-
-def _sorted_count_page(
-    files, schema, cond, need, where_cols, out_cols, sort_specs,
-    offset, limit, session_tz,
-) -> Tuple[int, List[dict]]:
-    """Shared sorted-page kernel: read needed columns of every file, mask
-    ONCE, then (matched-row count, sorted/offset/limited page). The count
-    is a by-product of the rows the sort must materialize anyway."""
-    pa, pc = _pa()
-
-    sort_cols = [c for c, _d in sort_specs]
-    dict_cols = _string_cols(schema, where_cols)
-    tables = []
-    n = 0
-    for path in files:
-        tbl = _read_columns(path, need, dict_cols)
-        if cond is not None:
-            cols = {c: tbl.column(c).combine_chunks() for c in where_cols}
-            tbl = tbl.filter(cond.fn(cols))  # NULL mask -> dropped (SQL filter)
-        n += tbl.num_rows
-        tables.append(tbl)
-    if not tables:
-        return 0, []
-    table = pa.concat_tables(tables).combine_chunks()
-    # dictionary sort keys sort by CODE, not value — decode them first
-    for c in sort_cols:
-        col = table.column(c)
-        if isinstance(col.type, pa.DictionaryType):
-            table = table.set_column(
-                table.schema.get_field_index(c), c, _decode_dict(col)
-            )
-    keys = [(c, "descending" if d else "ascending") for c, d in sort_specs]
-    k_eff = None if limit is None else offset + limit
-    no_nulls = all(table.column(c).null_count == 0 for c in sort_cols)
-    if k_eff is not None and k_eff <= 100_000 and no_nulls and k_eff < table.num_rows:
-        idx = pc.select_k_unstable(table, k=k_eff, sort_keys=keys)
+    page = img.select(out_cols)
+    if sort_specs:
+        keys_tbl = pa.table({c: img.decoded(c) for c in sort_cols})
+        if hits is not None:
+            keys_tbl = keys_tbl.take(hits)
+        keys = [(c, "descending" if d else "ascending") for c, d in sort_specs]
+        k_eff = None if limit is None else offset + limit
+        no_nulls = all(keys_tbl.column(c).null_count == 0 for c in sort_cols)
+        if (k_eff is not None and k_eff <= 100_000 and no_nulls
+                and k_eff < keys_tbl.num_rows):
+            idx = pc.select_k_unstable(keys_tbl, k=k_eff, sort_keys=keys)
+        else:
+            idx = pc.sort_indices(keys_tbl, sort_keys=keys,
+                                  null_placement="at_end")
+        idx = idx.slice(offset, limit) if limit is not None else idx.slice(offset)
+        page = page.take(idx if hits is None else hits.take(idx))
     else:
-        idx = pc.sort_indices(table, sort_keys=keys, null_placement="at_end")
-    if limit is not None:
-        idx = idx.slice(offset, limit)
-    elif offset:
-        idx = idx.slice(offset)
-    page = table.take(idx).select(out_cols)
+        rows = page if hits is None else hits  # unsorted: file order
+        rows = rows.slice(offset, limit) if limit is not None else rows.slice(offset)
+        page = rows if hits is None else page.take(rows)
     return n, _table_to_dicts(page, session_tz)
-
-
-def _stream_page(
-    files, schema, cond, need, out_cols, offset, limit, session_tz
-) -> List[dict]:
-    """Unsorted page: stream record batches in file order, stop as soon as
-    offset+limit rows matched — identical early-out to Spark CollectLimit
-    over the same file order (the page contents of an UNSORTED limited
-    query are an arbitrary-k selection on both engines)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    take = None if limit is None else offset + limit
-    where_cols = sorted(cond.cols) if cond is not None else []
-    dict_cols = _string_cols(schema, where_cols)
-    got: List[Any] = []
-    have = 0
-    for path in files:
-        f = pq.ParquetFile(path, read_dictionary=dict_cols)
-        for b in f.iter_batches(batch_size=8192, columns=need):
-            if cond is not None:
-                b = b.filter(cond.fn({c: b.column(c) for c in where_cols}))
-            if b.num_rows:
-                got.append(b)
-                have += b.num_rows
-            if take is not None and have >= take:
-                break
-        if take is not None and have >= take:
-            break
-    if not got:
-        return []
-    tbl = pa.Table.from_batches(got, schema=got[0].schema)
-    if take is not None:
-        tbl = tbl.slice(offset, limit)
-    elif offset:
-        tbl = tbl.slice(offset)
-    return _table_to_dicts(tbl.select(out_cols), session_tz)
 
 
 # --------------------------------------------------------------------- #
@@ -822,52 +921,51 @@ def _facet_sort_key(vc):
 
 
 def local_facets(
-    files: Sequence[str],
+    files,
     schema,
     cond_for: Callable[[Any], Optional[_Cond]],
     facet_columns: Sequence,
     facet_limit: int,
     facet_min_count: int,
 ) -> Dict[Any, List[Tuple]]:
-    """Facet counts {column: [(value, count), ...]} over the store —
-    pyarrow ``value_counts`` over dictionary codes per column (compound
-    facets group over the decoded pair table). ``cond_for(column)`` returns
-    the compiled post-exclusion condition for that facet column (the
+    """Facet counts {column: [(value, count), ...]} over the store
+    (``files``: a :class:`StoreImage` or a parquet file list) — pyarrow
+    ``value_counts`` over each column's decoded values (compound facets
+    group over the decoded tuple table). ``cond_for(column)`` returns the
+    compiled post-exclusion condition for that facet column (the
     multi-select exclusion rewrite happens in the caller against the
     where-language, not here)."""
     pa, pc = _pa()
 
+    img = StoreImage.of(files, schema)
     results: Dict[Any, List[Tuple]] = {}
     for col in facet_columns:
         cols = [col] if isinstance(col, str) else list(col)
         for c in cols:
             _col_type(schema, c)  # plain + supported or Unsupported
         cond = cond_for(col)
-        where_cols = sorted(cond.cols) if cond is not None else []
-        need = list(dict.fromkeys(cols + where_cols))
-        dict_cols = _string_cols(schema, need)
-        counts: Dict[Any, int] = {}
-        for path in files:
-            tbl = _read_columns(path, need, dict_cols)
-            if cond is not None:
-                cvals = {c: tbl.column(c).combine_chunks() for c in where_cols}
-                tbl = tbl.filter(cond.fn(cvals))
-            if len(cols) == 1:
-                vc = pc.value_counts(_decode_dict(tbl.column(cols[0])))
-                for v, n in zip(
-                    vc.field("values").to_pylist(), vc.field("counts").to_pylist()
-                ):
-                    counts[v] = counts.get(v, 0) + n
-            else:
-                sub = pa.Table.from_arrays(
-                    [_decode_dict(tbl.column(c)) for c in cols], names=cols
-                )
-                g = sub.group_by(cols).aggregate([([], "count_all")])
-                vals = [g.column(c).to_pylist() for c in cols]
-                for i, n in enumerate(g.column("count_all").to_pylist()):
-                    key = tuple(v[i] for v in vals)
-                    counts[key] = counts.get(key, 0) + n
-        rows = sorted(counts.items(), key=_facet_sort_key)
+        mask = None if cond is None else cond.fn(img.columns(cond.cols))
+        if len(cols) == 1:
+            vals = img.decoded(cols[0])
+            if mask is not None:
+                vals = vals.filter(mask)  # NULL mask -> dropped
+            vc = pc.value_counts(vals)
+            counts = zip(vc.field("values").to_pylist(),
+                         vc.field("counts").to_pylist())
+        else:
+            sub = pa.Table.from_arrays([img.decoded(c) for c in cols],
+                                       names=cols)
+            if mask is not None:
+                sub = sub.filter(mask)
+            g = sub.group_by(cols).aggregate([([], "count_all")])
+            # summed per key: the pyarrow 16 grouper can split one group
+            # in two (see the key-order note in local_group_agg)
+            merged: Dict[Any, int] = {}
+            for key, c in zip(zip(*(g.column(c).to_pylist() for c in cols)),
+                              g.column("count_all").to_pylist()):
+                merged[key] = merged.get(key, 0) + c
+            counts = merged.items()
+        rows = sorted(counts, key=_facet_sort_key)
         if facet_min_count > 1:
             rows = [t for t in rows if t[1] >= facet_min_count]
         if facet_limit and facet_limit > 0:
@@ -1073,7 +1171,7 @@ def _merged_schema(schema, join):
 
 
 def local_group_agg(
-    files: Sequence[str],
+    files,
     schema,
     cond: Optional[_Cond],
     group_by: Sequence,
@@ -1082,16 +1180,19 @@ def local_group_agg(
     join=None,
 ):
     """(total_groups, aggregate Table) — UNPAGED/UNSORTED; the caller owns
-    sort/offset/limit. The store is gate-bounded, so all files' REFERENCED
-    columns concatenate first, then ONE C++ hash aggregation runs.
+    sort/offset/limit. ``files`` is a :class:`StoreImage` or a parquet
+    file list; the store is gate-bounded, so the REFERENCED columns are
+    taken whole (decoded), then ONE C++ hash aggregation runs.
 
-    ``join`` = (right_files, right_schema, left_on, right_on): an INNER
-    equi-join runs first (Arrow hash join; NULL keys drop, matching SQL).
-    Derived ``date_trunc`` keys floor in C (week starts Monday, like
-    Spark). ``max_by`` aggregates sort once by the order tuple descending
-    and take ``first`` per group (single-threaded group-by: 'first' is
-    scan-order-defined); NULL order values refuse — Spark's struct-max
-    null ordering is not mirrored.
+    ``join`` = (right_files, right_schema, left_on, right_on[, how]), the
+    right side an image or a file list: an equi-join runs first (Arrow
+    hash join; NULL keys drop, matching SQL). A condition over left
+    columns only filters the left rows before the join, over dictionary
+    codes. Derived ``date_trunc`` keys floor in C (week starts Monday,
+    like Spark). ``max_by`` aggregates sort once by the order tuple
+    descending and take ``first`` per group (single-threaded group-by:
+    'first' is scan-order-defined); NULL order values refuse — Spark's
+    struct-max null ordering is not mirrored.
 
     Sum/mean accumulate in float64 exactly like Spark's double aggregates;
     sum over int32/64 yields int64 (Spark: long). Count skips NULLs for a
@@ -1108,48 +1209,52 @@ def local_group_agg(
     need_all = list(dict.fromkeys(
         plain + derived_srcs + agg_cols + where_cols
     ))
+    img = StoreImage.of(files, schema)
 
-    def _read_side(side_files, side_schema, cols, extra):
-        names = {f.name for f in side_schema}
-        mine = [c for c in cols if c in names] + list(extra)
-        mine = list(dict.fromkeys(mine))
-        dict_cols = _string_cols(side_schema, [c for c in where_cols if c in names])
-        ts = [_read_columns(p, mine, dict_cols) for p in side_files]
-        return pa.concat_tables(ts).combine_chunks()
+    def _side(side_img, extra, mask=None):
+        # group keys surface as plain values and aggregate kernels need
+        # values, not codes: every side column is taken decoded
+        names = set(side_img.schema.names)
+        mine = list(dict.fromkeys(
+            [c for c in need_all if c in names] + list(extra)
+        ))
+        t = pa.Table.from_arrays([side_img.decoded(c) for c in mine],
+                                 names=mine)
+        return t if mask is None else t.filter(mask)  # NULL mask -> dropped
 
+    left_mask = None
+    if cond is not None and set(where_cols) <= set(schema.names):
+        # every join shape here keeps exactly the left rows that pass a
+        # predicate over left columns alone, so filter before the join
+        left_mask = cond.fn(img.columns(where_cols))
+        cond = None
     if join is not None:
         right_files, right_schema, left_on, right_on = join[:4]
         how = join[4] if len(join) > 4 else "inner"
-        left = _read_side(files, schema, need_all, [left_on])
+        right_img = StoreImage.of(right_files, right_schema)
+        left = _side(img, [left_on], left_mask)
         if how in ("semi", "anti"):
             # EXISTS / NOT EXISTS: only the right KEY column is read; the
             # membership test replaces the hash join. NULL left keys never
             # match (semi drops them, like SQL EXISTS); anti KEEPS them
             # (SQL NOT EXISTS / Spark left_anti: null matches nothing).
-            right_keys = _read_side(
-                right_files, right_schema, [], [right_on]
-            ).column(right_on).combine_chunks().drop_null()
-            key = left.column(left_on).combine_chunks()
+            right_keys = right_img.decoded(right_on).drop_null()
+            key = _single(left.column(left_on))
             mask = pc.is_in(key, value_set=right_keys.unique())
             if how == "anti":
                 mask = pc.or_kleene(pc.invert(mask), pc.is_null(key))
             table = left.filter(mask)
         else:
-            right = _read_side(right_files, right_schema, need_all, [right_on])
             table = left.join(
-                right, keys=[left_on], right_keys=[right_on],
+                _side(right_img, [right_on]), keys=[left_on],
+                right_keys=[right_on],
                 join_type="inner" if how == "inner" else "left outer",
             ).combine_chunks()
     else:
-        table = _read_side(files, schema, need_all, [])
+        table = _side(img, [], left_mask)
     if cond is not None:
-        cols = {c: table.column(c).combine_chunks() for c in where_cols}
+        cols = {c: _single(table.column(c)) for c in where_cols}
         table = table.filter(cond.fn(cols))
-    # decode any dictionary columns: group keys must surface as plain
-    # values, and aggregate kernels over codes would be wrong
-    for i, f in enumerate(table.schema):
-        if isinstance(f.type, pa.DictionaryType):
-            table = table.set_column(i, f.name, _decode_dict(table.column(i)))
     # derive time-bucket keys (truncate ns->us so values match Spark's
     # microsecond TimestampType exactly)
     keys = list(plain)
@@ -1276,7 +1381,7 @@ def paginate_table(
 ) -> List[dict]:
     """Sort/offset/limit/project an in-memory Arrow table and return row
     dicts — the shared page tail for the aggregate tier (the scan tier
-    has its own streaming/select-k variants in :func:`local_page`)."""
+    ranks only the sort keys, in :func:`local_count_page`)."""
     _pa_, pc = _pa()
 
     if sort_specs:
@@ -1297,7 +1402,7 @@ def paginate_table(
 # --------------------------------------------------------------------- #
 
 def local_knn(
-    files: Sequence[str],
+    files,
     schema,
     vector_col: str,
     query_vector: Sequence[float],
@@ -1307,21 +1412,20 @@ def local_knn(
     session_tz: Optional[str] = None,
     metric: str = "cosine",
 ) -> List[dict]:
-    """Exact top-k in-process over the store's (gate-bounded) files: the
-    file-reading half of the eager ``Collection.knn_search`` route; the
+    """Exact top-k in-process over the store (``files``: a
+    :class:`StoreImage`, whose vector matrix and norms are kept, or a
+    parquet file list): the eager ``Collection.knn_search`` route; the
     scoring is :func:`knn_top`. Raises Unsupported on anything whose
     Spark-path semantics this cannot mirror (see :func:`vector_matrix`
     and :func:`knn_top`)."""
     pa, _pc = _pa()
+    img = StoreImage.of(files, schema)
     out_cols = [f.name for f in schema if f.name != vector_col]
     if select_cols:
         out_cols = [c for c in select_cols if c != score_col]
-    need = list(dict.fromkeys(out_cols + [vector_col]))
-    tables = [_read_columns(p, need, ()) for p in files]
-    tbl = pa.concat_tables(tables).combine_chunks()
-    X = vector_matrix(tbl.column(vector_col))
-    top, scores = knn_top(X, query_vector, k, metric=metric)
-    page = tbl.select(out_cols).take(pa.array(top))
+    X, norms = img.vectors(vector_col)
+    top, scores = knn_top(X, query_vector, k, metric=metric, norms=norms)
+    page = img.select(out_cols).take(pa.array(top))
     rows = _table_to_dicts(page, session_tz)
     for r, s in zip(rows, scores):
         r[score_col] = s

@@ -72,6 +72,29 @@ def _parquet_files(path: str, max_files: int = None):
     return files
 
 
+def store_stamp(path: str):
+    """The version stamp of the parquet store at ``path``: a sorted tuple
+    of (relative name, st_size, st_mtime_ns) for each .parquet file,
+    walked as :func:`_parquet_files` walks. Any rewrite changes it (the
+    rewrite writes new files); None when the store is missing."""
+    import os
+
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        out = []
+        for dp, _dn, fns in os.walk(path):
+            for f in fns:
+                if f.endswith(".parquet"):
+                    st = os.stat(os.path.join(dp, f))
+                    out.append((os.path.relpath(os.path.join(dp, f), path),
+                                st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+    except FileNotFoundError:
+        return None  # missing, or swapped out mid-walk
+
+
 def _stat_nan(st) -> bool:
     """True when a float column's footer min/max contains NaN — written by
     parquet-mr/Spark (which fold NaN into the comparator) — so the column

@@ -589,6 +589,12 @@ def test_explain_reports_local_tier(store):
     out = store.explain({"cat": "c1"})
     assert "Local Tier" in out and "footer rows inside the gate" in out
     assert "PhysicalRDD" in out or "Scan" in out  # the JVM plan still shown
+    assert "Store image: not resident" in out
+    # a read loads the columns it needs into the image; explain shows them
+    store.find({"cat": "c1"}, limit=0)
+    img = store._footer_stats_cache[("image",)]
+    out = store.explain({"cat": "c1"})
+    assert f"Store image: resident, {img.nbytes} bytes, columns cat\n" in out
 
 
 def test_explain_silent_when_tier_ineligible(store, monkeypatch):

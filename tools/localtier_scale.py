@@ -95,12 +95,15 @@ def runners(coll, shape, q):
 
 
 def fresh(fn, coll):
-    """``fn`` run from dropped result memos and page plans: a memo hit or
-    a re-executed cached Dataset (whose shuffle output Spark reuses)
-    would time a lookup, not the query."""
+    """``fn`` run from dropped result memos, page plans and store image: a
+    memo hit or a re-executed cached Dataset (whose shuffle output Spark
+    reuses) would time a lookup, not the query, and each local call pays
+    its column reads as the first read after a write does (the facet and
+    kNN shapes read a transient image of the files every call)."""
     def run():
         for k in [k for k in coll._footer_stats_cache
-                  if isinstance(k, tuple) and k and k[0] in ("count", "vcount")]:
+                  if isinstance(k, tuple) and k
+                  and k[0] in ("count", "vcount", "image")]:
             del coll._footer_stats_cache[k]
         coll._plan_cache.clear()
         fn()
