@@ -380,15 +380,14 @@ def _collection_routes(spark, sf, qv):
             )
             routes[name] = f"{tier} | {routes[name]}"
 
-    result_keys = {"count", "vcount", "total_rows"}
+    # the row half of footer_totals is the unfiltered total
+    result_keys = {"count", "vcount", "footer_totals"}
 
     def bust_result_memos():
         for c in (li, od):
-            for k in [
-                k for k in c._footer_stats_cache
-                if isinstance(k, tuple) and k and k[0] in result_keys
-            ]:
-                del c._footer_stats_cache[k]
+            memos = c._version.memos
+            for k in [k for k in memos if k[0] in result_keys]:
+                del memos[k]
 
     return fns, routes, [bust_result_memos], raw_twins, finalize_routes
 

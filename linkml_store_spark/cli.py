@@ -397,13 +397,14 @@ def find_matches_cmd(obj: Context, target_collection, metric, max_matches,
     src = obj.collection
     tgt = obj.db.get_collection(target_collection)
     tgt.identifier_attribute = tgt.identifier_attribute or obj.identifier
-    for coll in (src, tgt):
+
+    def shadow_index(coll):
+        # the indexer search() defaults to: the first attached one
         if not coll._indexers:
-            coll.attach_indexer("simple")
-        if "simple" not in coll._index_dfs and coll._indexers:
-            coll.index_objects(next(iter(coll._indexers)))
-    src_idx = next(iter(src._index_dfs.values()))
-    tgt_idx = next(iter(tgt._index_dfs.values()))
+            coll.attach_indexer("simple", auto_index=False)
+        return coll.index_objects(next(iter(coll._indexers)))
+
+    src_idx, tgt_idx = shadow_index(src), shadow_index(tgt)
     pk_s, pk_t = src._require_pk(), tgt._require_pk()
     if method == "ivf":
         if metric not in ("cosine", "euclidean", "dot"):

@@ -22,8 +22,7 @@ share one plan.
 
 from __future__ import annotations
 
-import hashlib
-import json
+import itertools
 import logging
 from typing import TYPE_CHECKING, Any, Dict, Iterable, Iterator, List, Optional, Sequence, Tuple, Union
 
@@ -59,6 +58,52 @@ def _rows_to_dicts(rows: List[Row]) -> List[OBJECT]:
     return [r.asDict(recursive=True) for r in rows]
 
 
+_MISSING = object()
+_VERSION_SERIALS = itertools.count()
+
+
+class _StoreVersion:
+    """Everything a Collection derives from one version of its store:
+    footer metadata and row-group stats, result memos (counts), prepared
+    Spark plans, the local tier's store image (``localexec.StoreImage``),
+    the in-process text indexes and the shadow index plans. Filled on
+    use through :meth:`memo` and never patched:
+    ``Collection._new_store_version`` replaces it whole, so nothing
+    built from one version is served on the next."""
+
+    #: prepared Spark plans held at once, oldest dropped first: each pins
+    #: a JVM Dataset, and a session issuing thousands of distinct query
+    #: shapes must not grow driver memory without bound
+    MAX_PLANS = 256
+
+    def __init__(self, stamp=None):
+        #: ``topk.store_stamp`` of the files this version scanned (None
+        #: for an in-memory collection or a store that is gone)
+        self.stamp = stamp
+        #: unique across every collection's versions: a plan that reads
+        #: another collection keys on that collection's serial
+        self.serial = next(_VERSION_SERIALS)
+        self.memos: Dict[Any, Any] = {}
+        self._plan_keys: Dict[Any, None] = {}  # insertion-ordered
+
+    def memo(self, key, build):
+        """The value memoized under ``key``, built by ``build()`` on first
+        use. An exception from ``build`` memoizes nothing; a DataFrame
+        value is a prepared plan and counts toward :data:`MAX_PLANS`.
+        ``build`` must not start a new version: callers resolve
+        ``Collection.df`` (whose first scan starts one) before."""
+        value = self.memos.get(key, _MISSING)
+        if value is _MISSING:
+            value = self.memos[key] = build()
+            if isinstance(value, DataFrame):
+                self._plan_keys[key] = None
+                if len(self._plan_keys) > self.MAX_PLANS:
+                    oldest = next(iter(self._plan_keys))
+                    self._plan_keys.pop(oldest, None)
+                    self.memos.pop(oldest, None)
+        return value
+
+
 class Collection:
     """An organized set of objects of the same or similar type
     (reference ``api/collection.py:57-74``)."""
@@ -88,34 +133,19 @@ class Collection:
         self.derived_from = derived_from
         self._df: Optional[DataFrame] = None
         self._indexers: Dict[str, "Indexer"] = {}
-        self._index_dfs: Dict[str, DataFrame] = {}
         #: vector_col -> (assigned_df, centroids, nprobe, durable_path) —
-        #: IVF indexes that ``knn``/``search`` auto-route to; durable ones
-        #: survive pure appends via ivf_append (path None = in-memory)
+        #: IVF indexes that ``knn``/``search`` auto-route to (path None =
+        #: in-memory). The one state kept across store versions, and only
+        #: for durable indexes (:meth:`_new_store_version`)
         self._vector_indexes: Dict[str, tuple] = {}
         #: True iff ``_df`` is exactly the scan of the persisted parquet
         #: store (so parquet footer statistics describe the live data —
-        #: the gate for the stats-pruned default top-k plan in ``query``)
+        #: the gate for the footer routes and the local tier)
         self._df_is_store_scan: bool = False
-        #: ``topk.store_stamp`` of the store's files when ``_df`` was last
-        #: pointed at them: a write through another handle changes it,
-        #: and the next read drops every per-version state
-        #: (:meth:`_sync_store_version`)
-        self._store_stamp = None
-        #: column -> row-group stats of the persisted store: the footer
-        #: sweep is driver-side metadata IO proportional to file count, so
-        #: repeated sorted queries (paging) must not re-read it; cleared on
-        #: every modification alongside the scan flag. It also holds the
-        #: local tier's store image (``localexec.StoreImage``) and the
-        #: in-process text indexes: per-version state
-        self._footer_stats_cache: Dict[Any, Any] = {}
-        #: Query-IR -> constructed page Dataset: repeated identical queries
-        #: (paging UIs, dashboards, benchmark loops) re-execute the SAME
-        #: JVM Dataset, skipping Python plan-build + Catalyst analysis
-        #: (~50-150 ms per fresh plan at interactive latencies — the
-        #: prepared-statement analog; shuffle/scan work still re-runs per
-        #: action). Cleared on every modification with the footer cache.
-        self._plan_cache: Dict[Any, Any] = {}
+        #: footer stats, memos, prepared plans, the store image and the
+        #: index plans of the current store version; replaced whole by
+        #: :meth:`_new_store_version`, the only place it is dropped
+        self._version = _StoreVersion()
         #: vector columns already size-probed/advised on an unindexed knn —
         #: the advisory (and its one count job) fires once per column
         self._knn_advised: set = set()
@@ -129,10 +159,6 @@ class Collection:
         #: zone decision and the undecided-file scan would delete the very
         #: files the in-flight plan names — round-8 advisor finding)
         self._pending_compact_cols: list = []
-        #: crossover gate for the Arrow dictionary-code count path
-        #: (operators/arrowagg.py) — None = the static ARROW_AGG_MIN_ROWS;
-        #: instance-level so tests can pin a number
-        self._arrow_count_min_rows = None
 
     # ------------------------------------------------------------------ #
     # plumbing
@@ -145,15 +171,11 @@ class Collection:
     def df(self) -> DataFrame:
         """The collection as a (lazy) DataFrame."""
         if self._df is None:
-            loaded = self.database._load_collection_df(self.alias)
-            if loaded is not None:
-                self._df_is_store_scan = True
-                self._store_stamp = self._current_stamp()
-            if loaded is None and self.derived_from:
-                loaded = self._materialize_derived()
-            if loaded is None:
+            self._new_store_version()  # scans the persisted store, if any
+            if self._df is None and self.derived_from:
+                self._materialize_derived()
+            if self._df is None:
                 raise ValueError(f"collection {self.alias!r} has no data yet")
-            self._df = loaded
         return self._df
 
     def _materialize_derived(self) -> DataFrame:
@@ -169,8 +191,7 @@ class Collection:
             self.derived_from["mappings"],
             where=self.derived_from.get("where"),
         )
-        self._df = out
-        self.database._save_collection_df(self.alias, out)
+        self._set_df(out)
         return self._df
 
     def load_from_source(
@@ -216,41 +237,56 @@ class Collection:
             return True  # materializes on first touch
         return self.database._collection_data_exists(self.alias)
 
-    def _set_df(
-        self,
-        df: DataFrame,
-        persist: bool = True,
-        appended: Optional[DataFrame] = None,
-    ) -> None:
+    def _set_df(self, df: DataFrame, appended: Optional[DataFrame] = None) -> None:
+        """Make ``df`` the collection's data (persisted when the database
+        has a location) and start a new store version; ``appended`` is
+        the batch when the write was a pure append."""
         self._df = df
         self._df_is_store_scan = False  # in-memory plan until re-persisted
-        if persist:
-            # _save_collection_df re-points _df at the rewritten parquet
+        if self.database.location:
             self.database._save_collection_df(self.alias, df)
-        self._post_modification_hook(appended)
+        self._new_store_version(appended)
 
-    def _post_modification_hook(self, appended: Optional[DataFrame] = None) -> None:
-        # footer statistics no longer describe the store after any change
-        self._footer_stats_cache.clear()
-        self._plan_cache.clear()  # cached page plans point at the old store
-        # The reference fully reindexes shadow collections on ANY
-        # modification (collection.py:289-295). Here any mutation drops the
-        # shadow index plans, and the in-process text indexes and the
-        # local tier's store image go with the footer cache above: the
-        # next read rebuilds them from the current store, once per store
-        # version.
-        self._index_dfs.clear()
-        # Vector indexes: a pure APPEND into a DURABLE IVF index is
-        # maintained incrementally (ivf_append — new vectors join their
-        # nearest existing centroid's partition; one pass over the batch).
-        # Anything else — updates/deletes/replaces, in-memory indexes,
-        # shadow-text indexes whose embedding column isn't in the batch —
-        # drops the registration and knn falls back to the exact brute
-        # plan until rebuilt. Registrations are dropped BEFORE the appends
-        # run and re-added one by one, so an error that escapes leaves no
-        # index over the replaced store.
+    def _new_store_version(
+        self, appended: Optional[DataFrame] = None, rows_kept: bool = False
+    ) -> None:
+        """Drop every per-version state and start the next version — the
+        only place that happens. Every write, ``compact``, the first scan
+        and a change to the store's files by another handle call it.
+
+        A persisted store is re-scanned: ``_df`` points at its current
+        files, and the new :class:`_StoreVersion` is stamped with them.
+        The footer stats, memos, prepared plans, store image, text indexes
+        and shadow index plans of the old version go with it; the next
+        read rebuilds each once (the reference fully reindexes shadow
+        collections on ANY modification, collection.py:289-295).
+
+        IVF registrations are the only state carried over, and only
+        durable ones (persisted beside the store): ``rows_kept`` (a
+        ``compact`` rewrote the same rows) keeps them as they are;
+        ``appended`` (a pure append) absorbs the batch into each whose
+        column it carries (``ivf_append`` — new vectors join their
+        nearest centroid's partition). Every other registration is
+        dropped and knn runs the exact plan until it is rebuilt. They are
+        dropped BEFORE the appends run and re-added one by one, so an
+        error that escapes leaves no index over the replaced store."""
+        stamp = None
+        if self.database.location:
+            stamp = self._current_stamp()
+            if stamp is not None:
+                self._df = self.spark.read.parquet(
+                    self.database._collection_path(self.alias)
+                )
+                self._df_is_store_scan = True
+        self._version = _StoreVersion(stamp)
+        if self._df is not None:
+            self.database._register_view(self.alias)
         registered, self._vector_indexes = self._vector_indexes, {}
-        if appended is None or not registered:
+        durable = {k: e for k, e in registered.items() if e[3] is not None}
+        if rows_kept:
+            self._vector_indexes = durable
+            return
+        if appended is None:
             return
         from py4j.protocol import Py4JJavaError
         from pyspark.errors import PySparkException
@@ -260,10 +296,9 @@ class Collection:
             read_ivf_index,
         )
 
-        for key, entry in registered.items():
-            path = entry[3] if len(entry) > 3 else None
-            if path is None or key not in appended.columns:
-                continue  # in-memory or shadow index: stale, drop
+        for key, (_assigned, _cents, nprobe, path) in durable.items():
+            if key not in appended.columns:
+                continue  # a shadow-text index: the batch lacks its column
             try:
                 ivf_append(self.spark, path, appended, key)
                 assigned, cents = read_ivf_index(self.spark, path)
@@ -280,7 +315,7 @@ class Collection:
                     stacklevel=4,
                 )
                 continue
-            self._vector_indexes[key] = (assigned, cents, entry[2], path)
+            self._vector_indexes[key] = (assigned, cents, nprobe, path)
 
     # ------------------------------------------------------------------ #
     # identity
@@ -535,66 +570,70 @@ class Collection:
         ``col``; advise at the threshold. ``allow_float``: the range-count
         and top-k shapes prune on numeric footer stats including
         float/double/date/timestamp sort keys, so those callers widen the
-        dtype gate (the value zone map stays string/int). Never raises
-        (advice must not break a query)."""
+        dtype gate (the value zone map stays string/int). A column it
+        cannot advise on returns quietly: advice must not break a
+        query."""
+        if col in self._cluster_advised:
+            return
+        if not (self._df_is_store_scan and self.database.location):
+            return
         try:
-            if col in self._cluster_advised:
-                return
-            if not (self._df_is_store_scan and self.database.location):
-                return
             dt = self.df.schema[col].dataType
-            ok_types = (T.StringType, T.IntegerType, T.LongType,
-                        T.ShortType, T.ByteType)
-            if allow_float:
-                ok_types = ok_types + (T.FloatType, T.DoubleType,
-                                       T.DateType, T.TimestampType)
-            if not isinstance(dt, ok_types):
-                return
-            self._cluster_hits[col] = self._cluster_hits.get(col, 0) + 1
-            if self._cluster_hits[col] < self.cluster_advice_threshold:
-                return
-            self._cluster_advised.add(col)
-            n = self._store_total_rows()
-            if n is None or n < self.cluster_advice_min_rows:
-                return  # compaction overhead isn't worth it below this
-            if self.auto_cluster_on_hot_column:
-                # queue, don't compact inline: the caller may hold a zone
-                # decision naming files the rewrite would delete — the
-                # epilogue (_drain_pending_compactions) runs it after the
-                # in-flight query completes
-                self._pending_compact_cols.append(col)
-                return
-            import warnings
+        except KeyError:  # not a top-level column: no footer stats to use
+            return
+        ok_types = (T.StringType, T.IntegerType, T.LongType,
+                    T.ShortType, T.ByteType)
+        if allow_float:
+            ok_types = ok_types + (T.FloatType, T.DoubleType,
+                                   T.DateType, T.TimestampType)
+        if not isinstance(dt, ok_types):
+            return
+        self._cluster_hits[col] = self._cluster_hits.get(col, 0) + 1
+        if self._cluster_hits[col] < self.cluster_advice_threshold:
+            return
+        self._cluster_advised.add(col)
+        totals = self._footer_totals()
+        n = None if totals is None else totals[0]
+        if n is None or n < self.cluster_advice_min_rows:
+            return  # compaction overhead isn't worth it below this
+        if self.auto_cluster_on_hot_column:
+            # queue, don't compact inline: the caller may hold a zone
+            # decision naming files the rewrite would delete — the
+            # epilogue (_drain_pending_compactions) runs it after the
+            # in-flight query completes
+            self._pending_compact_cols.append(col)
+            return
+        import warnings
 
-            warnings.warn(
-                f"{self._cluster_hits[col]} facet/count/range/top-k "
-                f"queries on {col!r} scanned this {n}-row unclustered "
-                f"store; one compact(sort_cols=[{col!r}]) rewrite makes "
-                f"them footer-metadata / row-group-skipping answers (or "
-                f"set auto_cluster_on_hot_column=True).",
-                stacklevel=4,
-            )
-        except Exception:  # noqa: BLE001 — advisory only
-            pass
+        warnings.warn(
+            f"{self._cluster_hits[col]} facet/count/range/top-k "
+            f"queries on {col!r} scanned this {n}-row unclustered "
+            f"store; one compact(sort_cols=[{col!r}]) rewrite makes "
+            f"them footer-metadata / row-group-skipping answers (or "
+            f"set auto_cluster_on_hot_column=True).",
+            stacklevel=4,
+        )
 
     def _drain_pending_compactions(self) -> None:
         """Run advisor-queued auto-compactions once no query is mid-flight.
-        Called from the query()/query_facets() epilogues; never raises."""
+        Called from the query()/query_facets() epilogues. A compaction
+        that fails warns instead of failing the query that queued it."""
+        from py4j.protocol import Py4JJavaError
+        from pyspark.errors import PySparkException
+
         while self._pending_compact_cols:
             col = self._pending_compact_cols.pop(0)
             try:
                 self.compact(sort_cols=[col])
-            except Exception:  # noqa: BLE001 — advisory only
-                pass
+            except (OSError, ValueError, PySparkException, Py4JJavaError) as e:
+                import warnings
 
-    def _plan_cache_put(self, key, plan) -> None:
-        """Insert into the prepared-plan cache with a hard size cap: a
-        session issuing thousands of DISTINCT query shapes (each holding a
-        JVM Dataset reference) must not grow driver memory unboundedly —
-        evict oldest-inserted first (dict preserves insertion order)."""
-        if len(self._plan_cache) >= 256:
-            self._plan_cache.pop(next(iter(self._plan_cache)))
-        self._plan_cache[key] = plan
+                warnings.warn(
+                    f"collection {self.alias!r}: the automatic "
+                    f"compact(sort_cols=[{col!r}]) failed "
+                    f"({type(e).__name__}: {e})",
+                    stacklevel=3,
+                )
 
     def _value_predicate_count(self, col: str, values: list) -> Optional[int]:
         """The composed equality/$in count over the persisted store:
@@ -636,35 +675,31 @@ class Collection:
             "in_scan", col, tuple(values),
             "all" if undecided is None else tuple(undecided),
         )
-        d = self._plan_cache.get(key)
-        if d is not None:
-            # prepared JVM count (every store under the Arrow gate): no
-            # re-build, no footer re-read
-            return meta + d.collect()[0][0]
-        rest = (
-            self.df if undecided is None
-            else self.spark.read.parquet(*undecided)
-        )
-        n = None
-        try:
-            from linkml_store_spark.operators.arrowagg import (
-                parquet_predicate_count,
+        plan = self._version.memos.get(key)
+        if plan is None:
+            # no prepared JVM count yet (every store under the Arrow
+            # gate has one after its first count): try the Arrow count
+            rest = (
+                self.df if undecided is None
+                else self.spark.read.parquet(*undecided)
             )
-
-            n = parquet_predicate_count(
-                self.spark, rest, col, values,
-                min_rows=self._arrow_count_min_rows,
-                footer_metas=metas,
-            )
-        except Exception:  # noqa: BLE001
             n = None
-        if n is None:
-            d = rest.filter(F.col(col).isin(list(values))).agg(
-                F.count(F.lit(1)).alias("n")
-            )
-            self._plan_cache_put(key, d)
-            n = d.collect()[0][0]
-        return meta + n
+            try:
+                from linkml_store_spark.operators.arrowagg import (
+                    parquet_predicate_count,
+                )
+
+                n = parquet_predicate_count(
+                    self.spark, rest, col, values, footer_metas=metas,
+                )
+            except Exception:  # noqa: BLE001
+                n = None
+            if n is not None:
+                return meta + n
+            plan = self._version.memo(key, lambda: rest.filter(
+                F.col(col).isin(list(values))
+            ).agg(F.count(F.lit(1)).alias("n")))
+        return meta + plan.collect()[0][0]
 
     def _current_stamp(self):
         """``topk.store_stamp`` of this collection's store directory."""
@@ -672,116 +707,67 @@ class Collection:
 
         return store_stamp(self.database._collection_path(self.alias))
 
-    def _rescan(self) -> None:
-        """Point ``_df`` at a fresh scan of the persisted store and stamp
-        the file listing that scan saw."""
-        self._df = self.spark.read.parquet(
-            self.database._collection_path(self.alias)
-        )
-        self._df_is_store_scan = True
-        self._store_stamp = self._current_stamp()
-
     def _sync_store_version(self) -> None:
-        """Drop every per-version state when the store's files changed
-        since ``_df`` last scanned them — a write through another handle
-        on the same location. Without this the footer cache, the local
-        count memo and the store image serve the old rows, and the Spark
-        scan names deleted files. Taken at each local-tier entry and in
+        """Start a new store version when the store's files changed since
+        ``_df`` last scanned them — a write through another handle on the
+        same location. Without this the footer stats, the local count
+        memo and the store image serve the old rows, and the Spark scan
+        names deleted files. Taken at each local-tier entry and in
         :meth:`size`: one directory walk with a stat per file."""
         if not (self._df_is_store_scan and self.database.location):
             return
-        stamp = self._current_stamp()
-        if stamp == self._store_stamp:
+        if self._current_stamp() == self._version.stamp:
             return
         _tier_log.debug(
             "collection %s: store files changed outside this handle; "
             "dropping its caches, image and index registrations", self.alias,
         )
-        self._footer_stats_cache.clear()
-        self._plan_cache.clear()
-        self._index_dfs.clear()
-        self._vector_indexes = {}
-        if stamp is None:
-            self._store_stamp = None  # the store is gone: Spark says so
-            return
-        self._rescan()
-        self.database._register_view(self.alias)
+        self._new_store_version()
 
-    def _store_image(self):
+    def _store_image(self, schema):
         """This store version's ``localexec.StoreImage`` (created empty;
-        columns load on use). Lives in the footer cache, so every
-        mutation and store-version change drops it. Call only after
-        :meth:`_local_tier_gate` admitted the call."""
+        columns load on use). Call only after :meth:`_local_tier_gate`
+        admitted the call, with the ``schema`` it returned."""
         from linkml_store_spark.operators import localexec as lx
 
-        img = self._footer_stats_cache.get(("image",))
-        if img is None:
-            img = lx.StoreImage(
-                self._store_metas(), self._footer_stats_cache[("local_schema",)],
-                name=self.alias,
-            )
-            self._footer_stats_cache[("image",)] = img
-        return img
+        return self._version.memo(("image",), lambda: lx.StoreImage(
+            self._store_metas(), schema, name=self.alias,
+        ))
 
     def _store_metas(self):
         """``[(file, pyarrow FileMetaData)]`` of the persisted store, read
-        ONCE and memoized until the next mutation. Footer metadata is
-        planning-time state (like row-group stats): the zone decisions,
-        the Arrow and local-tier gates, and the unfiltered total all
-        consult the same footers — without this memo one routed count was
-        paying THREE redundant driver sweeps per execution (bench round
-        7). None when the store is missing or beyond the sweep cap."""
-        ck = ("metas",)
-        hit = self._footer_stats_cache.get(ck)
-        if hit is not None:
-            return hit
-        try:
-            import os as _os
+        ONCE per store version. Footer metadata is planning-time state
+        (like row-group stats): the zone decisions, the Arrow and
+        local-tier gates, and the unfiltered total all consult the same
+        footers — without this memo one routed count was paying THREE
+        redundant driver sweeps per execution (bench round 7). None when
+        the store is missing or beyond the sweep cap."""
+        import os as _os
 
-            import pyarrow.parquet as pq
+        from linkml_store_spark.operators.topk import _footer_metas
 
-            from linkml_store_spark.operators.topk import _parquet_files
-
+        def read():
             path = self.database._collection_path(self.alias)
-            if not _os.path.exists(path):
-                return None
-            files = _parquet_files(path)
-            if files is None:
-                return None
-            metas = [(fp, pq.ParquetFile(fp).metadata) for fp in files]
-            self._footer_stats_cache[ck] = metas
-            return metas
+            return _footer_metas(path) if _os.path.exists(path) else None
+
+        try:
+            return self._version.memo(("metas",), read)
         except Exception:  # noqa: BLE001 — stats are an optimization only
             return None
 
-    def _footer_totals(self) -> Tuple[int, int]:
+    def _footer_totals(self) -> Optional[Tuple[int, int]]:
         """``localexec.footer_totals`` of the store's footers — (rows,
-        uncompressed bytes) — memoized in the footer cache. Call only
-        when :meth:`_store_metas` is not None."""
+        uncompressed bytes), exact metadata — memoized per store version;
+        None when :meth:`_store_metas` is. The row half is the
+        unfiltered total of a Query and of :meth:`size`: zero jobs."""
         from linkml_store_spark.operators import localexec as lx
 
-        ck = ("footer_totals",)
-        hit = self._footer_stats_cache.get(ck)
-        if hit is None:
-            hit = lx.footer_totals(self._store_metas())
-            self._footer_stats_cache[ck] = hit
-        return hit
-
-    def _store_total_rows(self) -> Optional[int]:
-        """Exact whole-store row count from parquet footers (num_rows is
-        exact metadata, not an estimate) — the pre-pagination total of an
-        UNFILTERED Query costs zero jobs. Memoized in the footer-stats
-        cache (cleared on every mutation); None when the store path is
-        missing or beyond the sweep cap (caller runs the plain count)."""
-        ck = ("total_rows",)
-        if ck in self._footer_stats_cache:
-            return self._footer_stats_cache[ck]
         metas = self._store_metas()
         if metas is None:
             return None
-        n = sum(md.num_rows for _fp, md in metas)
-        self._footer_stats_cache[ck] = n
-        return n
+        return self._version.memo(
+            ("footer_totals",), lambda: lx.footer_totals(metas)
+        )
 
     def query(self, query: Query) -> QueryResult:
         """Execute the declarative Query IR (reference collection.py:375-398).
@@ -838,7 +824,7 @@ class Collection:
         gate = self._local_tier_gate(_query_class(query))
         if gate is None:
             return None
-        _files, schema, total_rows = gate
+        schema, total_rows = gate
         if query.group_by:
             return self._local_tier_agg_plan(query, schema)
         try:
@@ -868,19 +854,18 @@ class Collection:
 
         def run() -> QueryResult:
             ck = ("count", "local", repr(query.where_clause))
-            img = self._store_image()
+            img = self._store_image(schema)
             if eff_limit == 0:
-                num_rows = self._footer_stats_cache.get(ck)
-                if num_rows is None:
-                    num_rows = lx.local_count(img, schema, cond, total_rows)
-                    self._footer_stats_cache[ck] = num_rows
+                num_rows = self._version.memo(
+                    ck, lambda: lx.local_count(img, schema, cond, total_rows)
+                )
                 return QueryResult(num_rows=num_rows, rows=[], query=query)
             # the page's mask pass yields the count with it
             num_rows, rows = lx.local_count_page(
                 img, schema, cond, sel, sort_specs, offset,
                 eff_limit, total_rows, session_tz=session_tz,
             )
-            self._footer_stats_cache[ck] = num_rows
+            self._version.memo(ck, lambda: num_rows)
             return QueryResult(num_rows=num_rows, rows=rows, query=query)
 
         return run
@@ -903,7 +888,7 @@ class Collection:
                 ogate = other._local_tier_gate("agg")
                 if ogate is None:
                     return None
-                _ofiles, oschema, _orows = ogate
+                oschema, _orows = ogate
                 left_on = query.join["left_on"]
                 right_on = query.join["right_on"]
                 how = query.join.get("how", "inner")
@@ -933,7 +918,10 @@ class Collection:
                     oschema, right_on
                 ):
                     return None
-                join = (other._store_image(), oschema, left_on, right_on, how)
+                join = (
+                    other._store_image(oschema), oschema, left_on, right_on,
+                    how,
+                )
             # compile/validate against the post-join column space; the
             # executor reads each side with its OWN schema
             compile_schema = merged if join is not None else schema
@@ -973,7 +961,7 @@ class Collection:
 
         def run() -> QueryResult:
             total, table = lx.local_group_agg(
-                self._store_image(), schema, cond, query.group_by, aggs,
+                self._store_image(schema), schema, cond, query.group_by, aggs,
                 session_tz=session_tz, join=join,
             )
             if having_cond is not None:
@@ -1001,183 +989,126 @@ class Collection:
             return QueryResult(num_rows=0, rows=[], query=query)
         if query.group_by:
             return self._query_spark_agg(query)
-        # the filtered plan is built LAZILY: a zone/footer-answered count
-        # with a cached page plan (or limit=0) never needs it at all
+        self.df  # a first scan starts the version the memos below fill
+        # the filtered plan is built LAZILY: a footer-answered count with
+        # a prepared page plan (or limit=0) never needs it at all
         _df_cache = [None]
 
         def _filtered():
             if _df_cache[0] is None:
                 _df_cache[0] = apply_where(self.df, query.where_clause)
             return _df_cache[0]
-        # Pre-pagination total (queries.py:41-44). Simple single-column
-        # numeric range/equality predicates over the parquet store go
-        # through the zone-map count first: files whose row groups are all
-        # decided by footer min/max are answered from METADATA, only
-        # boundary files scan (operators/topk.stats_filtered_count) — on
-        # clustered/time-ordered layouts the most common analytics count
-        # becomes footer IO. Anything else takes the normal plan.
+
         num_rows = None
         if self._df_is_store_scan and self.database.location:
-            if query.where_clause in (None, {}, []):
-                # unfiltered total: exact from footers, zero jobs — the
-                # sort/limit page below is then the only cluster work
-                num_rows = self._store_total_rows()
-            rng = _simple_range_clause(query.where_clause, self.df)
-            if rng is not None:
-                ck = ("count",) + rng
-                if ck in self._footer_stats_cache:
-                    # paging re-issues the same predicate with different
-                    # offsets — the total is invariant until a mutation
-                    num_rows = self._footer_stats_cache[ck]
-                else:
-                    try:
-                        import os as _os
-
-                        from linkml_store_spark.operators.topk import (
-                            stats_filtered_count,
-                        )
-
-                        path = self.database._collection_path(self.alias)
-                        if _os.path.exists(path):
-                            rinfo: Dict[str, Any] = {}
-                            num_rows = stats_filtered_count(
-                                self.spark, path, *rng,
-                                plan_cache=self._plan_cache,
-                                metas=self._store_metas(),
-                                route_info=rinfo,
-                            )
-                            self._footer_stats_cache[ck] = num_rows
-                            if rinfo.get("zone") == "undecided_all":
-                                # footers exist but decided nothing: the
-                                # unclustered-layout signature the
-                                # clustering advisor counts (range shape)
-                                self._note_unclustered_hit(
-                                    rng[0], allow_float=True
-                                )
-                    except Exception:  # noqa: BLE001 — optimization only
-                        num_rows = None
-            if num_rows is None:
-                # equality/$in totals compose three routes: (1) the value
-                # zone map — on clustered/partitioned-by-category layouts
-                # most files collapse to stored_min == stored_max == v and
-                # the count is driver footer IO (truncation-sound; see
-                # operators/topk._file_value_zone_decision); (2) whatever
-                # files the footers leave undecided go to the Arrow
-                # dictionary-code count when they clear the box-calibrated
-                # crossover gate (operators/arrowagg.ARROW_AGG_MIN_ROWS);
-                # (3) otherwise the plain pushed-In JVM scan of just those
-                # files. Same paging memoization as the range zone count.
-                vc = _simple_value_clause(query.where_clause, self.df)
-                if vc is not None:
-                    ck = ("vcount", vc[0], tuple(vc[1]))
-                    if ck in self._footer_stats_cache:
-                        num_rows = self._footer_stats_cache[ck]
-                    else:
-                        try:
-                            num_rows = self._value_predicate_count(*vc)
-                            if num_rows is not None:
-                                self._footer_stats_cache[ck] = num_rows
-                        except Exception:  # noqa: BLE001 — optimization only
-                            num_rows = None
+            num_rows = self._footer_count(query.where_clause)
         if num_rows is None:
-            fk = ("fcount", repr(query.where_clause))
-            d = self._plan_cache.get(fk)
-            if d is None:
-                d = _filtered().agg(F.count(F.lit(1)).alias("n"))
-                self._plan_cache_put(fk, d)
-            num_rows = d.collect()[0][0]
+            num_rows = self._version.memo(
+                ("fcount", repr(query.where_clause)),
+                lambda: _filtered().agg(F.count(F.lit(1)).alias("n")),
+            ).collect()[0][0]
         limit = DEFAULT_LIMIT if query.limit is None else query.limit
-        # Page-plan reuse (prepared-statement analog): an identical Query
-        # re-executes the SAME JVM Dataset — paging UIs and dashboards
-        # re-issue one shape with only the offset varying, and a fresh
-        # Python build + Catalyst analysis costs ~50-150 ms per call at
-        # interactive latencies. Results are NOT cached (every action
-        # re-scans); invalidated on any mutation (_post_modification_hook).
-        pk = (
-            "page", repr(query.where_clause),
-            tuple(repr(s) for s in (query.sort_by or [])),
-            query.offset or 0, limit,
-            tuple(query.select_cols or []),
+        rows: List[OBJECT] = []
+        if limit != 0:  # a count-only query (limit=0) builds no page
+            # Page-plan reuse (prepared-statement analog): an identical
+            # Query re-executes the SAME JVM Dataset — paging UIs and
+            # dashboards re-issue one shape, and a fresh Python build +
+            # Catalyst analysis costs ~50-150 ms per call at interactive
+            # latencies. Results are NOT memoized (every action re-scans).
+            pk = (
+                "page", repr(query.where_clause),
+                tuple(repr(s) for s in (query.sort_by or [])),
+                query.offset or 0, limit,
+                tuple(query.select_cols or []),
+            )
+            page = self._version.memo(
+                pk, lambda: self._page_plan(query, limit, _filtered())
+            )
+            rows = _rows_to_dicts(page.collect())
+        facet_counts = None
+        if query.include_facet_counts:
+            facet_counts = query_facets(
+                self.df, query.where_clause, query.facet_slots
+            )
+        # epilogue: advisor-queued auto-compactions run only now, after
+        # every plan this query built has executed
+        self._drain_pending_compactions()
+        return QueryResult(num_rows=num_rows, rows=rows, facet_counts=facet_counts, query=query)
+
+    def _footer_count(self, where) -> Optional[int]:
+        """The pre-pagination total of ``where`` over the persisted store
+        from its footers where they can answer (queries.py:41-44),
+        memoized per store version — paging re-issues one predicate with
+        different offsets. None: the caller runs the count plan.
+
+        * no filter: the footers' exact row total, zero jobs;
+        * a single-column numeric range/equality: the zone-map count
+          (``operators/topk.stats_filtered_count``) — files whose row
+          groups footer min/max decide are answered from METADATA, only
+          boundary files scan;
+        * a single-column equality/``$in``: the value zone map, then the
+          Arrow or pushed-In count of the files it leaves undecided
+          (:meth:`_value_predicate_count`)."""
+        if where in (None, {}, []):
+            totals = self._footer_totals()
+            return None if totals is None else totals[0]
+        rng = _simple_range_clause(where, self.df)
+        if rng is not None:
+            try:
+                n = self._version.memo(
+                    ("count",) + rng, lambda: self._range_count(rng)
+                )
+            except Exception:  # noqa: BLE001 — optimization only
+                n = None
+            if n is not None:
+                return n
+        vc = _simple_value_clause(where, self.df)
+        if vc is None:
+            return None
+        try:
+            return self._version.memo(
+                ("vcount", vc[0], tuple(vc[1])),
+                lambda: self._value_predicate_count(*vc),
+            )
+        except Exception:  # noqa: BLE001 — optimization only
+            return None
+
+    def _range_count(self, rng) -> Optional[int]:
+        """``topk.stats_filtered_count`` of a :func:`_simple_range_clause`
+        over the store; None when the store path is missing."""
+        import os as _os
+
+        from linkml_store_spark.operators.topk import stats_filtered_count
+
+        path = self.database._collection_path(self.alias)
+        if not _os.path.exists(path):
+            return None
+        rinfo: Dict[str, Any] = {}
+        n = stats_filtered_count(
+            self.spark, path, *rng,
+            plan_memo=self._version.memo,
+            metas=self._store_metas(),
+            route_info=rinfo,
         )
-        cached = self._plan_cache.get(pk)
-        if limit == 0:
-            # a count-only query (limit=0): the page is empty by
-            # definition — skip plan build/execution entirely
-            page = None
-        else:
-            page = cached if cached is not None else _filtered()
-        # Statistics-pruned top-k as the DEFAULT sort+limit plan: an
-        # unfiltered sort over the parquet-backed store gets the provably-
-        # safe footer threshold for the PRIMARY sort key pushed into the
-        # scan (operators/topk.py — row groups whose max falls below τ are
-        # never read). Pruning on the first key alone is safe for
-        # multi-key sorts too: every lexicographic top-k row has a
-        # first-key value >= the k-th largest first-key value >= τ
-        # (secondary keys only reorder within first-key ties). Falls
-        # through silently whenever stats are missing, the query is
-        # filtered, or the store isn't a clean scan. Null ordering stays
-        # correct: _sort_col pins NULLS LAST both directions, and
-        # topk_threshold refuses to prune when the non-null mass <= k
-        # (the only case nulls can reach the page).
+        if rinfo.get("zone") == "undecided_all":
+            # footers exist but decided nothing: the unclustered-layout
+            # signature the clustering advisor counts (range shape)
+            self._note_unclustered_hit(rng[0], allow_float=True)
+        return n
+
+    def _page_plan(self, query: Query, limit: int, page: DataFrame) -> DataFrame:
+        """The sort/offset/limit/projection plan of a find over ``page``
+        (the filtered scan)."""
         if (
-            page is not None
-            and cached is None
-            and query.sort_by
+            query.sort_by
             and query.where_clause is None
-            and limit is not None
             and 0 < limit <= 100_000
             and self._df_is_store_scan
             and self.database.location
         ):
-            try:
-                import os as _os
-
-                from linkml_store_spark.operators.topk import (
-                    _row_group_stats,
-                    _row_group_stats_string,
-                    topk_threshold,
-                )
-
-                path = self.database._collection_path(self.alias)
-                if _os.path.exists(path):
-                    # _sort_parse handles tuple specs too — the prune path
-                    # must see the same plan for every accepted spelling
-                    base, descending = _sort_parse(query.sort_by[0])
-                    k_eff = (query.offset or 0) + limit
-                    if base not in self._footer_stats_cache:
-                        st = _row_group_stats(path, base)
-                        kind = "num"
-                        if st is None:
-                            # string sort key: truncation-safe min-mass
-                            # bound only (operators/topk.py round 6)
-                            st = _row_group_stats_string(path, base)
-                            kind = "str"
-                        self._footer_stats_cache[base] = (kind, st)
-                    kind, st = self._footer_stats_cache[base]
-                    tau = topk_threshold(
-                        st, k_eff, descending, min_mass_only=(kind == "str")
-                    )
-                    if tau is not None:
-                        page = page.filter(
-                            F.col(base) >= tau if descending else F.col(base) <= tau
-                        )
-                        if kind == "num" and st and len(st) > 1:
-                            skipped = sum(
-                                1 for mn, mx, _r in st
-                                if ((mx < tau) if descending else (mn > tau))
-                            )
-                            if skipped == 0:
-                                # tau pushed but NO row group is skippable:
-                                # every group's range straddles the top-k
-                                # threshold — the unclustered-layout
-                                # signature (top-k shape); one
-                                # compact(sort_cols=[base]) makes the
-                                # prune skip all but the boundary groups
-                                self._note_unclustered_hit(
-                                    base, allow_float=True
-                                )
-            except Exception:  # noqa: BLE001 — stats are an optimization only
-                pass
+            page = self._topk_prune(
+                page, query.sort_by[0], (query.offset or 0) + limit
+            )
 
         def _project(d):
             return d.select(*[path_col(c).alias(c.replace(".", "_")) if "." in c else F.col(c) for c in query.select_cols])
@@ -1188,33 +1119,82 @@ class Collection:
         # columns out of every heap sift (same fix as index/search.knn's
         # keep_vector). Catalyst cannot do this itself when the projection
         # renames dotted paths.
-        if page is not None and cached is None:
-            projected_early = False
-            if query.select_cols and query.sort_by:
-                sort_bases = {_sort_base(s) for s in query.sort_by}
-                plain = {c for c in query.select_cols if "." not in c}
-                if sort_bases <= plain:
-                    page = _project(page)
-                    projected_early = True
-            if query.sort_by:
-                page = page.orderBy(*[_sort_col(s) for s in query.sort_by])
-            if query.offset:
-                page = page.offset(query.offset)
-            if limit is not None and limit >= 0:
-                page = page.limit(limit)
-            if query.select_cols and not projected_early:
+        projected_early = False
+        if query.select_cols and query.sort_by:
+            sort_bases = {_sort_base(s) for s in query.sort_by}
+            plain = {c for c in query.select_cols if "." not in c}
+            if sort_bases <= plain:
                 page = _project(page)
-            self._plan_cache_put(pk, page)
-        rows = [] if page is None else _rows_to_dicts(page.collect())
-        facet_counts = None
-        if query.include_facet_counts:
-            facet_counts = query_facets(
-                self.df, query.where_clause, query.facet_slots
+                projected_early = True
+        if query.sort_by:
+            page = page.orderBy(*[_sort_col(s) for s in query.sort_by])
+        if query.offset:
+            page = page.offset(query.offset)
+        if limit >= 0:
+            page = page.limit(limit)
+        if query.select_cols and not projected_early:
+            page = _project(page)
+        return page
+
+    def _topk_prune(self, page: DataFrame, spec, k: int) -> DataFrame:
+        """Statistics-pruned top-k as the DEFAULT sort+limit plan: the
+        provably-safe footer threshold for the PRIMARY sort key pushed
+        into the scan of an unfiltered sort (operators/topk.py — row
+        groups whose max falls below τ are never read). Pruning on the
+        first key alone is safe for multi-key sorts too: every
+        lexicographic top-k row has a first-key value >= the k-th largest
+        first-key value >= τ (secondary keys only reorder within
+        first-key ties). Null ordering stays correct: _sort_col pins
+        NULLS LAST both directions, and topk_threshold refuses to prune
+        when the non-null mass <= k (the only case nulls can reach the
+        page). ``page`` unchanged whenever the stats cannot decide."""
+        from pyarrow import ArrowException
+
+        from linkml_store_spark.operators.topk import topk_threshold
+
+        try:
+            # _sort_parse handles tuple specs too — the prune path must
+            # see the same plan for every accepted spelling
+            base, descending = _sort_parse(spec)
+            kind, st = self._version.memo(
+                ("sort_stats", base), lambda: self._sort_stats(base)
             )
-        # epilogue: advisor-queued auto-compactions run only now, after
-        # every plan this query built has executed
-        self._drain_pending_compactions()
-        return QueryResult(num_rows=num_rows, rows=rows, facet_counts=facet_counts, query=query)
+            tau = topk_threshold(
+                st, k, descending, min_mass_only=(kind == "str")
+            )
+            if tau is None:
+                return page
+            page = page.filter(
+                F.col(base) >= tau if descending else F.col(base) <= tau
+            )
+        except (ArrowException, OSError, TypeError, ValueError):
+            return page  # footer stats are an optimization only
+        if kind == "num" and len(st) > 1 and not any(
+            ((mx < tau) if descending else (mn > tau)) for mn, mx, _r in st
+        ):
+            # tau pushed but NO row group is skippable: every group's
+            # range straddles the top-k threshold — the unclustered-layout
+            # signature (top-k shape); one compact(sort_cols=[base]) makes
+            # the prune skip all but the boundary groups
+            self._note_unclustered_hit(base, allow_float=True)
+        return page
+
+    def _sort_stats(self, col: str):
+        """(kind, row-group stats) of sort key ``col`` from the store's
+        footers: ``"num"`` exact min/max, or ``"str"`` for a string key,
+        whose stats only the truncation-safe min-mass bound may use
+        (operators/topk.py round 6)."""
+        from linkml_store_spark.operators.topk import (
+            _row_group_stats,
+            _row_group_stats_string,
+        )
+
+        path = self.database._collection_path(self.alias)
+        metas = self._store_metas()
+        st = _row_group_stats(path, col, metas=metas)
+        if st is not None:
+            return "num", st
+        return "str", _row_group_stats_string(path, col, metas=metas)
 
     @staticmethod
     def _agg_exprs(aggs) -> List[F.Column]:
@@ -1289,72 +1269,38 @@ class Collection:
         ``num_rows`` is the pre-pagination GROUP count; when the page is
         untruncated it is free (len of the page), otherwise one count
         over the aggregate plan."""
-        pk = (
+        self.df  # a first scan starts the version the memos below fill
+        other = None
+        if query.join:
+            other = self.database.get_collection(query.join["collection"])
+            other.df  # a first scan starts the version the key names
+        gk = (
             "agg", repr(query.where_clause), repr(query.having),
             repr(query.group_by),
             repr(sorted((query.aggs or {}).items())), repr(query.join),
-            tuple(repr(s) for s in (query.sort_by or [])),
-            query.offset or 0, query.limit,
-            tuple(query.select_cols or []),
+            None if other is None else other._version.serial,
         )
-        page = self._plan_cache.get(pk)
-        if page is None:
-            base = self.df
-            if query.join:
-                other = self.database.get_collection(
-                    query.join["collection"]
-                )
-                odf = other.df
-                try:
-                    ometas = other._store_metas() or []
-                    obytes = sum(
-                        md.row_group(i).total_byte_size
-                        for _fp, md in ometas
-                        for i in range(md.num_row_groups)
-                    )
-                    if ometas and obytes <= 64 * (1 << 20):
-                        odf = F.broadcast(odf)
-                except Exception:  # noqa: BLE001 — sizing is advisory
-                    pass
-                how = query.join.get("how", "inner")
-                try:
-                    spark_how = {
-                        "inner": "inner", "left": "left",
-                        "semi": "left_semi", "anti": "left_anti",
-                    }[how]
-                except KeyError:
-                    raise ValueError(
-                        f"join how={how!r}: expected inner|left|semi|anti"
-                    ) from None
-                base = base.join(
-                    odf,
-                    base[query.join["left_on"]] == odf[query.join["right_on"]],
-                    spark_how,
-                )
-            gdf = apply_where(base, query.where_clause).groupBy(
-                *self._group_key_exprs(query.group_by)
-            ).agg(*self._agg_exprs(query.aggs))
-            if query.having is not None:
-                # SQL HAVING: the same where-language, evaluated over the
-                # aggregate row space (group keys + agg aliases) —
-                # Catalyst keeps the filter above the aggregate, and
-                # num_rows below becomes the post-HAVING group count
-                gdf = apply_where(gdf, query.having)
+        gdf = self._version.memo(gk, lambda: self._agg_plan(query))
+        limit = DEFAULT_LIMIT if query.limit is None else query.limit
+
+        def _page():
             page = gdf
             if query.sort_by:
                 page = page.orderBy(*[_sort_col(s) for s in query.sort_by])
             if query.offset:
                 page = page.offset(query.offset)
-            limit = DEFAULT_LIMIT if query.limit is None else query.limit
             if limit is not None and limit >= 0:
                 page = page.limit(limit)
             if query.select_cols:
                 page = page.select(*query.select_cols)
-            self._plan_cache_put(pk, page)
-            self._plan_cache_put(pk + ("gdf",), gdf)
-        gdf = self._plan_cache.get(pk + ("gdf",))
+            return page
+
+        page = self._version.memo(gk + (
+            tuple(repr(s) for s in (query.sort_by or [])),
+            query.offset or 0, query.limit,
+            tuple(query.select_cols or []),
+        ), _page)
         rows = _rows_to_dicts(page.collect())
-        limit = DEFAULT_LIMIT if query.limit is None else query.limit
         untruncated = (
             not query.offset and (limit is None or limit < 0 or len(rows) < limit)
         )
@@ -1364,6 +1310,42 @@ class Collection:
             num_rows = fast_count(gdf)
         self._drain_pending_compactions()
         return QueryResult(num_rows=num_rows, rows=rows, query=query)
+
+    def _agg_plan(self, query: Query) -> DataFrame:
+        """[join ->] filter -> group -> aggregate [-> HAVING] plan of an
+        aggregate Query, before its page tail."""
+        base = self.df
+        if query.join:
+            other = self.database.get_collection(query.join["collection"])
+            odf = other.df
+            totals = other._footer_totals()
+            if totals is not None and totals[1] <= 64 * (1 << 20):
+                odf = F.broadcast(odf)
+            how = query.join.get("how", "inner")
+            try:
+                spark_how = {
+                    "inner": "inner", "left": "left",
+                    "semi": "left_semi", "anti": "left_anti",
+                }[how]
+            except KeyError:
+                raise ValueError(
+                    f"join how={how!r}: expected inner|left|semi|anti"
+                ) from None
+            base = base.join(
+                odf,
+                base[query.join["left_on"]] == odf[query.join["right_on"]],
+                spark_how,
+            )
+        gdf = apply_where(base, query.where_clause).groupBy(
+            *self._group_key_exprs(query.group_by)
+        ).agg(*self._agg_exprs(query.aggs))
+        if query.having is not None:
+            # SQL HAVING: the same where-language, evaluated over the
+            # aggregate row space (group keys + agg aliases) — Catalyst
+            # keeps the filter above the aggregate, and num_rows becomes
+            # the post-HAVING group count
+            gdf = apply_where(gdf, query.having)
+        return gdf
 
     def find(
         self,
@@ -1430,7 +1412,7 @@ class Collection:
         if not metas:
             return spark_route("no persisted parquet footers")
         kind = _query_class(query)
-        rows, nbytes = lx.footer_totals(metas)
+        rows, nbytes = self._footer_totals()
         gate = (
             f"{rows} footer rows, {kind} cap {lx.LOCAL_TIER_CAPS[kind]}; "
             f"{nbytes} uncompressed bytes, cap {lx.LOCAL_TIER_MAX_BYTES}"
@@ -1439,7 +1421,7 @@ class Collection:
             return spark_route(f"store over the gate ({gate})")
         if self._local_tier_plan(query) is None:
             return spark_route("clauses outside the local tier's Arrow subset")
-        img = self._footer_stats_cache.get(("image",))
+        img = self._version.memos.get(("image",))
         if img is not None and img.columns_loaded:
             image = (
                 f"resident, {img.nbytes} bytes, columns "
@@ -1488,9 +1470,9 @@ class Collection:
             return 0
         if self._df_is_store_scan and self.database.location:
             self._sync_store_version()
-            n = self._store_total_rows()
-            if n is not None:
-                return n
+            totals = self._footer_totals()
+            if totals is not None:
+                return totals[0]
         return fast_count(self.df)
 
     # ------------------------------------------------------------------ #
@@ -1541,9 +1523,9 @@ class Collection:
         return tz
 
     def _local_tier_gate(self, kind: str):
-        """(files, schema, total_rows) when this store's footers admit a
-        ``kind`` call to the local tier (``localexec.local_tier_admits``),
-        else None — the shared gate of every local-tier entry point."""
+        """(schema, total_rows) when this store's footers admit a ``kind``
+        call to the local tier (``localexec.local_tier_admits``), else
+        None — the shared gate of every local-tier entry point."""
         from linkml_store_spark.operators import localexec as lx
 
         if not (self._df_is_store_scan and self.database.location):
@@ -1555,18 +1537,16 @@ class Collection:
         total_rows, total_bytes = self._footer_totals()
         if not lx.local_tier_admits(kind, total_rows, total_bytes):
             return None
-        files = [fp for fp, _md in metas]
         try:
             import pyarrow.parquet as pq
 
-            ck = ("local_schema",)
-            schema = self._footer_stats_cache.get(ck)
-            if schema is None:
-                schema = pq.ParquetFile(files[0]).schema_arrow
-                self._footer_stats_cache[ck] = schema
+            schema = self._version.memo(
+                ("local_schema",),
+                lambda: pq.ParquetFile(metas[0][0]).schema_arrow,
+            )
         except Exception:  # noqa: BLE001
             return None
-        return files, schema, total_rows
+        return schema, total_rows
 
     def _local_tier_facets(
         self, where, facet_columns, facet_limit, facet_min_count
@@ -1584,7 +1564,7 @@ class Collection:
         gate = self._local_tier_gate("facet")
         if gate is None:
             return None
-        _files, schema, _total_rows = gate
+        schema, _total_rows = gate
         cols = (
             list(facet_columns) if facet_columns is not None
             else [f.name for f in schema]
@@ -1610,7 +1590,7 @@ class Collection:
 
         try:
             return lx.local_facets(
-                self._store_image(), schema, lambda col: conds[id(col)],
+                self._store_image(schema), schema, lambda col: conds[id(col)],
                 cols, facet_limit, facet_min_count,
             )
         except Exception as e:  # noqa: BLE001 — never fail a facet here
@@ -1662,13 +1642,15 @@ class Collection:
         return indexer
 
     def index_objects(self, index_name: str = "simple") -> DataFrame:
-        """Build the shadow index DataFrame ``{**obj, __index__: vector}``
-        (reference collection.py:810-943; shadow collection
-        internal__index__{alias}__{name}, indexer.py:86-87)."""
+        """The shadow index DataFrame ``{**obj, __index__: vector}`` of
+        indexer ``index_name`` (reference collection.py:810-943; shadow
+        collection internal__index__{alias}__{name}, indexer.py:86-87),
+        planned once per store version."""
         indexer = self._indexers[index_name]
-        idx_df = indexer.index_dataframe(self.df)
-        self._index_dfs[index_name] = idx_df
-        return idx_df
+        df = self.df  # a first scan starts the version the plan belongs to
+        return self._version.memo(
+            ("index_plan", indexer), lambda: indexer.index_dataframe(df)
+        )
 
     def build_vector_index(
         self,
@@ -1692,9 +1674,9 @@ class Collection:
         absorbed incrementally (``ivf_append`` runs inside the insert —
         one assignment pass + a partitioned parquet append, so inserts on
         an indexed collection pay one extra write job; drop the index
-        first for bulk-load-then-rebuild workflows). Any other
-        modification drops the registration
-        (``_post_modification_hook``) and queries fall back to the exact
+        first for bulk-load-then-rebuild workflows), and ``compact`` keeps
+        it. Any other modification drops the registration
+        (``_new_store_version``) and queries fall back to the exact
         brute plan until rebuilt.
 
         North-star extension: the reference's search surface
@@ -1709,9 +1691,7 @@ class Collection:
         )
 
         if index_name is not None:
-            if index_name not in self._index_dfs:
-                self.index_objects(index_name)
-            src = self._index_dfs[index_name]
+            src = self.index_objects(index_name)
             key = f"__index__@{index_name}"
             from linkml_store_spark.index.indexer import INDEX_COLUMN
 
@@ -1864,10 +1844,10 @@ class Collection:
             gate = self._local_tier_gate("knn")
         if gate is None:
             return _spark()
-        _files, schema, _total_rows = gate
+        schema, _total_rows = gate
         try:
             rows = lx.local_knn(
-                self._store_image(), schema, vector_col, query_vector, k,
+                self._store_image(schema), schema, vector_col, query_vector, k,
                 score_col=score_col, select_cols=select_cols,
                 session_tz=self._session_tz(), metric=metric,
             )
@@ -1932,8 +1912,6 @@ class Collection:
             except Exception:  # noqa: BLE001 — incl. Unsupported: Spark path
                 ranked = None
         if ranked is None:
-            if index_name not in self._index_dfs:
-                self.index_objects(index_name)
             ivf = None if where else self._vector_indexes.get(f"__index__@{index_name}")
             scored_pool_fn = None
             if ivf is not None:
@@ -1947,7 +1925,7 @@ class Collection:
                     assigned, centroids, qv, INDEX_COLUMN, k=pool, nprobe=nprobe
                 )
             ranked = vector_search(
-                self._index_dfs[index_name],
+                self.index_objects(index_name),
                 qv,
                 where=where,
                 limit=limit,
@@ -1970,8 +1948,8 @@ class Collection:
 
         Built on first use per store version by
         ``Indexer.collect_index`` — the same texts and vectors as the
-        index plan, for every indexer — and kept in the footer cache,
-        which every mutation clears. A refusal is kept too, so a store
+        index plan, for every indexer — and kept in the store version,
+        which every write replaces. A refusal is kept too, so a store
         the route cannot serve never re-pays the build."""
         from linkml_store_spark.index.indexer import INDEX_COLUMN
         from linkml_store_spark.operators import localexec as lx
@@ -1982,20 +1960,19 @@ class Collection:
         if gate is None:
             return None
         indexer = self._indexers[index_name]
-        key = ("text_index", indexer)
-        if key in self._footer_stats_cache:
-            return self._footer_stats_cache[key]
-        total_rows, nbytes = self._footer_totals()
-        matrix_bytes = total_rows * indexer.vector_default_length * 8
-        built = None
-        if nbytes + matrix_bytes <= lx.LOCAL_TIER_MAX_BYTES:
+
+        def build():
+            total_rows, nbytes = self._footer_totals()
+            matrix_bytes = total_rows * indexer.vector_default_length * 8
+            if nbytes + matrix_bytes > lx.LOCAL_TIER_MAX_BYTES:
+                return None
             try:
                 table, matrix = indexer.collect_index(self.df)
-                built = lx.VectorIndex(table, matrix, INDEX_COLUMN)
             except Exception:  # noqa: BLE001 — incl. Unsupported: Spark path
-                built = None
-        self._footer_stats_cache[key] = built
-        return built
+                return None
+            return lx.VectorIndex(table, matrix, INDEX_COLUMN)
+
+        return self._version.memo(("text_index", indexer), build)
 
     # ------------------------------------------------------------------ #
     # set operations (§2.7 extension surface — free in Spark)
@@ -2032,10 +2009,8 @@ class Collection:
         report = _compact(
             self.spark, path, target_file_bytes=target_file_bytes, sort_cols=sort_cols
         )
-        self._rescan()
-        self._footer_stats_cache.clear()  # the rewrite changed every footer
-        self._plan_cache.clear()  # cached plans reference the DELETED files
-        self.database._register_view(self.alias)
+        # every plan of the old version names files the rewrite deleted
+        self._new_store_version(rows_kept=True)
         return report
 
     # ------------------------------------------------------------------ #

@@ -166,26 +166,17 @@ class Database:
             return True
         return bool(self.location) and os.path.exists(self._collection_path(alias))
 
-    def _load_collection_df(self, alias: str) -> Optional[DataFrame]:
-        if self.location and os.path.exists(self._collection_path(alias)):
-            return self.spark.read.parquet(self._collection_path(alias))
-        return None
-
     def _save_collection_df(self, alias: str, df: DataFrame) -> None:
-        if self.location:
-            path = self._collection_path(alias)
-            # write-then-swap: parquet rewrites are not atomic in place
-            tmp = path + ".tmp"
-            df.write.mode("overwrite").parquet(tmp)
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            os.replace(tmp, path)
-            coll = self._collections.get(alias)
-            if coll is not None:
-                # footer statistics now describe the live data again —
-                # re-arm the stats-pruned default top-k plan
-                coll._rescan()
-        self._register_view(alias)
+        """Persist ``df`` as the collection's parquet store. The caller
+        (``Collection._set_df``) then re-scans it as a new store
+        version."""
+        path = self._collection_path(alias)
+        # write-then-swap: parquet rewrites are not atomic in place
+        tmp = path + ".tmp"
+        df.write.mode("overwrite").parquet(tmp)
+        if os.path.exists(path):
+            shutil.rmtree(path)
+        os.replace(tmp, path)
 
     def _register_view(self, alias: str) -> None:
         coll = self._collections.get(alias)

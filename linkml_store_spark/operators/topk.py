@@ -34,7 +34,7 @@ pruning — north-star scale extension.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Callable, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +70,28 @@ def _parquet_files(path: str, max_files: int = None):
     if not files or len(files) > max_files:
         return None
     return files
+
+
+def _footer_metas(path: str, metas=None):
+    """``metas`` when given, else ``[(file, FileMetaData)]`` of every file
+    under ``path`` (one footer read each), or None when
+    :func:`_parquet_files` refuses the store."""
+    if metas is not None:
+        return metas
+    import pyarrow.parquet as pq
+
+    files = _parquet_files(path)
+    if files is None:
+        return None
+    return [(fp, pq.ParquetFile(fp).metadata) for fp in files]
+
+
+def _column_chunk(rg, col: str):
+    """The column chunk of ``col`` in row group ``rg``, or None."""
+    for j in range(rg.num_columns):
+        if rg.column(j).path_in_schema == col:
+            return rg.column(j)
+    return None
 
 
 def store_stamp(path: str):
@@ -117,29 +139,23 @@ def _stat_nan(st) -> bool:
     )
 
 
-def _row_group_stats(path: str, col: str):
+def _row_group_stats(path: str, col: str, metas=None):
     """[(min, max, non_null_rows)] across every row group of every file
-    under ``path``; None when any group lacks exact stats for ``col``.
+    under ``path`` (or of the preloaded ``metas``); None when any group
+    lacks exact stats for ``col``.
     Row mass is NON-NULL rows (parquet min/max ignore nulls, so the
     min-mass bound must too — and a table whose non-null mass <= k must
     not be pruned at all: the plain plan's nulls-last tail would differ).
     NaN-bearing float stats refuse (see _stat_nan).
     """
-    import pyarrow.parquet as pq
-
-    files = _parquet_files(path)
-    if files is None:
+    metas = _footer_metas(path, metas)
+    if metas is None:
         return None
     out = []
-    for fp in files:
-        md = pq.ParquetFile(fp).metadata
+    for _fp, md in metas:
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
-            c = None
-            for j in range(rg.num_columns):
-                if rg.column(j).path_in_schema == col:
-                    c = rg.column(j)
-                    break
+            c = _column_chunk(rg, col)
             if c is None:
                 return None
             st = c.statistics
@@ -155,7 +171,7 @@ def _row_group_stats(path: str, col: str):
     return out
 
 
-def _row_group_stats_string(path: str, col: str):
+def _row_group_stats_string(path: str, col: str, metas=None):
     """[(min, max, non_null_rows)] for a STRING (BYTE_ARRAY) column;
     None unless every row group carries str, pure-ASCII min/max stats.
 
@@ -168,22 +184,16 @@ def _row_group_stats_string(path: str, col: str):
     be used. ASCII guard: legacy writers ordered string stats by SIGNED
     bytes; pure-ASCII stored bounds prove the group holds no high-byte
     values, where signed and unsigned (= Python/UTF8String code-point)
-    orderings agree — same argument as ``_file_value_zone_decision``."""
-    import pyarrow.parquet as pq
-
-    files = _parquet_files(path)
-    if files is None:
+    orderings agree — same argument as ``_file_value_zone_decision``.
+    ``metas``: preloaded footers, as for :func:`_row_group_stats`."""
+    metas = _footer_metas(path, metas)
+    if metas is None:
         return None
     out = []
-    for fp in files:
-        md = pq.ParquetFile(fp).metadata
+    for _fp, md in metas:
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
-            c = None
-            for j in range(rg.num_columns):
-                if rg.column(j).path_in_schema == col:
-                    c = rg.column(j)
-                    break
+            c = _column_chunk(rg, col)
             if c is None or c.physical_type != "BYTE_ARRAY":
                 return None
             st = c.statistics
@@ -273,13 +283,16 @@ def topk_stats_pruned(
     df = spark.read.parquet(path)
     tau = None
     try:
-        tau = topk_threshold(_row_group_stats(path, value_col), k, descending)
+        metas = _footer_metas(path)
+        tau = topk_threshold(
+            _row_group_stats(path, value_col, metas), k, descending
+        )
         if tau is None:
             # string sort key: the ASCII-guarded min-mass bound is the
             # truncation-safe subset (see _row_group_stats_string)
             tau = topk_threshold(
-                _row_group_stats_string(path, value_col), k, descending,
-                min_mass_only=True,
+                _row_group_stats_string(path, value_col, metas), k,
+                descending, min_mass_only=True,
             )
     except Exception:  # noqa: BLE001 — stats are an optimization, never a risk
         tau = None
@@ -338,13 +351,9 @@ def _file_zone_decision(path: str, col: str, lo, hi,
     entirely (a subset scan might not resolve the predicate column that
     the whole-store schema union does).
     """
-    import pyarrow.parquet as pq
-
+    metas = _footer_metas(path, metas)
     if metas is None:
-        files = _parquet_files(path)
-        if files is None:
-            return None
-        metas = [(fp, pq.ParquetFile(fp).metadata) for fp in files]
+        return None
     float_bound = isinstance(lo, float) or isinstance(hi, float)
     meta_count = 0
     undecided = []
@@ -353,11 +362,7 @@ def _file_zone_decision(path: str, col: str, lo, hi,
         file_decided = True
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
-            c = None
-            for j in range(rg.num_columns):
-                if rg.column(j).path_in_schema == col:
-                    c = rg.column(j)
-                    break
+            c = _column_chunk(rg, col)
             if c is None:
                 # column absent in this file: scanning ONLY the undecided
                 # subset could fail to resolve the predicate column at all
@@ -427,7 +432,7 @@ def stats_filtered_count(
     hi=None,
     lo_inclusive: bool = True,
     hi_inclusive: bool = True,
-    plan_cache: Optional[dict] = None,
+    plan_memo: Optional[Callable] = None,
     metas=None,
     route_info: Optional[dict] = None,
 ) -> int:
@@ -465,15 +470,11 @@ def stats_filtered_count(
         # absence of a range does not) — plain metadata row total. The
         # same _MAX_SWEEP_FILES cap applies: this branch is sequential
         # driver IO too.
-        import pyarrow.parquet as pq
-
         try:
-            if metas is not None:
-                return sum(md.num_rows for _fp, md in metas)
-            files = _parquet_files(path)
-            if files is None:
+            metas = _footer_metas(path, metas)
+            if metas is None:
                 return spark.read.parquet(path).count()
-            return sum(pq.ParquetFile(fp).metadata.num_rows for fp in files)
+            return sum(md.num_rows for _fp, md in metas)
         except Exception:  # noqa: BLE001
             return spark.read.parquet(path).count()
     decision = None
@@ -485,33 +486,26 @@ def stats_filtered_count(
         decision = None
 
     def _scan_count(files_key, paths):
-        # ``plan_cache`` (caller-owned, invalidated on mutation) holds the
-        # constructed count Dataset: repeated identical range counts
-        # (paging, dashboards) re-execute the SAME JVM plan instead of
-        # paying Python build + Catalyst analysis per call.
-        key = ("range_scan", col, lo, hi, lo_inclusive, hi_inclusive,
-               files_key)
-        d = plan_cache.get(key) if plan_cache is not None else None
-        if d is None:
+        def build():
             c = F.col(col)
             pred = F.lit(True)
             if lo is not None:
                 pred = pred & (c >= lo if lo_inclusive else c > lo)
             if hi is not None:
                 pred = pred & (c <= hi if hi_inclusive else c < hi)
-            d = (
+            return (
                 spark.read.parquet(*paths)
                 .filter(pred)
                 .agg(F.count(F.lit(1)).alias("n"))
             )
-            if plan_cache is not None:
-                # same 256-entry oldest-out cap Collection._plan_cache_put
-                # enforces — inserting uncapped here let a session issuing
-                # many distinct range predicates grow driver memory
-                # unboundedly (round-8 advisor finding)
-                if len(plan_cache) >= 256:
-                    plan_cache.pop(next(iter(plan_cache)))
-                plan_cache[key] = d
+
+        # ``plan_memo(key, build)`` (caller-owned, dropped with the store
+        # version) keeps the constructed count Dataset: repeated identical
+        # range counts (paging, dashboards) re-execute the SAME JVM plan
+        # instead of paying Python build + Catalyst analysis per call
+        key = ("range_scan", col, lo, hi, lo_inclusive, hi_inclusive,
+               files_key)
+        d = build() if plan_memo is None else plan_memo(key, build)
         return d.collect()[0][0]
 
     if decision is None:
@@ -583,13 +577,9 @@ def _file_value_zone_decision(path: str, col: str, values, metas=None):
     degradation, whole-store refusals (missing column, unsupported
     physical type, >_MAX_SWEEP_FILES) as ``_file_zone_decision``.
     """
-    import pyarrow.parquet as pq
-
+    metas = _footer_metas(path, metas)
     if metas is None:
-        files = _parquet_files(path)
-        if files is None:
-            return None
-        metas = [(fp, pq.ParquetFile(fp).metadata) for fp in files]
+        return None
     if any(isinstance(v, bool) or v is None for v in values):
         return None
     str_values = all(isinstance(v, str) for v in values)
@@ -608,11 +598,7 @@ def _file_value_zone_decision(path: str, col: str, values, metas=None):
         file_decided = True
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
-            c = None
-            for j in range(rg.num_columns):
-                if rg.column(j).path_in_schema == col:
-                    c = rg.column(j)
-                    break
+            c = _column_chunk(rg, col)
             if c is None:
                 return None  # schema evolution: whole-store concern
             if str_values and c.physical_type != "BYTE_ARRAY":
@@ -681,11 +667,7 @@ def zone_facet_counts(files, col: str, physical_string: bool, metas=None):
         file_decided = True
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
-            c = None
-            for j in range(rg.num_columns):
-                if rg.column(j).path_in_schema == col:
-                    c = rg.column(j)
-                    break
+            c = _column_chunk(rg, col)
             if c is None:
                 return None  # schema evolution: whole-store concern
             if physical_string and c.physical_type != "BYTE_ARRAY":

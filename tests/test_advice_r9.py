@@ -37,7 +37,7 @@ def test_zone_partial_not_undecided_on_decided_out_files(spark, tmp_path):
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         for lo in (100, 101, 102):
-            coll._footer_stats_cache.pop(("count", "qty", lo, 110, True, False), None)
+            coll._version.memos.pop(("count", "qty", lo, 110, True, False), None)
             coll._query_spark(
                 Query(where_clause={"qty": {"$gte": lo, "$lt": 110}}, limit=0)
             )

@@ -186,12 +186,13 @@ def test_predicate_count_refusals(spark):
 def test_collection_count_routes_equality_through_arrow(spark, tmp_path, monkeypatch):
     """Collection.query's pre-pagination total for a simple equality/$in
     where-clause routes through the Arrow dictionary-code count when the
-    store clears the (instance-lowered) crossover gate, and the cached
-    total is reused for paging."""
+    store clears the (patched) crossover gate, and the cached total is
+    reused for paging."""
     # pins the ARROW-COUNT routes: the local tier would intercept
     # footer-small stores before them (round 9)
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
     from linkml_store_spark.client import Client
+    from linkml_store_spark.operators import arrowagg
     from linkml_store_spark.query import Query
 
     client = Client(spark)
@@ -200,18 +201,18 @@ def test_collection_count_routes_equality_through_arrow(spark, tmp_path, monkeyp
     coll.insert(spark.read.parquet(f"{SF}/orders.parquet"))
     want = coll.df.filter(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")).count()
 
-    coll._arrow_count_min_rows = 0
+    monkeypatch.setattr(arrowagg, "ARROW_AGG_MIN_ROWS", 0)
     res = coll.query(Query(where_clause={"o_orderpriority": {"$in": ["1-URGENT", "2-HIGH"]}}, limit=5))
     assert res.num_rows == want
     ck = ("vcount", "o_orderpriority", ("1-URGENT", "2-HIGH"))
-    assert coll._footer_stats_cache.get(ck) == want
+    assert coll._version.memos.get(ck) == want
 
     # above the arrow gate the composed route still answers — the value
     # zone map triages the files and the undecided remainder takes the
     # pushed-In JVM scan — same number, same paging memoization
-    coll._footer_stats_cache.clear()
-    coll._arrow_count_min_rows = 10**12
+    coll._version.memos.clear()
+    monkeypatch.setattr(arrowagg, "ARROW_AGG_MIN_ROWS", 10**12)
     res2 = coll.query(Query(where_clause={"o_orderpriority": {"$in": ["1-URGENT", "2-HIGH"]}}, limit=5))
     assert res2.num_rows == want
-    assert coll._footer_stats_cache.get(ck) == want
+    assert coll._version.memos.get(ck) == want
 

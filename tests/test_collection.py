@@ -1,6 +1,7 @@
 """Collection CRUDSI behavior (reference test strategy: test_api.py)."""
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkml_store_spark.client import Client
@@ -431,12 +432,17 @@ def test_unfiltered_query_total_from_footers(spark, tmp_path, monkeypatch):
 
     res = coll.query(Query(limit=5))
     assert res.num_rows == 500
-    assert coll._footer_stats_cache[("total_rows",)] == 500
+    assert coll._version.memos[("footer_totals",)][0] == 500
     assert coll.size() == 500
     # mutation invalidates: the memo must not survive an insert
     coll.insert(spark.createDataFrame([(1000, 1)], ["id", "v"]))
-    assert ("total_rows",) not in coll._footer_stats_cache
+    assert ("footer_totals",) not in coll._version.memos
     assert coll.query(Query(limit=5)).num_rows == 501
+
+
+def _plans(coll):
+    """Keys of the prepared Spark plans memoized for the store version."""
+    return [k for k, v in coll._version.memos.items() if isinstance(v, DataFrame)]
 
 
 def test_query_plan_cache_reuse_and_invalidation(spark, tmp_path, monkeypatch):
@@ -453,15 +459,15 @@ def test_query_plan_cache_reuse_and_invalidation(spark, tmp_path, monkeypatch):
 
     q = Query(where_clause={"v": 1}, sort_by=["-id"], limit=3)
     r1 = coll.query(q)
-    n_plans = len(coll._plan_cache)
+    n_plans = len(_plans(coll))
     assert n_plans >= 1
     r2 = coll.query(q)
-    assert len(coll._plan_cache) == n_plans  # cache HIT: no new plan built
+    assert len(_plans(coll)) == n_plans  # cache HIT: no new plan built
     assert r1.rows == r2.rows and r1.num_rows == r2.num_rows == 100
     assert [r["id"] for r in r1.rows] == [298, 295, 292]
 
     coll.insert(spark.createDataFrame([(9001, 1)], ["id", "v"]))
-    assert coll._plan_cache == {}
+    assert _plans(coll) == []
     r3 = coll.query(q)
     assert r3.num_rows == 101
     assert [r["id"] for r in r3.rows] == [9001, 298, 295]
@@ -474,10 +480,13 @@ def test_plan_cache_capped(spark, tmp_path):
     dbp = client.attach_database(f"spark://{tmp_path}/capdb")
     coll = dbp.create_collection("t", identifier_attribute="id")
     coll.insert(spark.createDataFrame([(1, 1)], ["id", "v"]))
+    version = coll._version
+    version.memo(("total",), lambda: 1)  # a result memo: never evicted
     for i in range(300):
-        coll._plan_cache_put(("k", i), object())
-    assert len(coll._plan_cache) <= 256
-    assert ("k", 299) in coll._plan_cache and ("k", 0) not in coll._plan_cache
+        version.memo(("k", i), lambda: coll.df)
+    assert len(_plans(coll)) == 256
+    assert ("k", 299) in version.memos and ("k", 0) not in version.memos
+    assert version.memos[("total",)] == 1
 
 
 def test_cluster_advisor_warns_once(spark, tmp_path, monkeypatch):
@@ -538,7 +547,7 @@ def test_cluster_advisor_auto_then_footer_answers(spark, tmp_path, monkeypatch):
     assert facets2["status"] == facets["status"]
     res = coll.query(Query(where_clause={"status": "OPEN"}, limit=1))
     assert res.num_rows == 2000
-    assert coll._footer_stats_cache[("vcount", "status", ("OPEN",))] == 2000
+    assert coll._version.memos[("vcount", "status", ("OPEN",))] == 2000
 
 
 def test_cluster_advisor_range_and_topk_shapes(spark, tmp_path, monkeypatch):
@@ -634,7 +643,7 @@ def test_cluster_advisor_count_path_defers_compact_to_epilogue(
     coll._value_predicate_count = spy_vpc
     try:
         for _ in range(3):
-            coll._footer_stats_cache.pop(("vcount", "v", ("A",)), None)
+            coll._version.memos.pop(("vcount", "v", ("A",)), None)
             res = coll.query(Query(where_clause={"v": "A"}, limit=0))
             assert res.num_rows == 2000
     finally:
@@ -648,7 +657,7 @@ def test_cluster_advisor_count_path_defers_compact_to_epilogue(
     # every observed count came from the pre-compaction layout, intact
     assert all(e[1] == 2000 for e in events if e[0] == "count_done")
     # and the rewrite took effect for later queries
-    coll._footer_stats_cache.pop(("vcount", "v", ("A",)), None)
+    coll._version.memos.pop(("vcount", "v", ("A",)), None)
     assert coll.query(Query(where_clause={"v": "A"}, limit=0)).num_rows == 2000
 
 
@@ -671,7 +680,7 @@ def test_cluster_advisor_count_path_hits(spark, tmp_path, monkeypatch):
         warnings.simplefilter("always")
         for _ in range(3):
             # distinct literals defeat the result memo: each query recounts
-            coll._footer_stats_cache.pop(("vcount", "v", ("A",)), None)
+            coll._version.memos.pop(("vcount", "v", ("A",)), None)
             assert coll.query(Query(where_clause={"v": "A"}, limit=0)).num_rows == 2000
     msgs = [str(x.message) for x in w if "compact" in str(x.message)]
     assert len(msgs) == 1 and "sort_cols=['v']" in msgs[0]

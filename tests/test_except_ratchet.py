@@ -7,7 +7,7 @@ import pathlib
 
 import linkml_store_spark
 
-MAX_SILENT = 6
+MAX_SILENT = 2
 
 
 def _silent_handlers():

@@ -281,7 +281,7 @@ def test_cluster_once_then_footer_answers_everything(spark, tmp_path, monkeypatc
     # count through Collection.query (value zone route + paging memo)
     res = coll.query(Query(where_clause={"status": "OPEN"}, limit=3))
     assert res.num_rows == 2000
-    assert coll._footer_stats_cache[("vcount", "status", ("OPEN",))] == 2000
+    assert coll._version.memos[("vcount", "status", ("OPEN",))] == 2000
 
     # facet through Collection.query_facets (zone facet route)
     facets = coll.query_facets(facet_columns=["status"])

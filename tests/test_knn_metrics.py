@@ -183,7 +183,8 @@ def test_local_tier_knn_metrics_match_oracle(spark, tmp_path, emb_rows):
 
     gate = coll._local_tier_gate("knn")
     assert gate is not None, "sf0.001 embeddings must be inside the gate"
-    files, schema, _total = gate
+    schema, _total = gate
+    files = [fp for fp, _md in coll._store_metas()]
     for metric in ("cosine", "dot", "euclidean", "manhattan"):
         rows = lx.local_knn(
             files, schema, "embedding", qv, 6, metric=metric

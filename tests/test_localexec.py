@@ -320,7 +320,7 @@ def test_property_local_count_matches_spark(orders_store, where):
 
     plan = orders_store._local_tier_plan(Query(where_clause=where, limit=0))
     assert plan is not None, where
-    orders_store._footer_stats_cache.pop(
+    orders_store._version.memos.pop(
         ("count", "local", repr(where)), None
     )
     local_n = plan().num_rows
@@ -592,7 +592,7 @@ def test_explain_reports_local_tier(store):
     assert "Store image: not resident" in out
     # a read loads the columns it needs into the image; explain shows them
     store.find({"cat": "c1"}, limit=0)
-    img = store._footer_stats_cache[("image",)]
+    img = store._version.memos[("image",)]
     out = store.explain({"cat": "c1"})
     assert f"Store image: resident, {img.nbytes} bytes, columns cat\n" in out
 
@@ -621,9 +621,8 @@ def test_agg_ir_join_types_spark_plan(spark, sf_dir):
         )
         cust._query_spark_agg(q)
         gdf = next(
-            v for k, v in cust._plan_cache.items()
-            if isinstance(k, tuple) and k and k[-1] == "gdf"
-            and repr(q.join) in str(k)
+            v for k, v in cust._version.memos.items()
+            if k[0] == "agg" and len(k) == 7 and k[5] == repr(q.join)
         )
         s = gdf._sc._jvm.PythonSQLUtils.explainString(
             gdf._jdf.queryExecution(), "formatted"
@@ -678,8 +677,7 @@ ROUTE_SETTINGS = ["under_cap", "over_cap", "kill_switch"]
 def _spark_jobs(coll, fn) -> int:
     """Spark jobs ``fn`` ran (statusTracker job group), from cold result
     memos and page plans so a Spark-routed call cannot hide behind one."""
-    coll._footer_stats_cache.clear()
-    coll._plan_cache.clear()
+    coll._version.memos.clear()
     sc = coll.spark.sparkContext
     group = f"route-{id(fn)}-{os.urandom(4).hex()}"
     sc.setJobGroup(group, "static routing test")
@@ -765,7 +763,7 @@ def test_reads_write_nothing_into_store_dir(route_store, monkeypatch, setting):
 
     before = listing()
     for call in ROUTE_CALLS.values():
-        route_store._footer_stats_cache.clear()
+        route_store._version.memos.clear()
         call(route_store)
     route_store.explain({"cat": "c1"})
     assert listing() == before

@@ -71,7 +71,7 @@ def jdb(spark, tmp_path_factory):
 
     con = duckdb.connect()
     for name, coll in [("l", facts), ("rdim", rdim), ("rnull", rnull)]:
-        files = coll._local_tier_gate("agg")[0]
+        files = [fp for fp, _md in coll._store_metas()]
         flist = ", ".join(f"'{f}'" for f in files)
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet([{flist}])"
@@ -189,7 +189,7 @@ def test_ir_join_zero_row_right_store(jdb, spark):
     rempty_coll.insert(
         spark.createDataFrame([], "rk long, rv long, rs string")
     )
-    files = rempty_coll._local_tier_gate("agg")[0]
+    files = [fp for fp, _md in rempty_coll._store_metas()]
     flist = ", ".join(f"'{f}'" for f in files)
     con.execute(
         f"CREATE VIEW rempty AS SELECT * FROM read_parquet([{flist}])"

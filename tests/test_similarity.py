@@ -23,6 +23,11 @@ def brute_ids(emb, qvec, k=10):
     return [r["vec_id"] for r in knn(emb, qvec, "embedding", k).collect()]
 
 
+def _index_plans(coll):
+    """Keys of the shadow index plans memoized for the store version."""
+    return [k for k in coll._version.memos if k[0] == "index_plan"]
+
+
 def test_knn_self_is_top(emb, qvec):
     top = knn(emb, qvec, "embedding", 5).collect()
     assert top[0]["vec_id"] == 0
@@ -335,7 +340,7 @@ def test_unexpected_ivf_append_error_leaves_no_stale_index(spark, tmp_path, monk
     coll.insert(emb.filter(F.col("vec_id") < 250))
     coll.build_vector_index("embedding", n_centroids=8, nprobe=3)
     coll.attach_indexer("simple")
-    assert coll._vector_indexes and coll._index_dfs
+    assert coll._vector_indexes and _index_plans(coll)
 
     def failing_append(*_args, **_kwargs):
         raise RuntimeError("unexpected")
@@ -343,7 +348,7 @@ def test_unexpected_ivf_append_error_leaves_no_stale_index(spark, tmp_path, monk
     monkeypatch.setattr(similarity, "ivf_append", failing_append)
     with pytest.raises(RuntimeError, match="unexpected"):
         coll.insert(emb.filter(F.col("vec_id") >= 250))
-    assert coll._vector_indexes == {} and coll._index_dfs == {}
+    assert coll._vector_indexes == {} and _index_plans(coll) == []
     # the insert's data was written, and search reads the new store
     assert coll.df.count() == emb.count()
     assert coll.search("1", limit=3).num_rows == 3

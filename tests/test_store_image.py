@@ -128,7 +128,7 @@ def test_repeated_reads_open_no_parquet_file(db, monkeypatch):
 def test_every_write_reloads_the_image(db, monkeypatch, write):
     t = db.get_collection("t")
     assert _reads(t) == _spark_reads(t, monkeypatch)
-    before = t._footer_stats_cache[("image",)]
+    before = t._version.memos[("image",)]
     if write == "insert":
         t.insert(_dicts(_rows(20, start=500)))
     elif write == "upsert":
@@ -140,7 +140,7 @@ def test_every_write_reloads_the_image(db, monkeypatch, write):
     opens = _Opens(monkeypatch)
     after = _reads(t)
     assert opens.n > 0, "the first reads after a write used the old image"
-    img = t._footer_stats_cache[("image",)]
+    img = t._version.memos[("image",)]
     assert img is not before and img.num_rows == t.size()
     assert after == _spark_reads(t, monkeypatch)
 
@@ -149,7 +149,7 @@ def test_resident_images_stay_inside_the_budget(db, monkeypatch, caplog):
     t, u = db.get_collection("t"), db.get_collection("u")
     _reads(t)
     _reads(u)
-    sizes = [c._footer_stats_cache[("image",)].nbytes for c in (t, u)]
+    sizes = [c._version.memos[("image",)].nbytes for c in (t, u)]
     footer = max(c._footer_totals()[1] for c in (t, u))
     budget = int(max(max(sizes), footer) * 1.2)
     assert budget < sum(sizes), "the budget must not fit both images"
@@ -165,7 +165,7 @@ def test_resident_images_stay_inside_the_budget(db, monkeypatch, caplog):
 def test_a_new_column_loads_alone(db, monkeypatch):
     t = db.get_collection("t")
     assert t.find({"cat": "c1"}, limit=0).num_rows > 0
-    img = t._footer_stats_cache[("image",)]
+    img = t._version.memos[("image",)]
     assert img.columns_loaded == ["cat"]
     cat_buf = img.column("cat").indices.buffers()[1].address
     opens = _Opens(monkeypatch)
@@ -256,3 +256,116 @@ def test_threads_share_the_budget(tmp_path, monkeypatch):
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
     assert lx.resident_bytes() <= budget
+
+
+# ---------------------------------------------------------------------- #
+# compact and the advisor's auto-compaction start a new store version
+# ---------------------------------------------------------------------- #
+QV = [1.0, 2.0, 0.5, 1.0]
+
+
+def _docs(spark, location, n):
+    db = Database(spark, location=location)
+    c = db.create_collection("docs", identifier_attribute="id")
+    c.insert(spark.createDataFrame(_rows(n), SCHEMA).repartition(3))
+    return c
+
+
+def _scores(res):
+    return [round(s, 9) for s, _r in res.ranked_rows]
+
+
+def _knn_ids(c, **kw):
+    return [r["id"] for r in c.knn(QV, vector_col="emb", k=5, **kw).collect()]
+
+
+@pytest.mark.parametrize("where", [None, {"cat": "c1"}])
+def test_spark_path_search_after_compact(spark, tmp_path, monkeypatch, where):
+    """The shadow index plan of the old store version names the files
+    compact deleted; the next search must plan over the new ones."""
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
+    c = _docs(spark, str(tmp_path / "s"), 60)
+    before = c.search("c1 3", where=where, limit=5)
+    c.compact()
+    after = c.search("c1 3", where=where, limit=5)
+    assert len(after.rows) == 5 and _scores(after) == _scores(before)
+    if where:
+        assert all(r["cat"] == "c1" for r in after.rows)
+
+
+def test_knn_after_compact_drops_an_in_memory_ivf(spark, tmp_path):
+    c = _docs(spark, str(tmp_path / "k"), 200)
+    c.build_vector_index("emb", n_centroids=4, nprobe=4, durable=False)
+    _knn_ids(c)
+    c.compact()
+    assert _knn_ids(c) == _knn_ids(c, exact=True)
+    assert "emb" not in c._vector_indexes
+
+
+def test_durable_ivf_routes_knn_after_compact(spark, tmp_path, monkeypatch):
+    from linkml_store_spark.operators import similarity
+
+    c = _docs(spark, str(tmp_path / "d"), 200)
+    c.build_vector_index("emb", n_centroids=4, nprobe=4, durable=True)
+    c.compact()
+    probes = []
+    real = similarity.ivf_knn
+    monkeypatch.setattr(
+        similarity, "ivf_knn",
+        lambda *a, **kw: probes.append(kw["nprobe"]) or real(*a, **kw),
+    )
+    got = _knn_ids(c)
+    assert probes == [4], "knn did not route through the IVF index"
+    assert got == _knn_ids(c, exact=True)  # every partition probed: exact
+
+
+def test_spark_path_search_after_auto_compaction(spark, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
+    c = _docs(spark, str(tmp_path / "a"), 300)
+    c.cluster_advice_min_rows = 100
+    c.auto_cluster_on_hot_column = True
+    before = c.search("c2", limit=5)
+    compactions = []
+    real = c.compact
+    c.compact = lambda **kw: compactions.append(kw) or real(**kw)
+    for _ in range(3):
+        c.query_facets(facet_columns=["cat"])
+    assert compactions == [{"sort_cols": ["cat"]}]
+    after = c.search("c2", limit=5)
+    assert len(after.rows) == 5 and _scores(after) == _scores(before)
+
+
+def test_a_failed_auto_compaction_warns(spark, tmp_path):
+    c = _docs(spark, str(tmp_path / "f"), 20)
+
+    def fail(**_kw):
+        raise OSError("no space left on device")
+
+    c.compact = fail
+    c._pending_compact_cols.append("cat")
+    with pytest.warns(UserWarning, match=r"'docs'.*compact\(sort_cols=\['cat'\]\)"
+                      r".*OSError: no space left"):
+        c._drain_pending_compactions()
+    assert c._pending_compact_cols == []
+
+
+def test_spark_join_plan_follows_the_right_side(spark, tmp_path, monkeypatch):
+    """A prepared join+aggregate plan reads the other collection too: a
+    write there must not leave this one serving the old right side."""
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
+    db = Database(spark, location=str(tmp_path / "j"))
+    f = db.create_collection("f", identifier_attribute="id")
+    f.insert(spark.createDataFrame([(i, i % 5) for i in range(50)],
+                                   "id long, k long"))
+    d = db.create_collection("d", identifier_attribute="dk")
+    d.insert(spark.createDataFrame([(k, f"l{k % 2}") for k in range(5)],
+                                   "dk long, lab string"))
+    q = Query(join={"collection": "d", "left_on": "k", "right_on": "dk"},
+              group_by=["lab"], aggs={"n": ("count", None)}, limit=-1)
+
+    def counts():
+        return sorted((r["lab"], r["n"]) for r in f.query(q).rows)
+
+    assert counts() == [("l0", 30), ("l1", 20)]
+    d.insert(spark.createDataFrame([(0, "l9")], "dk long, lab string"))
+    assert counts() == [("l0", 30), ("l1", 20), ("l9", 10)]

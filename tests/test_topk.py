@@ -552,7 +552,7 @@ def test_collection_value_count_routes_through_zone(spark, tmp_path, monkeypatch
     res = coll.query(Query(where_clause={"status": "OPEN"}, limit=5))
     want = coll.df.filter(coll.df.status == "OPEN").count()
     assert res.num_rows == want == 1000
-    assert coll._footer_stats_cache.get(("vcount", "status", ("OPEN",))) == want
+    assert coll._version.memos.get(("vcount", "status", ("OPEN",))) == want
     res2 = coll.query(
         Query(where_clause={"status": {"$in": ["OPEN", "HELD"]}}, limit=5)
     )
@@ -634,5 +634,5 @@ def test_collection_string_sort_prunes_and_matches(spark, tmp_path, monkeypatch)
     plain = coll.df.orderBy(F.desc_nulls_last("handle")).limit(9).collect()
     assert [r["handle"] for r in res.rows] == [r["handle"] for r in plain]
     # the stats cache now holds the string-kind entry
-    kind, st = coll._footer_stats_cache["handle"]
+    kind, st = coll._version.memos[("sort_stats", "handle")]
     assert kind == "str" and st is not None

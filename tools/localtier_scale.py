@@ -30,6 +30,7 @@ import os
 import sys
 import time
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -79,7 +80,7 @@ def runners(coll, shape, q):
     """(run_local, run_jvm) for one shape on one store."""
     metas = coll._store_metas()
     files = [fp for fp, _md in metas]
-    schema = coll._local_tier_gate(SHAPES[shape][0])[1]
+    schema = coll._local_tier_gate(SHAPES[shape][0])[0]
     if shape == "facet":
         return (
             lambda: lx.local_facets(files, schema, lambda c: None, ["cat"], 100, 1),
@@ -101,11 +102,11 @@ def fresh(fn, coll):
     its column reads as the first read after a write does (the facet and
     kNN shapes read a transient image of the files every call)."""
     def run():
-        for k in [k for k in coll._footer_stats_cache
-                  if isinstance(k, tuple) and k
-                  and k[0] in ("count", "vcount", "image")]:
-            del coll._footer_stats_cache[k]
-        coll._plan_cache.clear()
+        memos = coll._version.memos
+        for k in [k for k, v in memos.items()
+                  if k[0] in ("count", "vcount", "image")
+                  or isinstance(v, DataFrame)]:
+            del memos[k]
         fn()
     return run
 
