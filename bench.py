@@ -73,7 +73,7 @@ def build_queries(spark, sf, qv=None):
     plans = {
         # b1/b2/b3/b4/b5/b6/b8 route through the Collection API below —
         # the engine DEFAULTS (LOCAL TIER on footer-small stores, zone
-        # counts, Arrow gate, stats-pruned top-k, plan cache) are what
+        # counts, stats-pruned top-k, plan cache) are what
         # the bench measures, with per-query route markers documenting
         # what engaged/refused on this layout. Raw hand-built twins are
         # timed interleaved so the API delta is a measured number.
@@ -164,11 +164,11 @@ def build_queries(spark, sf, qv=None):
 def _collection_routes(spark, sf, qv):
     """b2/b3/b4/b8 through ``Collection.query`` — the round-5/6 verdict
     letter: the bench must measure the ENGINE DEFAULTS (zone-map counts,
-    the Arrow crossover gate, stats-pruned top-k, the prepared-plan
-    cache), not hand-built DataFrames, and document which route engaged
-    or refused on this layout (the driver's sf0.1 tables are one mixed
-    row group per table, so every zone route refuses by design — the
-    marker records that instead of hiding it).
+    stats-pruned top-k, the prepared-plan cache), not hand-built
+    DataFrames, and document which route engaged or refused on this
+    layout (the driver's sf0.1 tables are one mixed row group per table,
+    so every zone route refuses by design — the marker records that
+    instead of hiding it).
 
     Returns ``(fns, routes, busters)``. ``busters`` clear RESULT memos
     (count totals) between timed runs — a timed run must recompute its

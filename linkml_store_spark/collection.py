@@ -53,6 +53,18 @@ _tier_log = logging.getLogger("linkml_store_spark.localtier")
 
 OBJECT = Dict[str, Any]
 
+#: clustering advisor (mirror of the kNN advisory): the zone facet/count
+#: routes only pay off on layouts users actually produce — when the SAME
+#: low-cardinality column keeps being faceted/counted against an
+#: UNCLUSTERED store (every row group mixed, footers decide nothing), one
+#: ``compact(sort_cols=[col])`` rewrite turns those queries into
+#: driver-metadata answers (measured 7-15x vs the scan at 120M,
+#: SCALING.md). After ``CLUSTER_ADVICE_THRESHOLD`` such queries on one
+#: column of a store of at least ``CLUSTER_ADVICE_MIN_ROWS`` rows, warn
+#: once naming the compact call.
+CLUSTER_ADVICE_THRESHOLD = 3
+CLUSTER_ADVICE_MIN_ROWS = 1_000_000
+
 
 def _rows_to_dicts(rows: List[Row]) -> List[OBJECT]:
     return [r.asDict(recursive=True) for r in rows]
@@ -138,13 +150,12 @@ class Collection:
         #: in-memory). The one state kept across store versions, and only
         #: for durable indexes (:meth:`_new_store_version`)
         self._vector_indexes: Dict[str, tuple] = {}
-        #: True iff ``_df`` is exactly the scan of the persisted parquet
-        #: store (so parquet footer statistics describe the live data —
-        #: the gate for the footer routes and the local tier)
-        self._df_is_store_scan: bool = False
         #: footer stats, memos, prepared plans, the store image and the
         #: index plans of the current store version; replaced whole by
-        #: :meth:`_new_store_version`, the only place it is dropped
+        #: :meth:`_new_store_version`, the only place it is dropped. Its
+        #: ``stamp`` is set exactly when ``_df`` is the scan of the
+        #: persisted parquet store, so footer statistics describe the live
+        #: data — the gate for the footer routes and the local tier
         self._version = _StoreVersion()
         #: vector columns already size-probed/advised on an unindexed knn —
         #: the advisory (and its one count job) fires once per column
@@ -154,11 +165,6 @@ class Collection:
         #: further warnings (mirror of the kNN advisory)
         self._cluster_hits: Dict[str, int] = {}
         self._cluster_advised: set = set()
-        #: auto-compactions queued by the advisor DURING a query — run in
-        #: the query epilogue, never mid-flight (a compact between the
-        #: zone decision and the undecided-file scan would delete the very
-        #: files the in-flight plan names — round-8 advisor finding)
-        self._pending_compact_cols: list = []
 
     # ------------------------------------------------------------------ #
     # plumbing
@@ -242,7 +248,6 @@ class Collection:
         has a location) and start a new store version; ``appended`` is
         the batch when the write was a pure append."""
         self._df = df
-        self._df_is_store_scan = False  # in-memory plan until re-persisted
         if self.database.location:
             self.database._save_collection_df(self.alias, df)
         self._new_store_version(appended)
@@ -274,10 +279,7 @@ class Collection:
         if self.database.location:
             stamp = self._current_stamp()
             if stamp is not None:
-                self._df = self.spark.read.parquet(
-                    self.database._collection_path(self.alias)
-                )
-                self._df_is_store_scan = True
+                self._df = self._scan_store(stamp)
         self._version = _StoreVersion(stamp)
         if self._df is not None:
             self.database._register_view(self.alias)
@@ -316,6 +318,36 @@ class Collection:
                 )
                 continue
             self._vector_indexes[key] = (assigned, cents, nprobe, path)
+
+    def _scan_store(self, stamp) -> DataFrame:
+        """The scan of the persisted store whose files ``stamp`` lists.
+        Spark's writer records the DataFrame schema in every footer;
+        handing it to the reader spares the schema-inference job a bare
+        ``read.parquet`` runs, so a write's re-scan and a new handle's
+        first read start no Spark job. A store without that footer entry
+        is scanned with inference."""
+        import json
+        import os as _os
+
+        import pyarrow.parquet as pq
+
+        path = self.database._collection_path(self.alias)
+        reader = self.spark.read
+        try:
+            kv = pq.ParquetFile(_os.path.join(path, stamp[0][0])).metadata.metadata
+            spark_schema = (kv or {}).get(
+                b"org.apache.spark.sql.parquet.row.metadata"
+            )
+            if spark_schema is not None:
+                reader = reader.schema(
+                    T.StructType.fromJson(json.loads(spark_schema))
+                )
+        except (IndexError, OSError, ValueError, KeyError, TypeError) as e:
+            _tier_log.debug(
+                "collection %s: no writer schema in the store's footer, "
+                "inferring it (%s: %s)", self.alias, type(e).__name__, e,
+            )
+        return reader.parquet(path)
 
     # ------------------------------------------------------------------ #
     # identity
@@ -551,20 +583,6 @@ class Collection:
             raise ValueError(f"collection {self.alias!r} has no identifier attribute")
         return self.identifier_attribute
 
-    #: clustering advisor (round 7, mirror of the kNN advisory): the zone
-    #: facet/count routes only pay off on layouts users actually produce —
-    #: when the SAME low-cardinality column keeps being faceted/counted
-    #: against an UNCLUSTERED store (every row group mixed, footers decide
-    #: nothing), one ``compact(sort_cols=[col])`` rewrite turns those
-    #: queries into driver-metadata answers (measured 7-15x vs the scan at
-    #: 120M, SCALING.md). After ``cluster_advice_threshold`` such queries
-    #: on one column of a store >= ``cluster_advice_min_rows`` rows, warn
-    #: once naming the compact call — or run it (opt-in,
-    #: ``auto_cluster_on_hot_column = True``).
-    auto_cluster_on_hot_column: bool = False
-    cluster_advice_threshold: int = 3
-    cluster_advice_min_rows: int = 1_000_000
-
     def _note_unclustered_hit(self, col: str, allow_float: bool = False) -> None:
         """Record one zone-refused facet/count/range/top-k query on
         ``col``; advise at the threshold. ``allow_float``: the range-count
@@ -573,9 +591,7 @@ class Collection:
         dtype gate (the value zone map stays string/int). A column it
         cannot advise on returns quietly: advice must not break a
         query."""
-        if col in self._cluster_advised:
-            return
-        if not (self._df_is_store_scan and self.database.location):
+        if col in self._cluster_advised or self._version.stamp is None:
             return
         try:
             dt = self.df.schema[col].dataType
@@ -589,58 +605,29 @@ class Collection:
         if not isinstance(dt, ok_types):
             return
         self._cluster_hits[col] = self._cluster_hits.get(col, 0) + 1
-        if self._cluster_hits[col] < self.cluster_advice_threshold:
+        if self._cluster_hits[col] < CLUSTER_ADVICE_THRESHOLD:
             return
         self._cluster_advised.add(col)
         totals = self._footer_totals()
         n = None if totals is None else totals[0]
-        if n is None or n < self.cluster_advice_min_rows:
+        if n is None or n < CLUSTER_ADVICE_MIN_ROWS:
             return  # compaction overhead isn't worth it below this
-        if self.auto_cluster_on_hot_column:
-            # queue, don't compact inline: the caller may hold a zone
-            # decision naming files the rewrite would delete — the
-            # epilogue (_drain_pending_compactions) runs it after the
-            # in-flight query completes
-            self._pending_compact_cols.append(col)
-            return
         import warnings
 
         warnings.warn(
             f"{self._cluster_hits[col]} facet/count/range/top-k "
             f"queries on {col!r} scanned this {n}-row unclustered "
             f"store; one compact(sort_cols=[{col!r}]) rewrite makes "
-            f"them footer-metadata / row-group-skipping answers (or "
-            f"set auto_cluster_on_hot_column=True).",
+            f"them footer-metadata / row-group-skipping answers.",
             stacklevel=4,
         )
-
-    def _drain_pending_compactions(self) -> None:
-        """Run advisor-queued auto-compactions once no query is mid-flight.
-        Called from the query()/query_facets() epilogues. A compaction
-        that fails warns instead of failing the query that queued it."""
-        from py4j.protocol import Py4JJavaError
-        from pyspark.errors import PySparkException
-
-        while self._pending_compact_cols:
-            col = self._pending_compact_cols.pop(0)
-            try:
-                self.compact(sort_cols=[col])
-            except (OSError, ValueError, PySparkException, Py4JJavaError) as e:
-                import warnings
-
-                warnings.warn(
-                    f"collection {self.alias!r}: the automatic "
-                    f"compact(sort_cols=[{col!r}]) failed "
-                    f"({type(e).__name__}: {e})",
-                    stacklevel=3,
-                )
 
     def _value_predicate_count(self, col: str, values: list) -> Optional[int]:
         """The composed equality/$in count over the persisted store:
         footer-decided files from the value zone map, the undecided
-        remainder through the Arrow dictionary-code count above the
-        crossover gate, else the pushed-In JVM scan of just those files.
-        None when the store path is unavailable (caller runs the plan)."""
+        remainder through the pushed-In JVM scan of just those files (its
+        plan memoized for paging). None when the store path is
+        unavailable (caller runs the plan)."""
         import os as _os
 
         from linkml_store_spark.operators.topk import (
@@ -675,31 +662,17 @@ class Collection:
             "in_scan", col, tuple(values),
             "all" if undecided is None else tuple(undecided),
         )
-        plan = self._version.memos.get(key)
-        if plan is None:
-            # no prepared JVM count yet (every store under the Arrow
-            # gate has one after its first count): try the Arrow count
+
+        def count_plan():
             rest = (
                 self.df if undecided is None
                 else self.spark.read.parquet(*undecided)
             )
-            n = None
-            try:
-                from linkml_store_spark.operators.arrowagg import (
-                    parquet_predicate_count,
-                )
+            return rest.filter(F.col(col).isin(list(values))).agg(
+                F.count(F.lit(1)).alias("n")
+            )
 
-                n = parquet_predicate_count(
-                    self.spark, rest, col, values, footer_metas=metas,
-                )
-            except Exception:  # noqa: BLE001
-                n = None
-            if n is not None:
-                return meta + n
-            plan = self._version.memo(key, lambda: rest.filter(
-                F.col(col).isin(list(values))
-            ).agg(F.count(F.lit(1)).alias("n")))
-        return meta + plan.collect()[0][0]
+        return meta + self._version.memo(key, count_plan).collect()[0][0]
 
     def _current_stamp(self):
         """``topk.store_stamp`` of this collection's store directory."""
@@ -714,7 +687,7 @@ class Collection:
         memo and the store image serve the old rows, and the Spark scan
         names deleted files. Taken at each local-tier entry and in
         :meth:`size`: one directory walk with a stat per file."""
-        if not (self._df_is_store_scan and self.database.location):
+        if self._df is None or not self.database.location:
             return
         if self._current_stamp() == self._version.stamp:
             return
@@ -723,6 +696,19 @@ class Collection:
             "dropping its caches, image and index registrations", self.alias,
         )
         self._new_store_version()
+
+    def _scans_store(self) -> bool:
+        """True when ``_df`` is the scan of the persisted store's current
+        files (its version carries their stamp), so footer statistics
+        describe the live data. Resolves ``df`` on a new handle (its
+        first scan stamps the version), else syncs with the files."""
+        if not (self.database.location and self.exists()):
+            return False
+        if self._df is None:
+            self.df  # a new handle's first scan stamps its version
+        else:
+            self._sync_store_version()
+        return self._version.stamp is not None
 
     def _store_image(self, schema):
         """This store version's ``localexec.StoreImage`` (created empty;
@@ -737,8 +723,8 @@ class Collection:
     def _store_metas(self):
         """``[(file, pyarrow FileMetaData)]`` of the persisted store, read
         ONCE per store version. Footer metadata is planning-time state
-        (like row-group stats): the zone decisions, the Arrow and
-        local-tier gates, and the unfiltered total all consult the same
+        (like row-group stats): the zone decisions, the local-tier
+        gate and the unfiltered total all consult the same
         footers — without this memo one routed count was paying THREE
         redundant driver sweeps per execution (bench round 7). None when
         the store is missing or beyond the sweep cap."""
@@ -884,7 +870,6 @@ class Collection:
                 other = self.database.get_collection(
                     query.join["collection"]
                 )
-                other.df  # resolve the scan (sets _df_is_store_scan)
                 ogate = other._local_tier_gate("agg")
                 if ogate is None:
                     return None
@@ -1000,7 +985,7 @@ class Collection:
             return _df_cache[0]
 
         num_rows = None
-        if self._df_is_store_scan and self.database.location:
+        if self._version.stamp is not None:
             num_rows = self._footer_count(query.where_clause)
         if num_rows is None:
             num_rows = self._version.memo(
@@ -1030,9 +1015,6 @@ class Collection:
             facet_counts = query_facets(
                 self.df, query.where_clause, query.facet_slots
             )
-        # epilogue: advisor-queued auto-compactions run only now, after
-        # every plan this query built has executed
-        self._drain_pending_compactions()
         return QueryResult(num_rows=num_rows, rows=rows, facet_counts=facet_counts, query=query)
 
     def _footer_count(self, where) -> Optional[int]:
@@ -1047,7 +1029,7 @@ class Collection:
           groups footer min/max decide are answered from METADATA, only
           boundary files scan;
         * a single-column equality/``$in``: the value zone map, then the
-          Arrow or pushed-In count of the files it leaves undecided
+          pushed-In count of the files it leaves undecided
           (:meth:`_value_predicate_count`)."""
         if where in (None, {}, []):
             totals = self._footer_totals()
@@ -1103,8 +1085,7 @@ class Collection:
             query.sort_by
             and query.where_clause is None
             and 0 < limit <= 100_000
-            and self._df_is_store_scan
-            and self.database.location
+            and self._version.stamp is not None
         ):
             page = self._topk_prune(
                 page, query.sort_by[0], (query.offset or 0) + limit
@@ -1308,7 +1289,6 @@ class Collection:
             num_rows = len(rows)
         else:
             num_rows = fast_count(gdf)
-        self._drain_pending_compactions()
         return QueryResult(num_rows=num_rows, rows=rows, query=query)
 
     def _agg_plan(self, query: Query) -> DataFrame:
@@ -1404,11 +1384,7 @@ class Collection:
 
         if not lx.local_tier_enabled():
             return spark_route("SPARK_GRAFT_LOCAL_TIER=0")
-        self._sync_store_version()
-        metas = (
-            self._store_metas()
-            if self._df_is_store_scan and self.database.location else None
-        )
+        metas = self._store_metas() if self._scans_store() else None
         if not metas:
             return spark_route("no persisted parquet footers")
         kind = _query_class(query)
@@ -1468,8 +1444,7 @@ class Collection:
     def size(self) -> int:
         if not self.exists():
             return 0
-        if self._df_is_store_scan and self.database.location:
-            self._sync_store_version()
+        if self._scans_store():
             totals = self._footer_totals()
             if totals is not None:
                 return totals[0]
@@ -1507,7 +1482,6 @@ class Collection:
                     and 2 <= len(vals) <= 50
                 ):
                     self._note_unclustered_hit(col)
-        self._drain_pending_compactions()
         return res
 
     def _session_tz(self) -> Optional[str]:
@@ -1528,9 +1502,8 @@ class Collection:
         None — the shared gate of every local-tier entry point."""
         from linkml_store_spark.operators import localexec as lx
 
-        if not (self._df_is_store_scan and self.database.location):
+        if not self._scans_store():
             return None
-        self._sync_store_version()
         metas = self._store_metas()
         if not metas:
             return None
@@ -2495,8 +2468,8 @@ def _simple_value_clause(where, df):
     """(col, values) when ``where`` is a single-column equality / ``$eq`` /
     ``$in`` dict over a string/integer/boolean column with literals of the
     column's own type — the clauses whose count
-    ``operators/arrowagg.parquet_predicate_count`` can answer from Arrow
-    dictionary-code aggregation. Everything else (None = IS NULL, dotted
+    ``Collection._value_predicate_count`` composes from the value zone map
+    and a pushed-In count. Everything else (None = IS NULL, dotted
     paths, floats, cross-type literals Spark would cast, other operators)
     returns None and the caller takes the normal plan.
     """

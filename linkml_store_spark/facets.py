@@ -41,11 +41,6 @@ FacetKey = Union[str, Tuple[str, ...]]
 
 DEFAULT_FACET_LIMIT = 100
 
-#: Routing between the JVM hash aggregate and the Arrow dictionary-code
-#: facet path is static: an unfiltered single-column facet over a bare
-#: parquet scan of at least ``arrowagg.ARROW_AGG_MIN_ROWS`` footer rows
-#: takes the Arrow path; ``arrow_min_rows=`` overrides per call.
-
 
 def _footer_metas(df: DataFrame):
     """``[(file, pyarrow FileMetaData)]`` for a bare parquet scan's input
@@ -76,9 +71,10 @@ def _zone_facet(fdf: DataFrame, column: str, metas=None):
     caller to scan). None also when nothing was decided (the shortcut
     buys nothing over the plain scan routes). ``metas`` — preloaded
     footers from :func:`_footer_metas` shared across columns."""
-    from pyspark.sql import types as T
-
-    from linkml_store_spark.operators.topk import zone_facet_counts
+    from linkml_store_spark.operators.topk import (
+        _MAX_SWEEP_FILES,
+        zone_facet_counts,
+    )
 
     try:
         dt = fdf.schema[column].dataType
@@ -95,7 +91,7 @@ def _zone_facet(fdf: DataFrame, column: str, metas=None):
                 f[len("file:"):] if f.startswith("file:") else f
                 for f in fdf.inputFiles()
             ]
-        if not files or len(files) > 4096:
+        if not files or len(files) > _MAX_SWEEP_FILES:
             return None
         zc = zone_facet_counts(files, column, is_string, metas=metas)
         # nothing decided-positive (all files undecided, or an EMPTY store
@@ -213,7 +209,6 @@ def facet_df(
     column: FacetKey,
     facet_limit: int = DEFAULT_FACET_LIMIT,
     facet_min_count: int = 1,
-    arrow_min_rows: Optional[int] = None,
     footer_metas=None,
 ) -> DataFrame:
     """Build the lazy facet DataFrame for one column (or column tuple).
@@ -221,11 +216,10 @@ def facet_df(
     Output columns: the facet column(s) plus ``count`` (bigint), ordered by
     count desc then value(s) asc for determinism.
 
-    On an unfiltered single-column facet over a bare parquet scan past
-    the ``arrow_min_rows`` gate (default ``arrowagg.ARROW_AGG_MIN_ROWS``,
-    the static crossover), the counts come from the Arrow dictionary-code
-    aggregation (``operators/arrowagg.py``) — same result, ~7x the
-    per-core count rate of the JVM hash aggregate at the 100-TB end.
+    An unfiltered single-column facet over a bare parquet scan first asks
+    the footers (``operators/topk.zone_facet_counts``): on a clustered
+    store the counts are driver metadata plus a scan of any undecided
+    files. Every other facet is one JVM hash aggregate.
     """
     cols = [column] if isinstance(column, str) else list(column)
     w = where
@@ -239,31 +233,13 @@ def facet_df(
         and not _is_array_col(fdf, column)
         and _bare_parquet_scan(fdf)
     ):
-        from linkml_store_spark.operators.arrowagg import (
-            ARROW_AGG_MIN_ROWS,
-            parquet_value_counts,
-        )
-
-        def _finish_single(adf: DataFrame) -> DataFrame:
-            return _finish_facet_single(adf, column, facet_limit, facet_min_count)
-
-        # route 0 (round 6): whole-table footer facet — on a clustered
-        # store every row group collapses to min == max and the counts
-        # are pure driver metadata (operators/topk.zone_facet_counts);
-        # any undecided group falls through to the scan routes below
         zc = _zone_facet(fdf, column, metas=footer_metas)
         if zc is not None:
             adf = _zone_facet_frame(fdf, column, zc)
             if adf is not None:
-                return _finish_single(adf)
-
-        gate = ARROW_AGG_MIN_ROWS if arrow_min_rows is None else arrow_min_rows
-        adf = parquet_value_counts(
-            fdf.sparkSession, fdf, column, min_rows=gate,
-            footer_metas=footer_metas,
-        )
-        if adf is not None:
-            return _finish_single(adf.withColumnRenamed("value", column))
+                return _finish_facet_single(
+                    adf, column, facet_limit, facet_min_count
+                )
     sel = []
     out_names = []
     for c in cols:

@@ -125,7 +125,7 @@ LOCAL_TIER_CAPS = {
 LOCAL_TIER_MAX_BYTES = 1 << 30
 
 #: prefix of the pseudo-column names that ``arrowagg.ab_winner`` reads as
-#: a local-tier shape class (a real column can never collide)
+#: a local-tier shape class; any other column name reports the Spark route
 LOCAL_TIER_COLUMN = "__local_tier__"
 
 

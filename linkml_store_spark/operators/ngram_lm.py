@@ -136,6 +136,9 @@ def lm_broadcast_gate(spark=None) -> int:
     32 workers x 0.7 GB (round-10 advice)."""
     import os
 
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+
     workers = os.cpu_count() or 8
     per_worker = None
     if spark is not None:
@@ -146,8 +149,15 @@ def lm_broadcast_gate(spark=None) -> int:
             )
             if not conf.get("spark.master", "local").startswith("local"):
                 per_worker = _executor_budget(conf.get, workers)
-        except Exception:  # noqa: BLE001 — sizing is advisory
-            pass
+        except (ValueError, PySparkException, Py4JError) as e:
+            import warnings
+
+            warnings.warn(
+                f"could not read the executor confs for the LM broadcast "
+                f"gate ({type(e).__name__}: {e}); sizing it from the "
+                f"driver's memory",
+                stacklevel=2,
+            )
     if per_worker is None:
         avail = None
         try:

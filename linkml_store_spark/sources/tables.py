@@ -16,6 +16,8 @@ corrupt microseconds.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -96,8 +98,15 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     ):
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass
+        except (PySparkException, Py4JJavaError) as e:
+            import warnings
+
+            warnings.warn(
+                f"could not set {k}={v} on this Spark session "
+                f"({type(e).__name__}: {e}); parquet timestamps may not "
+                f"load as they do under get_spark()",
+                stacklevel=3,
+            )
     _ensure_workers_can_import(spark)
 
 

@@ -4,11 +4,14 @@ DSIR rounded ranking)."""
 
 import pytest
 
+from linkml_store_spark import collection
 from linkml_store_spark.client import Client
 from linkml_store_spark.query import Query
 
 
-def test_zone_partial_not_undecided_on_decided_out_files(spark, tmp_path):
+def test_zone_partial_not_undecided_on_decided_out_files(
+    spark, tmp_path, monkeypatch
+):
     """A narrow range fully inside ONE file of a well-clustered store
     decides every other file OUT (meta_count 0, one file scanned): that
     is a zone SUCCESS — route_info must say 'partial', and the advisor
@@ -21,7 +24,7 @@ def test_zone_partial_not_undecided_on_decided_out_files(spark, tmp_path):
     df = spark.createDataFrame([(i, i) for i in range(8000)], ["id", "qty"])
     # clustered layout: 4 files with disjoint qty ranges
     coll.insert(df.repartitionByRange(4, "qty").sortWithinPartitions("qty"))
-    coll.cluster_advice_min_rows = 1000
+    monkeypatch.setattr(collection, "CLUSTER_ADVICE_MIN_ROWS", 1000)
     from linkml_store_spark.operators.topk import stats_filtered_count
 
     path = db._collection_path("t")

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkml_store_spark import collection
 from linkml_store_spark.client import Client
 from linkml_store_spark.query import Query
 
@@ -501,7 +502,7 @@ def test_cluster_advisor_warns_once(spark, tmp_path, monkeypatch):
     coll = dbp.create_collection("t", identifier_attribute="id")
     rows = [(i, ["OPEN", "CLOSED", "HELD"][(i * 7) % 3]) for i in range(5000)]
     coll.insert(spark.createDataFrame(rows, ["id", "status"]))
-    coll.cluster_advice_min_rows = 1000  # test-sized store
+    monkeypatch.setattr(collection, "CLUSTER_ADVICE_MIN_ROWS", 1000)  # test-sized store
 
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
@@ -515,39 +516,6 @@ def test_cluster_advisor_warns_once(spark, tmp_path, monkeypatch):
         warnings.simplefilter("always")
         coll.query_facets(facet_columns=["status"])
     assert not [x for x in w2 if "compact" in str(x.message)]
-
-
-def test_cluster_advisor_auto_then_footer_answers(spark, tmp_path, monkeypatch):
-    """Opt-in auto path closes the 100 TB maintenance loop hands-free:
-    hot-column facets trigger the compact(sort_cols=...) rewrite, after
-    which the SAME facet (and the equality count) answer from footers."""
-    import warnings
-
-    from linkml_store_spark.query import Query
-
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")  # Spark-path advisor test
-    client = Client(spark)
-    dbp = client.attach_database(f"spark://{tmp_path}/advauto")
-    coll = dbp.create_collection("t", identifier_attribute="id")
-    rows = [(i, ["OPEN", "CLOSED", "HELD"][(i * 7) % 3]) for i in range(6000)]
-    coll.insert(spark.createDataFrame(rows, ["id", "status"]))
-    coll.cluster_advice_min_rows = 1000
-    coll.auto_cluster_on_hot_column = True
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        for _ in range(3):
-            facets = coll.query_facets(facet_columns=["status"])
-    assert not [x for x in w if "compact" in str(x.message)]  # acted, not warned
-    assert facets["status"] == [("CLOSED", 2000), ("HELD", 2000), ("OPEN", 2000)]
-
-    # the rewrite happened: the zone facet now answers and the count memo
-    # fills from footer metadata through Collection.query
-    facets2 = coll.query_facets(facet_columns=["status"])
-    assert facets2["status"] == facets["status"]
-    res = coll.query(Query(where_clause={"status": "OPEN"}, limit=1))
-    assert res.num_rows == 2000
-    assert coll._version.memos[("vcount", "status", ("OPEN",))] == 2000
 
 
 def test_cluster_advisor_range_and_topk_shapes(spark, tmp_path, monkeypatch):
@@ -570,7 +538,7 @@ def test_cluster_advisor_range_and_topk_shapes(spark, tmp_path, monkeypatch):
     rows = [(i, float(i % 1000), i % 500) for i in range(8000)]
     df = spark.createDataFrame(rows, ["id", "price", "qty"]).repartition(4)
     coll.insert(df)
-    coll.cluster_advice_min_rows = 1000
+    monkeypatch.setattr(collection, "CLUSTER_ADVICE_MIN_ROWS", 1000)
 
     # range shape: three DIFFERENT straddling ranges on one column
     with warnings.catch_warnings(record=True) as w:
@@ -605,62 +573,6 @@ def test_cluster_advisor_range_and_topk_shapes(spark, tmp_path, monkeypatch):
     assert not [x for x in w3 if "compact(" in str(x.message)]
 
 
-def test_cluster_advisor_count_path_defers_compact_to_epilogue(
-    spark, tmp_path, monkeypatch
-):
-    """auto_cluster_on_hot_column through the COUNT path: the advisor can
-    fire MID-query (between the zone decision and the undecided-file
-    scan), where an inline compact() would delete the files the in-flight
-    plan names. The rewrite must run in the query EPILOGUE: the
-    triggering query completes on the old layout (correct count, no
-    degraded recount), and compact() is observed strictly AFTER the
-    count finished (round-8 advisor finding)."""
-    from linkml_store_spark.query import Query
-
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")  # Spark-path advisor test
-    client = Client(spark)
-    dbp = client.attach_database(f"spark://{tmp_path}/advdefer")
-    coll = dbp.create_collection("t", identifier_attribute="id")
-    rows = [(i, ["A", "B"][i % 2]) for i in range(4000)]
-    coll.insert(spark.createDataFrame(rows, ["id", "v"]))
-    coll.cluster_advice_min_rows = 1000
-    coll.auto_cluster_on_hot_column = True
-
-    events = []
-    orig_compact = coll.compact
-    orig_vpc = coll._value_predicate_count
-
-    def spy_compact(**kw):
-        events.append(("compact", kw.get("sort_cols")))
-        return orig_compact(**kw)
-
-    def spy_vpc(*a, **k):
-        r = orig_vpc(*a, **k)
-        events.append(("count_done", r))
-        return r
-
-    coll.compact = spy_compact
-    coll._value_predicate_count = spy_vpc
-    try:
-        for _ in range(3):
-            coll._version.memos.pop(("vcount", "v", ("A",)), None)
-            res = coll.query(Query(where_clause={"v": "A"}, limit=0))
-            assert res.num_rows == 2000
-    finally:
-        coll.compact = orig_compact
-        coll._value_predicate_count = orig_vpc
-    compact_idx = [i for i, e in enumerate(events) if e[0] == "compact"]
-    count_idx = [i for i, e in enumerate(events) if e[0] == "count_done"]
-    assert compact_idx == [max(count_idx) + 1], events  # strictly after
-    assert events[compact_idx[0]][1] == ["v"]
-    assert coll._pending_compact_cols == []  # drained
-    # every observed count came from the pre-compaction layout, intact
-    assert all(e[1] == 2000 for e in events if e[0] == "count_done")
-    # and the rewrite took effect for later queries
-    coll._version.memos.pop(("vcount", "v", ("A",)), None)
-    assert coll.query(Query(where_clause={"v": "A"}, limit=0)).num_rows == 2000
-
-
 def test_cluster_advisor_count_path_hits(spark, tmp_path, monkeypatch):
     """Equality/$in counts through Collection.query on an unclustered
     store also feed the advisor (zone decided nothing -> hit per query)."""
@@ -674,7 +586,7 @@ def test_cluster_advisor_count_path_hits(spark, tmp_path, monkeypatch):
     coll = dbp.create_collection("t", identifier_attribute="id")
     rows = [(i, ["A", "B"][i % 2]) for i in range(4000)]
     coll.insert(spark.createDataFrame(rows, ["id", "v"]))
-    coll.cluster_advice_min_rows = 1000
+    monkeypatch.setattr(collection, "CLUSTER_ADVICE_MIN_ROWS", 1000)
 
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
@@ -684,3 +596,26 @@ def test_cluster_advisor_count_path_hits(spark, tmp_path, monkeypatch):
             assert coll.query(Query(where_clause={"v": "A"}, limit=0)).num_rows == 2000
     msgs = [str(x.message) for x in w if "compact" in str(x.message)]
     assert len(msgs) == 1 and "sort_cols=['v']" in msgs[0]
+
+
+def test_collection_count_composes_value_zone_map_and_in_scan(
+    spark, tmp_path, monkeypatch, sf_dir
+):
+    """Collection.query's pre-pagination total for a simple equality/$in
+    where-clause: the value zone map triages the store's files and the
+    undecided remainder takes the pushed-In JVM count; the total is
+    memoized for paging."""
+    # pins the Spark-path count routes: the local tier would intercept
+    # footer-small stores before them
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
+    client = Client(spark)
+    db = client.attach_database(f"spark://{tmp_path}/db")
+    coll = db.create_collection("orders", identifier_attribute="o_orderkey")
+    coll.insert(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    vals = ["1-URGENT", "2-HIGH"]
+    want = coll.df.filter(F.col("o_orderpriority").isin(vals)).count()
+
+    res = coll.query(Query(where_clause={"o_orderpriority": {"$in": vals}}, limit=5))
+    assert res.num_rows == want
+    assert coll._version.memos.get(("vcount", "o_orderpriority", tuple(vals))) == want
+    assert [k for k in coll._version.memos if k[0] == "in_scan"]

@@ -7,7 +7,7 @@ import pathlib
 
 import linkml_store_spark
 
-MAX_SILENT = 2
+MAX_SILENT = 0
 
 
 def _silent_handlers():

@@ -735,16 +735,14 @@ def test_explain_reports_route_taken(route_store, monkeypatch, setting):
         assert "over the gate (300 footer rows, page cap 299" in out
 
 
-def test_ab_winner_reports_arrow_aggregate_gate(spark, sf_dir):
-    """For a real column ``ab_winner`` reports the Arrow dictionary-code
-    aggregate's static ARROW_AGG_MIN_ROWS gate."""
-    from linkml_store_spark.operators import arrowagg as A
+def test_ab_winner_reports_jvm_for_a_real_column(spark, sf_dir):
+    """Only the local tier's pseudo-columns name a driver-local route: a
+    real column reports the Spark route whatever the store's size."""
+    from linkml_store_spark.operators.arrowagg import ab_winner
 
     files = spark.read.parquet(f"{sf_dir}/lineitem.parquet").inputFiles()
-    assert A.ab_winner(spark, files, "l_returnflag") == "jvm"
-    assert A.ab_winner(
-        spark, files, "l_returnflag", total_rows=A.ARROW_AGG_MIN_ROWS
-    ) == "arrow"
+    assert ab_winner(spark, files, "l_returnflag") == "jvm"
+    assert ab_winner(spark, files, "l_returnflag", total_rows=10**12) == "jvm"
 
 
 @pytest.mark.parametrize("setting", ["under_cap", "kill_switch"])

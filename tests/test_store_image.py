@@ -199,6 +199,34 @@ def test_write_through_another_handle_is_seen(spark, tmp_path):
     assert reads(c1) == fresh
 
 
+@pytest.mark.parametrize("first", ["find", "size"])
+def test_first_read_on_a_new_handle_runs_no_spark_job(spark, tmp_path, first):
+    """A new Database over an existing location serves its first read
+    from the footers and the store image, as the writing handle would."""
+    loc = str(tmp_path / "reopen")
+    Database(spark, location=loc).create_collection(
+        "t", identifier_attribute="id"
+    ).insert(spark.createDataFrame(_rows(100), SCHEMA))
+    c = Database(spark, location=loc).get_collection("t")
+    calls = {
+        "find": lambda: c.find({"n": {"$lt": 4}}, limit=5),
+        "size": c.size,
+    }
+    sc = spark.sparkContext
+    group = f"reopen-{first}-{id(c)}"
+    sc.setJobGroup(group, "first read on a new handle")
+    try:
+        got = calls[first]()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    if first == "find":
+        assert got.num_rows == sum(1 for r in _rows(100) if r[3] < 4)
+        assert len(got.rows) == 5
+    else:
+        assert got == 100
+
+
 def test_threads_share_the_budget(tmp_path, monkeypatch):
     """Threads reading three resident images under a budget that fits one
     get exact answers, and the resident bytes end inside the budget."""
@@ -317,36 +345,6 @@ def test_durable_ivf_routes_knn_after_compact(spark, tmp_path, monkeypatch):
     got = _knn_ids(c)
     assert probes == [4], "knn did not route through the IVF index"
     assert got == _knn_ids(c, exact=True)  # every partition probed: exact
-
-
-def test_spark_path_search_after_auto_compaction(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
-    c = _docs(spark, str(tmp_path / "a"), 300)
-    c.cluster_advice_min_rows = 100
-    c.auto_cluster_on_hot_column = True
-    before = c.search("c2", limit=5)
-    compactions = []
-    real = c.compact
-    c.compact = lambda **kw: compactions.append(kw) or real(**kw)
-    for _ in range(3):
-        c.query_facets(facet_columns=["cat"])
-    assert compactions == [{"sort_cols": ["cat"]}]
-    after = c.search("c2", limit=5)
-    assert len(after.rows) == 5 and _scores(after) == _scores(before)
-
-
-def test_a_failed_auto_compaction_warns(spark, tmp_path):
-    c = _docs(spark, str(tmp_path / "f"), 20)
-
-    def fail(**_kw):
-        raise OSError("no space left on device")
-
-    c.compact = fail
-    c._pending_compact_cols.append("cat")
-    with pytest.warns(UserWarning, match=r"'docs'.*compact\(sort_cols=\['cat'\]\)"
-                      r".*OSError: no space left"):
-        c._drain_pending_compactions()
-    assert c._pending_compact_cols == []
 
 
 def test_spark_join_plan_follows_the_right_side(spark, tmp_path, monkeypatch):

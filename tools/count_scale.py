@@ -5,10 +5,7 @@ VERDICT r5 item 5: verify the plans (done — $in compiles to ONE pushed
 either close these shapes to <=2.5x of same-run DuckDB at 200x or name
 the per-core floor. This harness measures, per replica size:
 
-- filter_count / in_count through the JVM plan (the engine default below
-  the crossover) and through the Arrow dictionary-code predicate count
-  (``operators/arrowagg.parquet_predicate_count`` — the engine default
-  above ~300M rows),
+- filter_count / in_count through the JVM plan,
 - join_agg, plus its no-join decomposition (same scan + same aggregate
   shape without the dim join) to separate scan cost from join cost,
 - same-run DuckDB for every shape.
@@ -56,7 +53,6 @@ def duckdb_side(d: str) -> dict:
 def spark_side(spark, d: str) -> dict:
     from pyspark.sql import functions as F
 
-    from linkml_store_spark.operators.arrowagg import parquet_predicate_count
     from linkml_store_spark.where import apply_where
 
     li = spark.read.parquet(f"{d}/lineitem.parquet")
@@ -79,19 +75,6 @@ def spark_side(spark, d: str) -> dict:
     }
     for name, df in plans.items():
         out[name] = time_best(df.collect, before=bust)
-    # the engine's above-crossover default for these counts
-    out["filter_count_arrow"] = time_best(
-        lambda: parquet_predicate_count(
-            spark, li, "l_returnflag", ["R"], min_rows=0
-        ),
-        before=bust,
-    )
-    out["in_count_arrow"] = time_best(
-        lambda: parquet_predicate_count(
-            spark, o, "o_orderpriority", ["1-URGENT", "2-HIGH"], min_rows=0
-        ),
-        before=bust,
-    )
     return out
 
 
@@ -115,11 +98,8 @@ def main() -> None:
         k = duckdb_side(d)
         print(f"\n== {size} (lineitem rows={rows}) ==")
         for q in ["filter_count", "in_count", "join_agg", "agg_nojoin"]:
-            extra = ""
-            if f"{q}_arrow" in s:
-                extra = f"  arrow={s[q + '_arrow']:.3f}s"
             print(
-                f"{q:14s} spark={s[q]:.3f}s{extra}  duckdb={k[q]:.3f}s  "
+                f"{q:14s} spark={s[q]:.3f}s  duckdb={k[q]:.3f}s  "
                 f"ratio={s[q] / k[q]:.1f}x"
             )
 
