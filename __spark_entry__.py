@@ -1977,7 +1977,7 @@ def q_topk_string_pruned(spark, sf):
     key derived from lineitem, written clustered so the footer min-mass
     bound actually prunes, then ``topk_stats_pruned`` — truncation-safe
     for strings because the bound derives from stored mins, which
-    truncation only lowers (operators/topk._row_group_stats_string)."""
+    truncation only lowers (operators/topk.topk_decision)."""
     import hashlib
     import os
 

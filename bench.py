@@ -176,10 +176,9 @@ def _collection_routes(spark, sf, qv):
     stats persist, exactly the Dataset-reuse the raw queries get."""
     from linkml_store_spark.database import Database
     from linkml_store_spark.operators.topk import (
-        _file_value_zone_decision,
-        _file_zone_decision,
-        _row_group_stats,
-        topk_threshold,
+        range_decision,
+        topk_decision,
+        value_decision,
     )
     from linkml_store_spark.query import Query
 
@@ -284,14 +283,16 @@ def _collection_routes(spark, sf, qv):
     }
     raw_twins = {name: d.collect for name, d in raw_plans.items()}
 
+    colls = {"lineitem": li, "orders": od}
+
     def value_marker(alias, col, values):
         try:
-            d = _file_value_zone_decision(db._collection_path(alias), col, values)
+            d = value_decision(colls[alias]._zones(col), values)
         except Exception:  # noqa: BLE001
             d = None
         if d is None:
             return "zone_refused(structural) -> pushed-In scan"
-        meta, und = d
+        meta, und = d.answer, d.undecided
         if not und:
             return f"zone_decided_full(meta_count={meta}, zero jobs)"
         if meta:
@@ -303,12 +304,12 @@ def _collection_routes(spark, sf, qv):
 
     def range_marker(alias, col, lo, hi):
         try:
-            d = _file_zone_decision(db._collection_path(alias), col, lo, hi, True, False)
+            d = range_decision(colls[alias]._zones(col), lo, hi, True, False)
         except Exception:  # noqa: BLE001
             d = None
         if d is None:
             return "zone_refused(structural) -> pushed range scan"
-        meta, und = d
+        meta, und = d.answer, d.undecided
         if not und:
             return f"zone_decided_full(meta_count={meta}, zero jobs)"
         return (
@@ -318,19 +319,18 @@ def _collection_routes(spark, sf, qv):
 
     def topk_marker(alias, col, k):
         try:
-            st = _row_group_stats(db._collection_path(alias), col)
-            tau = topk_threshold(st, k, True) if st else None
+            d = topk_decision(colls[alias]._zones(col), k, True)
         except Exception:  # noqa: BLE001
-            st, tau = None, None
-        if tau is None:
+            d = None
+        if d is None:
             return "topk_prune_refused -> plain TakeOrdered"
-        skipped = sum(1 for _mn, mx, _r in st if mx < tau)
+        tau, skipped = d.answer, d.units - len(d.undecided)
         if skipped == 0:
             return (
-                f"topk_tau_pushed(tau={tau:.4g}, 0/{len(st)} groups skippable"
+                f"topk_tau_pushed(tau={tau:.4g}, 0/{d.units} groups skippable"
                 " -> single-row-group layout, filter is a no-op)"
             )
-        return f"topk_tau_pushed(tau={tau:.4g}, {skipped}/{len(st)} groups skipped)"
+        return f"topk_tau_pushed(tau={tau:.4g}, {skipped}/{d.units} groups skipped)"
 
     routes = {
         "b1": "Collection.query: find+count page",

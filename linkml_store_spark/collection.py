@@ -30,7 +30,11 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from linkml_store_spark.facets import DEFAULT_FACET_LIMIT, query_facets
+from linkml_store_spark.facets import (
+    DEFAULT_FACET_LIMIT,
+    facet_zone_decision,
+    query_facets,
+)
 from linkml_store_spark.query import Query, QueryResult
 from linkml_store_spark.schema_utils import induce_schema
 from linkml_store_spark.where import (
@@ -583,14 +587,19 @@ class Collection:
             raise ValueError(f"collection {self.alias!r} has no identifier attribute")
         return self.identifier_attribute
 
-    def _note_unclustered_hit(self, col: str, allow_float: bool = False) -> None:
-        """Record one zone-refused facet/count/range/top-k query on
-        ``col``; advise at the threshold. ``allow_float``: the range-count
-        and top-k shapes prune on numeric footer stats including
+    def _note_unclustered_hit(
+        self, col: str, decision, allow_float: bool = False
+    ) -> None:
+        """Record one facet/count/range/top-k query on ``col`` whose
+        footer ``decision`` (``operators/topk.Decision``) decided nothing;
+        advise at the threshold. ``allow_float``: the range-count and
+        top-k shapes prune on numeric footer stats including
         float/double/date/timestamp sort keys, so those callers widen the
         dtype gate (the value zone map stays string/int). A column it
         cannot advise on returns quietly: advice must not break a
         query."""
+        if decision is None or not decision.decided_nothing:
+            return
         if col in self._cluster_advised or self._version.stamp is None:
             return
         try:
@@ -630,49 +639,17 @@ class Collection:
         unavailable (caller runs the plan)."""
         import os as _os
 
-        from linkml_store_spark.operators.topk import (
-            _file_value_zone_decision,
-        )
+        from linkml_store_spark.operators import topk
 
-        path = self.database._collection_path(self.alias)
-        if not _os.path.exists(path):
+        if not _os.path.exists(self.database._collection_path(self.alias)):
             return None
-        metas = self._store_metas()  # one footer pass, memoized
-        decision = None
-        try:
-            decision = _file_value_zone_decision(
-                path, col, values, metas=metas
-            )
-        except Exception:  # noqa: BLE001 — stats are an optimization only
-            decision = None
-        if decision is None:
-            meta, undecided = 0, None  # None = scan the whole store
-        else:
-            meta, undecided = decision
-            if not undecided:
-                return meta  # pure driver metadata — zero jobs
-            if not meta and len(undecided) == len(metas or ()):
-                # footers decided NOTHING (every file undecided): an
-                # unclustered layout — the clustering advisor counts
-                # repeats of this shape. meta == 0 with a smaller scan
-                # set means files were decided OUT — a zone success, not
-                # advisor material (round-9 advisor finding)
-                self._note_unclustered_hit(col)
-        key = (
-            "in_scan", col, tuple(values),
-            "all" if undecided is None else tuple(undecided),
+        decision = topk.value_decision(self._zones(col), values)
+        self._note_unclustered_hit(col, decision)
+        return topk.zone_count(
+            self.spark, decision, lambda: self.df,
+            lambda: F.col(col).isin(list(values)),
+            self._version.memo, ("in_scan", col, tuple(values)),
         )
-
-        def count_plan():
-            rest = (
-                self.df if undecided is None
-                else self.spark.read.parquet(*undecided)
-            )
-            return rest.filter(F.col(col).isin(list(values))).agg(
-                F.count(F.lit(1)).alias("n")
-            )
-
-        return meta + self._version.memo(key, count_plan).collect()[0][0]
 
     def _current_stamp(self):
         """``topk.store_stamp`` of this collection's store directory."""
@@ -710,6 +687,15 @@ class Collection:
             self._sync_store_version()
         return self._version.stamp is not None
 
+    def _read_df(self) -> DataFrame:
+        """``df`` for a read that no local-tier entry syncs: starts a new
+        store version first when another handle changed the store's
+        files, so the scan names no deleted file. Not done in ``df``
+        itself: a memo build must not start a new version, and the local
+        tier would pay a directory walk per access."""
+        self._scans_store()
+        return self.df
+
     def _store_image(self, schema):
         """This store version's ``localexec.StoreImage`` (created empty;
         columns load on use). Call only after :meth:`_local_tier_gate`
@@ -740,6 +726,17 @@ class Collection:
             return self._version.memo(("metas",), read)
         except Exception:  # noqa: BLE001 — stats are an optimization only
             return None
+
+    def _zones(self, col: str):
+        """``operators/topk.column_zones`` of ``col`` over the store's
+        footers, built once per store version: every footer decision on
+        the column (range and ``$in`` counts, facets, top-k thresholds)
+        reads these records. None when the footers refuse."""
+        from linkml_store_spark.operators.topk import column_zones
+
+        return self._version.memo(
+            ("zones", col), lambda: column_zones(self._store_metas(), col)
+        )
 
     def _footer_totals(self) -> Optional[Tuple[int, int]]:
         """``localexec.footer_totals`` of the store's footers — (rows,
@@ -974,7 +971,11 @@ class Collection:
             return QueryResult(num_rows=0, rows=[], query=query)
         if query.group_by:
             return self._query_spark_agg(query)
-        self.df  # a first scan starts the version the memos below fill
+        if query.include_facet_counts:
+            # no local-tier entry ran for a facet query: sync here
+            self._read_df()
+        else:
+            self.df  # a first scan starts the version the memos below fill
         # the filtered plan is built LAZILY: a footer-answered count with
         # a prepared page plan (or limit=0) never needs it at all
         _df_cache = [None]
@@ -1013,7 +1014,8 @@ class Collection:
         facet_counts = None
         if query.include_facet_counts:
             facet_counts = query_facets(
-                self.df, query.where_clause, query.facet_slots
+                self.df, query.where_clause, query.facet_slots,
+                zones=self._zones if self._version.stamp is not None else None,
             )
         return QueryResult(num_rows=num_rows, rows=rows, facet_counts=facet_counts, query=query)
 
@@ -1034,14 +1036,16 @@ class Collection:
         if where in (None, {}, []):
             totals = self._footer_totals()
             return None if totals is None else totals[0]
+        from pyarrow import ArrowException
+
         rng = _simple_range_clause(where, self.df)
         if rng is not None:
             try:
                 n = self._version.memo(
                     ("count",) + rng, lambda: self._range_count(rng)
                 )
-            except Exception:  # noqa: BLE001 — optimization only
-                n = None
+            except (ArrowException, OSError, TypeError, ValueError):
+                n = None  # a footer read or stats comparison failed
             if n is not None:
                 return n
         vc = _simple_value_clause(where, self.df)
@@ -1052,31 +1056,27 @@ class Collection:
                 ("vcount", vc[0], tuple(vc[1])),
                 lambda: self._value_predicate_count(*vc),
             )
-        except Exception:  # noqa: BLE001 — optimization only
-            return None
+        except (ArrowException, OSError, TypeError, ValueError):
+            return None  # a footer read or stats comparison failed
 
     def _range_count(self, rng) -> Optional[int]:
-        """``topk.stats_filtered_count`` of a :func:`_simple_range_clause`
-        over the store; None when the store path is missing."""
+        """The zone-map count (``operators/topk.range_decision``) of a
+        :func:`_simple_range_clause` over the store: footer-decided files
+        from metadata, the rest through a pushed range scan of just those
+        files (its plan memoized). None when the store path is missing."""
         import os as _os
 
-        from linkml_store_spark.operators.topk import stats_filtered_count
+        from linkml_store_spark.operators import topk
 
-        path = self.database._collection_path(self.alias)
-        if not _os.path.exists(path):
+        if not _os.path.exists(self.database._collection_path(self.alias)):
             return None
-        rinfo: Dict[str, Any] = {}
-        n = stats_filtered_count(
-            self.spark, path, *rng,
-            plan_memo=self._version.memo,
-            metas=self._store_metas(),
-            route_info=rinfo,
+        decision = topk.range_decision(self._zones(rng[0]), *rng[1:])
+        self._note_unclustered_hit(rng[0], decision, allow_float=True)
+        return topk.zone_count(
+            self.spark, decision, lambda: self.df,
+            lambda: topk.range_predicate(*rng),
+            self._version.memo, ("range_scan",) + rng,
         )
-        if rinfo.get("zone") == "undecided_all":
-            # footers exist but decided nothing: the unclustered-layout
-            # signature the clustering advisor counts (range shape)
-            self._note_unclustered_hit(rng[0], allow_float=True)
-        return n
 
     def _page_plan(self, query: Query, limit: int, page: DataFrame) -> DataFrame:
         """The sort/offset/limit/projection plan of a find over ``page``
@@ -1119,63 +1119,35 @@ class Collection:
 
     def _topk_prune(self, page: DataFrame, spec, k: int) -> DataFrame:
         """Statistics-pruned top-k as the DEFAULT sort+limit plan: the
-        provably-safe footer threshold for the PRIMARY sort key pushed
-        into the scan of an unfiltered sort (operators/topk.py — row
-        groups whose max falls below τ are never read). Pruning on the
-        first key alone is safe for multi-key sorts too: every
-        lexicographic top-k row has a first-key value >= the k-th largest
-        first-key value >= τ (secondary keys only reorder within
-        first-key ties). Null ordering stays correct: _sort_col pins
-        NULLS LAST both directions, and topk_threshold refuses to prune
+        provably-safe footer threshold for the PRIMARY sort key
+        (``operators/topk.topk_decision``) pushed into the scan of an
+        unfiltered sort — row groups whose max falls below τ are never
+        read. Pruning on the first key alone is safe for multi-key sorts
+        too: every lexicographic top-k row has a first-key value >= the
+        k-th largest first-key value >= τ (secondary keys only reorder
+        within first-key ties). Null ordering stays correct: _sort_col
+        pins NULLS LAST both directions, and the threshold is refused
         when the non-null mass <= k (the only case nulls can reach the
         page). ``page`` unchanged whenever the stats cannot decide."""
         from pyarrow import ArrowException
 
-        from linkml_store_spark.operators.topk import topk_threshold
+        from linkml_store_spark.operators.topk import topk_decision
 
         try:
             # _sort_parse handles tuple specs too — the prune path must
             # see the same plan for every accepted spelling
             base, descending = _sort_parse(spec)
-            kind, st = self._version.memo(
-                ("sort_stats", base), lambda: self._sort_stats(base)
-            )
-            tau = topk_threshold(
-                st, k, descending, min_mass_only=(kind == "str")
-            )
-            if tau is None:
+            decision = topk_decision(self._zones(base), k, descending)
+            if decision is None:
                 return page
+            tau = decision.answer
             page = page.filter(
                 F.col(base) >= tau if descending else F.col(base) <= tau
             )
         except (ArrowException, OSError, TypeError, ValueError):
             return page  # footer stats are an optimization only
-        if kind == "num" and len(st) > 1 and not any(
-            ((mx < tau) if descending else (mn > tau)) for mn, mx, _r in st
-        ):
-            # tau pushed but NO row group is skippable: every group's
-            # range straddles the top-k threshold — the unclustered-layout
-            # signature (top-k shape); one compact(sort_cols=[base]) makes
-            # the prune skip all but the boundary groups
-            self._note_unclustered_hit(base, allow_float=True)
+        self._note_unclustered_hit(base, decision, allow_float=True)
         return page
-
-    def _sort_stats(self, col: str):
-        """(kind, row-group stats) of sort key ``col`` from the store's
-        footers: ``"num"`` exact min/max, or ``"str"`` for a string key,
-        whose stats only the truncation-safe min-mass bound may use
-        (operators/topk.py round 6)."""
-        from linkml_store_spark.operators.topk import (
-            _row_group_stats,
-            _row_group_stats_string,
-        )
-
-        path = self.database._collection_path(self.alias)
-        metas = self._store_metas()
-        st = _row_group_stats(path, col, metas=metas)
-        if st is not None:
-            return "num", st
-        return "str", _row_group_stats_string(path, col, metas=metas)
 
     @staticmethod
     def _agg_exprs(aggs) -> List[F.Column]:
@@ -1416,7 +1388,7 @@ class Collection:
         """Streaming iteration without pagination re-scans: Spark's
         toLocalIterator fetches partition-at-a-time
         (reference offset-paging collection.py:506-529)."""
-        df = apply_where(self.df, where)
+        df = apply_where(self._read_df(), where)
         for row in df.toLocalIterator(prefetchPartitions=True):
             yield row.asDict(recursive=True)
 
@@ -1432,13 +1404,13 @@ class Collection:
         return res.rows[0] if res.rows else None
 
     def peek(self, limit: int = 10) -> List[OBJECT]:
-        return _rows_to_dicts(self.df.limit(limit).collect())
+        return _rows_to_dicts(self._read_df().limit(limit).collect())
 
     def rows(self) -> List[OBJECT]:
-        return _rows_to_dicts(self.df.collect())
+        return _rows_to_dicts(self._read_df().collect())
 
     def rows_iter(self) -> Iterator[OBJECT]:
-        for row in self.df.toLocalIterator():
+        for row in self._read_df().toLocalIterator():
             yield row.asDict(recursive=True)
 
     def size(self) -> int:
@@ -1465,23 +1437,20 @@ class Collection:
         )
         if local is not None:
             return local
-        info: Dict[str, Any] = {}
+        zones = self._zones if self._version.stamp is not None else None
         res = query_facets(
             self.df, where, facet_columns, facet_limit, facet_min_count,
-            route_info=info,
+            zones=zones,
         )
-        # clustering advisor: an unfiltered low-cardinality facet the zone
-        # route could NOT answer from footers is exactly the query one
+        # clustering advisor: an unfiltered low-cardinality facet the
+        # footers decided nothing of is exactly the query one
         # compact(sort_cols=[col]) turns into driver metadata
-        if where in (None, {}, []):
-            decided = info.get("zone_decided", set())
+        if zones is not None and where in (None, {}, []):
             for col, vals in res.items():
-                if (
-                    isinstance(col, str)
-                    and col not in decided
-                    and 2 <= len(vals) <= 50
-                ):
-                    self._note_unclustered_hit(col)
+                if isinstance(col, str) and 2 <= len(vals) <= 50:
+                    self._note_unclustered_hit(
+                        col, facet_zone_decision(self.df, col, zones)
+                    )
         return res
 
     def _session_tz(self) -> Optional[str]:
@@ -1589,7 +1558,8 @@ class Collection:
         from linkml_store_spark.operators.groupby import group_by_objects
 
         gdf = group_by_objects(
-            apply_where(self.df, where), group_by_fields, inlined_field, agg_map
+            apply_where(self._read_df(), where), group_by_fields,
+            inlined_field, agg_map,
         )
         return _rows_to_dicts(gdf.collect())
 
@@ -1597,7 +1567,8 @@ class Collection:
         """Column statistics (reference cli.py:656-671 pandas describe)."""
         from linkml_store_spark.operators.describe import describe
 
-        return describe(self.df if columns is None else self.df.select(*columns))
+        df = self._read_df()
+        return describe(df if columns is None else df.select(*columns))
 
     # ------------------------------------------------------------------ #
     # search / index (§2.8)
@@ -1620,7 +1591,8 @@ class Collection:
         collection internal__index__{alias}__{name}, indexer.py:86-87),
         planned once per store version."""
         indexer = self._indexers[index_name]
-        df = self.df  # a first scan starts the version the plan belongs to
+        # synced first: the plan belongs to the store's current version
+        df = self._read_df()
         return self._version.memo(
             ("index_plan", indexer), lambda: indexer.index_dataframe(df)
         )
@@ -1750,6 +1722,9 @@ class Collection:
         from linkml_store_spark.index.search import knn as _knn
         from linkml_store_spark.operators.similarity import ivf_knn
 
+        # synced first: a write through another handle drops the IVF
+        # registrations of the files it replaced
+        df = self._read_df()
         use_index = not exact and metric != "manhattan"
         idx = self._vector_indexes.get(vector_col) if use_index else None
         if idx is None and use_index:
@@ -1768,7 +1743,7 @@ class Collection:
             )
             return out.drop(vector_col) if not keep_vector else out
         return _knn(
-            self.df,
+            df,
             query_vector,
             vector_col=vector_col,
             k=k,
@@ -1885,6 +1860,9 @@ class Collection:
             except Exception:  # noqa: BLE001 — incl. Unsupported: Spark path
                 ranked = None
         if ranked is None:
+            # the plan first: it syncs with the store's files, dropping an
+            # IVF registration over files another handle replaced
+            plan = self.index_objects(index_name)
             ivf = None if where else self._vector_indexes.get(f"__index__@{index_name}")
             scored_pool_fn = None
             if ivf is not None:
@@ -1898,7 +1876,7 @@ class Collection:
                     assigned, centroids, qv, INDEX_COLUMN, k=pool, nprobe=nprobe
                 )
             ranked = vector_search(
-                self.index_objects(index_name),
+                plan,
                 qv,
                 where=where,
                 limit=limit,

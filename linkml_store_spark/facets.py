@@ -42,71 +42,53 @@ FacetKey = Union[str, Tuple[str, ...]]
 DEFAULT_FACET_LIMIT = 100
 
 
-def _footer_metas(df: DataFrame):
-    """``[(file, pyarrow FileMetaData)]`` for a bare parquet scan's input
-    files, or None (empty store / beyond the sweep cap / any read error).
-    Read ONCE per query and passed to every per-column zone sweep so a
-    multi-facet call does one footer pass, not one per column."""
+def _scan_zones(df: DataFrame):
+    """``col -> operators/topk.column_zones`` over the footers of a bare
+    parquet scan's input files, read ONCE here and shared by every column
+    of the call; every column gets None when the files are beyond the
+    sweep cap or a footer read fails."""
+    from pyarrow import ArrowException
+
+    from linkml_store_spark.operators.topk import _footer_metas, column_zones
+
     try:
-        import pyarrow.parquet as pq
-
-        from linkml_store_spark.operators.topk import _MAX_SWEEP_FILES
-
-        files = [
+        metas = _footer_metas([
             f[len("file:"):] if f.startswith("file:") else f
             for f in df.inputFiles()
-        ]
-        if not files or len(files) > _MAX_SWEEP_FILES:
-            return None
-        return [(fp, pq.ParquetFile(fp).metadata) for fp in files]
-    except Exception:  # noqa: BLE001 — stats are an optimization only
-        return None
+        ])
+    except (ArrowException, OSError):
+        metas = None  # stats are an optimization only
+    return lambda column: column_zones(metas, column)
 
 
-def _zone_facet(fdf: DataFrame, column: str, metas=None):
-    """``([(value, count)], undecided_files)`` from footers for a
-    string/int column of a bare parquet scan, or None
-    (operators/topk.zone_facet_counts — per-file degradation: decided
-    files answer from metadata, undecided ones are returned for the
-    caller to scan). None also when nothing was decided (the shortcut
-    buys nothing over the plain scan routes). ``metas`` — preloaded
-    footers from :func:`_footer_metas` shared across columns."""
-    from linkml_store_spark.operators.topk import (
-        _MAX_SWEEP_FILES,
-        zone_facet_counts,
-    )
+def facet_zone_decision(fdf: DataFrame, column: str, zones):
+    """``operators/topk.facet_decision`` for ``column`` of a bare parquet
+    scan over the zone records ``zones(column)``, or None when the
+    column is neither string nor integral or the footers refuse."""
+    from pyarrow import ArrowException
+
+    from linkml_store_spark.operators.topk import facet_decision
 
     try:
         dt = fdf.schema[column].dataType
-        if isinstance(dt, T.StringType):
-            is_string = True
-        elif isinstance(dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):
-            is_string = False
-        else:
-            return None
-        if metas is not None:
-            files = [fp for fp, _md in metas]
-        else:
-            files = [
-                f[len("file:"):] if f.startswith("file:") else f
-                for f in fdf.inputFiles()
-            ]
-        if not files or len(files) > _MAX_SWEEP_FILES:
-            return None
-        zc = zone_facet_counts(files, column, is_string, metas=metas)
-        # nothing decided-positive (all files undecided, or an EMPTY store
-        # with zero row groups): the shortcut buys nothing — fall through
-        if zc is None or not zc[0] or len(zc[1]) == len(files):
-            return None
-        return zc
-    except Exception:  # noqa: BLE001 — stats are an optimization only
+    except KeyError:
+        return None  # not a top-level column: the scan routes report it
+    if isinstance(dt, T.StringType):
+        is_string = True
+    elif isinstance(dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):
+        is_string = False
+    else:
         return None
+    try:
+        return facet_decision(zones(column), is_string)
+    except (ArrowException, ValueError):
+        return None  # stats are an optimization only
 
 
-def _zone_facet_frame(fdf: DataFrame, column: str, zc) -> Optional[DataFrame]:
-    """Materialize a ``_zone_facet``/``zone_facet_counts`` decision as a
-    ``(column, count)`` DataFrame, or None when the SQL inlining refuses
-    (caller falls through to the plain scan routes).
+def _zone_facet_frame(fdf: DataFrame, column: str, decision) -> Optional[DataFrame]:
+    """Materialize a :func:`facet_zone_decision` as a ``(column, count)``
+    DataFrame, or None when the SQL inlining refuses (caller falls
+    through to the plain scan routes).
 
     Decided values are inlined as a VALUES list -> a pure-JVM
     LocalRelation. NOT createDataFrame: that parallelizes even 3 rows
@@ -123,7 +105,9 @@ def _zone_facet_frame(fdf: DataFrame, column: str, zc) -> Optional[DataFrame]:
     instead of raising — the zone route is an optimization, never a new
     failure mode the scan path didn't have.
     """
-    rows, undecided = zc
+    from pyspark.errors import PySparkException
+
+    rows, undecided = decision.answer, decision.undecided
     spark = fdf.sparkSession
     vt = fdf.schema[column].dataType.simpleString()
     try:
@@ -159,7 +143,7 @@ def _zone_facet_frame(fdf: DataFrame, column: str, zc) -> Optional[DataFrame]:
                 F.sum("count").alias("count")
             )
         return adf
-    except Exception:  # noqa: BLE001 — zone route is an optimization only
+    except PySparkException:  # zone route is an optimization only
         return None
 
 
@@ -180,9 +164,11 @@ def _bare_parquet_scan(df: DataFrame) -> bool:
     """True when ``df``'s analyzed plan is a single relation node (no
     Filter/Project/Join above the scan) — the only shape where raw-file
     value counts equal the DataFrame's group-by."""
+    from py4j.protocol import Py4JError
+
     try:
         s = df._jdf.queryExecution().analyzed().toString()
-    except Exception:  # noqa: BLE001 — non-JVM-backed test doubles
+    except (AttributeError, Py4JError):  # non-JVM-backed test doubles
         return False
     lines = [ln for ln in s.strip().splitlines() if ln.strip()]
     return len(lines) == 1 and lines[0].startswith("Relation")
@@ -209,7 +195,7 @@ def facet_df(
     column: FacetKey,
     facet_limit: int = DEFAULT_FACET_LIMIT,
     facet_min_count: int = 1,
-    footer_metas=None,
+    zones=None,
 ) -> DataFrame:
     """Build the lazy facet DataFrame for one column (or column tuple).
 
@@ -217,9 +203,11 @@ def facet_df(
     count desc then value(s) asc for determinism.
 
     An unfiltered single-column facet over a bare parquet scan first asks
-    the footers (``operators/topk.zone_facet_counts``): on a clustered
-    store the counts are driver metadata plus a scan of any undecided
-    files. Every other facet is one JVM hash aggregate.
+    the footers (:func:`facet_zone_decision`): on a clustered store the
+    counts are driver metadata plus a scan of any undecided files. Every
+    other facet is one JVM hash aggregate. ``zones`` — ``col ->
+    operators/topk.column_zones`` of ``df``'s files, when the caller holds
+    them; else the footers are read here.
     """
     cols = [column] if isinstance(column, str) else list(column)
     w = where
@@ -233,9 +221,9 @@ def facet_df(
         and not _is_array_col(fdf, column)
         and _bare_parquet_scan(fdf)
     ):
-        zc = _zone_facet(fdf, column, metas=footer_metas)
-        if zc is not None:
-            adf = _zone_facet_frame(fdf, column, zc)
+        d = facet_zone_decision(fdf, column, zones or _scan_zones(fdf))
+        if d is not None and d.answer:
+            adf = _zone_facet_frame(fdf, column, d)
             if adf is not None:
                 return _finish_facet_single(
                     adf, column, facet_limit, facet_min_count
@@ -358,7 +346,7 @@ def query_facets(
     facet_limit: int = DEFAULT_FACET_LIMIT,
     facet_min_count: int = 1,
     one_pass: Optional[bool] = None,
-    route_info: Optional[dict] = None,
+    zones=None,
 ) -> Dict[FacetKey, List[Tuple]]:
     """Compute facet counts for each requested column.
 
@@ -370,23 +358,18 @@ def query_facets(
     ``one_pass=None`` auto-selects the grouping-sets single-scan path when
     the semantics allow (scalar columns, no exclusion interplay).
 
-    ``route_info`` — pass a dict to receive ``{"zone_decided": set}``: the
-    columns route 0 answered (fully or partially) from parquet footers.
-    Callers (Collection's clustering advisor) use its complement to spot
-    hot facet columns that a ``compact(sort_cols=...)`` rewrite would turn
-    into metadata-only answers.
+    ``zones`` — ``col -> operators/topk.column_zones`` of ``df``'s files
+    (a Collection passes its store version's records); without it the
+    footers are read once per call.
     """
-    if route_info is not None:
-        route_info.setdefault("zone_decided", set())
     if facet_columns is None:
         facet_columns = list(df.columns)
     results: Dict[FacetKey, List[Tuple]] = {}
     remaining = list(facet_columns)
-    metas = None  # preloaded footers, shared with every facet_df below
     # Route 0 (round 6): unfiltered facets over a bare parquet scan try the
     # footer zone facet per column FIRST — on a clustered store the cluster
     # column needs no scan at all (driver metadata, see facets.facet_df /
-    # operators/topk.zone_facet_counts), and only the undecided columns
+    # operators/topk.facet_decision), and only the undecided columns
     # proceed to the one-pass GROUPING SETS scan. Tie order matches the
     # scan paths exactly: count desc, then value asc with NULL first.
     if where in (None, {}, []) and _bare_parquet_scan(df):
@@ -394,26 +377,23 @@ def query_facets(
         # (ADVICE r6: per-column re-reads were O(columns x files) serial
         # driver IO; the partial branch below also reuses the decision
         # instead of re-sweeping inside facet_df)
-        metas = _footer_metas(df)
+        zones = zones or _scan_zones(df)
         still = []
         for column in remaining:
-            zc = None
+            d = None
             if (
-                metas is not None
-                and isinstance(column, str)
+                isinstance(column, str)
                 and "." not in column
                 and not _is_array_col(df, column)
             ):
-                zc = _zone_facet(df, column, metas=metas)
-            if zc is not None and route_info is not None:
-                route_info["zone_decided"].add(column)
-            if zc is not None and not zc[1] and zc[0]:
+                d = facet_zone_decision(df, column, zones)
+            if d is not None and d.answer and not d.undecided:
                 # fully footer-decided: answer in the driver, no job at all.
                 # NULL sorts first among count ties (Spark asc default);
                 # the third key is only ever compared within one column's
                 # same-type non-null values (the None row differs on key 2)
                 rows = sorted(
-                    zc[0],
+                    d.answer,
                     key=lambda t: (
                         -t[1], t[0] is not None,
                         t[0] if t[0] is not None else 0,
@@ -424,15 +404,15 @@ def query_facets(
                 if facet_limit and facet_limit > 0:
                     rows = rows[:facet_limit]
                 results[column] = [(v, int(c)) for v, c in rows]
-            elif zc is not None:
+            elif d is not None and d.answer:
                 # partially decided (range-boundary files): merge the
                 # ALREADY-COMPUTED metadata counts with a scan of just the
                 # undecided files — no second footer sweep
-                adf = _zone_facet_frame(df, column, zc)
+                adf = _zone_facet_frame(df, column, d)
                 if adf is None:  # SQL inlining refused: plain scan facet
                     gdf = facet_df(
                         df, where, column, facet_limit, facet_min_count,
-                        footer_metas=metas,
+                        zones=zones,
                     )
                 else:
                     gdf = _finish_facet_single(
@@ -455,8 +435,7 @@ def query_facets(
         return results
     for column in remaining:
         gdf = facet_df(
-            df, where, column, facet_limit, facet_min_count,
-            footer_metas=metas,
+            df, where, column, facet_limit, facet_min_count, zones=zones,
         )
         rows = gdf.collect()
         if isinstance(column, str):

@@ -179,36 +179,12 @@ def fingerprint_overlap(
     Plan shape (round 10): per-doc fp uniqueness happens at ARRAY level
     inside the stateless projection (:func:`_doc_distinct_fps`) — the
     round-9 per-(id, fp) dedup EXCHANGE over the whole sketch is gone.
-    With ``max_freq`` set, a 1/32 document-sample pre-pass first
-    estimates the prune's reach; when it predicts the cap prunes
-    EVERYTHING (the all-boilerplate degenerate case), one exact
-    map-side-combined doc-frequency aggregate verifies and the empty
-    result returns after ~one sketch-projection cost, never exchanging
-    or materializing the sketch. Otherwise the sketch repartitions once
-    on fp (a plain hash exchange the hot aggregate and the anti-join
-    both reuse), the pruned sketch checkpoints (the round-8/9
-    single-evaluation + empty-short-circuit discipline), and the
-    self-join runs as before."""
+    With ``max_freq`` set, the sketch repartitions once on fp (a plain
+    hash exchange the hot aggregate and the anti-join both reuse), the
+    pruned sketch checkpoints (the round-8/9 single-evaluation +
+    empty-short-circuit discipline), and the self-join runs as before."""
     fps = _doc_distinct_fps(df, text_col, id_col, k, w, gram_hash)
     if max_freq is not None:
-        if _predict_total_prune(
-            df, text_col, id_col, k, w, gram_hash, max_freq
-        ):
-            # exact verification — ONE projection + a map-combined
-            # aggregate onto the fp domain (tiny shuffle): survivors are
-            # fps whose EXACT doc frequency clears the cap
-            survivors = (
-                fps.groupBy("fp")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") <= max_freq)
-            )
-            if survivors.isEmpty():
-                id_t = df.schema[id_col].dataType.simpleString()
-                return df.sparkSession.createDataFrame(
-                    [], f"left_id {id_t}, right_id {id_t}, shared_fps long"
-                )
-            # prediction wrong (rare by construction): fall through to
-            # the normal chain — one wasted aggregate, nothing else
         # one explicit hash exchange on fp: the hot aggregate needs no
         # further shuffle and the anti-join probes co-partitioned data,
         # so the projection runs ONCE (ReuseExchange) like round 9's
@@ -248,59 +224,3 @@ def fingerprint_overlap(
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )
-
-
-#: degenerate pre-pass tuning: document sample rate (1/32 — one core's
-#: share of the projection), the minimum corpus size worth probing
-#: (below it the exact chain is already cheap), and the predicted
-#: cold-ROW fraction under which the corpus counts as degenerate.
-#: The fraction is over rows, not fingerprints: in an all-boilerplate
-#: corpus a percent of fps still land in the sample only once (their
-#: estimate then reads "cold" by noise), but they carry almost no rows —
-#: a per-fp zero-tolerance rule would never fire. Estimates only GATE
-#: which exact plan runs; pruning itself always uses exact counts.
-PREPASS_FRACTION = 1.0 / 32.0
-PREPASS_MIN_SAMPLE_ROWS = 50_000
-PREPASS_COLD_ROW_FRACTION = 0.01
-
-
-def _predict_total_prune(
-    df, text_col, id_col, k, w, gram_hash, max_freq
-) -> bool:
-    """True when a seeded document sample predicts the ``max_freq`` cap
-    prunes (essentially) the ENTIRE sketch: the sample rows belonging to
-    fingerprints whose estimated doc frequency (``sample_count /
-    fraction``) clears the cap make up under
-    :data:`PREPASS_COLD_ROW_FRACTION` of all sampled rows. A fingerprint
-    the sample misses entirely counts AGAINST degeneracy (unseen fps are
-    rare fps — they would survive the cap), so the prediction errs
-    toward the normal chain. Costs ~1/32 of the sketch projection plus a
-    sample-sized aggregate (the "<= 5% normal-case overhead" budget);
-    tiny samples never predict degenerate."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_FP_PREPASS", "1") == "0":
-        return False
-    sample = df.sample(fraction=PREPASS_FRACTION, seed=7)
-    est = (
-        _doc_distinct_fps(sample, text_col, id_col, k, w, gram_hash)
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .agg(
-            F.sum("__c").alias("n_rows"),
-            F.sum(
-                F.when(
-                    F.col("__c") / F.lit(PREPASS_FRACTION) <= max_freq,
-                    F.col("__c"),
-                ).otherwise(0)
-            ).alias("cold_rows"),
-        )
-        .first()
-    )
-    if (
-        est is None
-        or est["n_rows"] is None
-        or est["n_rows"] < PREPASS_MIN_SAMPLE_ROWS
-    ):
-        return False
-    return est["cold_rows"] / est["n_rows"] <= PREPASS_COLD_ROW_FRACTION

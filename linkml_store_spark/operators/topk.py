@@ -1,42 +1,71 @@
-"""Statistics-pruned top-k over parquet: turn footer min/max into a
-provably-safe scan filter.
+"""Footer zone maps over parquet: one reader turns a column's row-group
+statistics into zone records, and short decisions over those records
+answer range counts, ``$in`` counts, facet counts and top-k thresholds
+from metadata, leaving only the files they cannot decide to a scan.
 
-``ORDER BY col DESC LIMIT k`` on a 100 TB table is a full scan in stock
-Spark (TakeOrderedAndProject heaps still READ everything). But parquet
-footers already carry per-row-group min/max for every column, and a safe
-threshold derived from them turns the top-k into a pushed-down range scan:
+**The reader.** :func:`column_zones` walks every file and row group of
+one column once and keeps, per row group, a :class:`Zone`: the stored
+(min, max), the non-null and total row counts, and the trust flags that
+say which decisions may use them:
 
-  * **one-per-group bound** — the k-th largest row-group MAX is <= the
-    k-th largest value overall (each of those k groups contributes at
-    least one value, its max, that is >= the threshold);
-  * **min-mass bound** — sort groups by MIN descending and accumulate row
-    counts until >= k: every one of those >= k rows is >= that group's
-    min, so the k-th largest value is >= it too.
+  * ``exact`` — an exact-typed numeric chunk (INT32/INT64/FLOAT/DOUBLE/
+    BOOLEAN) with min/max and a null count, and no NaN in min/max (see
+    :func:`column_zones` on NaN);
+  * ``ascii`` — a string chunk whose stored min/max are pure ASCII, with a
+    null count. Writers may truncate string stats, but only outward, and
+    legacy writers ordered them by signed bytes, which agrees with code-
+    point order only on ASCII;
+  * ``all_null`` — every row is null (min/max may be absent then);
+  * a file without the column refuses the whole store (``None``): a scan
+    of a subset of files might not resolve the column that the
+    whole-store scan resolves.
 
-τ = the larger of the two bounds; ``col >= τ`` then reaches the scan as a
-PushedFilter, so row groups whose max < τ are never read and surviving
-pages are range-filtered before the heap. On time-ordered, clustered, or
-Z-ordered data (operators/scale.write_clustered / write_zordered) the scan
-collapses to ~k rows' worth of groups; on adversarially uniform data the
-filter still discards almost every row before the sort. Falls back to the
-plain TakeOrdered plan whenever statistics are missing.
+A Collection keeps the records per store version (``("zones", col)`` in
+``Collection._version``), so each column's footers are walked once per
+version whatever decisions read them.
 
-The footer read is planning-time work on the DRIVER: one metadata fetch
-per file (no data IO) — the same footer listing Spark itself performs.
-Numeric, date, and timestamp columns use both bounds; STRING columns
-(round 6) use only the min-mass bound, which parquet stat truncation can
-only loosen (see ``_row_group_stats_string``), guarded to ASCII stats.
+**The decisions** return a :class:`Decision` — the metadata answer, the
+units (files; row groups for top-k) left for the scan, and the unit
+count — or None when the footers refuse:
 
-Reference parity: the reference's find+sort surface
-(src/linkml_store/api/collection.py sort/limit) has no statistics
-pruning — north-star scale extension.
+  * :func:`range_decision` — ``lo <= col <= hi`` counts, exact numeric
+    stats only;
+  * :func:`value_decision` — ``col IN values`` counts over strings and
+    ints, sound under truncation;
+  * :func:`facet_decision` — per-value counts of collapsed row groups;
+  * :func:`topk_decision` — the provably-safe top-k threshold τ:
+
+      - **one-per-group bound** — the k-th largest row-group MAX is <= the
+        k-th largest value overall (each of those k groups contributes at
+        least one value, its max, that is >= the threshold);
+      - **min-mass bound** — sort groups by MIN descending and accumulate
+        row counts until >= k: every one of those >= k rows is >= that
+        group's min, so the k-th largest value is >= it too.
+
+    τ is the larger of the two; string keys use only the min-mass bound,
+    which truncation can only loosen. ``col >= τ`` then reaches the scan as
+    a PushedFilter, so row groups whose max < τ are never read.
+
+:attr:`Decision.decided_nothing` — footers were read but no unit was
+decided — is the unclustered-layout signature the Collection's
+clustering advisor counts.
+
+The public entry points over a store path (:func:`topk_stats_pruned`,
+:func:`stats_filtered_count`, :func:`zone_value_count`) read the footers
+on each call. Footer reads are planning-time work on the DRIVER: one
+metadata fetch per file (no data IO), refused above
+:data:`_MAX_SWEEP_FILES`.
+
+Reference parity: the reference's find+sort and count surfaces
+(src/linkml_store/api/collection.py) have no statistics pruning —
+north-star scale extension.
 """
 
 from __future__ import annotations
 
-from typing import Callable, List, Optional, Sequence
+from typing import Any, Callable, List, NamedTuple, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: parquet physical types whose min/max statistics are exact (strings /
@@ -49,38 +78,38 @@ _SAFE_PHYSICAL = {"INT32", "INT64", "FLOAT", "DOUBLE", "BOOLEAN"}
 _MAX_SWEEP_FILES = 4096
 
 
-def _parquet_files(path: str, max_files: int = None):
-    """Sorted .parquet files under ``path`` (or [path] itself), or None
-    when empty / beyond ``max_files`` (default _MAX_SWEEP_FILES, read at
-    call time — a metadata shortcut must never become the bottleneck)."""
+def _parquet_files(paths, max_files: int = None):
+    """The .parquet files under ``paths`` (one path or a list; a
+    directory contributes its files sorted, a file itself), or None when
+    there are none or more than ``max_files`` (default _MAX_SWEEP_FILES,
+    read at call time — a metadata shortcut must never become the
+    bottleneck)."""
     import os
 
     if max_files is None:
         max_files = _MAX_SWEEP_FILES
-
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(dp, f)
-            for dp, _dn, fns in os.walk(path)
-            for f in fns
-            if f.endswith(".parquet")
-        )
-    else:
-        files = [path]
+    files = []
+    for path in [paths] if isinstance(paths, str) else paths:
+        if os.path.isdir(path):
+            files.extend(sorted(
+                os.path.join(dp, f)
+                for dp, _dn, fns in os.walk(path)
+                for f in fns
+                if f.endswith(".parquet")
+            ))
+        else:
+            files.append(path)
     if not files or len(files) > max_files:
         return None
     return files
 
 
-def _footer_metas(path: str, metas=None):
-    """``metas`` when given, else ``[(file, FileMetaData)]`` of every file
-    under ``path`` (one footer read each), or None when
-    :func:`_parquet_files` refuses the store."""
-    if metas is not None:
-        return metas
+def _footer_metas(paths):
+    """``[(file, FileMetaData)]`` of every file under ``paths`` (one
+    footer read each), or None when :func:`_parquet_files` refuses."""
     import pyarrow.parquet as pq
 
-    files = _parquet_files(path)
+    files = _parquet_files(paths)
     if files is None:
         return None
     return [(fp, pq.ParquetFile(fp).metadata) for fp in files]
@@ -117,101 +146,283 @@ def store_stamp(path: str):
         return None  # missing, or swapped out mid-walk
 
 
-def _stat_nan(st) -> bool:
-    """True when a float column's footer min/max contains NaN — written by
-    parquet-mr/Spark (which fold NaN into the comparator) — so the column
-    provably CONTAINS NaN and every stats decision must be refused. Spark
-    ranks NaN above every value (measured: ``NaN >= lo`` is TRUE, ``NaN
-    <= hi`` is FALSE, ORDER BY DESC puts NaN first), while footer min/max
-    carry no NaN count — so neither a zone count (NaN passes lower bounds
-    but fails upper bounds) nor a top-k threshold (NaN poisons the
-    ordering math) can be decided from statistics. Spec-compliant writers
-    (arrow, polars) OMIT NaN from min/max instead, making hidden NaN
-    undetectable from footers — the parquet format's own limitation,
-    under which even the PLAIN Spark scan is layout-dependent (its pushed
-    filter row-group-skips hidden-NaN groups; DuckDB's zone maps measured
-    dropping the same row). Spark-written stores — what Database
-    persistence produces — are therefore fully guarded; foreign
-    NaN-bearing floats are documented as out of stats-decision scope."""
-    mn, mx = st.min, st.max
-    return (isinstance(mn, float) and mn != mn) or (
-        isinstance(mx, float) and mx != mx
+# ------------------------------------------------------------------ #
+# the reader: one column's footers -> zone records
+# ------------------------------------------------------------------ #
+class Zone(NamedTuple):
+    """One row group's footer statistics for one column. ``lo``/``hi``
+    are the stored min/max (None when absent or of a type no decision
+    reads); ``nonnull`` is ``rows`` minus the null count (None without
+    one). The flags are described in the module docstring."""
+
+    physical: str
+    lo: Any
+    hi: Any
+    nonnull: Optional[int]
+    rows: int
+    exact: bool
+    ascii: bool
+    all_null: bool
+
+
+def _zone(chunk, rows: int) -> Zone:
+    """The Zone of one column chunk of a row group of ``rows`` rows."""
+    st = chunk.statistics
+    physical = chunk.physical_type
+    has_nulls = st is not None and st.has_null_count
+    has_range = (
+        st is not None and st.has_min_max
+        and (physical in _SAFE_PHYSICAL or physical == "BYTE_ARRAY")
+    )
+    lo, hi = (st.min, st.max) if has_range else (None, None)
+    nan = any(isinstance(v, float) and v != v for v in (lo, hi))
+    return Zone(
+        physical=physical,
+        lo=lo,
+        hi=hi,
+        nonnull=rows - st.null_count if has_nulls else None,
+        rows=rows,
+        exact=has_range and has_nulls and physical in _SAFE_PHYSICAL
+        and not nan,
+        ascii=has_range and has_nulls and physical == "BYTE_ARRAY"
+        and isinstance(lo, str) and isinstance(hi, str)
+        and lo.isascii() and hi.isascii(),
+        all_null=has_nulls and st.null_count == rows,
     )
 
 
-def _row_group_stats(path: str, col: str, metas=None):
-    """[(min, max, non_null_rows)] across every row group of every file
-    under ``path`` (or of the preloaded ``metas``); None when any group
-    lacks exact stats for ``col``.
-    Row mass is NON-NULL rows (parquet min/max ignore nulls, so the
-    min-mass bound must too — and a table whose non-null mass <= k must
-    not be pruned at all: the plain plan's nulls-last tail would differ).
-    NaN-bearing float stats refuse (see _stat_nan).
-    """
-    metas = _footer_metas(path, metas)
+def column_zones(metas, col: str):
+    """``[(file, [Zone per row group])]`` of column ``col`` over the
+    footers ``metas`` (``[(file, FileMetaData)]``), or None when
+    ``metas`` is None or any file lacks the column.
+
+    NaN: parquet-mr/Spark writers fold NaN into a float column's footer
+    min/max, so a NaN there proves the column CONTAINS NaN, and the zone
+    is not ``exact``. Spark ranks NaN above every value (``NaN >= lo`` is
+    TRUE, ``NaN <= hi`` is FALSE, ORDER BY DESC puts NaN first) while
+    footers carry no NaN count, so neither a count nor a top-k threshold
+    can be decided from such stats. Spec-compliant writers (arrow,
+    polars) OMIT NaN from min/max instead, making hidden NaN undetectable
+    from footers — the parquet format's own limitation, under which even
+    the plain Spark scan is layout-dependent (its pushed filter skips
+    hidden-NaN row groups; DuckDB's zone maps measured dropping the same
+    row). Spark-written stores — what Database persistence produces —
+    are therefore fully guarded; foreign NaN-bearing floats are out of
+    scope."""
     if metas is None:
         return None
     out = []
-    for _fp, md in metas:
+    for fp, md in metas:
+        zones = []
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
-            c = _column_chunk(rg, col)
-            if c is None:
+            chunk = _column_chunk(rg, col)
+            if chunk is None:
                 return None
-            st = c.statistics
-            if (
-                st is None
-                or not st.has_min_max
-                or not st.has_null_count
-                or c.physical_type not in _SAFE_PHYSICAL
-                or _stat_nan(st)
-            ):
-                return None
-            out.append((st.min, st.max, rg.num_rows - st.null_count))
+            zones.append(_zone(chunk, rg.num_rows))
+        out.append((fp, zones))
     return out
 
 
-def _row_group_stats_string(path: str, col: str, metas=None):
-    """[(min, max, non_null_rows)] for a STRING (BYTE_ARRAY) column;
-    None unless every row group carries str, pure-ASCII min/max stats.
+# ------------------------------------------------------------------ #
+# decisions over zone records
+# ------------------------------------------------------------------ #
+class Decision(NamedTuple):
+    """What the footers decided: ``answer`` (a metadata row count, facet
+    ``[(value, count)]`` rows, or the top-k threshold τ) and the
+    ``undecided`` units left for the scan (files; ``(file, row group)``
+    for top-k) out of ``units``."""
 
-    Parquet string statistics may be TRUNCATED — but only outward
-    (stored_min is a prefix <= true_min, stored_max a bumped prefix >=
-    true_max), so they are safe exactly for the MIN-MASS top-k bound
-    (``topk_threshold(min_mass_only=True)``): the threshold derives from
-    stored mins (DESC) / stored maxes (ASC), which only ever loosen it.
-    The one-per-group bound would TIGHTEN under truncation and must not
-    be used. ASCII guard: legacy writers ordered string stats by SIGNED
-    bytes; pure-ASCII stored bounds prove the group holds no high-byte
-    values, where signed and unsigned (= Python/UTF8String code-point)
-    orderings agree — same argument as ``_file_value_zone_decision``.
-    ``metas``: preloaded footers, as for :func:`_row_group_stats`."""
-    metas = _footer_metas(path, metas)
-    if metas is None:
+    answer: Any
+    undecided: list
+    units: int
+
+    @property
+    def decided_nothing(self) -> bool:
+        """Footers were read but decided no unit: every file straddles the
+        predicate (every row group straddles τ) — an unclustered layout.
+        A narrow range that decides every other file OUT is a success
+        (one file scanned), not this."""
+        return 0 < self.units == len(self.undecided)
+
+
+class _Refuse(Exception):
+    """A zone the decision may not degrade past: the whole store refuses."""
+
+
+def _file_triage(zones, group_decides) -> Optional[Decision]:
+    """Per-file triage shared by the count decisions: a file is decided
+    when ``group_decides(zone)`` returns each of its row groups' count
+    (0 = excluded); the first group it returns None for leaves the file
+    undecided. ``group_decides`` raises :class:`_Refuse` for a
+    whole-store refusal."""
+    meta = 0
+    undecided = []
+    try:
+        for fp, file_zones in zones:
+            file_meta = 0
+            for z in file_zones:
+                n = group_decides(z)
+                if n is None:
+                    undecided.append(fp)
+                    break
+                file_meta += n
+            else:
+                meta += file_meta
+    except _Refuse:
         return None
-    out = []
-    for _fp, md in metas:
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            c = _column_chunk(rg, col)
-            if c is None or c.physical_type != "BYTE_ARRAY":
+    return Decision(meta, undecided, len(zones))
+
+
+def range_decision(zones, lo, hi, lo_inclusive: bool = True,
+                   hi_inclusive: bool = True) -> Optional[Decision]:
+    """Per-file zone-map triage for ``lo <= col <= hi`` (either bound may
+    be None = unbounded). A row group is decided when its [min, max] lies
+    entirely inside the predicate (contributes its non-null rows — nulls
+    never satisfy a range) or entirely outside it (contributes 0).
+
+    Comparison domain mirrors Spark exactly: when the column is integral
+    and either bound is a float, Spark casts the COLUMN to double before
+    comparing — so the stats are cast through ``float()`` (same IEEE
+    round-half-even, and monotone, so group-level decisions stay valid
+    beyond 2^53 where exact-int comparison would diverge from the scan).
+
+    A file whose stats are missing or NaN-bearing joins the undecided
+    set and is scanned with the pushed predicate — whatever Spark's scan
+    computes for it IS the plain plan's answer for that file. A
+    non-numeric physical type (string stats may truncate) or a bound
+    that does not fit a double refuses the whole store."""
+    if zones is None:
+        return None
+    float_bound = isinstance(lo, float) or isinstance(hi, float)
+
+    def decide(z: Zone):
+        if z.physical not in _SAFE_PHYSICAL:
+            raise _Refuse
+        if not z.exact:
+            return None
+        smin, smax, lo_e, hi_e = z.lo, z.hi, lo, hi
+        if z.physical in ("FLOAT", "DOUBLE"):
+            # Spark casts an integral literal to double; float() is
+            # that exact cast (IEEE round-half-even)
+            try:
+                lo_e = None if lo is None else float(lo)
+                hi_e = None if hi is None else float(hi)
+            except OverflowError:
+                raise _Refuse from None
+        elif float_bound and isinstance(smin, int) and not isinstance(
+            smin, bool
+        ):
+            smin, smax = float(smin), float(smax)
+        inside = (
+            lo_e is None or (smin >= lo_e if lo_inclusive else smin > lo_e)
+        ) and (
+            hi_e is None or (smax <= hi_e if hi_inclusive else smax < hi_e)
+        )
+        if inside:
+            return z.nonnull
+        outside = (
+            lo_e is not None
+            and (smax < lo_e if lo_inclusive else smax <= lo_e)
+        ) or (
+            hi_e is not None
+            and (smin > hi_e if hi_inclusive else smin >= hi_e)
+        )
+        return 0 if outside else None
+
+    return _file_triage(zones, decide)
+
+
+def value_decision(zones, values) -> Optional[Decision]:
+    """Per-file zone-map triage for ``col IN values`` over a string or
+    integral column.
+
+    Sound under parquet stat TRUNCATION: writers may truncate string
+    min/max, but only ever OUTWARD (stored_min <= true_min, stored_max >=
+    true_max). Two decisions survive that widening:
+
+      * **excluded**: every v in values is < stored_min or > stored_max
+        -> the group contributes 0;
+      * **collapsed**: stored_min == stored_max == v for some v -> EVERY
+        non-null value equals v — the group contributes its non-null
+        rows (on a category-clustered layout this is most groups).
+
+    String stats and probe values must be pure ASCII (see ``Zone.ascii``);
+    a non-ASCII, bool, None or mixed-type probe, or a column of another
+    physical type, refuses the whole store."""
+    if zones is None:
+        return None
+    if any(isinstance(v, bool) or v is None for v in values):
+        return None
+    str_values = all(isinstance(v, str) for v in values)
+    int_values = all(
+        isinstance(v, int) and not isinstance(v, bool) for v in values
+    )
+    if not (str_values or int_values):
+        return None
+    if str_values and not all(v.isascii() for v in values):
+        return None
+    vals = set(values)
+
+    def decide(z: Zone):
+        if str_values and z.physical != "BYTE_ARRAY":
+            raise _Refuse
+        if int_values and z.physical not in ("INT32", "INT64"):
+            raise _Refuse
+        if not (z.ascii if str_values else z.exact):
+            return None
+        if z.lo == z.hi and z.lo in vals:
+            return z.nonnull
+        if all(v < z.lo or v > z.hi for v in vals):
+            return 0
+        return None
+
+    return _file_triage(zones, decide)
+
+
+def facet_decision(zones, physical_string: bool) -> Optional[Decision]:
+    """Facet counts from footers: ``answer`` is ``[(value, count), ...]``
+    over the decided files, NULLs as one ``(None, count)`` group with the
+    exact parquet null count (mirroring SQL GROUP BY). A row group
+    decides when its stored min == max (the collapsed proof of
+    :func:`value_decision`) or when it is all-null; a file with any other
+    group is undecided. A column of the wrong physical type refuses."""
+    if zones is None:
+        return None
+    counts: dict = {}
+    nulls = 0
+    undecided = []
+    for fp, file_zones in zones:
+        file_counts: dict = {}
+        file_nulls = 0
+        for z in file_zones:
+            if physical_string and z.physical != "BYTE_ARRAY":
                 return None
-            st = c.statistics
-            if st is None or not st.has_min_max or not st.has_null_count:
+            if not physical_string and z.physical not in ("INT32", "INT64"):
                 return None
-            smin, smax = st.min, st.max
-            if not (isinstance(smin, str) and isinstance(smax, str)):
-                return None
-            if not (smin.isascii() and smax.isascii()):
-                return None
-            out.append((smin, smax, rg.num_rows - st.null_count))
-    return out
+            if z.all_null:
+                file_nulls += z.rows
+                continue
+            if not (z.ascii if physical_string else z.exact) or z.lo != z.hi:
+                undecided.append(fp)
+                break
+            file_counts[z.lo] = file_counts.get(z.lo, 0) + z.nonnull
+            file_nulls += z.rows - z.nonnull
+        else:
+            for v, n in file_counts.items():
+                counts[v] = counts.get(v, 0) + n
+            nulls += file_nulls
+    out = list(counts.items())
+    if nulls:
+        out.append((None, nulls))
+    return Decision(out, undecided, len(zones))
 
 
 def topk_threshold(stats, k: int, descending: bool = True,
                    min_mass_only: bool = False):
-    """The provably-safe τ from row-group stats, or None when no bound
-    beats scanning (e.g. k exceeds the total row count).
+    """The provably-safe τ from ``[(min, max, non_null_rows)]`` row-group
+    stats, or None when no bound beats scanning (e.g. k exceeds the
+    total row count).
 
     ``min_mass_only`` restricts to the min-mass bound — required for
     string stats, whose truncation only widens [min, max]: the min-mass
@@ -249,6 +460,81 @@ def topk_threshold(stats, k: int, descending: bool = True,
     return min(cands) if cands else None
 
 
+def topk_decision(zones, k: int, descending: bool = True) -> Optional[Decision]:
+    """τ for the top ``k`` rows of the column, with the row groups the
+    ``col >= τ`` (``<= τ`` ascending) filter cannot skip, or None when the
+    stats cannot bound it. Every row group must be ``exact`` (both
+    bounds) or ``ascii`` (min-mass bound only). Row masses are NON-NULL
+    rows (min/max ignore nulls), so a column whose non-null mass is <= k
+    is never pruned: the plain plan's nulls-last tail would differ."""
+    if zones is None:
+        return None
+    groups = [
+        ((fp, g), z) for fp, file_zones in zones
+        for g, z in enumerate(file_zones)
+    ]
+    if all(z.exact for _u, z in groups):
+        min_mass_only = False
+    elif all(z.ascii for _u, z in groups):
+        min_mass_only = True
+    else:
+        return None
+    tau = topk_threshold(
+        [(z.lo, z.hi, z.nonnull) for _u, z in groups], k, descending,
+        min_mass_only,
+    )
+    if tau is None:
+        return None
+    kept = [
+        u for u, z in groups if not (z.hi < tau if descending else z.lo > tau)
+    ]
+    return Decision(tau, kept, len(groups))
+
+
+def zone_count(
+    spark: SparkSession,
+    decision: Optional[Decision],
+    whole: Callable[[], DataFrame],
+    pred: Callable[[], Column],
+    plan_memo: Optional[Callable] = None,
+    key: tuple = (),
+) -> int:
+    """A count decision's metadata count plus the count of ``pred()``
+    over the files it leaves undecided — over ``whole()`` (the store's
+    scan) when the footers refused. ``plan_memo(key, build)``
+    (caller-owned, dropped with the store version) keeps the count plan,
+    so a repeated count (paging, dashboards) re-executes the SAME JVM
+    plan instead of paying Python build + Catalyst analysis per call."""
+    if decision is None:
+        meta, files = 0, "all"
+    else:
+        meta, files = decision.answer, tuple(decision.undecided)
+        if not files:
+            return meta
+
+    def build():
+        scan = whole() if files == "all" else spark.read.parquet(*files)
+        return scan.filter(pred()).agg(F.count(F.lit(1)).alias("n"))
+
+    plan = build() if plan_memo is None else plan_memo(key + (files,), build)
+    return meta + plan.collect()[0][0]
+
+
+def range_predicate(col: str, lo=None, hi=None, lo_inclusive: bool = True,
+                    hi_inclusive: bool = True) -> Column:
+    """The Column predicate of ``lo <= col <= hi`` (None = unbounded)."""
+    c = F.col(col)
+    pred = F.lit(True)
+    if lo is not None:
+        pred = pred & (c >= lo if lo_inclusive else c > lo)
+    if hi is not None:
+        pred = pred & (c <= hi if hi_inclusive else c < hi)
+    return pred
+
+
+# ------------------------------------------------------------------ #
+# entry points over a store path
+# ------------------------------------------------------------------ #
 def topk_stats_pruned(
     spark: SparkSession,
     path: str,
@@ -258,45 +544,32 @@ def topk_stats_pruned(
     select_cols: Optional[Sequence[str]] = None,
     tiebreakers: Optional[List] = None,
 ) -> DataFrame:
-    """Top-k rows of a parquet table by ``value_col``, with the footer-
-    statistics threshold pushed into the scan.
+    """Top-k rows of a parquet table by ``value_col``, with the footer
+    threshold (:func:`topk_decision`) pushed into the scan. On
+    time-ordered, clustered or Z-ordered data (operators/scale
+    .write_clustered / write_zordered) the scan collapses to ~k rows'
+    worth of groups; on uniform data the filter still discards almost
+    every row before the sort. Falls back to the plain TakeOrdered plan
+    whenever statistics cannot decide.
 
     **Null ordering is pinned to NULLS LAST in both directions** (matching
     DuckDB's default, and the only ordering under which the pushed range
     filter — which necessarily eliminates nulls — is safe). The result is
     identical to the plain ``orderBy(desc_nulls_last|asc_nulls_last)
-    .limit(k)`` plan (pinned by test + oracle): nulls can only surface in
-    the top k when the non-null mass is <= k, and ``topk_threshold``
-    refuses to prune exactly that case (its row masses are non-null
-    counts). ``tiebreakers`` (list of Columns) make the result
-    deterministic under value ties.
+    .limit(k)`` plan (pinned by test + oracle). ``tiebreakers`` (list of
+    Columns) make the result deterministic under value ties. NaN-bearing
+    sort columns are never pruned (see :func:`column_zones`)."""
+    from pyarrow import ArrowException
 
-    NaN caveat: Spark ranks float NaN above every value (first under
-    DESC; it passes ``>= tau`` but fails ``<= tau``), and NaN in the
-    stats poisons the threshold math — so a NaN-bearing sort column must
-    never be pruned. Spark/parquet-mr-written files are guarded (NaN
-    lands in the footer min/max, which refuses pruning — see
-    ``_stat_nan``); spec-compliant writers omit NaN from statistics, so
-    hidden NaN in foreign files is out of pruning scope — the parquet
-    format's own limitation, shared by stats-trusting engines (DuckDB
-    measured dropping a hidden-NaN row via its parquet zone maps)."""
     df = spark.read.parquet(path)
-    tau = None
     try:
-        metas = _footer_metas(path)
-        tau = topk_threshold(
-            _row_group_stats(path, value_col, metas), k, descending
+        decision = topk_decision(
+            column_zones(_footer_metas(path), value_col), k, descending
         )
-        if tau is None:
-            # string sort key: the ASCII-guarded min-mass bound is the
-            # truncation-safe subset (see _row_group_stats_string)
-            tau = topk_threshold(
-                _row_group_stats_string(path, value_col, metas), k,
-                descending, min_mass_only=True,
-            )
-    except Exception:  # noqa: BLE001 — stats are an optimization, never a risk
-        tau = None
-    if tau is not None:
+    except (ArrowException, OSError, TypeError, ValueError):
+        decision = None  # stats are an optimization, never a risk
+    if decision is not None:
+        tau = decision.answer
         df = df.filter(
             F.col(value_col) >= tau if descending else F.col(value_col) <= tau
         )
@@ -309,121 +582,6 @@ def topk_stats_pruned(
     return df.orderBy(*order).limit(k)
 
 
-# ------------------------------------------------------------------ #
-# zone-map filtered count — the COUNT analog of the pruned top-k
-# ------------------------------------------------------------------ #
-def _file_zone_decision(path: str, col: str, lo, hi,
-                        lo_inclusive: bool = True, hi_inclusive: bool = True,
-                        metas=None):
-    """Per-file zone-map triage for ``lo <= col <= hi`` (either bound may
-    be None = unbounded): returns (metadata_count, undecided_files) or
-    None when any footer lacks exact stats.
-
-    A row group is DECIDED when its [min, max] lies entirely inside the
-    predicate (contributes its non-null rows — nulls never satisfy a
-    range) or entirely outside it (contributes 0). Files whose every
-    group is decided are answered from metadata alone; the rest are
-    scanned normally (where Spark's reader still row-group-skips the
-    disjoint groups via the pushed filter). Same driver-side footer-only
-    IO as ``_row_group_stats``; string columns are never used (parquet
-    may truncate their stats).
-
-    Refuses (returns None) above the shared ``_MAX_SWEEP_FILES`` cap: the
-    footer sweep is SEQUENTIAL driver IO, so on a store with tens of
-    thousands of files the distributed scan a 1000-executor cluster runs
-    in parallel is the better plan — a metadata shortcut must never
-    become the bottleneck.
-
-    Comparison domain mirrors Spark exactly: when the column is integral
-    and either bound is a float, Spark casts the COLUMN to double before
-    comparing — so the stats are cast through ``float()`` (same IEEE
-    round-half-even, and monotone, so group-level decisions stay valid
-    beyond 2^53 where exact-int comparison would diverge from the scan).
-
-    Degradation is PER FILE: a file whose stats are missing, inexact, or
-    NaN-bearing (see _stat_nan) just joins the undecided set and is
-    scanned with the pushed predicate — whatever Spark's scan computes
-    for it IS the plain plan's answer for that file, so mixed stores
-    (one statless/foreign writer among Spark-written files) keep the
-    metadata shortcut for every clean file. Structural problems refuse
-    globally: an unsafe physical type (strings may truncate min/max —
-    table-wide), an unrepresentable bound, or a file missing the column
-    entirely (a subset scan might not resolve the predicate column that
-    the whole-store schema union does).
-    """
-    metas = _footer_metas(path, metas)
-    if metas is None:
-        return None
-    float_bound = isinstance(lo, float) or isinstance(hi, float)
-    meta_count = 0
-    undecided = []
-    for fp, md in metas:
-        file_meta = 0
-        file_decided = True
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            c = _column_chunk(rg, col)
-            if c is None:
-                # column absent in this file: scanning ONLY the undecided
-                # subset could fail to resolve the predicate column at all
-                # (schema comes from the files read, not the store) —
-                # schema evolution is a table-wide concern, so refuse and
-                # let the plain whole-store scan resolve it by union
-                return None
-            st = c.statistics
-            if c.physical_type not in _SAFE_PHYSICAL:
-                return None  # table-wide property: strings never decide
-            if (
-                st is None
-                or not st.has_min_max
-                or not st.has_null_count
-                or _stat_nan(st)
-            ):
-                file_decided = False
-                break
-            smin, smax, lo_e, hi_e = st.min, st.max, lo, hi
-            if c.physical_type in ("FLOAT", "DOUBLE"):
-                # Spark casts an integral literal to double; float() is
-                # that exact cast (IEEE round-half-even)
-                try:
-                    lo_e = None if lo is None else float(lo)
-                    hi_e = None if hi is None else float(hi)
-                except OverflowError:
-                    return None
-            elif float_bound and isinstance(smin, int) and not isinstance(
-                smin, bool
-            ):
-                # Spark compares cast(col as double) against the double
-                # literal; cast the stats the same way — the cast is
-                # monotone, so group-level decisions stay valid
-                smin, smax = float(smin), float(smax)
-            inside_lo = lo_e is None or (
-                smin >= lo_e if lo_inclusive else smin > lo_e
-            )
-            inside_hi = hi_e is None or (
-                smax <= hi_e if hi_inclusive else smax < hi_e
-            )
-            outside = (
-                lo_e is not None
-                and (smax < lo_e if lo_inclusive else smax <= lo_e)
-            ) or (
-                hi_e is not None
-                and (smin > hi_e if hi_inclusive else smin >= hi_e)
-            )
-            if inside_lo and inside_hi:
-                file_meta += rg.num_rows - st.null_count
-            elif outside:
-                pass  # contributes 0
-            else:
-                file_decided = False
-                break
-        if file_decided:
-            meta_count += file_meta
-        else:
-            undecided.append(fp)
-    return meta_count, undecided
-
-
 def stats_filtered_count(
     spark: SparkSession,
     path: str,
@@ -432,303 +590,52 @@ def stats_filtered_count(
     hi=None,
     lo_inclusive: bool = True,
     hi_inclusive: bool = True,
-    plan_memo: Optional[Callable] = None,
-    metas=None,
-    route_info: Optional[dict] = None,
 ) -> int:
     """COUNT of rows with ``col`` in the given range over a parquet table,
-    answered from parquet footers wherever the zone maps decide the whole
-    file — the DuckDB/zone-map count optimization expressed over the same
-    footer statistics the pruned top-k uses.
+    answered from footers wherever :func:`range_decision` decides the
+    whole file; only the undecided files are scanned. On clustered /
+    time-partitioned layouts almost every file is decided; on uniform
+    layouts it degrades to the plain filtered count. Equality =
+    ``lo == hi``. With no bound at all the footers' row total answers
+    (nulls count when no range excludes them)."""
+    from pyarrow import ArrowException
 
-    On clustered / time-partitioned layouts (write_clustered,
-    write_zordered, natural time-ordered ingest — the realistic 100 TB
-    layout for time-range counts) almost every file is decided, so the
-    count is driver-metadata IO plus a scan of only the boundary files;
-    on adversarially uniform layouts it degrades gracefully to the plain
-    filtered count (every file undecided). Equality = ``lo == hi``.
-    Files with missing/NaN statistics degrade individually into the
-    scanned set (see _file_zone_decision); table-wide problems fall back
-    to the plain scan entirely (unsafe physical type, oversized store,
-    a file missing the predicate column, an unrepresentable bound).
-
-    NaN caveat (same scope as every stats-trusting engine): Spark ranks
-    NaN above every value (it passes lower bounds, fails upper bounds),
-    and footers carry no NaN count — so a float column CONTAINING NaN
-    must never be metadata-counted. Spark/parquet-mr-written files are
-    fully guarded (those writers fold NaN into min/max, which
-    ``_stat_nan`` detects and refuses); spec-compliant writers (arrow,
-    polars) omit NaN from statistics entirely, making hidden NaN
-    undetectable from footers — under which even the plain Spark scan is
-    layout-dependent (pushed filters row-group-skip hidden-NaN groups),
-    and DuckDB's zone maps measured dropping the same row. Keep NaN out
-    of columns you range-count (Collection stores are Spark-written, so
-    they are covered by the detection path).
-    """
     if lo is None and hi is None:
-        # no predicate at all: NULLS COUNT (a range excludes them, the
-        # absence of a range does not) — plain metadata row total. The
-        # same _MAX_SWEEP_FILES cap applies: this branch is sequential
-        # driver IO too.
         try:
-            metas = _footer_metas(path, metas)
-            if metas is None:
-                return spark.read.parquet(path).count()
-            return sum(md.num_rows for _fp, md in metas)
-        except Exception:  # noqa: BLE001
+            metas = _footer_metas(path)
+        except (ArrowException, OSError):
+            metas = None
+        if metas is None:
             return spark.read.parquet(path).count()
-    decision = None
+        return sum(md.num_rows for _fp, md in metas)
     try:
-        decision = _file_zone_decision(
-            path, col, lo, hi, lo_inclusive, hi_inclusive, metas=metas
+        decision = range_decision(
+            column_zones(_footer_metas(path), col), lo, hi, lo_inclusive,
+            hi_inclusive,
         )
-    except Exception:  # noqa: BLE001 — stats are an optimization only
-        decision = None
-
-    def _scan_count(files_key, paths):
-        def build():
-            c = F.col(col)
-            pred = F.lit(True)
-            if lo is not None:
-                pred = pred & (c >= lo if lo_inclusive else c > lo)
-            if hi is not None:
-                pred = pred & (c <= hi if hi_inclusive else c < hi)
-            return (
-                spark.read.parquet(*paths)
-                .filter(pred)
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-
-        # ``plan_memo(key, build)`` (caller-owned, dropped with the store
-        # version) keeps the constructed count Dataset: repeated identical
-        # range counts (paging, dashboards) re-execute the SAME JVM plan
-        # instead of paying Python build + Catalyst analysis per call
-        key = ("range_scan", col, lo, hi, lo_inclusive, hi_inclusive,
-               files_key)
-        d = build() if plan_memo is None else plan_memo(key, build)
-        return d.collect()[0][0]
-
-    if decision is None:
-        if route_info is not None:
-            route_info["zone"] = "refused"
-        return _scan_count(path, [path])
-    meta_count, undecided = decision
-    if route_info is not None:
-        # "undecided_all" = the zone maps decided NOTHING — the layout
-        # signature the clustering advisor counts (footers exist but EVERY
-        # file's range straddles the predicate: an unclustered store).
-        # Classified by file COUNT, not meta_count truthiness: a narrow
-        # range fully inside one file of a well-clustered store decides
-        # every other file OUT (meta_count 0, one file scanned) — that is
-        # a zone SUCCESS, and advising a recluster for it would queue
-        # redundant full-store compactions (round-9 advisor finding)
-        try:
-            n_files = len(metas) if metas else len(_parquet_files(path) or ())
-        except Exception:  # noqa: BLE001
-            n_files = 0
-        route_info["zone"] = (
-            "decided_full" if not undecided
-            else (
-                "undecided_all"
-                if not meta_count and n_files and len(undecided) == n_files
-                else "partial"
-            )
-        )
-        route_info["undecided_files"] = len(undecided or ())
-    if not undecided:
-        return meta_count
-    return meta_count + _scan_count(tuple(undecided), undecided)
-
-
-# ------------------------------------------------------------------ #
-# zone-map equality/IN count — strings and ints, truncation-sound
-# ------------------------------------------------------------------ #
-def _file_value_zone_decision(path: str, col: str, values, metas=None):
-    """Per-file zone-map triage for ``col IN values`` over a string or
-    integral column: (metadata_count, undecided_files), or None on any
-    structural refusal.
-
-    Soundness under parquet stat TRUNCATION (the reason the range
-    machinery above excludes strings): writers may truncate string
-    min/max, but only ever OUTWARD — stored_min <= true_min (prefix) and
-    stored_max >= true_max (prefix with last byte incremented). Two
-    decisions survive that widening:
-
-      * **excluded**: every v in values is < stored_min or > stored_max
-        -> v is outside the (wider) stored interval, so outside the true
-        one — the group contributes 0;
-      * **collapsed**: stored_min == stored_max == v for some v ->
-        true_min >= stored_min = v and true_max <= stored_max = v force
-        EVERY non-null value to equal v — the group contributes its
-        non-null rows (on a category-clustered layout, the realistic
-        100 TB shape for `status = 'X'` counts, this is most groups).
-
-    Anything else leaves the file undecided (scanned with the pushed
-    ``In`` filter, where disjoint row groups still skip).
-
-    Ordering guard: parquet string stats are UNSIGNED-byte-lexicographic,
-    which equals Python's code-point comparison for valid UTF-8 — but
-    LEGACY writers ordered signed bytes, which diverges only when a byte
-    >= 0x80 is involved. Stats and probe values are therefore required
-    to be pure ASCII: if any true value had a high byte, a signed-order
-    writer would have surfaced it as the (non-ASCII) min — so ASCII
-    stored bounds prove the orderings agree on this group's data. Ints
-    have exact stats and no ordering ambiguity. Same per-file
-    degradation, whole-store refusals (missing column, unsupported
-    physical type, >_MAX_SWEEP_FILES) as ``_file_zone_decision``.
-    """
-    metas = _footer_metas(path, metas)
-    if metas is None:
-        return None
-    if any(isinstance(v, bool) or v is None for v in values):
-        return None
-    str_values = all(isinstance(v, str) for v in values)
-    int_values = all(
-        isinstance(v, int) and not isinstance(v, bool) for v in values
+    except (ArrowException, OSError, TypeError, ValueError):
+        decision = None  # stats are an optimization only
+    return zone_count(
+        spark, decision, lambda: spark.read.parquet(path),
+        lambda: range_predicate(col, lo, hi, lo_inclusive, hi_inclusive),
     )
-    if not (str_values or int_values):
-        return None
-    if str_values and not all(v.isascii() for v in values):
-        return None
-    vals = set(values)
-    meta_count = 0
-    undecided = []
-    for fp, md in metas:
-        file_meta = 0
-        file_decided = True
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            c = _column_chunk(rg, col)
-            if c is None:
-                return None  # schema evolution: whole-store concern
-            if str_values and c.physical_type != "BYTE_ARRAY":
-                return None
-            if int_values and c.physical_type not in ("INT32", "INT64"):
-                return None
-            st = c.statistics
-            if st is None or not st.has_min_max or not st.has_null_count:
-                file_decided = False
-                break
-            smin, smax = st.min, st.max
-            if str_values:
-                if not (isinstance(smin, str) and isinstance(smax, str)):
-                    file_decided = False
-                    break
-                if not (smin.isascii() and smax.isascii()):
-                    file_decided = False
-                    break
-            if smin == smax and smin in vals:
-                file_meta += rg.num_rows - st.null_count
-            elif all(v < smin or v > smax for v in vals):
-                pass  # contributes 0
-            else:
-                file_decided = False
-                break
-        if file_decided:
-            meta_count += file_meta
-        else:
-            undecided.append(fp)
-    return meta_count, undecided
-
-
-def zone_facet_counts(files, col: str, physical_string: bool, metas=None):
-    """Facet counts from footers with PER-FILE degradation: returns
-    ``([(value, count), ...], undecided_files)`` — decided files
-    contribute their counts from metadata alone, undecided files (any
-    mixed row group) are listed for the caller to scan — or None on a
-    structural refusal (column missing anywhere, wrong physical type).
-
-    A row group decides when its stored min == max (truncation can only
-    widen the interval, so a collapsed one proves every non-null value
-    equal — the same proof as ``_file_value_zone_decision``) or when it
-    is all-null (null_count == num_rows; min/max may legitimately be
-    absent then). NULLs form their own group with an EXACT count
-    (parquet null_count), mirroring SQL GROUP BY. String stats keep the
-    ASCII guard; ints are exact. On a category-clustered store
-    (write_clustered / compact(sort_cols=...)) everything but the range
-    BOUNDARY files is decided, turning the reference's most-used
-    operator — the facet — into driver metadata IO plus a scan of the
-    stragglers.
-
-    ``metas`` — optional preloaded ``[(file, FileMetaData)]`` so a caller
-    faceting MANY columns of the same store reads each footer once, not
-    once per column (ADVICE r6: thousands of serial driver reads at the
-    4096-file cap)."""
-    import pyarrow.parquet as pq
-
-    if metas is None:
-        metas = [(fp, pq.ParquetFile(fp).metadata) for fp in files]
-    counts: dict = {}
-    nulls = 0
-    undecided = []
-    for fp, md in metas:
-        file_counts: dict = {}
-        file_nulls = 0
-        file_decided = True
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            c = _column_chunk(rg, col)
-            if c is None:
-                return None  # schema evolution: whole-store concern
-            if physical_string and c.physical_type != "BYTE_ARRAY":
-                return None
-            if not physical_string and c.physical_type not in ("INT32", "INT64"):
-                return None
-            st = c.statistics
-            if st is None or not st.has_null_count:
-                file_decided = False
-                break
-            if st.null_count == rg.num_rows:
-                file_nulls += rg.num_rows
-                continue
-            if not st.has_min_max:
-                file_decided = False
-                break
-            smin, smax = st.min, st.max
-            if physical_string:
-                if not (isinstance(smin, str) and isinstance(smax, str)):
-                    file_decided = False
-                    break
-                if not (smin.isascii() and smax.isascii()):
-                    file_decided = False
-                    break
-            if smin != smax:
-                file_decided = False  # mixed group: scan this file
-                break
-            file_counts[smin] = (
-                file_counts.get(smin, 0) + rg.num_rows - st.null_count
-            )
-            file_nulls += st.null_count
-        if file_decided:
-            for v, n in file_counts.items():
-                counts[v] = counts.get(v, 0) + n
-            nulls += file_nulls
-        else:
-            undecided.append(fp)
-    out = list(counts.items())
-    if nulls:
-        out.append((None, nulls))
-    return out, undecided
 
 
 def zone_value_count(spark: SparkSession, path: str, col: str, values) -> int:
     """COUNT of rows with ``col IN values`` over a parquet table, answered
-    from footers wherever ``_file_value_zone_decision`` decides whole
-    files — the equality/IN analog of :func:`stats_filtered_count`, and
-    the first zone path that safely covers STRING columns. On clustered
-    layouts (write_clustered / hive-partition-by-category) the most
-    common categorical count becomes driver metadata IO plus a scan of
-    only the boundary files; elsewhere it degrades to the plain pushed-In
-    count."""
-    decision = None
+    from footers wherever :func:`value_decision` decides whole files —
+    the equality/IN analog of :func:`stats_filtered_count`, and the zone
+    path that safely covers STRING columns. Elsewhere it degrades to the
+    plain pushed-In count."""
+    from pyarrow import ArrowException
+
     try:
-        decision = _file_value_zone_decision(path, col, values)
-    except Exception:  # noqa: BLE001 — stats are an optimization only
-        decision = None
-    pred = F.col(col).isin(list(values))
-    if decision is None:
-        return spark.read.parquet(path).filter(pred).count()
-    meta_count, undecided = decision
-    if not undecided:
-        return meta_count
-    return meta_count + spark.read.parquet(*undecided).filter(pred).count()
+        decision = value_decision(
+            column_zones(_footer_metas(path), col), values
+        )
+    except (ArrowException, OSError, TypeError, ValueError):
+        decision = None  # stats are an optimization only
+    return zone_count(
+        spark, decision, lambda: spark.read.parquet(path),
+        lambda: F.col(col).isin(list(values)),
+    )

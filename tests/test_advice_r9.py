@@ -14,8 +14,8 @@ def test_zone_partial_not_undecided_on_decided_out_files(
 ):
     """A narrow range fully inside ONE file of a well-clustered store
     decides every other file OUT (meta_count 0, one file scanned): that
-    is a zone SUCCESS — route_info must say 'partial', and the advisor
-    must NOT queue a recluster (round-9 ADVICE #1)."""
+    is a zone SUCCESS — the decision must not read as decided-nothing,
+    and the advisor must NOT queue a recluster (round-9 ADVICE #1)."""
     import warnings
 
     client = Client(spark)
@@ -25,16 +25,16 @@ def test_zone_partial_not_undecided_on_decided_out_files(
     # clustered layout: 4 files with disjoint qty ranges
     coll.insert(df.repartitionByRange(4, "qty").sortWithinPartitions("qty"))
     monkeypatch.setattr(collection, "CLUSTER_ADVICE_MIN_ROWS", 1000)
-    from linkml_store_spark.operators.topk import stats_filtered_count
-
-    path = db._collection_path("t")
-    rinfo = {}
-    n = stats_filtered_count(
-        spark, path, "qty", 100, 110, True, False,
-        metas=coll._store_metas(), route_info=rinfo,
+    from linkml_store_spark.operators.topk import (
+        range_decision,
+        stats_filtered_count,
     )
-    assert n == 10
-    assert rinfo["zone"] == "partial", rinfo
+
+    d = range_decision(coll._zones("qty"), 100, 110, True, False)
+    assert d.answer == 0 and len(d.undecided) == 1 < d.units, d
+    assert not d.decided_nothing
+    path = db._collection_path("t")
+    assert stats_filtered_count(spark, path, "qty", 100, 110, True, False) == 10
     # repeated narrow queries must not accumulate advisor hits
     monkey_disabled = coll._cluster_hits.copy()
     with warnings.catch_warnings(record=True) as w:

@@ -256,7 +256,6 @@ def test_cluster_once_then_footer_answers_everything(spark, tmp_path, monkeypatc
     count (value zone map), the facet (zone facet), and paging totals all
     answer through Collection APIs with footer-decided plans."""
     from linkml_store_spark.client import Client
-    from linkml_store_spark.operators.topk import _file_value_zone_decision
     from linkml_store_spark.query import Query
 
     # pins the SPARK-path zone routes: the local tier answers footer-small
@@ -273,10 +272,11 @@ def test_cluster_once_then_footer_answers_everything(spark, tmp_path, monkeypatc
     # the rewritten store is zone-decided except for range BOUNDARY files
     # (a 3-value range partitioning may split a category across a file
     # boundary) — the composed routes scan only those stragglers
-    path = db._collection_path("tickets")
-    meta, undecided = _file_value_zone_decision(path, "status", ["OPEN"])
-    assert len(undecided) <= 2, undecided
-    assert meta <= 2000
+    from linkml_store_spark.operators.topk import value_decision
+
+    d = value_decision(coll._zones("status"), ["OPEN"])
+    assert len(d.undecided) <= 2, d.undecided
+    assert d.answer <= 2000
 
     # count through Collection.query (value zone route + paging memo)
     res = coll.query(Query(where_clause={"status": "OPEN"}, limit=3))
@@ -375,6 +375,44 @@ def test_query_facets_reads_each_footer_once(spark, tmp_path, monkeypatch):
     assert len(calls) == n_files, (len(calls), n_files)
     assert got["s"] == [("CLOSED", 200), ("OPEN", 200)]
     assert got["t"] == [("a", 200), ("b", 200)]
+
+
+def test_collection_spark_facets_read_footers_once_per_version(
+    spark, tmp_path, monkeypatch
+):
+    """On the Spark path, a Collection hands its store version's zone
+    records to the facet engine: repeated facet calls on one version open
+    no parquet footer, and a write's new version reads them again."""
+    import pyarrow.parquet as pq
+
+    from linkml_store_spark.client import Client
+
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
+    db = Client(spark).attach_database(f"spark://{tmp_path}/qfv")
+    coll = db.create_collection("t", identifier_attribute="id")
+    rows = [(i, ["OPEN", "CLOSED"][i % 2]) for i in range(400)]
+    df = spark.createDataFrame(rows, "id long, s string")
+    coll.insert(df.repartition(2, "s"))
+    want = [("CLOSED", 200), ("OPEN", 200)]
+    assert coll.query_facets(facet_columns=["s"])["s"] == want
+
+    calls = []
+    real = pq.ParquetFile
+
+    def counting(fp, *a, **kw):
+        calls.append(str(fp))
+        return real(fp, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    assert coll.query_facets(facet_columns=["s"])["s"] == want
+    res = coll.find(limit=0, include_facet_counts=True, facet_slots=["s"])
+    assert res.facet_counts["s"] == want
+    assert calls == []
+    coll.insert([{"id": 400, "s": "OPEN"}])
+    assert coll.query_facets(facet_columns=["s"])["s"] == [
+        ("OPEN", 201), ("CLOSED", 200)
+    ]
+    assert calls
 
 
 def test_simple_value_clause_rejects_cross_type_literals(spark):

@@ -174,20 +174,14 @@ def test_overlap_unchanged_when_cap_keeps_some(spark):
     assert len(rows) == 1 and rows[0]["left_id"] == 1 and rows[0]["right_id"] == 2
 
 
-def test_prepass_predicts_degenerate_and_verifies_exactly(spark, monkeypatch):
-    """Round-10: the sampled pre-pass routes an all-boilerplate corpus to
-    the one-aggregate emptiness proof (no sketch exchange/checkpoint),
-    and the PREDICTION never changes the answer — both routes return the
-    same (empty) result because the verification count is exact."""
+def test_all_boilerplate_corpus_prunes_to_empty(spark):
+    """An all-boilerplate corpus: the ``max_freq`` cap prunes every
+    fingerprint, and the empty-after-prune short-circuit returns the
+    empty result without the self-join."""
     from linkml_store_spark.operators import fingerprint as fpmod
 
-    # short boilerplate texts yield ~3 fps/doc; scale the sample-size
-    # gate down so this 60k-doc corpus is probe-eligible like the 1M-doc
-    # production shape (whose sample carries ~2.8M rows)
-    monkeypatch.setattr(fpmod, "PREPASS_MIN_SAMPLE_ROWS", 1_000)
-
     # 60k docs, every text one of 3 boilerplate strings -> every fp in
-    # ~20k docs; sample is comfortably over PREPASS_MIN_SAMPLE_ROWS
+    # ~20k docs
     texts = [
         "alpha beta gamma delta epsilon zeta eta theta iota kappa",
         "one two three four five six seven eight nine ten",
@@ -198,44 +192,17 @@ def test_prepass_predicts_degenerate_and_verifies_exactly(spark, monkeypatch):
         "CASE CAST(id % 3 AS INT) WHEN 0 THEN '" + texts[0] + "' "
         "WHEN 1 THEN '" + texts[1] + "' ELSE '" + texts[2] + "' END AS text",
     )
-    assert fpmod._predict_total_prune(
-        docs, "text", "doc_id", 5, 4, "xxhash64", 50
-    )
     out = fpmod.fingerprint_overlap(docs, max_freq=50)
     assert out.count() == 0
-    # the degenerate route returns join-free
     assert "Join" not in out._jdf.queryExecution().executedPlan().toString()
 
 
-def test_prepass_never_predicts_on_mixed_corpus(spark):
-    """A corpus with rare fingerprints must NOT predict total prune (the
-    sample sees cold fps), so the normal exact chain runs and pairs
-    survive."""
-    from linkml_store_spark.operators import fingerprint as fpmod
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = spark.range(60_000).selectExpr(
-        "id AS doc_id",
-        # 90% boilerplate, 10% unique-ish texts (id baked into the tokens)
-        "CASE WHEN id % 10 = 0 THEN concat('uniq', id, ' foo bar baz qux "
-        "quux corge grault garply waldo') ELSE '" + base + "' END AS text",
-    )
-    assert not fpmod._predict_total_prune(
-        docs, "text", "doc_id", 5, 4, "xxhash64", 50
-    )
-
-
-def test_prepass_skips_tiny_corpora(spark):
+def test_tiny_boilerplate_corpus_prunes_to_empty(spark):
     from linkml_store_spark.operators import fingerprint as fpmod
 
     docs = spark.createDataFrame(
         [(i, "same boiler plate text here all over again") for i in range(200)],
         ["doc_id", "text"],
-    )
-    # tiny sample: never predict (the exact chain is already cheap) —
-    # and the exact chain still returns the right (empty) answer
-    assert not fpmod._predict_total_prune(
-        docs, "text", "doc_id", 5, 4, "xxhash64", 3
     )
     assert fpmod.fingerprint_overlap(docs, max_freq=3).count() == 0
 

@@ -248,14 +248,9 @@ def test_collection_sort_limit_stats_pruned_default(spark, sf_dir, tmp_path):
     ]
     # plan pin: the threshold reached the scan as a pushed filter. Build
     # the page the same way query() does to inspect its plan.
-    from linkml_store_spark.operators.topk import (
-        _row_group_stats,
-        topk_threshold,
-    )
+    from linkml_store_spark.operators.topk import topk_decision
 
-    path = db._collection_path("orders")
-    tau = topk_threshold(_row_group_stats(path, "o_totalprice"), 10, True)
-    assert tau is not None
+    tau = topk_decision(coll._zones("o_totalprice"), 10, True).answer
     page = coll.df.filter(F.col("o_totalprice") >= tau).orderBy(
         F.desc_nulls_last("o_totalprice")
     ).limit(10)

@@ -199,6 +199,41 @@ def test_write_through_another_handle_is_seen(spark, tmp_path):
     assert reads(c1) == fresh
 
 
+#: every public read that runs on Spark without a local-tier entry, as
+#: a row count over the collection
+_SPARK_READS = {
+    "rows": lambda c: len(c.rows()),
+    "rows_iter": lambda c: sum(1 for _ in c.rows_iter()),
+    "peek": lambda c: len(c.peek(limit=100)),
+    "find_iter": lambda c: sum(1 for _ in c.find_iter()),
+    "group_by": lambda c: sum(len(g["objects"]) for g in c.group_by("cat")),
+    "describe": lambda c: c.describe(["id"]).collect()[0]["count"],
+    "knn": lambda c: c.knn([1.0, 0.0, 1.0, 1.0], vector_col="emb", k=100)
+    .count(),
+    "facet_counts": lambda c: sum(
+        n for _v, n in c.find(
+            limit=0, include_facet_counts=True, facet_slots=["cat"]
+        ).facet_counts["cat"]
+    ),
+}
+
+
+@pytest.mark.parametrize("read", sorted(_SPARK_READS))
+def test_stale_handle_reads_after_another_handle_writes(spark, tmp_path, read):
+    """A handle that read the store before another handle wrote to it
+    scans the store's current files, not the deleted ones."""
+    loc = str(tmp_path / "stale")
+    Database(spark, location=loc).create_collection(
+        "t", identifier_attribute="id"
+    ).insert(spark.createDataFrame(_rows(30), SCHEMA))
+    stale = Database(spark, location=loc).get_collection("t")
+    assert _SPARK_READS[read](stale) == 30
+    Database(spark, location=loc).get_collection("t").insert(
+        _dicts(_rows(5, start=30))
+    )
+    assert _SPARK_READS[read](stale) == 35
+
+
 @pytest.mark.parametrize("first", ["find", "size"])
 def test_first_read_on_a_new_handle_runs_no_spark_job(spark, tmp_path, first):
     """A new Database over an existing location serves its first read

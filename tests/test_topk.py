@@ -9,9 +9,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from linkml_store_spark.operators.topk import (
+    _footer_metas,
+    column_zones,
+    range_decision,
+    topk_decision,
     topk_stats_pruned,
     topk_threshold,
+    value_decision,
 )
+
+
+def _zones(path, col):
+    """The zone records of ``col`` over the store at ``path``."""
+    return column_zones(_footer_metas(path), col)
 
 
 def test_threshold_math_descending():
@@ -101,13 +111,10 @@ def test_clustered_data_prunes_row_groups(spark, tmp_path):
         spark.read.parquet(path).orderBy(F.desc("v"), F.asc("k")).limit(5).collect()
     )
     assert [tuple(r) for r in out] == [tuple(r) for r in expect]
-    from linkml_store_spark.operators.topk import _row_group_stats
-
-    stats = _row_group_stats(path, "v")
-    tau = topk_threshold(stats, 5)
+    d = topk_decision(_zones(path, "v"), 5)
     # pruning is real: most row groups' max falls below tau
-    prunable = sum(1 for _mn, mx, _r in stats if mx < tau)
-    assert prunable >= len(stats) - 2, (tau, stats)
+    assert len(d.undecided) <= 2, d
+    assert not d.decided_nothing
 
 
 def test_null_values_parity_both_directions(spark, tmp_path):
@@ -164,10 +171,8 @@ def test_timestamp_column_prunes(spark, sf_dir):
 
     path = os.path.join(sf_dir, "events.parquet")
     ts_col = "ts"
-    from linkml_store_spark.operators.topk import _row_group_stats
-
     # pruning actually engages (datetime stats -> datetime threshold)
-    assert topk_threshold(_row_group_stats(path, ts_col), 5) is not None
+    assert topk_decision(_zones(path, ts_col), 5) is not None
     pruned = topk_stats_pruned(
         spark, path, ts_col, k=5, tiebreakers=[F.asc("event_id")]
     ).collect()
@@ -183,10 +188,7 @@ def test_timestamp_column_prunes(spark, sf_dir):
 # ------------------------------------------------------------------ #
 # zone-map filtered count (stats_filtered_count)
 # ------------------------------------------------------------------ #
-from linkml_store_spark.operators.topk import (
-    _file_zone_decision,
-    stats_filtered_count,
-)
+from linkml_store_spark.operators.topk import stats_filtered_count
 
 
 def test_zone_count_matches_plain_scan(spark, sf_dir):
@@ -220,9 +222,9 @@ def test_zone_count_clustered_is_metadata_only(spark, tmp_path):
     )
     df.repartitionByRange(8, "v").sortWithinPartitions("v").write.parquet(path)
     lo, hi = 10000.0, 30000.0
-    decision = _file_zone_decision(path, "v", lo, hi)
+    decision = range_decision(_zones(path, "v"), lo, hi)
     assert decision is not None
-    meta, undecided = decision
+    meta, undecided = decision.answer, decision.undecided
     assert len(undecided) <= 2, undecided  # only boundary files scan
     assert meta > 0
     got = stats_filtered_count(spark, path, "v", lo, hi)
@@ -330,9 +332,10 @@ def test_nan_stats_refuse_spark_written(spark, tmp_path):
     path = str(tmp_path / "nan_store")
     rows = [(i, float(i)) for i in range(50)] + [(50, float("nan")), (51, None)]
     spark.createDataFrame(rows, ["id", "v"]).coalesce(1).write.parquet(path)
-    from linkml_store_spark.operators.topk import _row_group_stats
-
-    assert _row_group_stats(path, "v") is None  # NaN detected -> refuse
+    zones = _zones(path, "v")
+    # NaN detected: the stats are not exact, so top-k refuses
+    assert not any(z.exact for _fp, zs in zones for z in zs)
+    assert topk_decision(zones, 3) is None
     # pruned top-k falls back and still matches the plain plan exactly
     # (NaN first under desc_nulls_last, then 49, 48, ...)
     got = [r["id"] for r in topk_stats_pruned(spark, path, "v", k=3).collect()]
@@ -394,11 +397,9 @@ def test_zone_count_mixed_store_per_file_degradation(spark, tmp_path):
         + [(999, float("nan"))],
         ["id", "v"],
     ).coalesce(1).write.mode("append").parquet(path)
-    from linkml_store_spark.operators.topk import _file_zone_decision
-
-    dec = _file_zone_decision(path, "v", 0.0, 1000.0)
+    dec = range_decision(_zones(path, "v"), 0.0, 1000.0)
     assert dec is not None
-    meta, undecided = dec
+    meta, undecided = dec.answer, dec.undecided
     assert meta == 100 and len(undecided) == 1  # clean file decided
     got = stats_filtered_count(spark, path, "v", 0.0, 1000.0)
     plain = (
@@ -428,9 +429,8 @@ def test_zone_count_missing_column_file_refuses_globally(spark, tmp_path):
     spark.createDataFrame(
         [(100 + i,) for i in range(10)], ["id"]
     ).coalesce(1).write.mode("append").parquet(path)
-    from linkml_store_spark.operators.topk import _file_zone_decision
-
-    assert _file_zone_decision(path, "v", 10.0, None) is None
+    assert _zones(path, "v") is None  # the reader refuses the store
+    assert range_decision(_zones(path, "v"), 10.0, None) is None
 
     def outcome(fn):
         try:
@@ -460,10 +460,7 @@ def test_zone_count_missing_column_file_refuses_globally(spark, tmp_path):
 # --------------------------------------------------------------------- #
 
 def test_value_zone_clustered_string_is_metadata_only(spark, tmp_path):
-    from linkml_store_spark.operators.topk import (
-        _file_value_zone_decision,
-        zone_value_count,
-    )
+    from linkml_store_spark.operators.topk import zone_value_count
 
     path = str(tmp_path / "status_clustered")
     rows = [(i, ["OPEN", "CLOSED", "HELD"][i % 3]) for i in range(9000)]
@@ -472,17 +469,17 @@ def test_value_zone_clustered_string_is_metadata_only(spark, tmp_path):
     # one partition): every file collapses to stored_min == stored_max
     for s in ["OPEN", "CLOSED", "HELD"]:
         df.filter(df.status == s).coalesce(1).write.mode("append").parquet(path)
-    decision = _file_value_zone_decision(path, "status", ["OPEN"])
+    decision = value_decision(_zones(path, "status"), ["OPEN"])
     assert decision is not None
-    meta, undecided = decision
+    meta, undecided = decision.answer, decision.undecided
     assert undecided == []          # pure driver metadata, zero scan tasks
     assert meta == 3000
     assert zone_value_count(spark, path, "status", ["OPEN"]) == 3000
     # $in across two categories
     assert zone_value_count(spark, path, "status", ["OPEN", "HELD"]) == 6000
     # absent value: exclusion decides every file
-    meta0, und0 = _file_value_zone_decision(path, "status", ["GONE"])
-    assert (meta0, und0) == (0, [])
+    d0 = value_decision(_zones(path, "status"), ["GONE"])
+    assert (d0.answer, d0.undecided) == (0, [])
 
 
 def test_value_zone_unclustered_matches_plain(spark, tmp_path):
@@ -503,36 +500,32 @@ def test_value_zone_unclustered_matches_plain(spark, tmp_path):
 
 
 def test_value_zone_int_column(spark, tmp_path):
-    from linkml_store_spark.operators.topk import (
-        _file_value_zone_decision,
-        zone_value_count,
-    )
+    from linkml_store_spark.operators.topk import zone_value_count
 
     path = str(tmp_path / "intvals")
     rows = [(i, i % 4) for i in range(8000)]
     df = spark.createDataFrame(rows, ["id", "bucket"])
     df.repartition(4, "bucket").sortWithinPartitions("bucket").write.parquet(path)
-    meta, undecided = _file_value_zone_decision(path, "bucket", [2])
-    assert undecided == [] and meta == 2000
+    d = value_decision(_zones(path, "bucket"), [2])
+    assert d.undecided == [] and d.answer == 2000
     assert zone_value_count(spark, path, "bucket", [1, 3]) == 4000
 
 
 def test_value_zone_refusals(spark, tmp_path):
-    from linkml_store_spark.operators.topk import _file_value_zone_decision
-
     path = str(tmp_path / "refuse")
     spark.createDataFrame(
         [(1, "café"), (2, "abc")], ["id", "s"]
     ).coalesce(1).write.parquet(path)
+    zones = _zones(path, "s")
     # non-ASCII probe value: legacy signed-byte orderings could diverge
-    assert _file_value_zone_decision(path, "s", ["café"]) is None
+    assert value_decision(zones, ["café"]) is None
     # non-ASCII stats leave the file undecided even for an ASCII probe
-    meta, undecided = _file_value_zone_decision(path, "s", ["abc"])
-    assert len(undecided) == 1 and meta == 0
+    d = value_decision(zones, ["abc"])
+    assert len(d.undecided) == 1 and d.answer == 0
     # bool / None / mixed-type values refuse
-    assert _file_value_zone_decision(path, "s", [True]) is None
-    assert _file_value_zone_decision(path, "s", [None]) is None
-    assert _file_value_zone_decision(path, "s", ["a", 1]) is None
+    assert value_decision(zones, [True]) is None
+    assert value_decision(zones, [None]) is None
+    assert value_decision(zones, ["a", 1]) is None
 
 
 def test_collection_value_count_routes_through_zone(spark, tmp_path, monkeypatch):
@@ -559,6 +552,47 @@ def test_collection_value_count_routes_through_zone(spark, tmp_path, monkeypatch
     assert res2.num_rows == 2000
 
 
+def test_zone_records_follow_the_store_version(spark, tmp_path, monkeypatch):
+    """A Collection's zone records belong to one store version: after an
+    insert that widens the columns' ranges, the repeated range count,
+    ``$in`` count and sorted find read the new version's records and
+    match the plain Spark plan."""
+    from linkml_store_spark.client import Client
+    from linkml_store_spark.query import Query
+
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
+    db = Client(spark).attach_database(f"spark://{tmp_path}/zver")
+    coll = db.create_collection("t", identifier_attribute="id")
+    rows = [(i, float(i % 50), i % 7) for i in range(600)]
+    df = spark.createDataFrame(rows, "id long, qty double, n long")
+    coll.insert(df.repartitionByRange(3, "qty").sortWithinPartitions("qty"))
+
+    def reads():
+        return (
+            coll.query(Query(where_clause={"qty": {"$gte": 40.0}}, limit=0))
+            .num_rows,
+            coll.query(Query(where_clause={"n": {"$in": [3, 9]}}, limit=0))
+            .num_rows,
+            [r["qty"] for r in coll.find(sort_by=["-qty"], limit=5).rows],
+        )
+
+    def plain():
+        d = coll.df
+        return (
+            d.filter(F.col("qty") >= 40.0).count(),
+            d.filter(F.col("n").isin(3, 9)).count(),
+            [r["qty"] for r in d.orderBy(F.desc_nulls_last("qty"))
+             .limit(5).collect()],
+        )
+
+    assert reads() == plain()
+    assert max(z.hi for _fp, zs in coll._zones("qty") for z in zs) == 49.0
+    coll.insert([{"id": 600 + i, "qty": 100.0 + i, "n": 9} for i in range(4)])
+    assert reads() == plain()
+    zones = coll._version.memos[("zones", "qty")]
+    assert max(z.hi for _fp, zs in zones for z in zs) == 103.0
+
+
 # --------------------------------------------------------------------- #
 # string sort keys: truncation-safe min-mass pruning
 # --------------------------------------------------------------------- #
@@ -576,23 +610,26 @@ def test_topk_threshold_min_mass_only_suppresses_bound1():
 
 
 def test_string_stats_ascii_guard(spark, tmp_path):
-    from linkml_store_spark.operators.topk import _row_group_stats_string
+    def groups(path, col):
+        return [z for _fp, zs in _zones(path, col) for z in zs]
 
     p1 = str(tmp_path / "ascii")
     spark.createDataFrame(
         [("alpha",), ("omega",), (None,)], "s string"
     ).coalesce(1).write.parquet(p1)
-    st = _row_group_stats_string(p1, "s")
-    assert st == [("alpha", "omega", 2)]  # nulls excluded from mass
+    (z,) = groups(p1, "s")
+    # nulls excluded from mass
+    assert (z.lo, z.hi, z.nonnull, z.ascii) == ("alpha", "omega", 2, True)
     p2 = str(tmp_path / "nonascii")
     spark.createDataFrame([("café",), ("abc",)], "s string").coalesce(
         1
     ).write.parquet(p2)
-    assert _row_group_stats_string(p2, "s") is None
-    # numeric column refuses through the string path
+    assert not any(z.ascii for z in groups(p2, "s"))
+    assert topk_decision(_zones(p2, "s"), 1) is None
+    # a numeric column is exact, never ascii
     p3 = str(tmp_path / "nums")
     spark.createDataFrame([(1,), (2,)], "v long").coalesce(1).write.parquet(p3)
-    assert _row_group_stats_string(p3, "v") is None
+    assert all(z.exact and not z.ascii for z in groups(p3, "v"))
 
 
 def test_topk_stats_pruned_string_column(spark, tmp_path):
@@ -633,6 +670,6 @@ def test_collection_string_sort_prunes_and_matches(spark, tmp_path, monkeypatch)
     res = coll.find(sort_by=["-handle"], limit=9)
     plain = coll.df.orderBy(F.desc_nulls_last("handle")).limit(9).collect()
     assert [r["handle"] for r in res.rows] == [r["handle"] for r in plain]
-    # the stats cache now holds the string-kind entry
-    kind, st = coll._version.memos[("sort_stats", "handle")]
-    assert kind == "str" and st is not None
+    # the store version now holds the key's string zone records
+    zones = coll._version.memos[("zones", "handle")]
+    assert all(z.ascii for _fp, zs in zones for z in zs)
