@@ -1929,16 +1929,21 @@ class Collection:
     # set operations (§2.7 extension surface — free in Spark)
     # ------------------------------------------------------------------ #
     def union(self, other: "Collection") -> DataFrame:
-        return self.df.unionByName(other.df, allowMissingColumns=True)
+        return self._read_df().unionByName(
+            other._read_df(), allowMissingColumns=True
+        )
 
     def intersect(self, other: "Collection") -> DataFrame:
-        return self.df.intersect(other.df.select(*self.df.columns))
+        df = self._read_df()
+        return df.intersect(other._read_df().select(*df.columns))
 
     def except_all(self, other: "Collection") -> DataFrame:
-        return self.df.exceptAll(other.df.select(*self.df.columns))
+        df = self._read_df()
+        return df.exceptAll(other._read_df().select(*df.columns))
 
     def distinct(self, cols: Optional[List[str]] = None) -> DataFrame:
-        return (self.df.select(*cols) if cols else self.df).distinct()
+        df = self._read_df()
+        return (df.select(*cols) if cols else df).distinct()
 
     # ------------------------------------------------------------------ #
     # layout maintenance (scale extension)
@@ -1979,14 +1984,14 @@ class Collection:
         from linkml_store_spark.operators.splits import hash_split
 
         return hash_split(
-            self.df, id_col or self._require_pk(), fractions, salt=salt
+            self._read_df(), id_col or self._require_pk(), fractions, salt=salt
         )
 
     def scrub(self, text_col: str = "text", kinds=None) -> DataFrame:
         """PII redaction projection (operators/scrub.py)."""
         from linkml_store_spark.operators.scrub import scrub_documents
 
-        return scrub_documents(self.df, text_col, kinds=kinds)
+        return scrub_documents(self._read_df(), text_col, kinds=kinds)
 
     def chunk(
         self,
@@ -2003,10 +2008,10 @@ class Collection:
 
         if by_tokens:
             return chunk_by_tokens(
-                self.df, text_col, chunk_tokens=chunk_size, stride=stride
+                self._read_df(), text_col, chunk_tokens=chunk_size, stride=stride
             )
         return chunk_by_chars(
-            self.df, text_col, chunk_chars=chunk_size, stride=stride
+            self._read_df(), text_col, chunk_chars=chunk_size, stride=stride
         )
 
     def rollup(
@@ -2017,7 +2022,7 @@ class Collection:
         from linkml_store_spark.operators.rollup import time_rollup
 
         return time_rollup(
-            self.df, ts_col, aggs, grains=grains, keys=keys,
+            self._read_df(), ts_col, aggs, grains=grains, keys=keys,
             include_total=include_total,
         )
 
@@ -2025,7 +2030,7 @@ class Collection:
         """HLL-sketch distinct count (operators/sketches.py)."""
         from linkml_store_spark.operators.sketches import approx_distinct_by
 
-        return approx_distinct_by(self.df, col, by=by)
+        return approx_distinct_by(self._read_df(), col, by=by)
 
     def decontaminate_against(
         self,
@@ -2040,8 +2045,8 @@ class Collection:
         from linkml_store_spark.operators.contamination import ngram_contamination
 
         return ngram_contamination(
-            self.df,
-            test_collection.df,
+            self._read_df(),
+            test_collection._read_df(),
             text_col,
             id_col or test_collection._require_pk(),
             n=n,
@@ -2059,10 +2064,11 @@ class Collection:
             bigram_lm_scores,
         )
 
+        df = self._read_df()
         if model is None:
-            model = bigram_lm_fit(self.df, text_col)
+            model = bigram_lm_fit(df, text_col)
         return bigram_lm_scores(
-            self.df, model, text_col, id_col or self._require_pk()
+            df, model, text_col, id_col or self._require_pk()
         )
 
     def keyword_screen(
@@ -2072,7 +2078,7 @@ class Collection:
         from linkml_store_spark.operators.textanalysis import keyword_filter
 
         return keyword_filter(
-            self.df, text_col, blocklist, id_col=self._require_pk(),
+            self._read_df(), text_col, blocklist, id_col=self._require_pk(),
             max_hits=max_hits,
         )
 
@@ -2080,7 +2086,7 @@ class Collection:
         """Deterministic at-most-n rows per key (operators/splits.py)."""
         from linkml_store_spark.operators.splits import cap_per_key
 
-        return cap_per_key(self.df, key_col, self._require_pk(), n)
+        return cap_per_key(self._read_df(), key_col, self._require_pk(), n)
 
     def dedup_near(self, text_col: str = "text", id_col: Optional[str] = None):
         """Cluster-canonical near-dedup (operators/dedup.py):
@@ -2088,7 +2094,7 @@ class Collection:
         from linkml_store_spark.operators.dedup import minhash_dedup_groups
 
         return minhash_dedup_groups(
-            self.df, text_col, id_col or self._require_pk()
+            self._read_df(), text_col, id_col or self._require_pk()
         )
 
     def dedup_spans(
@@ -2104,8 +2110,8 @@ class Collection:
 
         idc = id_col or self._require_pk()
         if stats_only:
-            return duplicated_span_stats(self.df, text_col, idc, k=k)
-        return dedup_spans_keep_first(self.df, text_col, idc, k=k)
+            return duplicated_span_stats(self._read_df(), text_col, idc, k=k)
+        return dedup_spans_keep_first(self._read_df(), text_col, idc, k=k)
 
     def dedup_segments(
         self, text_col: str = "text", id_col: Optional[str] = None,
@@ -2117,7 +2123,7 @@ class Collection:
         from linkml_store_spark.operators.spandedup import remove_duplicate_segments
 
         return remove_duplicate_segments(
-            self.df, text_col, id_col or self._require_pk(),
+            self._read_df(), text_col, id_col or self._require_pk(),
             sep_regex=sep_regex, tokens_per_segment=tokens_per_segment,
         )
 
@@ -2131,7 +2137,7 @@ class Collection:
         from linkml_store_spark.operators.semdedup import semantic_dedup
 
         return semantic_dedup(
-            self.df, vector_col, id_col or self._require_pk(),
+            self._read_df(), vector_col, id_col or self._require_pk(),
             threshold=threshold, n_clusters=n_clusters, keep=keep,
         )
 
@@ -2148,7 +2154,7 @@ class Collection:
             weak_quality_labels,
         )
 
-        df = self.df
+        df = self._read_df()
         if label_col is None:
             df = weak_quality_labels(df, text_col, "label", weak_label_threshold)
             label_col = "label"
@@ -2161,14 +2167,14 @@ class Collection:
         list for ``operators/bpe.bpe_encode`` (operators/bpe.py)."""
         from linkml_store_spark.operators.bpe import train_bpe
 
-        return train_bpe(self.df, text_col, num_merges=num_merges, **kw)
+        return train_bpe(self._read_df(), text_col, num_merges=num_merges, **kw)
 
     def shuffle(self, salt: str = "shuffle", id_col: Optional[str] = None) -> DataFrame:
         """Deterministic epoch-reproducible global shuffle
         (operators/splits.py)."""
         from linkml_store_spark.operators.splits import deterministic_shuffle
 
-        return deterministic_shuffle(self.df, id_col or self._require_pk(), salt=salt)
+        return deterministic_shuffle(self._read_df(), id_col or self._require_pk(), salt=salt)
 
     def sample_tokens(
         self, budget: int, text_col: str = "text", by=(),
@@ -2179,7 +2185,7 @@ class Collection:
         from linkml_store_spark.operators.splits import token_budget_sample
 
         return token_budget_sample(
-            self.df, text_col, budget, id_col or self._require_pk(),
+            self._read_df(), text_col, budget, id_col or self._require_pk(),
             by=by, salt=salt,
         )
 
@@ -2315,7 +2321,7 @@ class Collection:
         """Write the collection to a file (reference collection.py:1177)."""
         from linkml_store_spark.sources.formats import write_collection
 
-        return write_collection(self.df, location, format)
+        return write_collection(self._read_df(), location, format)
 
     def import_data(self, location: str, format: Optional[str] = None, **kwargs) -> int:
         """Load a file into the collection (reference collection.py:1167)."""

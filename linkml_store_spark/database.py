@@ -177,6 +177,11 @@ class Database:
         if os.path.exists(path):
             shutil.rmtree(path)
         os.replace(tmp, path)
+        # Spark's writer refreshes the caches over the path it wrote, which
+        # is ``tmp``; a frame cached over ``path`` (a user's ``df.cache()``,
+        # an operator's persist) would otherwise answer every later plan
+        # over the store with the old rows
+        self.spark.catalog.refreshByPath(path)
 
     def _register_view(self, alias: str) -> None:
         coll = self._collections.get(alias)

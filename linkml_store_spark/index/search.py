@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from linkml_store_spark.functions.vector import cosine_similarity, vec_lit
 from linkml_store_spark.index.indexer import INDEX_COLUMN
+from linkml_store_spark.operators.localexec import row_dots
 from linkml_store_spark.where import WhereClause, apply_where
 
 #: above this dimensionality the unrolled JVM cosine expression stops being
@@ -197,16 +198,21 @@ def mmr_diversified_search(
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0] = 1.0
     qn = np.linalg.norm(query_vector) or 1.0
-    rel = (mat @ query_vector) / (norms * qn)
-    sim = (mat @ mat.T) / np.outer(norms, norms)
+    rel = row_dots(mat, query_vector) / (norms * qn)
+    # each pick's similarity column, folded into a running max: only
+    # top_n of the n x n similarity matrix is ever read
+    max_sim = np.full(n, -np.inf)
     selected: List[int] = []
     remaining = set(range(n))
     while len(selected) < top_n and remaining:
         if not selected:
             best = int(np.argmax(rel))
         else:
+            last = selected[-1]
+            max_sim = np.maximum(
+                max_sim, row_dots(mat, mat[last]) / (norms * norms[last])
+            )
             best, best_score = -1, -np.inf
-            max_sim = sim[:, selected].max(axis=1)
             for i in remaining:
                 score = relevance_factor * rel[i] - (1 - relevance_factor) * max_sim[i]
                 if score > best_score:

@@ -1474,6 +1474,16 @@ def row_norms(X):
     return np.sqrt(np.einsum("ij,ij->i", X, X))
 
 
+def row_dots(X, y):
+    """Dot product of each row of ``X`` with the vector ``y`` (``X @ y``),
+    summed by ``np.einsum``, not BLAS: OpenBLAS threads a product of a
+    few thousand elements, and its idle pool threads then spin for
+    hundreds of ms of CPU through every later call of the process."""
+    import numpy as np
+
+    return np.einsum("ij,j->i", X, y)
+
+
 def knn_top(
     X,
     query_vector: Sequence[float],
@@ -1507,11 +1517,11 @@ def knn_top(
             if zero_norm != "zero":
                 raise Unsupported("zero-norm vector")
             with np.errstate(divide="ignore", invalid="ignore"):
-                scores = np.where(denom == 0.0, 0.0, (X @ q) / denom)
+                scores = np.where(denom == 0.0, 0.0, row_dots(X, q) / denom)
         else:
-            scores = (X @ q) / denom
+            scores = row_dots(X, q) / denom
     elif metric == "dot":
-        scores = X @ q
+        scores = row_dots(X, q)
     elif metric == "euclidean":
         # the STABLE sum-of-squared-differences form, matching the native
         # JVM kernel (dims <= 128, the usual local-tier case) — the

@@ -6,6 +6,11 @@ driver-side numpy oracle. Reference search itself is cosine-only
 that ``find_matches``/``ivf_knn_join`` already expose, so single-query
 kNN accepts the same four."""
 
+import glob
+import os
+import threading
+import time
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -169,32 +174,127 @@ def test_collection_knn_metric_routes_and_matches(spark, tmp_path, emb_rows):
     ]
 
 
-def test_local_tier_knn_metrics_match_oracle(spark, tmp_path, emb_rows):
+@pytest.fixture(scope="module")
+def threaded_store(tmp_path_factory):
+    """(parquet path, oracle rows) of a seeded 2,000 x 64 float64 store
+    with a text column: 128,000 elements, far past the ~9,216 from which
+    OpenBLAS threads an ``X @ q``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(11)
+    M = rng.standard_normal((2000, 64))
+    words = np.array(["river", "stone", "harbor", "lantern", "meadow",
+                      "copper", "falcon", "orchard", "glacier", "violet"])
+    texts = [" ".join(rng.choice(words, size=5)) + f" n{i}"
+             for i in range(len(M))]
+    path = str(tmp_path_factory.mktemp("threaded") / "emb.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(len(M)), pa.int64()),
+        "embedding": pa.array(M.tolist(), pa.list_(pa.float64())),
+        "text": texts,
+    }), path)
+    rows = [{"vec_id": i, "embedding": v} for i, v in enumerate(M.tolist())]
+    return path, rows
+
+
+def test_local_tier_knn_metrics_match_oracle(
+    spark, tmp_path, monkeypatch, emb_rows, threaded_store
+):
     """The in-process local tier serves every metric with the same values
-    as the numpy oracle (and therefore the Spark plan it mirrors)."""
+    as the numpy oracle and as the Spark plan it mirrors, on the test
+    embeddings and on a store whose product OpenBLAS would thread."""
     from linkml_store_spark.client import Client
     from linkml_store_spark.operators import localexec as lx
 
     client = Client(spark=spark)
     db = client.attach_database(f"file:{tmp_path}/wh", alias="wh")
-    coll = db.create_collection("emb", identifier_attribute="vec_id")
-    coll.insert(spark.read.parquet(EMB))
-    qv = [float(x) for x in emb_rows[4]["embedding"]]
+    for store, (path, src) in {
+        "emb": (EMB, emb_rows), "threaded": threaded_store
+    }.items():
+        coll = db.create_collection(store, identifier_attribute="vec_id")
+        coll.insert(spark.read.parquet(path))
+        qv = [float(x) for x in src[4]["embedding"]]
 
-    gate = coll._local_tier_gate("knn")
-    assert gate is not None, "sf0.001 embeddings must be inside the gate"
-    schema, _total = gate
-    files = [fp for fp, _md in coll._store_metas()]
-    for metric in ("cosine", "dot", "euclidean", "manhattan"):
-        rows = lx.local_knn(
-            files, schema, "embedding", qv, 6, metric=metric
+        gate = coll._local_tier_gate("knn")
+        assert gate is not None, f"the {store} store must be inside the gate"
+        schema, _total = gate
+        files = [fp for fp, _md in coll._store_metas()]
+        for metric in ("cosine", "dot", "euclidean", "manhattan"):
+            rows = lx.local_knn(
+                files, schema, "embedding", qv, 6, metric=metric
+            )
+            want = _oracle(src, qv, metric, 6)
+            assert [round(r["score"], 9) for r in rows] == [
+                round(s, 9) for _, s in want
+            ], (store, metric)
+            # end-to-end through the routed API too
+            res = coll.knn_search(qv, k=6, metric=metric)
+            assert [round(s, 9) for s, _ in res.ranked_rows] == [
+                round(s, 9) for _, s in want
+            ], (store, metric)
+            if store != "threaded" or metric not in ("cosine", "dot"):
+                continue
+            with monkeypatch.context() as m:
+                m.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
+                ref = coll.knn_search(qv, k=6, metric=metric)
+            for got in (res, ref):
+                assert [r["vec_id"] for r in got.rows] == [i for i, _ in want]
+            for (a, _), (b, _), (_i, w) in zip(
+                res.ranked_rows, ref.ranked_rows, want
+            ):
+                assert abs(a - w) < 1e-9 and abs(a - b) < 1e-9, metric
+
+
+def _thread_cpu_ms():
+    """{thread id: utime + stime in ms} of every thread of this process."""
+    tick = os.sysconf("SC_CLK_TCK")
+    out = {}
+    for stat in glob.glob("/proc/self/task/*/stat"):
+        try:
+            with open(stat) as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+        except FileNotFoundError:  # the thread exited
+            continue
+        out[int(stat.split("/")[-2])] = (
+            (int(fields[11]) + int(fields[12])) * 1000 / tick
         )
-        want = _oracle(emb_rows, qv, metric, 6)
-        assert [round(r["score"], 9) for r in rows] == [
-            round(s, 9) for _, s in want
-        ], metric
-        # end-to-end through the routed API too
-        res = coll.knn_search(qv, k=6, metric=metric)
-        assert [round(s, 9) for s, _ in res.ranked_rows] == [
-            round(s, 9) for _, s in want
-        ], metric
+    return out
+
+
+@pytest.mark.skipif(
+    not os.path.exists("/proc/self/task"), reason="needs Linux /proc"
+)
+def test_local_knn_and_search_leave_no_thread_spinning(
+    spark, tmp_path, threaded_store
+):
+    """The in-process kNN and search products run on the calling thread
+    alone: no other driver thread gains CPU across them. A product that
+    OpenBLAS threads leaves its idle pool threads spinning for 100+ ms of
+    CPU after the call."""
+    from linkml_store_spark import Database
+
+    path, rows = threaded_store
+    coll = Database(spark, location=str(tmp_path / "db")).create_collection(
+        "emb", identifier_attribute="vec_id"
+    )
+    coll.insert(spark.read.parquet(path))
+    coll.attach_indexer("simple")
+    queries = [rows[i]["embedding"] for i in range(20)]
+
+    def calls():
+        for qv in queries:
+            assert coll.knn_search(qv, k=10).num_rows == 10
+        assert coll.search(
+            "harbor lantern", limit=10, mmr_relevance_factor=0.5
+        ).num_rows == 10
+        time.sleep(0.3)  # a pool thread spins on after the last call
+
+    calls()  # warm: the store image and the in-process text index
+    before = _thread_cpu_ms()
+    calls()
+    after = _thread_cpu_ms()
+    me = threading.get_native_id()
+    gained = {tid: ms - before.get(tid, 0.0) for tid, ms in after.items()
+              if tid != me}
+    assert max(gained.values(), default=0.0) <= 20.0, gained

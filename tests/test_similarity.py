@@ -82,6 +82,34 @@ def test_mmr_diversifies():
     order_div = mmr_diversified_search(q, vecs, relevance_factor=0.1, top_n=2)
     assert order_div[0] == 0 and order_div[1] == 2  # diversification jumps to v2
 
+    def blas_mmr(qv, pool, lam, top_n):
+        """The same MMR with numpy's BLAS products: the order to keep."""
+        mat = np.stack(pool)
+        norms = np.linalg.norm(mat, axis=1)
+        norms[norms == 0] = 1.0
+        rel = (mat @ qv) / (norms * (np.linalg.norm(qv) or 1.0))
+        sim = (mat @ mat.T) / np.outer(norms, norms)
+        picked, left = [], set(range(len(pool)))
+        while len(picked) < top_n and left:
+            if not picked:
+                best = int(np.argmax(rel))
+            else:
+                red = sim[:, picked].max(axis=1)
+                best = max(left, key=lambda i: (lam * rel[i] - (1 - lam) * red[i], -i))
+            picked.append(best)
+            left.discard(best)
+        return picked
+
+    rng = np.random.default_rng(5)
+    for n, dim in ((40, 64), (40, 1000), (200, 16)):
+        pool = list(rng.standard_normal((n, dim)))
+        pool[n // 2] = np.zeros(dim)  # a zero-norm candidate
+        qv = rng.standard_normal(dim)
+        for lam in (0.1, 0.5, 1.0):
+            assert mmr_diversified_search(qv, pool, lam, top_n=10) == blas_mmr(
+                qv, pool, lam, 10
+            ), (n, dim, lam)
+
 
 def test_ivf_index_roundtrip_prunes_partitions(spark, tmp_path):
     import pyspark.sql.functions as F

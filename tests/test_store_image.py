@@ -6,13 +6,17 @@ Pinned here: repeated reads open no parquet file; every write kind
 drops the image and the next reads match the Spark path; the resident
 images stay inside the byte budget; a column loads alone on first use;
 and a write through another handle on the same location is seen by the
-next read instead of serving stale rows or naming deleted files.
+next read instead of serving stale rows or naming deleted files, and
+a frame cached over the store does not outlive a write.
 """
 
 import logging
+import os
+from datetime import datetime, timedelta
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from linkml_store_spark import Database
 from linkml_store_spark.operators import localexec as lx
@@ -199,6 +203,18 @@ def test_write_through_another_handle_is_seen(spark, tmp_path):
     assert reads(c1) == fresh
 
 
+def _other(c):
+    """An in-memory collection holding one row the store does not."""
+    other = Database(c.spark).create_collection("o", identifier_attribute="id")
+    other.insert(c.spark.createDataFrame(_stale_rows(1, start=-1), _STALE_SCHEMA))
+    return other
+
+
+def _exported_rows(c):
+    out = c.export_data(os.path.join(os.path.dirname(c.database.location), "out"))
+    return c.spark.read.parquet(out).count()
+
+
 #: every public read that runs on Spark without a local-tier entry, as
 #: a row count over the collection
 _SPARK_READS = {
@@ -215,7 +231,43 @@ _SPARK_READS = {
             limit=0, include_facet_counts=True, facet_slots=["cat"]
         ).facet_counts["cat"]
     ),
+    "distinct": lambda c: c.distinct().count(),
+    "union": lambda c: c.union(c).count() // 2,
+    "intersect": lambda c: c.intersect(c).count(),
+    "except_all": lambda c: c.except_all(_other(c)).count(),
+    "scrub": lambda c: c.scrub("cat").count(),
+    "split": lambda c: c.split().count(),
+    "chunk": lambda c: c.chunk("tag").count(),
+    "rollup": lambda c: c.rollup(
+        "ts", {"c": F.count("*")}, grains=("year",)
+    ).collect()[0]["c"],
+    "approx_distinct": lambda c: c.approx_distinct("id")
+    .collect()[0]["approx_distinct"],
+    "dedup_near": lambda c: c.dedup_near("tag").count(),
+    "dedup_spans": lambda c: c.dedup_spans("tag", k=2, stats_only=True)
+    .count(),
+    "dedup_segments": lambda c: c.dedup_segments("tag").count(),
+    "dedup_semantic": lambda c: c.dedup_semantic("emb", n_clusters=2).count(),
+    "decontaminate_against": lambda c: c.decontaminate_against(
+        c, "tag", n=2
+    ).count(),
+    "lm_quality": lambda c: c.lm_quality("tag").count(),
+    "keyword_screen": lambda c: c.keyword_screen(["store"], "tag").count(),
+    "cap":lambda c: c.cap("id", 1).count(),
+    "shuffle": lambda c: c.shuffle().count(),
+    "sample_tokens": lambda c: c.sample_tokens(10**6, "tag").count(),
+    "export_data": _exported_rows,
 }
+
+#: the store of the stale-handle test: every row has a text and a time
+_STALE_SCHEMA = SCHEMA + ", tag string, ts timestamp"
+
+
+def _stale_rows(n, start=0):
+    return [
+        r + (f"tag {i} of the store", datetime(2026, 1, 1) + timedelta(hours=i))
+        for i, r in zip(range(start, start + n), _rows(n, start))
+    ]
 
 
 @pytest.mark.parametrize("read", sorted(_SPARK_READS))
@@ -225,13 +277,31 @@ def test_stale_handle_reads_after_another_handle_writes(spark, tmp_path, read):
     loc = str(tmp_path / "stale")
     Database(spark, location=loc).create_collection(
         "t", identifier_attribute="id"
-    ).insert(spark.createDataFrame(_rows(30), SCHEMA))
-    stale = Database(spark, location=loc).get_collection("t")
-    assert _SPARK_READS[read](stale) == 30
-    Database(spark, location=loc).get_collection("t").insert(
-        _dicts(_rows(5, start=30))
+    ).insert(spark.createDataFrame(_stale_rows(30), _STALE_SCHEMA))
+    stale = Database(spark, location=loc).create_collection(
+        "t", identifier_attribute="id"
     )
+    assert _SPARK_READS[read](stale) == 30
+    Database(spark, location=loc).get_collection("t").insert([
+        dict(zip(["id", "cat", "qty", "n", "emb", "tag", "ts"], r))
+        for r in _stale_rows(5, start=30)
+    ])
     assert _SPARK_READS[read](stale) == 35
+
+
+def test_write_refreshes_frames_cached_over_the_store(spark, tmp_path):
+    """Spark matches a cached plan to a later one over the same directory,
+    so a frame cached over the store (a user's ``df.cache()``, the
+    persists ``dedup_near`` leaves) would answer every read after a write
+    with the old rows; the write refreshes them."""
+    c = Database(spark, location=str(tmp_path / "cached")).create_collection(
+        "t", identifier_attribute="id"
+    )
+    c.insert(spark.createDataFrame(_rows(30), SCHEMA))
+    assert c.df.cache().count() == 30
+    c.insert(_dicts(_rows(5, start=30)))
+    assert c.df.count() == c.distinct().count() == 35
+    c.df.unpersist()
 
 
 @pytest.mark.parametrize("first", ["find", "size"])
