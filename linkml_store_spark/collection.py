@@ -43,6 +43,7 @@ from linkml_store_spark.where import (
     compile_where,
     fast_count,
     path_col,
+    zone_clause,
 )
 
 if TYPE_CHECKING:
@@ -426,7 +427,7 @@ class Collection:
         new_df = objs if isinstance(objs, DataFrame) else self._objects_to_df(objs)
         self._pre_insert_hook(new_df)
         if self.exists():
-            base = self.df
+            base = self._read_df()
             new_df = self._align(new_df, base.schema)
             combined = base.unionByName(new_df)
         else:
@@ -453,7 +454,7 @@ class Collection:
         (reference duckdb_collection.py:49-66)."""
         if isinstance(objs, dict):
             objs = [objs]
-        base = self.df
+        base = self._read_df()
         cond = None
         for obj in objs:
             c = compile_where(dict(obj), base)
@@ -473,7 +474,7 @@ class Collection:
             if missing_ok:
                 return 0
             raise ValueError(f"collection {self.alias!r} does not exist")
-        base = self.df
+        base = self._read_df()
         cond = compile_where(where, base)
         if cond is None:
             n = base.count()
@@ -492,7 +493,7 @@ class Collection:
         if isinstance(objs, dict):
             objs = [objs]
         pk = self._require_pk()
-        base = self.df
+        base = self._read_df()
         upd = self.spark.createDataFrame(list(objs))
         upd_cols = [c for c in upd.columns if c != pk]
         joined = base.alias("t").join(
@@ -547,7 +548,7 @@ class Collection:
             return
         if filter_fields is None:
             filter_fields = [self._require_pk()]
-        base = self.df
+        base = self._read_df()
         incoming = self._align(incoming, base.schema)
         if update_fields is None:
             update_fields = [c for c in incoming.columns if c not in filter_fields]
@@ -827,9 +828,8 @@ class Collection:
             lx._check_output_types(
                 schema, sel if sel is not None else [f.name for f in schema]
             )
-        except lx.Unsupported:
-            return None
-        except Exception:  # noqa: BLE001 — any analysis surprise: Spark path
+        except lx.Unsupported as e:
+            self._log_refusal("query", e)
             return None
 
         session_tz = self._session_tz()
@@ -933,9 +933,8 @@ class Collection:
             sel = list(query.select_cols) if query.select_cols else None
             if sel is not None and any(c not in out_names for c in sel):
                 return None
-        except lx.Unsupported:
-            return None
-        except Exception:  # noqa: BLE001
+        except lx.Unsupported as e:
+            self._log_refusal("aggregate", e)
             return None
         limit = DEFAULT_LIMIT if query.limit is None else query.limit
         eff_limit = None if (limit is None or limit < 0) else limit
@@ -1038,30 +1037,25 @@ class Collection:
             return None if totals is None else totals[0]
         from pyarrow import ArrowException
 
-        rng = _simple_range_clause(where, self.df)
-        if rng is not None:
-            try:
-                n = self._version.memo(
-                    ("count",) + rng, lambda: self._range_count(rng)
-                )
-            except (ArrowException, OSError, TypeError, ValueError):
-                n = None  # a footer read or stats comparison failed
-            if n is not None:
-                return n
-        vc = _simple_value_clause(where, self.df)
-        if vc is None:
+        zc = zone_clause(where, self.df.schema)
+        if zc is None:
             return None
+        kind, args = zc
         try:
+            if kind == "range":
+                return self._version.memo(
+                    ("count",) + args, lambda: self._range_count(args)
+                )
             return self._version.memo(
-                ("vcount", vc[0], tuple(vc[1])),
-                lambda: self._value_predicate_count(*vc),
+                ("vcount", args[0], tuple(args[1])),
+                lambda: self._value_predicate_count(*args),
             )
         except (ArrowException, OSError, TypeError, ValueError):
             return None  # a footer read or stats comparison failed
 
     def _range_count(self, rng) -> Optional[int]:
         """The zone-map count (``operators/topk.range_decision``) of a
-        :func:`_simple_range_clause` over the store: footer-decided files
+        ``where.zone_clause`` range over the store: footer-decided files
         from metadata, the rest through a pushed range scan of just those
         files (its plan memoized). None when the store path is missing."""
         import os as _os
@@ -1465,6 +1459,13 @@ class Collection:
             self.database._session_tz_memo = tz
         return tz
 
+    def _log_refusal(self, call: str, reason) -> None:
+        """DEBUG-log why the local tier refused a call (Spark runs it)."""
+        _tier_log.debug(
+            "collection %s: local tier refused the %s (%s), running the "
+            "Spark path", self.alias, call, reason,
+        )
+
     def _local_tier_gate(self, kind: str):
         """(schema, total_rows) when this store's footers admit a ``kind``
         call to the local tier (``localexec.local_tier_admits``), else
@@ -1525,9 +1526,8 @@ class Collection:
                 for c in parts:
                     w = exclude_column(w, c)
                 conds[id(col)] = lx.compile_where_local(w, schema)
-        except lx.Unsupported:
-            return None
-        except Exception:  # noqa: BLE001
+        except lx.Unsupported as e:
+            self._log_refusal("facets", e)
             return None
 
         try:
@@ -2391,108 +2391,3 @@ def _sort_col(spec):
     base, descending = _sort_parse(spec)
     col = F.col(base)
     return col.desc_nulls_last() if descending else col.asc_nulls_last()
-
-
-def _simple_range_clause(where, df):
-    """(col, lo, hi, lo_inclusive, hi_inclusive) when ``where`` is a
-    single-column numeric range/equality dict whose zone-map count is
-    provably identical to the compiled predicate's count, else None.
-
-    Deliberately NARROW: plain column name (no dots/operators), numeric
-    column dtype (array equality means containment in the where-language,
-    string stats may be truncated, string timestamps compare unsafely
-    against datetime footer stats), numeric literal bounds, and only the
-    $gt/$gte/$lt/$lte operators (plus bare equality). Everything else
-    returns None and the caller takes the normal count plan.
-    """
-    import numbers
-
-    if not isinstance(where, dict) or len(where) != 1:
-        return None
-    col, spec = next(iter(where.items()))
-    if not isinstance(col, str) or col.startswith("$") or "." in col:
-        return None
-    try:
-        if not isinstance(df.schema[col].dataType, T.NumericType):
-            return None
-    except Exception:  # noqa: BLE001 — unknown column: let the plan fail
-        return None
-
-    def _num(v):
-        return isinstance(v, numbers.Number) and not isinstance(v, bool)
-
-    if isinstance(spec, dict):
-        lo = hi = None
-        lo_inc = hi_inc = True
-        for op, v in spec.items():
-            if not _num(v):
-                return None
-            # both ops of one side may appear ({"$gte": 5, "$gt": 3}); the
-            # compiled predicate ANDs them, so the clause must INTERSECT —
-            # keep the stricter bound (ties: exclusive beats inclusive)
-            if op in ("$gte", "$gt"):
-                inc = op == "$gte"
-                if lo is None or v > lo or (v == lo and not inc):
-                    lo, lo_inc = v, inc
-            elif op in ("$lte", "$lt"):
-                inc = op == "$lte"
-                if hi is None or v < hi or (v == hi and not inc):
-                    hi, hi_inc = v, inc
-            else:
-                return None
-        if lo is None and hi is None:
-            return None
-        return col, lo, hi, lo_inc, hi_inc
-    if _num(spec):
-        return col, spec, spec, True, True
-    return None
-
-
-def _simple_value_clause(where, df):
-    """(col, values) when ``where`` is a single-column equality / ``$eq`` /
-    ``$in`` dict over a string/integer/boolean column with literals of the
-    column's own type — the clauses whose count
-    ``Collection._value_predicate_count`` composes from the value zone map
-    and a pushed-In count. Everything else (None = IS NULL, dotted
-    paths, floats, cross-type literals Spark would cast, other operators)
-    returns None and the caller takes the normal plan.
-    """
-    if not isinstance(where, dict) or len(where) != 1:
-        return None
-    col, spec = next(iter(where.items()))
-    if not isinstance(col, str) or col.startswith("$") or "." in col:
-        return None
-    try:
-        dt = df.schema[col].dataType
-    except Exception:  # noqa: BLE001
-        return None
-    if not isinstance(dt, (T.StringType, T.IntegerType, T.LongType,
-                           T.ShortType, T.ByteType, T.BooleanType)):
-        return None
-
-    def _lit_ok(v):
-        # literal must be the column's own type: a cross-type literal
-        # (string on an int column, ...) goes through Spark's cast
-        # semantics in the plain plan — the shortcut routes must refuse
-        if isinstance(v, bool):
-            return isinstance(dt, T.BooleanType)
-        if isinstance(v, str):
-            return isinstance(dt, T.StringType)
-        if isinstance(v, int):
-            return isinstance(dt, (T.IntegerType, T.LongType,
-                                   T.ShortType, T.ByteType))
-        return False
-
-    if isinstance(spec, dict):
-        if len(spec) != 1:
-            return None
-        op, v = next(iter(spec.items()))
-        if op == "$eq" and v is not None and _lit_ok(v):
-            return col, [v]
-        if (op == "$in" and isinstance(v, (list, tuple)) and v
-                and all(_lit_ok(x) for x in v)):
-            return col, list(v)
-        return None
-    if spec is None or isinstance(spec, (dict, list)) or not _lit_ok(spec):
-        return None
-    return col, [spec]

@@ -35,6 +35,8 @@ from linkml_store_spark.where import (
     exclude_column,
     path_col,
     quote_ident,
+    referenced_paths,
+    under,
 )
 
 FacetKey = Union[str, Tuple[str, ...]]
@@ -256,20 +258,19 @@ def _one_pass_eligible(
     df: DataFrame, where: WhereClause, facet_columns: Sequence[FacetKey]
 ) -> bool:
     """The grouping-sets fast path applies when every facet is a scalar
-    top-level column and the WHERE doesn't mention any facet column (so the
-    per-facet exclusion rewrite is a no-op for all of them)."""
+    top-level column and the WHERE reads none of them (so the per-facet
+    exclusion rewrite is a no-op for all of them); a raw-SQL clause can't
+    be analyzed for exclusion and stays per-column."""
     if len(facet_columns) < 2:
+        return False
+    paths = referenced_paths(where)
+    if paths is None:
         return False
     for c in facet_columns:
         if not isinstance(c, str) or "." in c or _is_array_col(df, c):
             return False
-        if isinstance(where, dict) and any(
-            k == c or k.startswith(c + ".") for k in where
-        ):
+        if any(under(p, c) for p in paths):
             return False
-    if where is not None and not isinstance(where, dict) and where != []:
-        # raw-SQL clauses can't be analyzed for exclusion — stay per-column
-        return False
     return True
 
 

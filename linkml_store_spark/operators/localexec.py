@@ -46,21 +46,27 @@ measured rung at which this tier won the class on every measured box
 (``tools/localtier_scale.py``, SCALING.md "Local-vs-JVM crossover").
 Value parity with the Spark path is pinned by the test suite
 (``tests/test_localexec.py`` and the property tests), not re-checked at
-runtime. An ``Unsupported`` refusal or any exception here runs the Spark
-path instead. ``SPARK_GRAFT_LOCAL_TIER=0`` turns the tier off.
+runtime. An ``Unsupported`` refusal while a call is compiled, or any
+exception while it runs, sends it to the Spark path (logged at DEBUG on
+``linkml_store_spark.localtier``); a malformed clause raises. Setting
+``SPARK_GRAFT_LOCAL_TIER=0`` turns the tier off.
 
-SEMANTIC MIRROR: the where-compiler here accepts only the subset of the
-Mongo-style where-language (``where.py``) it can reproduce EXACTLY with
-Arrow kernels — per-field ``$eq/$ne/$gt/$gte/$lt/$lte/$in/$nin/$like/
-$contains/$exists``, raw-operator spellings, implicit AND, ``$or/$and/
-$not`` (Kleene three-valued logic via ``and_kleene``/``or_kleene``/
-``invert``, matching Spark's SQL semantics: NULL comparisons drop rows,
-``$ne``/``$nin`` are null-rejecting). Dotted paths, ``$regex`` (Java
-vs RE2 dialect risk), ``$size/$mod/$all/$elemMatch/$type``, array-typed
-columns, decimal/map columns, and raw-SQL clauses all REFUSE — the Spark
-path owns them. Known accepted divergence (shared with the zone-map count
-routes): Spark orders NaN above all doubles and equates NaN=NaN, IEEE/
-Arrow do not — same caveat as ``collection._simple_range_clause``.
+SEMANTIC MIRROR: :func:`compile_where_local` lowers the IR of
+``where.parse_where`` — the same tree ``where.compile_where`` lowers to a
+Spark Column, so both tiers read one meaning of every clause — and
+accepts the part it reproduces EXACTLY with Arrow kernels: ``null``,
+``eq``, ``in``, the four comparisons, ``like`` and ``contains`` on plain
+top-level columns, under And/Or/Not (Kleene three-valued logic via
+``and_kleene``/``or_kleene``/``invert``, matching Spark's SQL semantics:
+NULL comparisons drop rows, ``$ne``/``$nin`` are null-rejecting).
+Literals coerce only where the comparison is provably Spark's
+(:func:`_coerce_literal`). Everything else raises :class:`Unsupported`
+with the reason and the Spark path owns it: dotted paths, ``regex``
+(Java vs RE2 dialect risk), ``size/mod/all/elemMatch/type``, array,
+decimal and map columns, raw SQL, the constant FALSE clause and NULL
+inside an IN list. Known accepted divergence (shared with the zone-map
+count routes of ``where.zone_clause``): Spark orders NaN above all
+doubles and equates NaN=NaN, IEEE/Arrow do not.
 
 Reference parity note: the reference engine (e.g.
 ``src/linkml_store/api/stores/duckdb/duckdb_collection.py``) runs
@@ -77,7 +83,10 @@ import threading
 import weakref
 from collections import OrderedDict
 from datetime import date, datetime
+from functools import reduce
 from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
+
+from linkml_store_spark.where import TRUE, And, Not, Or, Pred, Raw, parse_where
 
 __all__ = [
     "LOCAL_TIER_CAPS",
@@ -273,30 +282,6 @@ class _Cond:
         self.cols = cols
 
 
-def _c_eq(name, lit):
-    _pa_, pc = _pa()
-    if lit is None:
-        # IS NULL: two-valued by construction
-        return _Cond(lambda cols: pc.is_null(_decode_dict(cols[name])), {name})
-    return _Cond(lambda cols: _dict_pred(cols[name], lambda a: pc.equal(a, lit)), {name})
-
-
-def _c_ne(name, lit):
-    _pa_, pc = _pa()
-    if lit is None:
-        return _Cond(lambda cols: pc.is_valid(_decode_dict(cols[name])), {name})
-    return _Cond(
-        lambda cols: _dict_pred(cols[name], lambda a: pc.not_equal(a, lit)), {name}
-    )
-
-
-def _c_cmp(name, lit, op):
-    _pa_, pc = _pa()
-    kern = {"gt": pc.greater, "gte": pc.greater_equal,
-            "lt": pc.less, "lte": pc.less_equal}[op]
-    return _Cond(lambda cols: _dict_pred(cols[name], lambda a: kern(a, lit)), {name})
-
-
 def _c_in(name, lits):
     pa, pc = _pa()
     if not lits:
@@ -319,70 +304,6 @@ def _c_in(name, lits):
     return _Cond(fn, {name})
 
 
-def _c_nin(name, lits):
-    # Spark's $nin is ~col.isin(...): NULL rows stay NULL (dropped by the
-    # filter), and a further $not brings back NULL, not TRUE — so NOT IN
-    # is exactly the Kleene inversion of the three-valued IN above
-    return _c_not(_c_in(name, lits))
-
-
-def _c_like(name, pattern):
-    _pa_, pc = _pa()
-    return _Cond(
-        lambda cols: _dict_pred(cols[name], lambda a: pc.match_like(a, pattern)),
-        {name},
-    )
-
-
-def _c_contains(name, needle):
-    _pa_, pc = _pa()
-    return _Cond(
-        lambda cols: _dict_pred(
-            cols[name], lambda a: pc.match_substring(a, needle)
-        ),
-        {name},
-    )
-
-
-def _c_and(conds):
-    _pa_, pc = _pa()
-    from functools import reduce
-
-    cols = set().union(*[c.cols for c in conds])
-    return _Cond(
-        lambda cs: reduce(lambda a, b: pc.and_kleene(a, b), [c.fn(cs) for c in conds]),
-        cols,
-    )
-
-
-def _c_or(conds):
-    _pa_, pc = _pa()
-    from functools import reduce
-
-    cols = set().union(*[c.cols for c in conds])
-    return _Cond(
-        lambda cs: reduce(lambda a, b: pc.or_kleene(a, b), [c.fn(cs) for c in conds]),
-        cols,
-    )
-
-
-def _c_not(cond):
-    _pa_, pc = _pa()
-    return _Cond(lambda cs: pc.invert(cond.fn(cs)), set(cond.cols))
-
-
-_SUPPORTED_OPS = {
-    "$eq", "$ne", "$gt", "$gte", "$lt", "$lte", "$in", "$nin",
-    "$like", "$contains", "$exists", "$not",
-    "=", "==", "!=", "<>", ">", ">=", "<", "<=", "in", "like",
-}
-
-_CMP_ALIASES = {
-    "$gt": "gt", ">": "gt", "$gte": "gte", ">=": "gte",
-    "$lt": "lt", "<": "lt", "$lte": "lte", "<=": "lte",
-}
-
-
 def _col_type(schema, name: str):
     """Arrow type of a plain top-level column, or Unsupported."""
     import pyarrow as pa
@@ -402,48 +323,54 @@ def _col_type(schema, name: str):
     return typ
 
 
-def _compile_field(name: str, spec: Any, schema) -> _Cond:
+def _lower(node, schema) -> _Cond:
+    """The Arrow condition of a ``where.parse_where`` node, or Unsupported."""
+    if isinstance(node, Pred):
+        return _lower_pred(node, schema)
+    _pa_, pc = _pa()
+    if isinstance(node, (And, Or)):
+        subs = [_lower(a, schema) for a in node.args]
+        kern = pc.and_kleene if isinstance(node, And) else pc.or_kleene
+        return _Cond(
+            lambda cs: reduce(kern, [c.fn(cs) for c in subs]),
+            set().union(*[c.cols for c in subs]),
+        )
+    if isinstance(node, Not):
+        sub = _lower(node.arg, schema)
+        return _Cond(lambda cs: pc.invert(sub.fn(cs)), sub.cols)
+    if isinstance(node, Raw):
+        raise Unsupported("raw SQL clause")
+    raise Unsupported("constant FALSE clause")  # rare: the Spark path
+
+
+def _lower_pred(p, schema) -> _Cond:
+    _pa_, pc = _pa()
+    name, op, v = p.path, p.op, p.value
     typ = _col_type(schema, name)
-    if isinstance(spec, dict):
-        conds = []
-        for op, v in spec.items():
-            if op not in _SUPPORTED_OPS:
-                raise Unsupported(f"operator {op!r}")
-            if op == "$exists":
-                conds.append(_c_ne(name, None) if v else _c_eq(name, None))
-            elif op == "$not":
-                conds.append(_c_not(_compile_field(name, v, schema)))
-            elif op in ("$eq", "=", "=="):
-                conds.append(_c_eq(name, _coerce_literal(v, typ)))
-            elif op in ("$ne", "!=", "<>"):
-                conds.append(_c_ne(name, _coerce_literal(v, typ)))
-            elif op in _CMP_ALIASES:
-                lit = _coerce_literal(v, typ)
-                if lit is None:
-                    raise Unsupported("NULL range literal")
-                conds.append(_c_cmp(name, lit, _CMP_ALIASES[op]))
-            elif op in ("$in", "in"):
-                vals = v if isinstance(v, (list, tuple, set)) else [v]
-                conds.append(_c_in(name, [_coerce_literal(x, typ) for x in vals]))
-            elif op == "$nin":
-                vals = v if isinstance(v, (list, tuple, set)) else [v]
-                conds.append(_c_nin(name, [_coerce_literal(x, typ) for x in vals]))
-            elif op in ("$like", "like"):
-                if not isinstance(v, str):
-                    raise Unsupported("non-string LIKE pattern")
-                _require_string(typ)
-                conds.append(_c_like(name, v))
-            elif op == "$contains":
-                if not isinstance(v, str):
-                    raise Unsupported("non-string $contains needle")
-                _require_string(typ)
-                conds.append(_c_contains(name, v))
-        if not conds:
-            raise Unsupported("empty operator dict")
-        return conds[0] if len(conds) == 1 else _c_and(conds)
-    if isinstance(spec, (list, tuple)):
-        return _c_in(name, [_coerce_literal(x, typ) for x in spec])
-    return _c_eq(name, _coerce_literal(spec, typ))
+    if op == "null":
+        # IS NULL: two-valued by construction
+        return _Cond(lambda cols: pc.is_null(_decode_dict(cols[name])), {name})
+    if op == "in" or (op == "eq" and isinstance(v, (list, tuple))):
+        return _c_in(name, [_coerce_literal(x, typ) for x in v])
+    if op in ("eq", "gt", "gte", "lt", "lte"):
+        lit = _coerce_literal(v, typ)
+        if lit is None:
+            raise Unsupported("NULL comparison literal")
+        kern = getattr(pc, {"eq": "equal", "gt": "greater",
+                            "gte": "greater_equal", "lt": "less",
+                            "lte": "less_equal"}[op])
+        return _Cond(
+            lambda cols: _dict_pred(cols[name], lambda a: kern(a, lit)), {name}
+        )
+    if op in ("like", "contains"):
+        if not isinstance(v, str):
+            raise Unsupported(f"non-string {op} operand")
+        _require_string(typ)
+        kern = pc.match_like if op == "like" else pc.match_substring
+        return _Cond(
+            lambda cols: _dict_pred(cols[name], lambda a: kern(a, v)), {name}
+        )
+    raise Unsupported(f"operator {op!r}")
 
 
 def _require_string(typ):
@@ -453,65 +380,14 @@ def _require_string(typ):
         raise Unsupported("string operator on non-string column")
 
 
-def _nullable_in_values(spec) -> bool:
-    vals = spec if isinstance(spec, (list, tuple, set)) else [spec]
-    return any(v is None for v in vals)
-
-
 def compile_where_local(where, schema) -> Optional[_Cond]:
     """Compile a where-clause to an Arrow mask evaluator, or None for the
     empty clause. Raises :class:`Unsupported` for anything outside the
-    mirrored subset (see module docstring) — including NULL inside $in/$nin
-    value lists, whose SQL semantics ($in never matches NULL rows via IN,
-    but the where-language compiles eq-None to IS NULL only for bare
-    equality) are not worth mirroring here."""
-    if where is None:
-        return None
-    if isinstance(where, (str,)):
-        raise Unsupported("raw SQL clause")
-    if isinstance(where, (list, tuple)):
-        if not where:
-            return None
-        raise Unsupported("raw SQL fragment list")
-    if not isinstance(where, dict):
-        raise Unsupported(f"clause type {type(where).__name__}")
-    if not where:
-        return None
-    conds: List[_Cond] = []
-    for k, v in where.items():
-        if k == "$or":
-            subs = [compile_where_local(w, schema) for w in v]
-            if not subs:
-                raise Unsupported("empty $or")
-            if any(s is None for s in subs):
-                continue  # vacuous TRUE disjunct => no filter contribution
-            conds.append(_c_or(subs))
-        elif k == "$and":
-            subs = [s for s in (compile_where_local(w, schema) for w in v) if s is not None]
-            if subs:
-                conds.append(_c_and(subs))
-        elif k == "$not":
-            inner = compile_where_local(v, schema)
-            if inner is None:
-                raise Unsupported("$not of vacuous clause")  # FALSE: rare, let Spark
-            conds.append(_c_not(inner))
-        else:
-            if isinstance(v, dict) and any(x is None for x in v.values() if not isinstance(x, (list, tuple, set))):
-                # operator dicts with None operands: only $eq/$ne/$exists
-                # handle None; the compile below raises where appropriate
-                pass
-            if (isinstance(v, (list, tuple)) and _nullable_in_values(v)) or (
-                isinstance(v, dict)
-                and any(
-                    op in ("$in", "$nin", "in") and _nullable_in_values(val)
-                    for op, val in v.items()
-                )
-            ):
-                raise Unsupported("NULL in IN-list")
-            conds.append(_compile_field(k, v, schema))
-    if not conds:
-        return None
-    return conds[0] if len(conds) == 1 else _c_and(conds)
+    mirrored subset (see module docstring) — including NULL inside an IN
+    list, whose SQL semantics are not worth mirroring here — and
+    ``ValueError`` for a malformed clause (``where.parse_where``)."""
+    node = parse_where(where)
+    return None if node is TRUE else _lower(node, schema)
 
 
 # --------------------------------------------------------------------- #
@@ -957,7 +833,9 @@ def local_facets(
                                        names=cols)
             if mask is not None:
                 sub = sub.filter(mask)
-            g = sub.group_by(cols).aggregate([([], "count_all")])
+            g = sub.group_by(cols, use_threads=False).aggregate(
+                [([], "count_all")]
+            )
             # summed per key: the pyarrow 16 grouper can split one group
             # in two (see the key-order note in local_group_agg)
             merged: Dict[Any, int] = {}
@@ -1249,6 +1127,7 @@ def local_group_agg(
                 _side(right_img, [right_on]), keys=[left_on],
                 right_keys=[right_on],
                 join_type="inner" if how == "inner" else "left outer",
+                use_threads=False,
             ).combine_chunks()
     else:
         table = _side(img, [], left_mask)
@@ -1304,7 +1183,6 @@ def local_group_agg(
     }
     if len(order_tuples) > 1:
         raise Unsupported("multiple min_by/max_by order tuples")
-    single_thread = False
     if order_tuples:
         arg_fn, orders = next(iter(order_tuples))
         direction = _ARG_FNS[arg_fn]
@@ -1313,7 +1191,6 @@ def local_group_agg(
             if col.null_count:
                 raise Unsupported(f"NULL {arg_fn} order values")
         table = table.sort_by([(o, direction) for o in orders])
-        single_thread = True
 
     specs, seen = [], set()
     for alias, spec in aggs.items():
@@ -1350,9 +1227,7 @@ def local_group_agg(
         )
 
     grouper_keys = sorted(keys, key=_varlen)  # stable: fixed-width first
-    g = table.group_by(
-        grouper_keys, use_threads=not single_thread
-    ).aggregate(specs)
+    g = table.group_by(grouper_keys, use_threads=False).aggregate(specs)
     # arrow names outputs {col}_{fn} / count_all — map back to the aliases
     # (duplicate (col, fn) pairs under different aliases share one kernel)
     bykey = {}

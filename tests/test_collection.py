@@ -354,19 +354,20 @@ def test_zone_count_range_clause_intersects_same_side_bounds(spark, tmp_path):
     """{"$gte": 5, "$gt": 3} compiles to v>=5 AND v>3; the zone-map count
     clause must intersect (keep the stricter bound), not let the later
     op overwrite the earlier one -- num_rows must equal the page."""
-    from linkml_store_spark.collection import _simple_range_clause
+    from linkml_store_spark.where import zone_clause
 
     client = Client(spark)
     db = client.attach_database(f"spark://{tmp_path}/wh")
     coll = db.create_collection("T")
     coll.insert([{"v": float(i)} for i in range(10)])
 
-    rng = _simple_range_clause({"v": {"$gte": 5.0, "$gt": 3.0}}, coll.df)
-    assert rng == ("v", 5.0, None, True, True)
-    rng = _simple_range_clause({"v": {"$gt": 5.0, "$gte": 5.0}}, coll.df)
-    assert rng == ("v", 5.0, None, False, True)  # exclusive wins ties
-    rng = _simple_range_clause({"v": {"$lt": 10.0, "$lte": 20.0}}, coll.df)
-    assert rng == ("v", None, 10.0, True, False)
+    schema = coll.df.schema
+    rng = zone_clause({"v": {"$gte": 5.0, "$gt": 3.0}}, schema)
+    assert rng == ("range", ("v", 5.0, None, True, True))
+    rng = zone_clause({"v": {"$gt": 5.0, "$gte": 5.0}}, schema)
+    assert rng == ("range", ("v", 5.0, None, False, True))  # exclusive wins ties
+    rng = zone_clause({"v": {"$lt": 10.0, "$lte": 20.0}}, schema)
+    assert rng == ("range", ("v", None, 10.0, True, False))
 
     res = coll.find({"v": {"$gte": 5.0, "$gt": 3.0}}, limit=100)
     assert res.num_rows == 5 == len(res.rows)

@@ -415,21 +415,27 @@ def test_collection_spark_facets_read_footers_once_per_version(
     assert calls
 
 
-def test_simple_value_clause_rejects_cross_type_literals(spark):
-    """The docstring's contract, now implemented: a literal whose Python
-    type doesn't match the column type returns None (the plain plan's
-    cast semantics apply, not the shortcut routes)."""
-    from linkml_store_spark.collection import _simple_value_clause
+def test_zone_clause_rejects_cross_type_literals(spark):
+    """A literal whose Python type doesn't match the column type gets no
+    zone-map inputs (the plain plan's cast semantics apply, not the
+    shortcut routes)."""
+    from linkml_store_spark.where import zone_clause
 
-    df = spark.createDataFrame([(1, "a", True)], "n long, s string, b boolean")
-    assert _simple_value_clause({"n": "5"}, df) is None
-    assert _simple_value_clause({"s": 5}, df) is None
-    assert _simple_value_clause({"n": True}, df) is None
-    assert _simple_value_clause({"b": 1}, df) is None
-    assert _simple_value_clause({"n": {"$in": [1, "2"]}}, df) is None
-    assert _simple_value_clause({"n": 5}, df) == ("n", [5])
-    assert _simple_value_clause({"s": {"$in": ["a", "b"]}}, df) == ("s", ["a", "b"])
-    assert _simple_value_clause({"b": {"$eq": False}}, df) == ("b", [False])
+    schema = spark.createDataFrame(
+        [(1, "a", True)], "n long, s string, b boolean"
+    ).schema
+    assert zone_clause({"n": "5"}, schema) is None
+    assert zone_clause({"s": 5}, schema) is None
+    assert zone_clause({"n": True}, schema) is None
+    assert zone_clause({"b": 1}, schema) is None
+    assert zone_clause({"n": {"$in": [1, "2"]}}, schema) is None
+    # an equality on a numeric column takes the range zone map first
+    assert zone_clause({"n": 5}, schema) == ("range", ("n", 5, 5, True, True))
+    assert zone_clause({"n": {"$in": [5]}}, schema) == ("value", ("n", [5]))
+    assert zone_clause({"s": {"$in": ["a", "b"]}}, schema) == (
+        "value", ("s", ["a", "b"])
+    )
+    assert zone_clause({"b": {"$eq": False}}, schema) == ("value", ("b", [False]))
 
 
 def test_one_pass_backtick_columns(spark):

@@ -8,6 +8,7 @@ footer gate (``localexec.local_tier_admits``), so these pins are the
 tier's only parity check.
 """
 
+import logging
 import os
 
 import pytest
@@ -177,6 +178,17 @@ REFUSED = [
 @pytest.mark.parametrize("q", REFUSED, ids=[repr(q)[:60] for q in REFUSED])
 def test_unsupported_shapes_refuse(store, q):
     assert store._local_tier_plan(q) is None
+
+
+def test_refusal_reason_is_logged_and_malformed_clause_raises(store, caplog):
+    """A refused call names its reason on the local tier's logger; a
+    malformed clause raises ValueError instead of falling back."""
+    caplog.set_level(logging.DEBUG, logger="linkml_store_spark.localtier")
+    q = Query(where_clause={"cat": {"$regex": "c[12]"}}, limit=0)
+    assert store._local_tier_plan(q) is None
+    assert "refused the query (operator 'regex')" in caplog.text
+    with pytest.raises(ValueError):
+        store._local_tier_plan(Query(where_clause={"cat": {"$bogus": 1}}))
 
 
 def test_size_gate_refuses(store, monkeypatch):

@@ -7,7 +7,10 @@ instead of fixed queries (mixed operators, conjunctions, boundary
 values, null semantics).
 """
 
+from datetime import date, datetime
+
 import duckdb
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -227,3 +230,135 @@ def test_not_is_complement(orders, a):
     n_a = apply_where(orders, a).count()
     n_not = apply_where(orders, {"$not": a}).count()
     assert n_a + n_not == total  # NOT(empty) = NOT(TRUE) = FALSE, so 0
+
+
+# ------------------------------------------------------------------ #
+# one IR, three lowerings: Spark, the Arrow mask and the zone maps
+# ------------------------------------------------------------------ #
+
+_SCALAR_OPS = ["$eq", "=", "==", "$ne", "!=", "<>", "$gt", ">", "$gte",
+               ">=", "$lt", "<", "$lte", "<="]
+
+#: values present in the table, so that boundary literals hit rows
+_PRESENT = pq.read_table(
+    f"{SF}/orders.parquet", columns=["o_orderkey", "o_totalprice"]
+).slice(0, 200).to_pydict()
+
+#: per column: literals of its own type, and cross-type ones (Spark casts
+#: those itself; the Arrow mask must coerce them exactly or refuse)
+_LITERALS = {
+    "o_orderkey": (
+        st.one_of(st.sampled_from(_PRESENT["o_orderkey"]),
+                  st.sampled_from(_PRESENT["o_orderkey"]),
+                  st.integers(min_value=-10, max_value=6000)),
+        st.sampled_from(["7", 7.5, True]),
+    ),
+    "o_totalprice": (
+        st.one_of(st.sampled_from(_PRESENT["o_totalprice"]),
+                  st.sampled_from(_PRESENT["o_totalprice"]), price,
+                  st.integers(0, 600000)),
+        st.sampled_from(["1000.5", False]),
+    ),
+    "o_orderstatus": (st.sampled_from(_STATUSES), st.just(1)),
+    "o_orderpriority": (st.sampled_from(_PRIORITIES), st.just(3)),
+    "o_orderdate": (
+        st.sampled_from(["1995-01-01", "1993-06-30 12:00:00",
+                         datetime(1996, 1, 1)]),
+        st.sampled_from([date(1994, 1, 1), "1994-13-01"]),
+    ),
+}
+
+
+def _field_spec(col):
+    own, cross = _LITERALS[col]
+    lit = st.one_of(own, own, own, st.one_of(cross, st.none()))
+    lits = st.one_of(
+        st.lists(own, min_size=1, max_size=4),
+        st.lists(lit, max_size=3),
+    )
+    op = st.one_of(
+        st.tuples(st.sampled_from(_SCALAR_OPS), lit),
+        st.tuples(st.sampled_from(_SCALAR_OPS), own),
+        st.tuples(st.sampled_from(["$in", "in", "$nin"]), lits),
+        st.tuples(st.sampled_from(["$like", "like"]),
+                  st.sampled_from(["F%", "%URG%", "_", 5])),
+        st.tuples(st.sampled_from(["$contains", "$regex"]),
+                  st.sampled_from(["O", "^1-"])),
+        st.tuples(st.just("$exists"), st.booleans()),
+        st.tuples(st.just("$not"), lit.map(lambda v: {"$gte": v})),
+    )
+    ops = st.lists(op, min_size=1, max_size=2).map(dict)
+    # two bounds on one literal: the zone lowering's tie rule
+    ties = own.flatmap(lambda v: st.sampled_from([
+        {"$gt": v, "$gte": v}, {"<=": v, "$lt": v}, {">=": v, "$lte": v},
+    ]))
+    return st.one_of(lit, lits, ops, ops, ties)
+
+
+#: one or two field conditions: single-column ones reach the zone lowering
+_field_clauses = st.lists(
+    st.sampled_from(sorted(_LITERALS)).flatmap(
+        lambda c: _field_spec(c).map(lambda spec: {c: spec})
+    ),
+    min_size=1, max_size=2,
+).map(lambda ds: {k: v for d in ds for k, v in d.items()})
+_nested_clauses = st.recursive(
+    _field_clauses,
+    lambda inner: st.one_of(
+        st.lists(inner, max_size=3).map(lambda xs: {"$or": xs}),
+        st.lists(inner, max_size=3).map(lambda xs: {"$and": xs}),
+        inner.map(lambda x: {"$not": x}),
+        st.tuples(_field_clauses, inner, st.booleans()).map(
+            lambda t: {**t[0], "$or": [t[1], {}] if t[2] else [t[1]]}
+        ),
+    ),
+    max_leaves=5,
+)
+ir_clauses = st.one_of(_field_clauses, _field_clauses, _nested_clauses)
+
+
+@settings(
+    max_examples=60,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture,
+                           HealthCheck.too_slow],
+)
+@given(where=ir_clauses)
+def test_where_tiers_agree_or_refuse(spark, orders, where):
+    """Every clause the Arrow lowering accepts counts what the Spark
+    lowering counts, and so does every clause the zone lowering accepts
+    (through ``topk.zone_count``); a clause the Arrow lowering does not
+    accept is refused with a reason."""
+    from pyspark.sql import functions as F
+
+    from linkml_store_spark.operators import localexec as lx
+    from linkml_store_spark.operators import topk
+    from linkml_store_spark.where import zone_clause
+
+    path = f"{SF}/orders.parquet"
+    footer = pq.ParquetFile(path)
+    schema = footer.schema_arrow
+    spark_n = None
+    try:
+        cond = lx.compile_where_local(where, schema)
+    except lx.Unsupported as e:
+        assert str(e), f"{where!r}: refused without a reason"
+    else:
+        arrow_n = lx.local_count([path], schema, cond, footer.metadata.num_rows)
+        spark_n = apply_where(orders, where).count()
+        assert spark_n == arrow_n, f"{where!r}: spark={spark_n} arrow={arrow_n}"
+    zc = zone_clause(where, orders.schema)
+    if zc is None:
+        return
+    kind, args = zc
+    zones = topk.column_zones(topk._footer_metas([path]), args[0])
+    if kind == "range":
+        decision = topk.range_decision(zones, *args[1:])
+        pred = topk.range_predicate(*args)
+    else:
+        decision = topk.value_decision(zones, args[1])
+        pred = F.col(args[0]).isin(list(args[1]))
+    zone_n = topk.zone_count(spark, decision, lambda: orders, lambda: pred)
+    if spark_n is None:
+        spark_n = apply_where(orders, where).count()
+    assert zone_n == spark_n, f"{where!r}: spark={spark_n} zones={zone_n}"

@@ -270,6 +270,13 @@ def _stale_rows(n, start=0):
     ]
 
 
+def _stale_dicts(n, start):
+    return [
+        dict(zip(["id", "cat", "qty", "n", "emb", "tag", "ts"], r))
+        for r in _stale_rows(n, start=start)
+    ]
+
+
 @pytest.mark.parametrize("read", sorted(_SPARK_READS))
 def test_stale_handle_reads_after_another_handle_writes(spark, tmp_path, read):
     """A handle that read the store before another handle wrote to it
@@ -282,11 +289,49 @@ def test_stale_handle_reads_after_another_handle_writes(spark, tmp_path, read):
         "t", identifier_attribute="id"
     )
     assert _SPARK_READS[read](stale) == 30
-    Database(spark, location=loc).get_collection("t").insert([
-        dict(zip(["id", "cat", "qty", "n", "emb", "tag", "ts"], r))
-        for r in _stale_rows(5, start=30)
-    ])
+    Database(spark, location=loc).get_collection("t").insert(
+        _stale_dicts(5, start=30)
+    )
     assert _SPARK_READS[read](stale) == 35
+
+
+#: every write, made through a stale handle, and the ids the store holds
+#: after it: the 35 rows of both handles' writes, changed by this one
+_STALE_WRITES = {
+    "insert": (lambda c: c.insert(_stale_dicts(1, start=100)),
+               set(range(35)) | {100}),
+    "delete": (lambda c: c.delete({"id": 0}), set(range(1, 35))),
+    "delete_where": (lambda c: c.delete_where({"id": {"$lt": 2}}),
+                     set(range(2, 35))),
+    "update": (lambda c: c.update({"id": 0, "qty": 99.0}), set(range(35))),
+    "upsert": (lambda c: c.upsert([{"id": 0, "qty": 99.0},
+                                   {"id": 100, "qty": 1.0}]),
+               set(range(35)) | {100}),
+}
+
+
+@pytest.mark.parametrize("write", sorted(_STALE_WRITES))
+def test_stale_handle_writes_after_another_handle_writes(spark, tmp_path, write):
+    """A write through a handle that read the store before another handle
+    wrote to it builds on the store's current files: it neither names a
+    deleted file nor drops the other handle's rows."""
+    loc = str(tmp_path / "stale")
+    Database(spark, location=loc).create_collection(
+        "t", identifier_attribute="id"
+    ).insert(spark.createDataFrame(_stale_rows(30), _STALE_SCHEMA))
+    stale = Database(spark, location=loc).create_collection(
+        "t", identifier_attribute="id"
+    )
+    assert stale.df.count() == 30
+    Database(spark, location=loc).get_collection("t").insert(
+        _stale_dicts(5, start=30)
+    )
+    run, want = _STALE_WRITES[write]
+    run(stale)
+    fresh = Database(spark, location=loc).get_collection("t")
+    assert {r["id"] for r in fresh.find(limit=-1).rows} == want
+    if write in ("update", "upsert"):
+        assert fresh.find({"id": 0}).rows[0]["qty"] == 99.0
 
 
 def test_write_refreshes_frames_cached_over_the_store(spark, tmp_path):

@@ -3,7 +3,17 @@ like/regex/contains, dotted paths, implicit AND, None -> IS NULL)."""
 
 import pytest
 
-from linkml_store_spark.where import apply_where, compile_where
+from linkml_store_spark.where import (
+    FALSE,
+    TRUE,
+    And,
+    Not,
+    Pred,
+    apply_where,
+    compile_where,
+    exclude_column,
+    parse_where,
+)
 
 
 @pytest.fixture(scope="module")
@@ -169,3 +179,69 @@ def test_mod_and_type(spark):
     # $type is a schema-level check on a columnar store: all rows or none
     assert apply_where(df, {"n": {"$type": "long"}}).count() == 3
     assert apply_where(df, {"n": {"$type": "string"}}).count() == 0
+
+
+def test_parse_canonicalizes_spellings():
+    assert parse_where({"n": {">=": 1, "$lt": 5}}) == And((
+        Pred("n", "gte", 1), Pred("n", "lt", 5),
+    ))
+    assert parse_where({"n": {"<>": 3}}) == Not(Pred("n", "eq", 3))
+    assert parse_where({"n": {"$ne": None}}) == Not(Pred("n", "null"))
+    assert parse_where({"n": {"$exists": False}}) == Pred("n", "null")
+    assert parse_where({"n": {"$nin": [1, 2]}}) == Not(Pred("n", "in", (1, 2)))
+    assert parse_where({"n": {"in": 7}}) == Pred("n", "in", (7,))
+    assert parse_where({"$and": [{"a": 1}, {"$and": [{"b": 2}]}]}) == And((
+        Pred("a", "eq", 1), Pred("b", "eq", 2),
+    ))
+    for empty in (None, {}, [], "  ", {"$and": []}, {"$or": [{}, {"a": 1}]},
+                  {"$not": {"$or": []}}):
+        assert parse_where(empty) == TRUE, empty
+    for false in ({"$or": []}, {"$not": {}}, {"a": 1, "$or": []},
+                  {"tags": {"$all": []}}):
+        assert parse_where(false) == FALSE, false
+
+
+def test_empty_combinators(df):
+    assert ids(df, {"$and": []}) == [1, 2, 3, 4]
+    assert ids(df, {"$or": []}) == []
+    assert ids(df, {"$or": [{}, {"name": "alpha"}]}) == [1, 2, 3, 4]
+    assert ids(df, {"$not": {}}) == []
+    assert ids(df, {"$not": {"$or": []}}) == [1, 2, 3, 4]
+    assert ids(df, {"name": "alpha", "$or": []}) == []
+
+
+def test_malformed_clause_raises_before_either_tier(df):
+    import pyarrow as pa
+
+    from linkml_store_spark.operators import localexec as lx
+
+    schema = pa.schema([("n", pa.int64())])
+    for bad in ({"n": {"$bogus": 1}}, {"n": {}},
+                {"$or": [{}, {"n": {"$bogus": 1}}]},
+                {"tags": {"$elemMatch": {"$or": []}}}):
+        for compile_ in (parse_where,
+                         lambda w: lx.compile_where_local(w, schema),
+                         lambda w: compile_where(w, df)):
+            with pytest.raises(ValueError):
+                compile_(bad)
+
+
+def test_exclude_column_drops_conjuncts_reading_only_the_column():
+    w = {
+        "meta.k": "a",
+        "n": {"$gt": 1},
+        "$or": [{"name": "x"}, {"n": 2}],
+        "$not": {"name": "y"},
+    }
+    assert exclude_column(w, "meta") == {
+        "n": {"$gt": 1}, "$or": [{"name": "x"}, {"n": 2}], "$not": {"name": "y"},
+    }
+    # the mixed $or stays; the $not reads only name and goes
+    assert exclude_column(w, "name") == {
+        "meta.k": "a", "n": {"$gt": 1}, "$or": [{"name": "x"}, {"n": 2}],
+    }
+    assert exclude_column(w, "n") == {
+        "meta.k": "a", "$or": [{"name": "x"}, {"n": 2}], "$not": {"name": "y"},
+    }
+    assert exclude_column({"$or": []}, "n") == {"$or": []}
+    assert exclude_column("n > 1", "n") == "n > 1"
