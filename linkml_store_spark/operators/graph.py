@@ -142,31 +142,15 @@ class GraphProjection:
 
 #: edge-count gate for the driver-local connected-components fast path:
 #: 5M edges collect to ~80 MB of id pairs (well inside the auto-sized
-#: local heap) and label-propagate in under a second of numpy; override
-#: with $SPARK_GRAFT_LOCAL_CC_MAX_EDGES (0 disables the local tier).
+#: local heap) and label-propagate in under a second of numpy.
 LOCAL_CC_MAX_EDGES = 5_000_000
 
 #: companion byte gate for the local tier: estimated driver-collected
 #: size (id content + per-cell object overhead). int64 edges stay bound
 #: by the edge gate (5M x 16 B = 80 MB); string ids are additionally
 #: bound here so long ids (URLs) cannot drag gigabytes through
-#: toPandas. Override with $SPARK_GRAFT_LOCAL_CC_MAX_BYTES.
-LOCAL_CC_MAX_BYTES = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_LOCAL_CC_MAX_BYTES", 512 * 1024 * 1024
-    )
-)
-
-
-def _local_cc_max_edges() -> int:
-    import os
-
-    try:
-        return int(
-            os.environ.get("SPARK_GRAFT_LOCAL_CC_MAX_EDGES", LOCAL_CC_MAX_EDGES)
-        )
-    except ValueError:
-        return LOCAL_CC_MAX_EDGES
+#: toPandas.
+LOCAL_CC_MAX_BYTES = 512 * 1024 * 1024
 
 
 def _local_connected_components(e: DataFrame, node_col: str):
@@ -271,7 +255,7 @@ def connected_components(
     else:
         n_edges = e.count()
         est_bytes = n_edges * 16.0
-    if n_edges <= _local_cc_max_edges() and est_bytes <= LOCAL_CC_MAX_BYTES:
+    if n_edges <= LOCAL_CC_MAX_EDGES and est_bytes <= LOCAL_CC_MAX_BYTES:
         try:
             labels = _local_connected_components(e, node_col)
         except Exception:  # noqa: BLE001 — exotic id types fall through

@@ -43,7 +43,7 @@ row count, the uncompressed byte total and the call's shape class
 its rows are within that class's :data:`LOCAL_TIER_CAPS` entry and its
 bytes within :data:`LOCAL_TIER_MAX_BYTES`; each cap is the largest
 measured rung at which this tier won the class on every measured box
-(``tools/localtier_scale.py``, SCALING.md "Local-vs-JVM crossover").
+(``tools/measure.py ladder``, SCALING.md "Local-vs-JVM crossover").
 Value parity with the Spark path is pinned by the test suite
 (``tests/test_localexec.py`` and the property tests), not re-checked at
 runtime. An ``Unsupported`` refusal while a call is compiled, or any

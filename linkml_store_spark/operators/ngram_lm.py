@@ -255,7 +255,8 @@ def _score_tokens_fast(tokens, model, order, N, alpha):
     string path spent its time in concat + long-string hashing; int-tuple
     hashing is a few word ops). OOV tokens map to -1 via ``get``, and no
     model tuple contains -1, so OOV grams miss exactly like their strings
-    did. Measured (tools/lm_stage_r11.py, interleaved best-of-2): the
+    did. Measured (``git show a13ae2f:tools/lm_stage_r11.py``,
+    interleaved best-of-2): the
     1M-doc scoring stage drops 12.6 -> 8.6 s (-32%) vs the r10 string
     scorer; end-to-end train+score at 5M docs 109.3 -> 93.7 s."""
     import math

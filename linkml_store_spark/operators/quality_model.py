@@ -113,7 +113,7 @@ def train_quality_classifier(
     iterations fits in 2.7 s with 0.999 prediction agreement on the same
     corpus and identical downstream filter behavior (weak-label agreement
     0.9948 vs 0.9954, both far above the 0.85 differential bar;
-    tools/qfit_r13.py). L-BFGS does NOT converge before 50 iterations at
+    ``git show a13ae2f:tools/qfit_r13.py``). L-BFGS does NOT converge before 50 iterations at
     the library tol (1e-6) — the extra 30 iterations buy coefficient
     precision the quality FILTER cannot observe. Callers training on very
     large labeled samples (the 100 TB sampling note above) can raise

@@ -1,19 +1,13 @@
 """Round 12: driver-local connected-components tier (operators/graph.py)
 — small edge lists route to a numpy min-label union-find instead of the
 distributed large-star/small-star loop. Pins local == distributed labels
-(the fast path must be invisible), the env gate, and string-id ordering
-parity."""
-
-import os
+(the fast path must be invisible) and string-id ordering parity."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from linkml_store_spark.operators.graph import (
-    LOCAL_CC_MAX_EDGES,
-    _local_cc_max_edges,
-    connected_components,
-)
+from linkml_store_spark.operators import graph
+from linkml_store_spark.operators.graph import connected_components
 
 
 @pytest.fixture(scope="module")
@@ -36,15 +30,12 @@ EDGES = [
 ]
 
 
-def test_local_matches_distributed(spark):
+def test_local_matches_distributed(spark, monkeypatch):
     e = spark.createDataFrame(EDGES, "subject long, object long")
     nodes = spark.range(0, 50).select(F.col("id").alias("node"))
     local = _labels(connected_components(e, nodes=nodes))
-    os.environ["SPARK_GRAFT_LOCAL_CC_MAX_EDGES"] = "0"
-    try:
-        dist = _labels(connected_components(e, nodes=nodes))
-    finally:
-        del os.environ["SPARK_GRAFT_LOCAL_CC_MAX_EDGES"]
+    monkeypatch.setattr(graph, "LOCAL_CC_MAX_EDGES", 0)
+    dist = _labels(connected_components(e, nodes=nodes))
     assert local == dist
     # min-id labeling spot checks
     comp = dict(local)
@@ -54,16 +45,13 @@ def test_local_matches_distributed(spark):
     assert comp[49] == 49  # isolated singleton
 
 
-def test_string_ids_order_parity(spark):
+def test_string_ids_order_parity(spark, monkeypatch):
     e = spark.createDataFrame(
         [("b", "c"), ("c", "aa"), ("x", "y")], "subject string, object string"
     )
     local = _labels(connected_components(e))
-    os.environ["SPARK_GRAFT_LOCAL_CC_MAX_EDGES"] = "0"
-    try:
-        dist = _labels(connected_components(e))
-    finally:
-        del os.environ["SPARK_GRAFT_LOCAL_CC_MAX_EDGES"]
+    monkeypatch.setattr(graph, "LOCAL_CC_MAX_EDGES", 0)
+    dist = _labels(connected_components(e))
     assert local == dist
     assert dict(local)["b"] == "aa"
 
@@ -74,10 +62,3 @@ def test_empty_edges(spark):
     out = _labels(connected_components(e, nodes=nodes))
     assert out == [(7, 7), (8, 8)]
 
-
-def test_gate_env_override(monkeypatch):
-    assert _local_cc_max_edges() == LOCAL_CC_MAX_EDGES
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_CC_MAX_EDGES", "123")
-    assert _local_cc_max_edges() == 123
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_CC_MAX_EDGES", "junk")
-    assert _local_cc_max_edges() == LOCAL_CC_MAX_EDGES

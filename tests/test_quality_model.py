@@ -119,7 +119,7 @@ def test_tuned_fit_defaults_agree_with_reference_fit(corpus):
     stay prediction-equivalent to the heavyweight reference configuration
     (1<<15 features, 50 iterations, library tol) — the differential gate
     the declared quality_classifier query relies on (>= 0.85 agreement;
-    measured 0.999 at sf0.1, tools/qfit_r13.py)."""
+    measured 0.999 at sf0.1, ``git show a13ae2f:tools/qfit_r13.py``)."""
     fast = quality_model.train_quality_classifier(corpus)
     ref = quality_model.train_quality_classifier(
         corpus, num_features=1 << 15, max_iter=50, tol=None

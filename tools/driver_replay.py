@@ -17,11 +17,12 @@ checkpoint eviction) that only manifests in a long session surfaces here.
 
 from __future__ import annotations
 
-import importlib.util
+import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+from measure import ROOT, load_registry
 
 SF = "/root/testdata/sf0.01"
 TABLES = [
@@ -32,9 +33,7 @@ TABLES = [
 
 def driver_order() -> list[str]:
     """The most recent driver-sampled query list, in driver order."""
-    import glob
-
-    paths = sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))
+    paths = sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")))
     with open(paths[-1]) as f:
         return list(json.load(f))
 
@@ -43,7 +42,7 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
-    from tools.oracle_compare import canon
+    from oracle_compare import canon
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -51,11 +50,7 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = load_registry()
     qs, oracles = m.queries(), m.oracle_sql()
 
     con = duckdb.connect()

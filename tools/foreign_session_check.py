@@ -12,8 +12,9 @@ plan contains a pandas UDF.
 
 from __future__ import annotations
 
-import importlib.util
 import sys
+
+from measure import load_registry
 
 
 def main() -> int:
@@ -28,12 +29,7 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    sys.path.insert(0, "/root/repo")
-    spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = load_registry()
 
     n = len(m.entry(spark).collect())
     print(f"entry: {n} rows")

@@ -1,21 +1,20 @@
 """Oracle-compare harness: runs every __spark_entry__.queries() entry on
 Spark AND its oracle_sql() on DuckDB at sf0.01, then compares row count,
-column set, and values (columns sorted by name, rows sorted by all columns
-— same normalization as the round driver's value-hash).
+column set, per-column dtype kind, and values (columns sorted by name,
+rows sorted by all columns — same normalization as the round driver's
+value-hash). The registry and package are this tree's own.
 
 Usage:  python tools/oracle_compare.py [query_name ...]
 Exit 0 = all match; nonzero lists mismatches.
 """
 
-import importlib.util
 import math
 import sys
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 import numpy as np
 import pandas as pd
+from measure import load_registry
 
 SF = "/root/testdata/sf0.01"
 TABLES = [
@@ -39,6 +38,26 @@ def norm_cell(v):
     if v is None or v is pd.NaT or (isinstance(v, float) and math.isnan(v)):
         return "NULL"
     return str(v)
+
+
+#: pandas dtype kinds that must agree between the two engines' frames;
+#: i/u are interchangeable. DuckDB's SUM(BIGINT) surfaces as HUGEINT ->
+#: float64 where Spark returns int64, and the driver's value-hash
+#: normalizer tells "0.0" from "0", so a kind mismatch is a latent
+#: hash-red row even when the values are numerically equal.
+_KIND_GROUP = {"i": "int", "u": "int", "f": "float", "b": "bool",
+               "M": "datetime", "m": "timedelta", "O": "obj", "S": "obj",
+               "U": "obj"}
+
+
+def dtype_drift(sdf: pd.DataFrame, odf: pd.DataFrame) -> dict:
+    """column -> (Spark kind, DuckDB kind) for every column whose dtype
+    kinds differ."""
+    def kind(df, c):
+        return _KIND_GROUP.get(df[c].dtype.kind, df[c].dtype.kind)
+
+    return {c: (kind(sdf, c), kind(odf, c)) for c in sdf.columns
+            if kind(sdf, c) != kind(odf, c)}
 
 
 def canon(df: pd.DataFrame) -> list:
@@ -595,9 +614,7 @@ def differential_quality_check(spark) -> list:
 
 def main():
     only = set(sys.argv[1:])
-    spec = importlib.util.spec_from_file_location("e", "/root/repo/__spark_entry__.py")
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = load_registry()
     from linkml_store_spark.session import get_spark
 
     spark = get_spark()
@@ -637,7 +654,12 @@ def main():
             print(f"  spark : {s_rows[bad]}")
             print(f"  oracle: {o_rows[bad]}")
             continue
-        print(f"ok   {name}  ({len(sdf)} rows, values match)")
+        drift = dtype_drift(sdf, odf)
+        if drift:
+            failures.append((name, f"dtype drift {drift}"))
+            print(f"FAIL {name}: dtype drift {drift}")
+            continue
+        print(f"ok   {name}  ({len(sdf)} rows, values and dtypes match)")
     lsh_trio = {"dedup_minhash", "dedup_simhash", "dedup_groups"}
     if not only or only & lsh_trio:
         failures += differential_lsh_checks(spark)
