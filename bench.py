@@ -19,9 +19,10 @@ trivially-planned SQL string. At interactive latencies Catalyst's
 HONESTY GUARD: re-executing one Dataset also lets the scheduler SKIP
 completed shuffle map stages (their map outputs stay registered), which
 would silently turn "re-run the query" into "re-run only the final
-stage" — scans included. ``_bust_shuffle_outputs`` unregisters every
-registered shuffle's map outputs before each timed run, so every timed
-run re-scans parquet and re-executes the full physical plan. (Broadcast
+stage" — scans included. ``tools/measure.py``'s ``shuffle_guard``
+unregisters every registered shuffle's map outputs before each timed run
+(and raises when it cannot), so every timed run re-scans parquet and
+re-executes the full physical plan. (Broadcast
 variables stay cached with the plan — the prepared-statement hash-table
 analog.) Discovered round 3: the round-2 numbers for shuffle-bearing
 queries were final-stage-only artifacts.
@@ -36,6 +37,7 @@ real work.
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import re
@@ -350,13 +352,9 @@ def _collection_routes(spark, sf, qv):
     }
 
     def finalize_routes():
-        # the route each query takes is static: the local tier's footer
+        # the route each query takes is static: the collection's local-tier
         # gate for the query's shape class — record it and the class cap
-        from linkml_store_spark.operators.arrowagg import ab_winner
-        from linkml_store_spark.operators.localexec import (
-            LOCAL_TIER_CAPS,
-            local_tier_column,
-        )
+        from linkml_store_spark.operators.localexec import LOCAL_TIER_CAPS
 
         kinds = {
             "b1": "page", "b2": "count", "b3": "count", "b4": "count",
@@ -369,13 +367,11 @@ def _collection_routes(spark, sf, qv):
             ("b10", ev), ("b11", ev), ("b12", eb),
         ]:
             kind = kinds[name]
-            metas = coll._store_metas() or []
-            files = [fp for fp, _md in metas]
-            total = sum(md.num_rows for _fp, md in metas)
-            w = ab_winner(spark, files, local_tier_column(kind), total_rows=total)
+            admitted, _why = coll._local_tier_gate(kind)
+            total = (coll._footer_totals() or (0, 0))[0]
             gate = f"{total} rows, {kind} cap {LOCAL_TIER_CAPS[kind]}"
             tier = (
-                f"LOCAL TIER (driver Arrow, {gate})" if w == "arrow"
+                f"LOCAL TIER (driver Arrow, {gate})" if admitted
                 else f"jvm ({gate})"
             )
             routes[name] = f"{tier} | {routes[name]}"
@@ -448,7 +444,7 @@ def main():
         fn()
     finalize_routes()
 
-    bust = _shuffle_buster(spark)
+    bust = _measure_tool().shuffle_guard(spark)
 
     def time_all(qs, busters=()):
         # best-of-RUNS plus the per-query [min, max] SPREAD: the round-6
@@ -671,29 +667,15 @@ def _empty_mirror(spark, sf_dir: str) -> str:
     return out
 
 
-def _shuffle_buster(spark):
-    """Returns a callable that unregisters every registered shuffle's map
-    outputs (MapOutputTrackerMaster) so the next action re-executes map
-    stages instead of skipping them. Internal API — on any failure returns
-    a no-op and prints a warning (numbers would then be final-stage-only
-    for shuffle queries, which must not pass silently)."""
-    try:
-        env = spark.sparkContext._jsc.sc().env()
-        tracker = env.mapOutputTracker()
-        tracker.shuffleStatuses()  # probe the master-side API
-
-        def bust():
-            it = tracker.shuffleStatuses().keySet().iterator()
-            while it.hasNext():
-                tracker.unregisterAllMapAndMergeOutput(it.next())
-
-        return bust
-    except Exception as exc:  # noqa: BLE001
-        import sys
-
-        print(f"WARNING: shuffle-bust unavailable ({exc}); shuffle-bearing "
-              "timings may reflect final-stage-only re-execution", file=sys.stderr)
-        return lambda: None
+def _measure_tool():
+    """``tools/measure.py`` of this checkout, loaded as a module."""
+    spec = importlib.util.spec_from_file_location(
+        "measure", os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                "tools", "measure.py")
+    )
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    return m
 
 
 def _duckdb_companion_fns() -> dict:

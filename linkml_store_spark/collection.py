@@ -723,9 +723,15 @@ class Collection:
             path = self.database._collection_path(self.alias)
             return _footer_metas(path) if _os.path.exists(path) else None
 
+        import pyarrow as pa
+
         try:
             return self._version.memo(("metas",), read)
-        except Exception:  # noqa: BLE001 — stats are an optimization only
+        except (pa.ArrowException, OSError) as e:
+            _tier_log.debug(
+                "collection %s: footers unreadable (%s: %s); footer "
+                "statistics are off", self.alias, type(e).__name__, e,
+            )
             return None
 
     def _zones(self, col: str):
@@ -756,14 +762,15 @@ class Collection:
     def query(self, query: Query) -> QueryResult:
         """Execute the declarative Query IR (reference collection.py:375-398).
 
-        Routing: a query whose store passes the local tier's static
-        footer gate for its shape class (``count``, ``page`` or ``agg``;
-        ``localexec.local_tier_admits``) and whose clauses compile into
-        the faithfully-mirrored subset executes DRIVER-LOCALLY with Arrow
-        kernels (``operators/localexec.py``) — zero Spark jobs, none of
-        the per-job scheduling floor. Everything else — stores over the
-        class cap, unsupported operators/types, facet-bearing queries, or
-        a local run that raises — takes the distributed plan unchanged.
+        Routing (:meth:`_local`): a query whose store passes the local
+        tier's static footer gate for its shape class (``count``, ``page``
+        or ``agg``; ``localexec.local_tier_admits``) and whose clauses
+        compile into the faithfully-mirrored subset executes
+        DRIVER-LOCALLY with Arrow kernels (``operators/localexec.py``) —
+        zero Spark jobs, none of the per-job scheduling floor. Everything
+        else — stores over the class cap, unsupported operators/types,
+        facet-bearing queries, or a local run that raises — takes the
+        distributed plan unchanged.
         """
         if not self.exists():
             return QueryResult(num_rows=0, rows=[], query=query)
@@ -783,55 +790,42 @@ class Collection:
                 "include_facet_counts and group_by cannot combine — "
                 "facet the row space with query_facets() instead"
             )
-        plan = self._local_tier_plan(query)
-        if plan is not None:
-            try:
-                return plan()
-            except Exception as e:  # noqa: BLE001 — never fail a query here
-                _tier_log.debug(
-                    "collection %s: local-tier query failed, running the "
-                    "Spark path (%s: %s)", self.alias, type(e).__name__, e,
-                )
-        return self._query_spark(query)
+        return self._local(
+            "query", *self._query_local(query),
+            lambda: self._query_spark(query),
+        )
 
     def _local_tier_plan(self, query: Query):
-        """A closure returning the QueryResult when this query is
-        local-tier eligible on this store, else None. Eligibility
-        is decided entirely from driver-side state: the footer gate for
-        the query's shape class, store-scan purity, and a full compile of
-        where/sort/select into the mirrored Arrow subset
-        (``operators/localexec.py``)."""
+        """The local tier's thunk for ``query`` on this store, or None
+        (the refusal logged as :meth:`_local` logs it)."""
+        run, gate = self._local_plan(*self._query_local(query))
+        if run is None:
+            self._log_spark_route("query", gate)
+        return run
+
+    def _query_local(self, query: Query):
+        """(shape class, prepare) of :meth:`query`'s local route; the
+        class is ``agg`` (group_by), ``count`` (limit 0) or ``page``."""
+        if query.group_by:
+            kind, prepare = "agg", self._prepare_agg
+        else:
+            kind = "count" if query.limit == 0 else "page"
+            prepare = self._prepare_page
+        return kind, lambda schema, rows, _nbytes: prepare(query, schema, rows)
+
+    def _prepare_page(self, query: Query, schema, total_rows: int):
+        """The local thunk of a count or page Query: where, sort and
+        select compiled into the Arrow subset (``localexec``)."""
         from linkml_store_spark.operators import localexec as lx
 
         if query.include_facet_counts:
-            return None
-        gate = self._local_tier_gate(_query_class(query))
-        if gate is None:
-            return None
-        schema, total_rows = gate
-        if query.group_by:
-            return self._local_tier_agg_plan(query, schema)
-        try:
-            cond = lx.compile_where_local(query.where_clause, schema)
-            limit = DEFAULT_LIMIT if query.limit is None else query.limit
-            eff_limit = None if (limit is None or limit < 0) else limit
-            sort_specs = [_sort_parse(s) for s in (query.sort_by or [])]
-            sel = list(query.select_cols) if query.select_cols else None
-            if sel is not None and any(
-                "." in c or "[" in c for c in sel
-            ):
-                return None
-            # compile-check the page shape now so refusals never reach
-            # the executor (sort cols plain+supported, outputs mappable)
-            for c, _d in sort_specs:
-                lx._col_type(schema, c)
-            lx._check_output_types(
-                schema, sel if sel is not None else [f.name for f in schema]
-            )
-        except lx.Unsupported as e:
-            self._log_refusal("query", e)
-            return None
-
+            raise lx.Unsupported("facet counts")
+        cond = lx.compile_where_local(query.where_clause, schema)
+        sort_specs = [_sort_parse(s) for s in (query.sort_by or [])]
+        sel = list(query.select_cols) if query.select_cols else None
+        lx.compile_page(schema, sort_specs, sel)
+        limit = DEFAULT_LIMIT if query.limit is None else query.limit
+        eff_limit = None if limit < 0 else limit
         session_tz = self._session_tz()
         offset = query.offset or 0
 
@@ -853,91 +847,35 @@ class Collection:
 
         return run
 
-    def _local_tier_agg_plan(self, query: Query, schema):
-        """The grouped-aggregation branch of :meth:`_local_tier_plan`:
-        compile the where + group keys + aggregate specs into the Arrow
-        subset, or None. The page tail (sort on keys/aliases, offset,
-        limit, select) runs over the tiny aggregate table in-process."""
+    def _prepare_agg(self, query: Query, schema, _total_rows: int):
+        """The local thunk of an aggregate Query: the join, where, group
+        keys, aggregates, HAVING and page compiled into the Arrow subset
+        (``localexec``); the page tail (sort on keys/aliases, offset,
+        limit, select) runs over the small aggregate table in-process."""
         from linkml_store_spark.operators import localexec as lx
 
         session_tz = self._session_tz()
-        join = None
-        try:
-            if query.join:
-                other = self.database.get_collection(
-                    query.join["collection"]
-                )
-                ogate = other._local_tier_gate("agg")
-                if ogate is None:
-                    return None
-                oschema, _orows = ogate
-                left_on = query.join["left_on"]
-                right_on = query.join["right_on"]
-                how = query.join.get("how", "inner")
-                if how not in ("inner", "left", "semi", "anti"):
-                    return None
-                lnames = {f.name for f in schema}
-                rnames = {f.name for f in oschema}
-                if how in ("inner", "left") and lnames & rnames:
-                    # ambiguous columns: Spark would carry both sides;
-                    # the Arrow join coalesces — not mirrored, refuse.
-                    # Semi/anti surface only left columns: no ambiguity.
-                    return None
-                if left_on not in lnames or right_on not in rnames:
-                    return None
-                # Spark's joined frame keeps right_on; the Arrow join
-                # drops it — refuse queries that reference it downstream
-                import pyarrow as pa
-
-                if how in ("semi", "anti"):
-                    merged = schema
-                else:
-                    merged = pa.schema(
-                        list(schema)
-                        + [f for f in oschema if f.name != right_on]
-                    )
-                if lx._col_type(schema, left_on) != lx._col_type(
-                    oschema, right_on
-                ):
-                    return None
-                join = (
-                    other._store_image(oschema), oschema, left_on, right_on,
-                    how,
-                )
-            # compile/validate against the post-join column space; the
-            # executor reads each side with its OWN schema
-            compile_schema = merged if join is not None else schema
-            cond = lx.compile_where_local(query.where_clause, compile_schema)
-            lx.validate_group_agg(
-                compile_schema, query.group_by, query.aggs,
-                session_tz=session_tz,
-            )
-            aggs = dict(query.aggs or {"count": ("count", None)})
-            having_cond = None
-            if query.having is not None:
-                # HAVING compiles at plan time against the PREDICTED
-                # aggregate schema (keys + alias types); any uncertainty
-                # there refuses to the Spark path before any work runs
-                agg_schema = lx.predicted_agg_schema(
-                    compile_schema, query.group_by, aggs
-                )
-                having_cond = lx.compile_where_local(
-                    query.having, agg_schema
-                )
-            out_names = [
-                g if isinstance(g, str) else g[0] for g in query.group_by
-            ] + list(aggs)
-            sort_specs = [_sort_parse(s) for s in (query.sort_by or [])]
-            if any(c not in out_names for c, _d in sort_specs):
-                return None
-            sel = list(query.select_cols) if query.select_cols else None
-            if sel is not None and any(c not in out_names for c in sel):
-                return None
-        except lx.Unsupported as e:
-            self._log_refusal("aggregate", e)
-            return None
+        join, space = None, schema
+        if query.join:
+            other = self.database.get_collection(query.join["collection"])
+            admitted, why = other._local_tier_gate("agg")
+            if admitted is None:
+                raise lx.Unsupported(f"join side {other.alias}: {why}")
+            spec = (admitted[0], query.join["left_on"],
+                    query.join["right_on"], query.join.get("how", "inner"))
+            # the where and the aggregates read the post-join column
+            # space; the executor reads each side with its OWN schema
+            space = lx.compile_join(schema, *spec)
+            join = (other._store_image(admitted[0]),) + spec
+        cond = lx.compile_where_local(query.where_clause, space)
+        sort_specs = [_sort_parse(s) for s in (query.sort_by or [])]
+        sel = list(query.select_cols) if query.select_cols else None
+        aggs, having_cond = lx.compile_group_agg(
+            space, query.group_by, query.aggs, query.having, sort_specs, sel,
+            session_tz=session_tz,
+        )
         limit = DEFAULT_LIMIT if query.limit is None else query.limit
-        eff_limit = None if (limit is None or limit < 0) else limit
+        eff_limit = None if limit < 0 else limit
         offset = query.offset or 0
 
         def run() -> QueryResult:
@@ -970,11 +908,7 @@ class Collection:
             return QueryResult(num_rows=0, rows=[], query=query)
         if query.group_by:
             return self._query_spark_agg(query)
-        if query.include_facet_counts:
-            # no local-tier entry ran for a facet query: sync here
-            self._read_df()
-        else:
-            self.df  # a first scan starts the version the memos below fill
+        self.df  # a first scan starts the version the memos below fill
         # the filtered plan is built LAZILY: a footer-answered count with
         # a prepared page plan (or limit=0) never needs it at all
         _df_cache = [None]
@@ -1096,7 +1030,7 @@ class Collection:
         # renames dotted paths.
         projected_early = False
         if query.select_cols and query.sort_by:
-            sort_bases = {_sort_base(s) for s in query.sort_by}
+            sort_bases = {_sort_parse(s)[0] for s in query.sort_by}
             plain = {c for c in query.select_cols if "." not in c}
             if sort_bases <= plain:
                 page = _project(page)
@@ -1341,28 +1275,15 @@ class Collection:
         )
 
     def _route_report(self, query: Query) -> str:
-        """The explain header: the tier :meth:`query` takes for ``query``
-        and the gate numbers that decided it."""
+        """The explain header: the route :meth:`query` takes for ``query``
+        — the footer gate's numbers when the local tier serves it, else
+        the refusal reason its DEBUG line carries."""
         from linkml_store_spark.operators import localexec as lx
 
-        def spark_route(why: str) -> str:
-            return f"== Route ==\nDistributed plan: {why}\n\n"
-
-        if not lx.local_tier_enabled():
-            return spark_route("SPARK_GRAFT_LOCAL_TIER=0")
-        metas = self._store_metas() if self._scans_store() else None
-        if not metas:
-            return spark_route("no persisted parquet footers")
-        kind = _query_class(query)
-        rows, nbytes = self._footer_totals()
-        gate = (
-            f"{rows} footer rows, {kind} cap {lx.LOCAL_TIER_CAPS[kind]}; "
-            f"{nbytes} uncompressed bytes, cap {lx.LOCAL_TIER_MAX_BYTES}"
-        )
-        if not lx.local_tier_admits(kind, rows, nbytes):
-            return spark_route(f"store over the gate ({gate})")
-        if self._local_tier_plan(query) is None:
-            return spark_route("clauses outside the local tier's Arrow subset")
+        kind, prepare = self._query_local(query)
+        run, gate = self._local_plan(kind, prepare)
+        if run is None:
+            return f"== Route ==\nDistributed plan: {gate}\n\n"
         img = self._version.memos.get(("image",))
         if img is not None and img.columns_loaded:
             image = (
@@ -1373,7 +1294,8 @@ class Collection:
             image = "not resident (columns load on the first read)"
         return (
             "== Local Tier ==\nDriver-local Arrow execution: footer rows "
-            f"inside the gate ({gate})\nStore image: {image}\n\n"
+            f"inside the gate ({lx.gate_numbers(kind, *gate[1:])})\n"
+            f"Store image: {image}\n\n"
         )
 
     def find_iter(
@@ -1426,121 +1348,145 @@ class Collection:
         facet_limit: int = DEFAULT_FACET_LIMIT,
         facet_min_count: int = 1,
     ):
-        local = self._local_tier_facets(
-            where, facet_columns, facet_limit, facet_min_count
+        def spark():
+            zones = self._zones if self._version.stamp is not None else None
+            res = query_facets(
+                self.df, where, facet_columns, facet_limit, facet_min_count,
+                zones=zones,
+            )
+            # clustering advisor: an unfiltered low-cardinality facet the
+            # footers decided nothing of is exactly the query one
+            # compact(sort_cols=[col]) turns into driver metadata
+            if zones is not None and where in (None, {}, []):
+                for col, vals in res.items():
+                    if isinstance(col, str) and 2 <= len(vals) <= 50:
+                        self._note_unclustered_hit(
+                            col, facet_zone_decision(self.df, col, zones)
+                        )
+            return res
+
+        return self._local(
+            "query_facets", "facet",
+            self._facets_local(where, facet_columns, facet_limit,
+                               facet_min_count),
+            spark,
         )
-        if local is not None:
-            return local
-        zones = self._zones if self._version.stamp is not None else None
-        res = query_facets(
-            self.df, where, facet_columns, facet_limit, facet_min_count,
-            zones=zones,
-        )
-        # clustering advisor: an unfiltered low-cardinality facet the
-        # footers decided nothing of is exactly the query one
-        # compact(sort_cols=[col]) turns into driver metadata
-        if zones is not None and where in (None, {}, []):
-            for col, vals in res.items():
-                if isinstance(col, str) and 2 <= len(vals) <= 50:
-                    self._note_unclustered_hit(
-                        col, facet_zone_decision(self.df, col, zones)
-                    )
-        return res
 
     def _session_tz(self) -> Optional[str]:
         """spark.sql.session.timeZone, memoized per Database — the lookup
         is a Py4J round-trip and sits on the local tier's per-query path."""
         tz = getattr(self.database, "_session_tz_memo", False)
         if tz is False:
+            from py4j.protocol import Py4JError
+            from pyspark.errors import PySparkException
+
             try:
                 tz = self.spark.conf.get("spark.sql.session.timeZone")
-            except Exception:  # noqa: BLE001
+            except (Py4JError, PySparkException):
                 tz = None
             self.database._session_tz_memo = tz
         return tz
 
-    def _log_refusal(self, call: str, reason) -> None:
-        """DEBUG-log why the local tier refused a call (Spark runs it)."""
-        _tier_log.debug(
-            "collection %s: local tier refused the %s (%s), running the "
-            "Spark path", self.alias, call, reason,
-        )
-
+    # ------------------------------------------------------------------ #
+    # the local tier's route: one gate, one compile boundary, one fallback
+    # ------------------------------------------------------------------ #
     def _local_tier_gate(self, kind: str):
-        """(schema, total_rows) when this store's footers admit a ``kind``
-        call to the local tier (``localexec.local_tier_admits``), else
-        None — the shared gate of every local-tier entry point."""
+        """The footer gate of a ``kind`` call on this store
+        (``localexec.local_tier_admits``): ``((schema, rows, bytes),
+        None)`` when the footers admit it, else ``(None, reason)``. Syncs
+        the store version first (:meth:`_scans_store`), whatever the
+        verdict."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         from linkml_store_spark.operators import localexec as lx
 
         if not self._scans_store():
-            return None
+            return None, "no persisted parquet store"
         metas = self._store_metas()
         if not metas:
-            return None
-        total_rows, total_bytes = self._footer_totals()
-        if not lx.local_tier_admits(kind, total_rows, total_bytes):
-            return None
+            return None, "no parquet footers"
+        rows, nbytes = self._footer_totals()
+        if not lx.local_tier_admits(kind, rows, nbytes):
+            if not lx.local_tier_enabled():
+                return None, "SPARK_GRAFT_LOCAL_TIER=0"
+            gate = lx.gate_numbers(kind, rows, nbytes)
+            return None, f"store over the gate ({gate})"
         try:
-            import pyarrow.parquet as pq
-
             schema = self._version.memo(
                 ("local_schema",),
                 lambda: pq.ParquetFile(metas[0][0]).schema_arrow,
             )
-        except Exception:  # noqa: BLE001
-            return None
-        return schema, total_rows
+        except (pa.ArrowException, OSError) as e:
+            return None, f"footer schema unreadable ({type(e).__name__}: {e})"
+        return (schema, rows, nbytes), None
 
-    def _local_tier_facets(
-        self, where, facet_columns, facet_limit, facet_min_count
-    ):
-        """Facet counts via the driver-local Arrow tier (see
-        :meth:`query` routing notes), or None when anything refuses —
-        including any facet column outside the mirrored subset (arrays,
-        nested, timestamps), a where-clause the compiler rejects, a store
-        over the ``facet`` class cap, or a local run that raises."""
-        import pyarrow.types as pt
-
+    def _local_plan(self, kind: str, prepare):
+        """The compile boundary of the local tier: ``(thunk, (schema,
+        rows, bytes))`` when the footer gate admits a ``kind`` call and
+        ``prepare(schema, rows, bytes)`` returns its thunk, else ``(None,
+        reason)``. ``localexec.Unsupported`` from ``prepare`` refuses;
+        anything else (a malformed clause's ``ValueError``) raises."""
         from linkml_store_spark.operators import localexec as lx
-        from linkml_store_spark.where import exclude_column
 
-        gate = self._local_tier_gate("facet")
-        if gate is None:
-            return None
-        schema, _total_rows = gate
-        cols = (
-            list(facet_columns) if facet_columns is not None
-            else [f.name for f in schema]
-        )
+        admitted, why = self._local_tier_gate(kind)
+        if admitted is None:
+            return None, why
         try:
-            conds = {}
-            for col in cols:
-                parts = [col] if isinstance(col, str) else list(col)
-                for c in parts:
-                    t = lx._col_type(schema, c)
-                    if pt.is_timestamp(t):
-                        # ns/tz round-trip parity not mirrored for facet
-                        # VALUES — timestamps facet through the JVM path
-                        raise lx.Unsupported("timestamp facet column")
-                w = where
-                for c in parts:
-                    w = exclude_column(w, c)
-                conds[id(col)] = lx.compile_where_local(w, schema)
+            return prepare(*admitted), admitted
         except lx.Unsupported as e:
-            self._log_refusal("facets", e)
-            return None
+            return None, str(e)
 
-        try:
-            return lx.local_facets(
-                self._store_image(schema), schema, lambda col: conds[id(col)],
-                cols, facet_limit, facet_min_count,
+    def _local(self, call: str, kind: str, prepare, spark, refusal=None):
+        """The local-tier route of every entry that has one (``query``,
+        ``query_facets``, ``knn_search``, ``search``): the footer gate for
+        shape class ``kind`` and the compile (:meth:`_local_plan`), then
+        the thunk; a refusal, or any exception the thunk raises, logs one
+        DEBUG line and returns ``spark()``. ``refusal``: a reason known
+        before the gate, which the call then skips."""
+        run, why = (None, refusal) if refusal else self._local_plan(
+            kind, prepare
+        )
+        failure = None
+        if run is not None:
+            try:
+                return run()
+            except Exception as e:  # noqa: BLE001 — the Spark path answers
+                why, failure = f"{type(e).__name__}: {e}", e
+        self._log_spark_route(call, why, failure)
+        return spark()
+
+    def _log_spark_route(self, call: str, why, failure=None) -> None:
+        """The local tier's one DEBUG line for a call it does not serve
+        (with the traceback of a ``failure`` in the local run)."""
+        _tier_log.debug(
+            "collection %s: local tier refused the %s (%s), running the "
+            "Spark path", self.alias, call, why, exc_info=failure,
+        )
+
+    def _facets_local(self, where, facet_columns, facet_limit,
+                      facet_min_count):
+        """The ``prepare`` of :meth:`query_facets`'s local route."""
+        from linkml_store_spark.operators import localexec as lx
+
+        def prepare(schema, _rows, _nbytes):
+            cols = (
+                schema.names if facet_columns is None else list(facet_columns)
             )
-        except Exception as e:  # noqa: BLE001 — never fail a facet here
-            _tier_log.debug(
-                "collection %s: local-tier facets failed, running the "
-                "Spark path (%s: %s)", self.alias, type(e).__name__, e,
+            cond_for = lx.compile_facets(schema, where, cols)
+            return lambda: lx.local_facets(
+                self._store_image(schema), schema, cond_for, cols,
+                facet_limit, facet_min_count,
             )
-            return None
+
+        return prepare
+
+    def _local_tier_facets(self, *args):
+        """:meth:`query_facets`'s local answer, or None when the local
+        route does not serve the call (the route logs why)."""
+        return self._local(
+            "query_facets", "facet", self._facets_local(*args), lambda: None
+        )
 
     def group_by(
         self,
@@ -1774,37 +1720,35 @@ class Collection:
         run that raises, run :meth:`knn`'s auto-routed IVF/brute plan."""
         from linkml_store_spark.operators import localexec as lx
 
-        def _spark() -> QueryResult:
+        def ranked(rows) -> QueryResult:
+            return QueryResult(
+                num_rows=len(rows), rows=rows,
+                ranked_rows=[(r.get(score_col), r) for r in rows],
+            )
+
+        def spark() -> QueryResult:
             df = self.knn(
                 query_vector, vector_col=vector_col, k=k, exact=exact,
                 score_col=score_col, keep_vector=False, metric=metric,
             )
             if select_cols:
                 df = df.select(*select_cols)
-            rows = _rows_to_dicts(df.collect())
-            return QueryResult(
-                num_rows=len(rows), rows=rows,
-                ranked_rows=[(r.get(score_col), r) for r in rows],
-            )
+            return ranked(_rows_to_dicts(df.collect()))
 
-        gate = None
-        if not exact and self._vector_indexes.get(vector_col) is None:
-            gate = self._local_tier_gate("knn")
-        if gate is None:
-            return _spark()
-        schema, _total_rows = gate
-        try:
-            rows = lx.local_knn(
-                self._store_image(schema), schema, vector_col, query_vector, k,
-                score_col=score_col, select_cols=select_cols,
-                session_tz=self._session_tz(), metric=metric,
-            )
-        except Exception:  # noqa: BLE001 — incl. Unsupported: fall back
-            return _spark()
-        return QueryResult(
-            num_rows=len(rows), rows=rows,
-            ranked_rows=[(r.get(score_col), r) for r in rows],
-        )
+        def prepare(schema, _rows, _nbytes):
+            session_tz = self._session_tz()
+            return lambda: ranked(lx.local_knn(
+                self._store_image(schema), schema, vector_col, query_vector,
+                k, score_col=score_col, select_cols=select_cols,
+                session_tz=session_tz, metric=metric,
+            ))
+
+        refusal = None
+        if exact:
+            refusal = "exact=True"
+        elif self._vector_indexes.get(vector_col) is not None:
+            refusal = f"vector index registered on {vector_col!r}"
+        return self._local("knn_search", "knn", prepare, spark, refusal)
 
     def search(
         self,
@@ -1833,11 +1777,13 @@ class Collection:
         runs: when ``build_vector_index(index_name=...)`` has registered
         an IVF index and the query has no prefilter, the probed IVF plan
         serves the candidates, else the brute scan of the index plan."""
+        from linkml_store_spark.index.indexer import INDEX_COLUMN
         from linkml_store_spark.index.search import (
             rank_pool,
             search_pool_size,
             vector_search,
         )
+        from linkml_store_spark.operators import localexec as lx
 
         if not self._indexers:
             self.attach_indexer()  # auto-create default (collection.py:576-592)
@@ -1845,28 +1791,44 @@ class Collection:
             index_name = next(iter(self._indexers))
         indexer = self._indexers[index_name]
         qv = indexer.text_to_vector(query)
-        ranked = None
-        local = self._local_text_index(index_name)
-        if local is not None:
-            try:
-                pool = local.top_k(
-                    qv,
-                    search_pool_size(limit, mmr_relevance_factor),
-                    where=where,
+        pool_size = search_pool_size(limit, mmr_relevance_factor)
+        ivf_key = f"__index__@{index_name}"
+        refusal = None
+        if self._vector_indexes.get(ivf_key) is not None:
+            refusal = f"IVF index registered on {index_name!r}"
+
+        def prepare(schema, total_rows, nbytes):
+            matrix_bytes = total_rows * indexer.vector_default_length * 8
+            if nbytes + matrix_bytes > lx.LOCAL_TIER_MAX_BYTES:
+                raise lx.Unsupported("text index matrix over the byte cap")
+            key = ("text_index", indexer)
+            memos = self._version.memos
+            if key in memos and memos[key] is None:
+                raise lx.Unsupported("text index build failed on this version")
+            session_tz = self._session_tz()
+
+            def run():
+                if memos.get(key) is None:
+                    memos[key] = None  # kept if the build raises: no rebuild
+                    memos[key] = lx.VectorIndex(
+                        *indexer.collect_index(self.df), INDEX_COLUMN
+                    )
+                pool = memos[key].top_k(
+                    qv, pool_size, where=where,
                     keep_vector=mmr_relevance_factor is not None,
-                    session_tz=self._session_tz(),
+                    session_tz=session_tz,
                 )
-                ranked = rank_pool(pool, qv, limit, mmr_relevance_factor)
-            except Exception:  # noqa: BLE001 — incl. Unsupported: Spark path
-                ranked = None
-        if ranked is None:
+                return rank_pool(pool, qv, limit, mmr_relevance_factor)
+
+            return run
+
+        def spark():
             # the plan first: it syncs with the store's files, dropping an
             # IVF registration over files another handle replaced
             plan = self.index_objects(index_name)
-            ivf = None if where else self._vector_indexes.get(f"__index__@{index_name}")
+            ivf = None if where else self._vector_indexes.get(ivf_key)
             scored_pool_fn = None
             if ivf is not None:
-                from linkml_store_spark.index.indexer import INDEX_COLUMN
                 from linkml_store_spark.operators.similarity import ivf_knn
 
                 assigned, centroids, nprobe = ivf[:3]
@@ -1875,7 +1837,7 @@ class Collection:
                 scored_pool_fn = lambda pool: ivf_knn(  # noqa: E731
                     assigned, centroids, qv, INDEX_COLUMN, k=pool, nprobe=nprobe
                 )
-            ranked = vector_search(
+            return vector_search(
                 plan,
                 qv,
                 where=where,
@@ -1883,47 +1845,17 @@ class Collection:
                 mmr_relevance_factor=mmr_relevance_factor,
                 scored_pool_fn=scored_pool_fn,
             )
+
+        ranked = self._local("search", "knn", prepare, spark, refusal)
         rows = []
         for score, obj in ranked:
-            obj = {k: v for k, v in obj.items() if k != "__index__"}
+            obj = {k: v for k, v in obj.items() if k != INDEX_COLUMN}
             if select_cols:
                 obj = {k: obj.get(k) for k in select_cols}
             rows.append((score, obj))
         return QueryResult(
             num_rows=len(rows), rows=[o for _, o in rows], ranked_rows=rows
         )
-
-    def _local_text_index(self, index_name: str):
-        """The in-process ``localexec.VectorIndex`` of text index
-        ``index_name`` when the local route may serve it, else None.
-
-        Built on first use per store version by
-        ``Indexer.collect_index`` — the same texts and vectors as the
-        index plan, for every indexer — and kept in the store version,
-        which every write replaces. A refusal is kept too, so a store
-        the route cannot serve never re-pays the build."""
-        from linkml_store_spark.index.indexer import INDEX_COLUMN
-        from linkml_store_spark.operators import localexec as lx
-
-        if self._vector_indexes.get(f"__index__@{index_name}") is not None:
-            return None
-        gate = self._local_tier_gate("knn")
-        if gate is None:
-            return None
-        indexer = self._indexers[index_name]
-
-        def build():
-            total_rows, nbytes = self._footer_totals()
-            matrix_bytes = total_rows * indexer.vector_default_length * 8
-            if nbytes + matrix_bytes > lx.LOCAL_TIER_MAX_BYTES:
-                return None
-            try:
-                table, matrix = indexer.collect_index(self.df)
-            except Exception:  # noqa: BLE001 — incl. Unsupported: Spark path
-                return None
-            return lx.VectorIndex(table, matrix, INDEX_COLUMN)
-
-        return self._version.memo(("text_index", indexer), build)
 
     # ------------------------------------------------------------------ #
     # set operations (§2.7 extension surface — free in Spark)
@@ -2345,14 +2277,6 @@ def _sort_norm(spec) -> str:
     return spec
 
 
-def _query_class(query: Query) -> str:
-    """The local tier's shape class of a Query: ``agg`` (group_by),
-    ``count`` (limit 0) or ``page``."""
-    if query.group_by:
-        return "agg"
-    return "count" if query.limit == 0 else "page"
-
-
 def _sort_parse(spec):
     """(base_column, descending) for any accepted sort spec. Suffix is
     parsed BEFORE the '-' prefix so '-col desc' means column 'col'
@@ -2373,11 +2297,6 @@ def _sort_parse(spec):
                 f"contradictory sort spec: {spec!r} ('-' prefix with 'asc')"
             )
     return s, bool(neg or suffix)
-
-
-def _sort_base(spec) -> str:
-    """The bare column name of a sort spec ('-col', 'col desc', ...)."""
-    return _sort_parse(spec)[0]
 
 
 def _sort_col(spec):

@@ -16,6 +16,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import functools
 from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame
@@ -199,10 +200,9 @@ def minhash_signatures(
     )
 
 
+@functools.cache
 def _minhash_perm_udf(num_perm: int):
-    """Arrow-batched permutation-minima kernel, cached per num_perm."""
-    if num_perm in _MINHASH_UDF_CACHE:
-        return _MINHASH_UDF_CACHE[num_perm]
+    """Arrow-batched permutation-minima kernel, one per num_perm."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -228,12 +228,7 @@ def _minhash_perm_udf(num_perm: int):
         out = mins.T.astype(np.int64)
         return pd.Series(list(out))
 
-    perm_minima = F.pandas_udf(_kernel, T.ArrayType(T.LongType()))
-    _MINHASH_UDF_CACHE[num_perm] = perm_minima
-    return perm_minima
-
-
-_MINHASH_UDF_CACHE: dict = {}
+    return F.pandas_udf(_kernel, T.ArrayType(T.LongType()))
 
 
 def band_buckets(

@@ -44,12 +44,18 @@ its rows are within that class's :data:`LOCAL_TIER_CAPS` entry and its
 bytes within :data:`LOCAL_TIER_MAX_BYTES`; each cap is the largest
 measured rung at which this tier won the class on every measured box
 (``tools/measure.py ladder``, SCALING.md "Local-vs-JVM crossover").
-Value parity with the Spark path is pinned by the test suite
+Every ``Collection`` entry with a local route (``query``,
+``query_facets``, ``knn_search``, ``search``) takes it through one
+method, ``Collection._local``: the gate, then the compile — this module's
+``compile_*`` functions, the only code that knows what the tier accepts,
+raise :class:`Unsupported` with a reason; a malformed clause raises —
+then the run. A refusal, or any exception while the call runs, sends it
+to the Spark path with one DEBUG line on ``linkml_store_spark.localtier``:
+``collection <name>: local tier refused the <call> (<reason>), running
+the Spark path``. ``Collection.explain`` prints the same reason. Value
+parity with the Spark path is pinned by the test suite
 (``tests/test_localexec.py`` and the property tests), not re-checked at
-runtime. An ``Unsupported`` refusal while a call is compiled, or any
-exception while it runs, sends it to the Spark path (logged at DEBUG on
-``linkml_store_spark.localtier``); a malformed clause raises. Setting
-``SPARK_GRAFT_LOCAL_TIER=0`` turns the tier off.
+runtime. Setting ``SPARK_GRAFT_LOCAL_TIER=0`` turns the tier off.
 
 SEMANTIC MIRROR: :func:`compile_where_local` lowers the IR of
 ``where.parse_where`` — the same tree ``where.compile_where`` lowers to a
@@ -86,7 +92,8 @@ from datetime import date, datetime
 from functools import reduce
 from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
-from linkml_store_spark.where import TRUE, And, Not, Or, Pred, Raw, parse_where
+from linkml_store_spark.where import (TRUE, And, Not, Or, Pred, Raw,
+                                      exclude_column, parse_where)
 
 __all__ = [
     "LOCAL_TIER_CAPS",
@@ -168,6 +175,15 @@ def local_tier_admits(kind: str, total_rows: int, total_bytes: int) -> bool:
         local_tier_enabled()
         and total_rows <= LOCAL_TIER_CAPS[kind]
         and total_bytes <= LOCAL_TIER_MAX_BYTES
+    )
+
+
+def gate_numbers(kind: str, total_rows: int, total_bytes: int) -> str:
+    """The numbers :func:`local_tier_admits` compares for a ``kind`` call,
+    as a refusal reason and ``Collection.explain`` print them."""
+    return (
+        f"{total_rows} footer rows, {kind} cap {LOCAL_TIER_CAPS[kind]}; "
+        f"{total_bytes} uncompressed bytes, cap {LOCAL_TIER_MAX_BYTES}"
     )
 
 
@@ -705,6 +721,22 @@ def _check_output_types(schema, columns: Sequence[str]) -> None:
             raise Unsupported("map-typed output column")
 
 
+def compile_page(schema, sort_specs: Sequence[Tuple[str, bool]],
+                 select_cols: Optional[Sequence[str]]) -> None:
+    """Raise Unsupported unless a page of ``select_cols`` (None: every
+    column) sorted by ``sort_specs`` is inside the mirrored subset: sort
+    keys are plain, known, non-nested columns, select columns are plain
+    names (Spark reads ``a.b`` as a struct path, not a column name) and
+    no output column is map-typed."""
+    for c, _d in sort_specs:
+        _col_type(schema, c)
+    if select_cols is None:
+        select_cols = schema.names
+    elif any("." in c or "[" in c for c in select_cols):
+        raise Unsupported("dotted select column")
+    _check_output_types(schema, select_cols)
+
+
 def local_page(
     files,
     schema,
@@ -749,10 +781,8 @@ def local_count_page(
 
     img = StoreImage.of(files, schema)
     out_cols = list(select_cols) if select_cols else [f.name for f in schema]
-    _check_output_types(schema, out_cols)
+    compile_page(schema, sort_specs, select_cols or None)
     sort_cols = list(dict.fromkeys(c for c, _d in sort_specs))
-    for c in sort_cols:
-        _col_type(schema, c)  # plain, non-nested, known
     hits = None  # matching row indices in file order; None = every row
     n = int(total_rows)
     if cond is not None:
@@ -794,6 +824,28 @@ def _facet_sort_key(vc):
     if isinstance(v, tuple):
         return (-c,) + tuple((x is not None, x if x is not None else 0) for x in v)
     return (-c, v is not None, v if v is not None else 0)
+
+
+def compile_facets(schema, where, facet_columns: Sequence) -> Callable:
+    """The ``cond_for`` of :func:`local_facets`: each facet column's
+    compiled condition, ``where`` without that column's own clauses (the
+    multi-select exclusion rewrite, ``where.exclude_column``). Raises
+    Unsupported for a facet column outside the subset (arrays, nested,
+    and timestamps, whose ns/tz round trip as facet VALUES is not
+    mirrored) or a clause the compiler refuses."""
+    import pyarrow.types as pt
+
+    conds = {}
+    for col in facet_columns:
+        parts = [col] if isinstance(col, str) else list(col)
+        for c in parts:
+            if pt.is_timestamp(_col_type(schema, c)):
+                raise Unsupported("timestamp facet column")
+        w = where
+        for c in parts:
+            w = exclude_column(w, c)
+        conds[id(col)] = compile_where_local(w, schema)
+    return lambda col: conds[id(col)]
 
 
 def local_facets(
@@ -925,8 +977,8 @@ def _split_group_by(group_by):
         else:
             try:
                 alias, (fn, unit, col) = g
-            except Exception:  # noqa: BLE001
-                raise Unsupported(f"malformed group key {g!r}")
+            except (TypeError, ValueError):
+                raise Unsupported(f"malformed group key {g!r}") from None
             if str(fn) != "date_trunc" or unit not in (
                 "minute", "hour", "day", "week", "month", "year"
             ):
@@ -1034,18 +1086,47 @@ def _agg_input_cols(aggs, schema):
     return cols
 
 
-def _merged_schema(schema, join):
-    """Post-join column space (left + right minus the coalesced right
-    key); the left schema unchanged when there is no join. Semi/anti
-    joins are EXISTS filters — their output space is the left schema."""
-    if join is None or (len(join) > 4 and join[4] in ("semi", "anti")):
-        return schema
+def compile_join(schema, right_schema, left_on: str, right_on: str,
+                 how: str = "inner"):
+    """The post-join column space of an equi-join: both sides minus the
+    right key, which the Arrow join coalesces (semi/anti: the left
+    schema). Raises Unsupported for a ``how`` other than
+    inner/left/semi/anti, names on both sides of an inner/left join
+    (Spark keeps both) and keys not plain columns of one type."""
     import pyarrow as pa
 
-    right_schema, right_on = join[1], join[3]
+    if how not in ("inner", "left", "semi", "anti"):
+        raise Unsupported(f"join how {how!r}")
+    if _col_type(schema, left_on) != _col_type(right_schema, right_on):
+        raise Unsupported("join keys of different types")
+    if how in ("semi", "anti"):
+        return schema
+    if set(schema.names) & set(right_schema.names):
+        raise Unsupported("column names on both sides of the join")
     return pa.schema(
         list(schema) + [f for f in right_schema if f.name != right_on]
     )
+
+
+def compile_group_agg(schema, group_by, aggs, having, sort_specs,
+                      select_cols, session_tz=None):
+    """``(aggs, having_cond)`` of an aggregate Query over ``schema`` (the
+    post-join space): the aggregates with the default count filled in,
+    and HAVING compiled against :func:`predicted_agg_schema`, so an
+    uncertain output type refuses before any work runs. Sort and select
+    columns must be group keys or aliases. Raises Unsupported."""
+    validate_group_agg(schema, group_by, aggs, session_tz=session_tz)
+    aggs = dict(aggs or {"count": ("count", None)})
+    having_cond = None
+    if having is not None:
+        having_cond = compile_where_local(
+            having, predicted_agg_schema(schema, group_by, aggs)
+        )
+    out = [g if isinstance(g, str) else g[0] for g in group_by] + list(aggs)
+    for c in [c for c, _d in sort_specs] + list(select_cols or []):
+        if c not in out:
+            raise Unsupported(f"page column {c!r} outside the aggregate")
+    return aggs, having_cond
 
 
 def local_group_agg(
@@ -1082,7 +1163,7 @@ def local_group_agg(
     plain, derived = _split_group_by(group_by)
     where_cols = sorted(cond.cols) if cond is not None else []
     derived_srcs = [c for _a, _u, c in derived]
-    expr_schema = _merged_schema(schema, join)
+    expr_schema = schema if join is None else compile_join(schema, *join[1:])
     agg_cols = _agg_input_cols(aggs, expr_schema)
     need_all = list(dict.fromkeys(
         plain + derived_srcs + agg_cols + where_cols

@@ -12,7 +12,7 @@ import pathlib
 import linkml_store_spark
 
 MAX_SILENT = 0
-MAX_BROAD = 14
+MAX_BROAD = 6
 
 
 def _broad_handlers():

@@ -216,9 +216,9 @@ def test_local_tier_knn_metrics_match_oracle(
         coll.insert(spark.read.parquet(path))
         qv = [float(x) for x in src[4]["embedding"]]
 
-        gate = coll._local_tier_gate("knn")
-        assert gate is not None, f"the {store} store must be inside the gate"
-        schema, _total = gate
+        admitted, why = coll._local_tier_gate("knn")
+        assert admitted is not None, f"the {store} store must be inside the gate ({why})"
+        schema = admitted[0]
         files = [fp for fp, _md in coll._store_metas()]
         for metric in ("cosine", "dot", "euclidean", "manhattan"):
             rows = lx.local_knn(

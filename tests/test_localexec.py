@@ -730,11 +730,14 @@ def test_class_cap_routes_and_ab_winner_reports_it(
     assert reported == ("arrow" if jobs == 0 else "jvm")
 
 
-@pytest.mark.parametrize("setting", ROUTE_SETTINGS)
-def test_explain_reports_route_taken(route_store, monkeypatch, setting):
+@pytest.mark.parametrize("setting", ROUTE_SETTINGS + ["compile_refusal"])
+def test_explain_reports_route_taken(route_store, monkeypatch, caplog, setting):
     _apply_setting(monkeypatch, setting, "page")
     where = {"cat": "c2"}
+    if setting == "compile_refusal":
+        where = {"cat": {"$regex": "c."}}
     out = route_store.explain(where)
+    caplog.set_level(logging.DEBUG, logger="linkml_store_spark.localtier")
     jobs = _spark_jobs(route_store, lambda: route_store.find(where))
     if jobs == 0:
         assert "== Local Tier ==" in out and "page cap" in out
@@ -745,6 +748,65 @@ def test_explain_reports_route_taken(route_store, monkeypatch, setting):
         assert "SPARK_GRAFT_LOCAL_TIER=0" in out
     if setting == "over_cap":
         assert "over the gate (300 footer rows, page cap 299" in out
+    if setting == "compile_refusal":
+        # the header names the reason the call's DEBUG line carries
+        assert jobs > 0
+        assert "Distributed plan: operator 'regex'" in out
+        assert "refused the query (operator 'regex')" in caplog.text
+
+
+#: the kernel each call's local route runs, and the call's name in the
+#: route's DEBUG line
+ROUTE_KERNELS = {
+    "count": (lx, "local_count", "query"),
+    "page": (lx, "local_count_page", "query"),
+    "agg": (lx, "local_group_agg", "query"),
+    "facet": (lx, "local_facets", "facets"),
+    "knn": (lx, "local_knn", "knn_search"),
+    "search": (lx.VectorIndex, "top_k", "search"),
+}
+
+FALLBACK_CALLS = dict(ROUTE_CALLS, search=lambda c: c.search("c1 c2", limit=4))
+
+
+#: the part of each call's answer that ties cannot change: a ranked page
+#: compares its ranking values, since tied rows may come in either order
+ANSWERS = {
+    "count": lambda r: r.num_rows,
+    "page": lambda r: (r.num_rows, [x["v"] for x in r.rows]),
+    "agg": lambda r: sorted(map(repr, r.rows)),
+    "facet": lambda r: r,
+    "knn": lambda r: [round(s, 9) for s, _x in r.ranked_rows],
+    "search": lambda r: [round(s, 9) for s, _x in r.ranked_rows],
+}
+
+
+@pytest.mark.parametrize("kind", list(FALLBACK_CALLS))
+def test_failing_kernel_falls_back_to_spark_with_one_debug_line(
+    route_store, monkeypatch, caplog, kind
+):
+    """A local kernel that raises sends the call to the Spark path: the
+    call returns the Spark path's answer, and one DEBUG line on the local
+    tier's logger names the call and the exception."""
+    call = FALLBACK_CALLS[kind]
+    with monkeypatch.context() as m:
+        m.setenv("SPARK_GRAFT_LOCAL_TIER", "0")
+        want = ANSWERS[kind](call(route_store))
+
+    def boom(*_a, **_k):
+        raise RuntimeError("kernel boom")
+
+    owner, name, call_name = ROUTE_KERNELS[kind]
+    monkeypatch.setattr(owner, name, boom)
+    route_store._version.memos.clear()
+    caplog.set_level(logging.DEBUG, logger="linkml_store_spark.localtier")
+    assert ANSWERS[kind](call(route_store)) == want
+    lines = [r for r in caplog.records if "kernel boom" in r.getMessage()]
+    assert len(lines) == 1, caplog.text
+    assert lines[0].levelno == logging.DEBUG
+    assert lines[0].name == "linkml_store_spark.localtier"
+    assert call_name in lines[0].getMessage()
+    assert "RuntimeError" in lines[0].getMessage()
 
 
 def test_ab_winner_reports_jvm_for_a_real_column(spark, sf_dir):

@@ -2,6 +2,7 @@
 shadow index collected once per store version, every later search ranked
 in the driver) against the Spark plan, and search after writes."""
 
+import logging
 import os
 
 import numpy as np
@@ -45,6 +46,12 @@ def _spark_jobs(coll, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _shadow_index(coll, index_name):
+    """The in-process index the local route built for the store's current
+    version, or None (no build yet, or a refused or failed one)."""
+    return coll._version.memos.get(("text_index", coll._indexers[index_name]))
 
 
 def _spark_route(coll, monkeypatch, fn):
@@ -116,11 +123,35 @@ def test_one_index_build_per_store_version(spark, tmp_path, monkeypatch):
     coll.search("harbor")
     assert len(builds) == 2
     # the rebuilt index serves the new version in process
-    assert isinstance(coll._local_text_index("simple"), lx.VectorIndex)
+    assert isinstance(_shadow_index(coll, "simple"), lx.VectorIndex)
     res, jobs = _spark_jobs(coll, lambda: coll.search(new[3]["text"]))
     assert jobs == 0
     assert res.rows[0]["doc_id"] == 1003
     assert len(builds) == 2
+
+
+def test_failed_build_is_logged_and_not_retried(spark, tmp_path, monkeypatch,
+                                                caplog):
+    """A shadow-index build that raises sends the search to the Spark plan
+    with the failure on the local tier's DEBUG logger, and the store
+    version keeps the refusal: the next search does not build again."""
+    builds = []
+
+    def failing(self, df):
+        builds.append(self.name)
+        raise RuntimeError("build boom")
+
+    monkeypatch.setattr(SimpleIndexer, "collect_index", failing)
+    coll = _store(spark, tmp_path)
+    ref = _spark_route(coll, monkeypatch, lambda: coll.search("harbor"))
+    caplog.set_level(logging.DEBUG, logger="linkml_store_spark.localtier")
+    for _ in range(2):
+        res = coll.search("harbor")
+        assert res.rows == ref.rows
+    assert builds == ["simple"]
+    assert "refused the search (RuntimeError: build boom)" in caplog.text
+    assert "refused the search (text index build failed" in caplog.text
+    assert _shadow_index(coll, "simple") is None
 
 
 def test_build_embeds_in_driver_like_the_index_plan(spark, tmp_path):
@@ -170,16 +201,20 @@ def test_store_over_byte_check_takes_spark_path(spark, tmp_path, monkeypatch):
     for q in ["stone", "violet"]:
         _res, jobs = _spark_jobs(coll, lambda: coll.search(q))
         assert jobs > 0
-    assert coll._local_text_index("simple") is None
+    assert _shadow_index(coll, "simple") is None
 
 
-def test_registered_ivf_index_takes_spark_path(spark, tmp_path):
+def test_registered_ivf_index_takes_spark_path(spark, tmp_path, caplog):
     coll = _store(spark, tmp_path)
     coll.attach_indexer("simple")
     coll.build_vector_index(index_name="simple", n_centroids=4, nprobe=4)
-    assert coll._local_text_index("simple") is None
-    _res, jobs = _spark_jobs(coll, lambda: coll.search("harbor stone"))
-    assert jobs > 0
+    caplog.set_level(logging.DEBUG, logger="linkml_store_spark.localtier")
+    for q in ["harbor stone", "violet"]:
+        _res, jobs = _spark_jobs(coll, lambda: coll.search(q))
+        assert jobs > 0
+    # the route refused before building: no shadow index was collected
+    assert _shadow_index(coll, "simple") is None
+    assert "refused the search (IVF index registered on 'simple')" in caplog.text
 
 
 @pytest.mark.parametrize("tier", ["local", "spark"])

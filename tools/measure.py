@@ -367,7 +367,7 @@ def _ladder_runners(coll, shape, cls, q):
 
     metas = coll._store_metas()
     files = [fp for fp, _md in metas]
-    schema = coll._local_tier_gate(cls)[0]
+    schema = coll._local_tier_gate(cls)[0][0]
     if shape == "facet":
         return (
             lambda: lx.local_facets(files, schema, lambda c: None, ["cat"], 100, 1),
